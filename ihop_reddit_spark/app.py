@@ -13,12 +13,12 @@ This module deliberately ships NO web-framework dependency. It exposes
 * :func:`make_server` — a stdlib ``http.server`` JSON API over one
   explorer, for ``cli.py serve``.
 
-Every view is a DataFrame transformation over the cached assignment
-frame (vocab-sized: one row per word, persisted once per training run);
-selections are tiny literal lists, so the filters are broadcast-free
-``isin`` predicates plus one semi-join for cluster neighbors — the same
-plan family as the ``table_selection_with_neighbors`` catalog query.
-Only the HTTP layer collects, and it is row-capped.
+Every view is one filter over the cached assignment frame (vocab-sized:
+one row per word, persisted once per training run); selections are tiny
+literal lists, so the filters are broadcast-free ``isin`` predicates. The
+clusters of selected words come from one collect of at most one row per
+selected word, so a view is at most two Spark jobs. Only the HTTP layer
+collects views, and it is row-capped.
 """
 
 from __future__ import annotations
@@ -74,13 +74,7 @@ class ClusterExplorer:
         ``projection``: ``"pca"`` (distributed, default) or ``"tsne"``
         (the reference's literal choice — driver-side, size-guarded;
         right for vocab-sized frames only)."""
-        from .ml.clustering import (
-            ClusteringConfig,
-            calinski_harabasz,
-            davies_bouldin,
-            kmeans_assign,
-            silhouette,
-        )
+        from .ml.clustering import ClusteringConfig, cluster_quality, kmeans_assign
         from .ml.projection import pca_project, tsne_project
 
         if projection not in ("pca", "tsne"):
@@ -94,27 +88,21 @@ class ClusterExplorer:
             coords = self.vectors.sparkSession.createDataFrame(
                 pdf.rename(columns={"tsne_x": "x", "tsne_y": "y"})
             )
+            fresh = assigned.select(
+                self.word_col, self.vec_col, "cluster_id"
+            ).join(coords, self.word_col)
         else:
-            coords = pca_project(
-                self.vectors, self.vec_col, self.word_col, dims=2
+            fresh = pca_project(
+                assigned, self.vec_col, self.word_col, dims=2,
+                carry=[self.vec_col, "cluster_id"],
             )
-        fresh = (
-            assigned.select(self.word_col, self.vec_col, "cluster_id")
-            .join(coords, self.word_col)
-            .persist()
-        )
+        fresh = fresh.persist()
         # compute EVERYTHING that can fail before touching session
         # state, so a failed retrain leaves the previous model fully
-        # consistent (assignments + name + metrics all from one run)
+        # consistent (assignments + name + metrics all from one run);
+        # the first metric aggregate fills the cache
         try:
-            fresh.count()
-            metrics = {
-                "silhouette": silhouette(fresh, self.vec_col),
-                "calinski_harabasz": calinski_harabasz(
-                    fresh, self.vec_col
-                ),
-                "davies_bouldin": davies_bouldin(fresh, self.vec_col),
-            }
+            metrics = cluster_quality(fresh, self.vec_col)
         except Exception:
             fresh.unpersist()
             raise
@@ -135,13 +123,16 @@ class ClusterExplorer:
             raise RuntimeError("call train() first")
         return self.assignments.drop(self.vec_col)
 
-    def _clusters_of(self, words: list[str]) -> DataFrame:
+    def _clusters_of(self, words: list[str]) -> set[int]:
+        """Clusters of the selected words: one collect of at most one row
+        per word (the frame has one row per word)."""
         base = self._require_trained()
-        return (
-            base.where(F.col(self.word_col).isin(words))
+        return {
+            r["cluster_id"]
+            for r in base.where(F.col(self.word_col).isin(words))
             .select("cluster_id")
-            .distinct()
-        )
+            .collect()
+        }
 
     # -- reference get_display_table (app.py:571-637) -------------------
     def selection_table(
@@ -161,27 +152,20 @@ class ClusterExplorer:
         reference app's own TODO ("list of subreddits can be chosen
         from a collection", app.py:15) over the vendored
         ``resources/collections`` data."""
-        from .operators.joins import semi_join_filter
-        from .operators.setops import union_dedup
-
         base = self._require_trained()
         words = list(words or [])
         if collection:
             from .resources.collections import get_collection_members
 
             words += get_collection_members(collection)
-        clusters = clusters or []
-        cols = [self.word_col, "cluster_id"]
-        picked = base.where(F.col(self.word_col).isin(words)).select(*cols)
-        by_cluster = base.where(
-            F.col("cluster_id").isin([int(c) for c in clusters])
-        ).select(*cols)
-        out = union_dedup(picked, by_cluster)
+        keep = {int(c) for c in clusters or []}
         if show_neighbors and words:
-            neighbors = semi_join_filter(
-                base, self._clusters_of(words), "cluster_id"
-            ).select(*cols)
-            out = union_dedup(out, neighbors)
+            keep |= self._clusters_of(words)
+        # one row per word, so one filter is already deduplicated
+        out = base.where(
+            F.col(self.word_col).isin(words)
+            | F.col("cluster_id").isin(sorted(keep))
+        ).select(self.word_col, "cluster_id")
         return self._with_labels(out).orderBy("cluster_id", self.word_col)
 
     # -- reference get_cluster_visualization (app.py:446-561) -----------
@@ -191,19 +175,18 @@ class ClusterExplorer:
         clusters: list[int] | None = None,
         highlight: bool = False,
     ) -> DataFrame:
-        """All points with (x, y, cluster_id, display_cluster): when
-        ``highlight``, clusters outside the selection (selected cluster
-        ids ∪ clusters of selected words) display as 'other' — the
-        grey-out semantics of the reference scatter."""
+        """All points with (x, y, cluster_id, display_cluster), ordered
+        like the table: when ``highlight``, clusters outside the
+        selection (selected cluster ids ∪ clusters of selected words)
+        display as 'other' — the grey-out semantics of the reference
+        scatter. The order also makes the row-capped HTTP collect one
+        top-k job at any partition count."""
         base = self._require_trained()
         disp = F.col("cluster_id").cast("string")
         if highlight:
             keep = set(int(c) for c in clusters or [])
             if words:
-                keep.update(
-                    r["cluster_id"]
-                    for r in self._clusters_of(words).collect()
-                )
+                keep |= self._clusters_of(words)
             disp = (
                 F.when(
                     F.col("cluster_id").isin(sorted(keep)), disp
@@ -219,7 +202,7 @@ class ClusterExplorer:
                 "cluster_id",
                 disp.alias("display_cluster"),
             )
-        )
+        ).orderBy("cluster_id", self.word_col)
 
     # -- reference E4 recategorization ----------------------------------
     def recategorize(self, labels: dict[int, str]) -> None:

@@ -96,9 +96,9 @@ def _cmd_cluster(args) -> None:
     (ihop/clustering.py:1290-1354) + quality metrics JSON."""
     from .ml.clustering import (
         ClusteringConfig,
+        cluster_quality,
         kmeans_assign,
         l2_normalize_df,
-        silhouette,
     )
     from .sources.io import write_parquet
 
@@ -108,8 +108,12 @@ def _cmd_cluster(args) -> None:
     assigned, _model = kmeans_assign(
         vecs, args.vector_col, ClusteringConfig(n_clusters=args.k, seed=args.seed)
     )
-    write_parquet(assigned.drop(args.vector_col), f"{args.output}/assignments")
-    metrics = {"silhouette": silhouette(assigned, args.vector_col)}
+    assigned = assigned.persist()
+    try:
+        write_parquet(assigned.drop(args.vector_col), f"{args.output}/assignments")
+        metrics = cluster_quality(assigned, args.vector_col)
+    finally:
+        assigned.unpersist()
     with open(f"{args.output}/metrics.json", "w") as f:
         json.dump(metrics, f, indent=2)
 

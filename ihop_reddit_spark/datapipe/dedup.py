@@ -784,6 +784,7 @@ def duplicate_components_distributed(
     prev_fp = _fingerprint(labels)  # materializes the initial checkpoint
     release_scoped_persists(pairs)
     done = 0
+    changed = None  # set by the first fingerprint match's confirmation
     while done < max_iterations:
         new_labels = labels
         for _ in range(min(rounds_per_check, max_iterations - done)):
@@ -805,9 +806,10 @@ def duplicate_components_distributed(
         labels = new_labels
     else:
         edges.unpersist()
+        still = "" if changed is None else f" ({changed} labels still changing)"
         raise RuntimeError(
             f"duplicate_components_distributed did not converge within "
-            f"{max_iterations} iterations ({changed} labels still changing); "
+            f"{max_iterations} iterations{still}; "
             "raise max_iterations (diameter-long duplicate chains)"
         )
     edges.unpersist()

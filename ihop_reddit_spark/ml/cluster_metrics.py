@@ -6,10 +6,12 @@ labelings. Here the pipeline is Spark end-to-end until the final k×k table:
 
 1. Align the two labelings (U2 join — intersection or union universe with
    missing=−1, ``ihop/clustering.py:40-42, 163-175``).
-2. Distributed contingency ``groupBy(c1, c2)`` (+ optional weight).
-3. All information-theoretic metrics as aggregations over the long-form
-   contingency (``F.log2`` aggs) — the table itself never needs to be dense
-   or driver-sized; the only driver step is the final scalar collect.
+2. One ``cube(c1, c2)`` aggregate (+ optional weight): ``grouping_id``
+   separates the joint contingency cells, both marginals and the total.
+3. One global aggregate over that cube yields, per level, Σ n·log₂n (the
+   entropies, with MI = H(U) + H(V) − H(U,V)) and Σ C(cnt, 2) (the pair
+   counts) — the table itself never needs to be dense or driver-sized;
+   the whole computation is one Spark action returning one row.
 4. Greedy maximum matching (M10) on the collected k×k table — inherently
    sequential, k≈hundreds, driver by design.
 
@@ -19,6 +21,8 @@ completeness, V-measure) are base-independent.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,7 +59,7 @@ def comparison_metrics(
     right_label: str = "c2",
     weight_col: str | None = None,
 ) -> dict[str, float]:
-    """One pass over the long-form contingency → every comparison metric.
+    """One pass over the contingency cube → every comparison metric.
 
     Returns mutual_info, entropy_left/right, voi, nmi (arithmetic mean
     normalization, sklearn default), homogeneity, completeness, v_measure,
@@ -64,52 +68,32 @@ def comparison_metrics(
     defined for unit weights and use raw counts regardless.
     """
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    cont = (
-        aligned.groupBy(left_label, right_label)
-        .agg(F.sum(w).alias("n_ij"), F.count(F.lit(1)).alias("cnt_ij"))
-        .cache()
+    # grouping_id: 0 joint cell, 1 left marginal, 2 right marginal, 3 total
+    cube = aligned.cube(left_label, right_label).agg(
+        F.sum(w).alias("n"),
+        F.count(F.lit(1)).alias("cnt"),
+        F.grouping_id().alias("g"),
     )
-    total = cont.agg(
-        F.sum("n_ij").alias("N"), F.sum("cnt_ij").alias("CNT")
+    n, cnt, g = F.col("n"), F.col("cnt"), F.col("g")
+    levels = range(3)
+    row = cube.agg(
+        *[F.sum(F.when(g == lv, n * F.log2(n))).alias(f"nlogn{lv}") for lv in levels],
+        *[F.sum(F.when(g == lv, cnt * (cnt - 1) / 2.0)).alias(f"pairs{lv}") for lv in levels],
+        F.max(F.when(g == 3, n)).alias("N"),
+        F.max(F.when(g == 3, cnt)).alias("CNT"),
     ).first()
-    n_total, cnt_total = float(total["N"]), float(total["CNT"])
+    n_total, cnt_total = float(row["N"]), float(row["CNT"])
 
-    row_m = cont.groupBy(left_label).agg(
-        F.sum("n_ij").alias("a_i"), F.sum("cnt_ij").alias("ca_i")
-    )
-    col_m = cont.groupBy(right_label).agg(
-        F.sum("n_ij").alias("b_j"), F.sum("cnt_ij").alias("cb_j")
-    )
+    def entropy(lv: int) -> float:
+        # H = −Σ (n/N)·log₂(n/N) = log₂N − Σ n·log₂n / N
+        return math.log2(n_total) - (row[f"nlogn{lv}"] or 0.0) / n_total
 
-    def entropy(marg: DataFrame, col: str) -> float:
-        p = F.col(col) / F.lit(n_total)
-        val = marg.agg(F.sum(-p * F.log2(p)).alias("h")).first()["h"]
-        return float(val or 0.0)
-
-    h_left = entropy(row_m, "a_i")
-    h_right = entropy(col_m, "b_j")
-
-    joined = cont.join(row_m, left_label).join(col_m, right_label)
-    p_ij = F.col("n_ij") / F.lit(n_total)
-    mi_val = joined.agg(
-        F.sum(
-            p_ij
-            * F.log2(
-                F.lit(n_total) * F.col("n_ij") / (F.col("a_i") * F.col("b_j"))
-            )
-        ).alias("mi")
-    ).first()["mi"]
-    mi = float(mi_val or 0.0)
+    h_joint, h_left, h_right = entropy(0), entropy(1), entropy(2)
+    mi = h_left + h_right - h_joint
 
     # pair-counting metrics from raw counts (unit-weight semantics)
-    def comb2(c):
-        return c * (c - 1) / 2.0
-
-    sum_ij = cont.agg(F.sum(comb2(F.col("cnt_ij"))).alias("x")).first()["x"] or 0.0
-    sum_a = row_m.agg(F.sum(comb2(F.col("ca_i"))).alias("x")).first()["x"] or 0.0
-    sum_b = col_m.agg(F.sum(comb2(F.col("cb_j"))).alias("x")).first()["x"] or 0.0
+    sum_ij, sum_a, sum_b = (row[f"pairs{lv}"] or 0.0 for lv in levels)
     total_pairs = cnt_total * (cnt_total - 1) / 2.0
-    cont.unpersist()
 
     rand = (
         (total_pairs + 2 * sum_ij - sum_a - sum_b) / total_pairs

@@ -14,8 +14,10 @@ Spark-native mappings of the reference's model zoo:
   (``ihop/clustering.py:875-1145``): online optimizer, asymmetric
   doc-concentration ``1/(i + sqrt(k))``, k=250, maxIter=50,
   subsamplingRate=0.05.
-* quality metrics (M8) — silhouette via ``ClusteringEvaluator``; CH / DB as
-  closed-form distributed aggregations over (point, cluster) rows.
+* quality metrics (M8) — :func:`cluster_quality`: silhouette via
+  ``ClusteringEvaluator``; CH from one grouped per-cluster aggregate
+  (count, mean, Σ‖x‖²) finished on the driver over k rows; DB's
+  per-cluster scatter from one pass against the k broadcast centroids.
 """
 
 from __future__ import annotations
@@ -317,7 +319,7 @@ def topic_terms(model, vocab_df: DataFrame, max_terms: int = 10) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Quality metrics (M8) — silhouette builtin; CH / DB as distributed aggs
+# Quality metrics (M8) — silhouette builtin; CH / DB from k per-cluster rows
 # ---------------------------------------------------------------------------
 def silhouette(assignments: DataFrame, vec_col: str, prediction_col: str = "cluster_id") -> float:
     from pyspark.ml.evaluation import ClusteringEvaluator
@@ -328,96 +330,81 @@ def silhouette(assignments: DataFrame, vec_col: str, prediction_col: str = "clus
     ).evaluate(feat)
 
 
-def _exploded(assignments: DataFrame, vec_col: str, prediction_col: str) -> DataFrame:
-    return assignments.select(
-        F.col(prediction_col).alias("__c"), F.posexplode(vec_col).alias("__d", "__v")
-    ).withColumn("__v", F.col("__v").cast("double"))
-
-
-def calinski_harabasz(
+def cluster_quality(
     assignments: DataFrame, vec_col: str, prediction_col: str = "cluster_id"
-) -> float:
-    """CH = (B/(k−1)) / (W/(n−k)), B/W from per-cluster & global centroids —
-    two groupBy aggregations over (cluster, dim) rows, no driver matrices."""
-    ex = _exploded(assignments, vec_col, prediction_col).cache()
-    per_cd = ex.groupBy("__c", "__d").agg(
-        F.avg("__v").alias("mean_cd"),
-        F.sum(F.col("__v") * F.col("__v")).alias("ss_cd"),
-        F.count(F.lit(1)).alias("n_cd"),
-    )
-    # W = Σ_points ||x − c_k||² = Σ_cd (ss_cd − n_cd·mean_cd²)
-    stats = per_cd.select(
-        (F.col("ss_cd") - F.col("n_cd") * F.col("mean_cd") * F.col("mean_cd")).alias("w_cd"),
-        "__d",
-        "mean_cd",
-        "n_cd",
-    )
-    w = stats.agg(F.sum("w_cd")).first()[0]
-    global_mean = per_cd.groupBy("__d").agg(
-        (F.sum(F.col("mean_cd") * F.col("n_cd")) / F.sum("n_cd")).alias("gmean")
-    )
-    b = (
-        stats.join(global_mean, "__d")
-        .select(
-            (
-                F.col("n_cd")
-                * (F.col("mean_cd") - F.col("gmean"))
-                * (F.col("mean_cd") - F.col("gmean"))
-            ).alias("b_cd")
-        )
-        .agg(F.sum("b_cd"))
-        .first()[0]
-    )
-    n = assignments.count()
-    k = assignments.select(prediction_col).distinct().count()
-    ex.unpersist()
-    if k <= 1 or n == k:
-        return float("nan")
-    return float((b / (k - 1)) / (w / (n - k)))
+) -> dict[str, float]:
+    """Silhouette, Calinski-Harabasz and Davies-Bouldin of one labeling.
 
+    * CH = (B/(k−1)) / (W/(n−k)) from per-cluster count n_c, mean μ_c and
+      Σ‖x‖² (one grouped aggregate, k rows to the driver):
+      W = Σ_c (Σ‖x‖² − n_c‖μ_c‖²), B = Σ_c n_c‖μ_c − μ‖².
+    * DB = mean_i max_{j≠i} (s_i+s_j)/‖μ_i−μ_j‖; the scatter s_c (mean
+      distance to the own centroid) is one pass over the points joined to
+      the k broadcast centroids.
+    * silhouette via ``ClusteringEvaluator`` (squared Euclidean).
 
-def davies_bouldin(
-    assignments: DataFrame, vec_col: str, prediction_col: str = "cluster_id"
-) -> float:
-    """DB = mean_i max_{j≠i} (s_i+s_j)/d(c_i,c_j); per-cluster scatter s_i is
-    a distributed agg, the final k×k max is a driver loop on k rows."""
+    CH is NaN when k ≤ 1 or n = k; DB is NaN when k = 0.
+    """
     import numpy as np
+    from pyspark.ml.stat import Summarizer
 
-    ex = _exploded(assignments, vec_col, prediction_col)
-    cent = ex.groupBy("__c", "__d").agg(F.avg("__v").alias("mean_cd"))
-    # per-point distance to own centroid
-    pts = assignments.select(
-        F.col(prediction_col).alias("__c"),
-        F.monotonically_increasing_id().alias("__pid"),
-        F.col(vec_col).alias("__vec"),
-    ).select("__c", "__pid", F.posexplode("__vec").alias("__d", "__v"))
-    dists = (
-        pts.join(cent, ["__c", "__d"])
-        .groupBy("__c", "__pid")
+    spark = assignments.sparkSession
+    feat = _with_features(assignments, vec_col).withColumnRenamed(
+        prediction_col, "__c"
+    )
+    stats = (
+        feat.groupBy("__c")
         .agg(
-            F.sqrt(
-                F.sum(
-                    (F.col("__v").cast("double") - F.col("mean_cd"))
-                    * (F.col("__v").cast("double") - F.col("mean_cd"))
-                )
-            ).alias("dist")
+            Summarizer.metrics("count", "mean", "normL2")
+            .summary(F.col("__features"))
+            .alias("s")
+        )
+        .collect()
+    )
+    clusters = [r["__c"] for r in stats]
+    sizes = np.array([float(r["s"]["count"]) for r in stats])
+    means = np.array([r["s"]["mean"].toArray() for r in stats])
+    # Σ‖x‖² over a cluster = Σ_d (per-dimension L2 norm)²
+    sq_sum = sum(float((r["s"]["normL2"].toArray() ** 2).sum()) for r in stats)
+    n, k = float(sizes.sum()), len(clusters)
+    if k <= 1 or n == k:
+        ch = float("nan")
+    else:
+        gmean = sizes @ means / n
+        w = sq_sum - float(sizes @ (means * means).sum(axis=1))
+        b = float(sizes @ ((means - gmean) ** 2).sum(axis=1))
+        ch = float((b / (k - 1)) / (w / (n - k)))
+
+    cent = spark.createDataFrame(
+        [(c, m.tolist()) for c, m in zip(clusters, means)],
+        "__c " + dict(feat.dtypes)["__c"] + ", __m array<double>",
+    )
+    dist = F.sqrt(
+        F.aggregate(
+            F.zip_with(
+                vec_col,
+                "__m",
+                lambda x, m: (x.cast("double") - m) * (x.cast("double") - m),
+            ),
+            F.lit(0.0),
+            lambda a, x: a + x,
         )
     )
-    scatter = {r["__c"]: r["s"] for r in dists.groupBy("__c").agg(F.avg("dist").alias("s")).collect()}
-    crows = cent.collect()
-    dims = max(r["__d"] for r in crows) + 1
-    clusters = sorted(scatter)
-    cmat = {c: np.zeros(dims) for c in clusters}
-    for r in crows:
-        cmat[r["__c"]][r["__d"]] = r["mean_cd"]
-    vals = []
-    for i in clusters:
-        worst = 0.0
-        for j in clusters:
-            if i == j:
-                continue
-            d = float(np.linalg.norm(cmat[i] - cmat[j]))
-            if d > 0:
-                worst = max(worst, (scatter[i] + scatter[j]) / d)
-        vals.append(worst)
-    return float(np.mean(vals)) if vals else float("nan")
+    scatter = dict(
+        feat.join(F.broadcast(cent), "__c")
+        .groupBy("__c")
+        .agg(F.avg(dist).alias("s"))
+        .collect()
+    )
+    db = float("nan")
+    if k:
+        s = np.array([scatter[c] for c in clusters])
+        d = np.linalg.norm(means[:, None, :] - means[None, :, :], axis=2)
+        # coincident centroids (and i = j) contribute no ratio
+        ratio = np.divide(s[:, None] + s[None, :], d, out=np.zeros_like(d), where=d > 0)
+        db = float(ratio.max(axis=1).mean())
+    return {
+        "silhouette": silhouette(assignments, vec_col, prediction_col),
+        "calinski_harabasz": ch,
+        "davies_bouldin": db,
+    }

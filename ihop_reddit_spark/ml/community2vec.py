@@ -116,13 +116,12 @@ class EmbeddingMatrix:
     def from_vectors_df(
         cls, vectors: DataFrame, max_driver_vocab: int = 200_000
     ) -> "EmbeddingMatrix":
-        n = vectors.count()
-        if n > max_driver_vocab:
+        rows = vectors.limit(max_driver_vocab + 1).collect()
+        if len(rows) > max_driver_vocab:
             raise ValueError(
-                f"vocab {n} exceeds driver guard {max_driver_vocab}; "
+                f"vocab exceeds driver guard {max_driver_vocab}; "
                 "use distributed ops (datapipe.similarity) instead"
             )
-        rows = vectors.collect()
         words = [r["word"] for r in rows]
         # accept VectorUDT (Spark ML trainer) or plain array<double>
         # (the SGNS fallback / any embedding table)

@@ -39,8 +39,12 @@ def pca_project(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     dims: int = 2,
+    carry: list[str] | None = None,
 ) -> DataFrame:
-    """Distributed PCA to ``dims`` components: (id, x, y, ...).
+    """Distributed PCA to ``dims`` components: (id, *carry, x, y, ...).
+
+    ``carry`` columns of ``df`` pass through the transform unchanged, so a
+    caller needing them next to the coordinates does not join them back.
 
     Scalar coordinate columns (not an array) so downstream pandas/oracle
     canonicalization can sort them, and per-component sign canonicalized:
@@ -52,8 +56,9 @@ def pca_project(
     from pyspark.ml.feature import PCA
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
+    keep = [id_col, *(carry or [])]
     feat = df.select(
-        id_col, array_to_vector(F.col(vec_col)).alias("__features")
+        *keep, array_to_vector(F.col(vec_col)).alias("__features")
     )
     model = PCA(k=dims, inputCol="__features", outputCol="__proj").fit(feat)
     pc = model.pc.toArray()  # (n_features, dims) loadings, driver-local
@@ -62,14 +67,14 @@ def pca_project(
         lead = pc[int(np.argmax(np.abs(pc[:, j]))), j]
         signs.append(-1.0 if lead < 0 else 1.0)
     proj = model.transform(feat).select(
-        id_col, vector_to_array(F.col("__proj")).alias("__p")
+        *keep, vector_to_array(F.col("__proj")).alias("__p")
     )
     names = [
         _AXIS_NAMES[j] if j < len(_AXIS_NAMES) else f"c{j}"
         for j in range(dims)
     ]
     return proj.select(
-        id_col,
+        *keep,
         *[
             (F.col("__p")[j] * F.lit(signs[j])).alias(names[j])
             for j in range(dims)

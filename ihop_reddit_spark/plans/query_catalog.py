@@ -2544,24 +2544,16 @@ def kmeans_quality_metrics(spark, sf_dir):
     NaN/negative, so silhouette > -0.05, CH > 2, DB < 10 catch regressions
     to noise with ≥2x margin while staying green on real runs.
     """
-    from ..ml.clustering import (
-        ClusteringConfig,
-        calinski_harabasz,
-        davies_bouldin,
-        kmeans_assign,
-        silhouette,
-    )
+    from ..ml.clustering import ClusteringConfig, cluster_quality, kmeans_assign
 
     emb = _t(spark, sf_dir, "embeddings")
     out, _ = kmeans_assign(emb, "embedding", ClusteringConfig(n_clusters=8, seed=100))
-    sil = silhouette(out, "embedding")
-    ch = calinski_harabasz(out, "embedding")
-    db = davies_bouldin(out, "embedding")
+    q = cluster_quality(out, "embedding")
     return emb.agg(F.count(F.lit(1)).alias("n_points")).select(
         "n_points",
-        F.lit(bool(sil > -0.05)).alias("silhouette_ok"),
-        F.lit(bool(ch > 2.0)).alias("ch_ok"),
-        F.lit(bool(db < 10.0)).alias("db_ok"),
+        F.lit(bool(q["silhouette"] > -0.05)).alias("silhouette_ok"),
+        F.lit(bool(q["calinski_harabasz"] > 2.0)).alias("ch_ok"),
+        F.lit(bool(q["davies_bouldin"] < 10.0)).alias("db_ok"),
     )
 
 

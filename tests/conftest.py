@@ -33,3 +33,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), n)``: n is the number of Spark jobs
+    submitted while ``fn`` ran (job ids are handed out in order, so the
+    scheduler's next id brackets them exactly; tests run one at a time)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def run(fn):
+        lo = dag.nextJobId()
+        out = fn()
+        return out, dag.nextJobId() - lo
+
+    return run

@@ -10,7 +10,7 @@ import urllib.request
 
 import pytest
 
-from ihop_reddit_spark.app import ClusterExplorer, make_server
+from ihop_reddit_spark.app import ClusterExplorer, _rows_json, make_server
 
 
 @pytest.fixture(scope="module")
@@ -87,6 +87,24 @@ def test_scatter_highlight_greys_out_unselected(explorer):
     assert all(
         r["display_cluster"] == str(r["cluster_id"]) for r in plain
     )
+
+
+def test_views_run_in_at_most_two_spark_jobs(explorer, count_jobs):
+    """A view is one filter over the cached frame, plus one small collect
+    for the clusters of selected words; the HTTP collect is one job."""
+    words = ["sub0_0", "sub1_3"]
+    rows, n = count_jobs(
+        lambda: _rows_json(
+            explorer.selection_table(words=words, clusters=[0], show_neighbors=True)
+        )
+    )
+    assert rows and n <= 2
+    rows, n = count_jobs(
+        lambda: _rows_json(
+            explorer.scatter_data(words=words, clusters=[0], highlight=True)
+        )
+    )
+    assert len(rows) == 24 and n <= 2
 
 
 def test_recategorize_labels_views(explorer):

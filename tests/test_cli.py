@@ -63,7 +63,10 @@ def test_cli_cluster_and_topics(spark, sf_dir, tmp_path):
     assigned = spark.read.parquet(f"{out}/assignments")
     assert assigned.select("cluster_id").distinct().count() <= 4
     metrics = json.load(open(f"{out}/metrics.json"))
+    assert set(metrics) == {"silhouette", "calinski_harabasz", "davies_bouldin"}
     assert -1.0 <= metrics["silhouette"] <= 1.0
+    assert metrics["calinski_harabasz"] > 0.0
+    assert metrics["davies_bouldin"] > 0.0
 
     tout = str(tmp_path / "tp")
     main(

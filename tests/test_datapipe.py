@@ -383,6 +383,19 @@ def test_duplicate_components_union_find(spark):
         duplicate_components(pairs, max_driver_pairs=2, on_overflow="raise")
 
 
+def test_distributed_components_raise_when_not_converged(spark):
+    """A 5-node chain needs more than one propagation round; with one
+    allowed, the loop never sees a fingerprint match and must raise its
+    own error."""
+    from ihop_reddit_spark.datapipe.dedup import duplicate_components_distributed
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "left_id long, right_id long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        duplicate_components_distributed(pairs, max_iterations=1)
+
+
 @pytest.mark.slow
 def test_prepare_corpus_stage_semantics(spark):
     from ihop_reddit_spark.plans.corpus_prep import CorpusPrepConfig, prepare_corpus
