@@ -71,6 +71,11 @@ class ClusterExplorer:
         vocab-sized assignment frame. Returns metrics + model name,
         mirroring the reference's metrics display.
 
+        A vocab-sized frame (≤ ``ml.clustering.MAX_LOCAL_POINTS`` words)
+        is fitted on the driver from one collect, as the reference's
+        sklearn KMeans is; the assignments, the projection and the
+        metrics stay Spark frames and aggregates.
+
         ``projection``: ``"pca"`` (distributed, default) or ``"tsne"``
         (the reference's literal choice — driver-side, size-guarded;
         right for vocab-sized frames only)."""

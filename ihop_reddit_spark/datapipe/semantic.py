@@ -248,10 +248,13 @@ def kmeans_semantic_dedup(
     ``group_col`` — big clusters become bounded block-pair tasks, the same
     kernel as the global near-dup tier). Returns survivor rows.
 
-    Not in the oracle catalog: seeded distributed KMeans is deterministic
-    for a fixed data layout but not a portable pure function of the data,
-    so its gate lives in tests (planted-duplicate soundness/recall —
-    identical vectors always co-cluster, so exact dups can never escape).
+    Up to ``ml.clustering.MAX_LOCAL_POINTS`` rows the KMeans fit runs on
+    the driver over the sorted vectors, so it depends only on the data, not
+    on its layout; above the guard MLlib's fit is deterministic only for a
+    fixed layout. It is not in the oracle catalog because no SQL oracle
+    computes a seeded KMeans; its gate lives in tests (planted-duplicate
+    soundness/recall — identical vectors always co-cluster, so exact dups
+    can never escape).
     """
     from ..ml.clustering import ClusteringConfig, kmeans_assign
 

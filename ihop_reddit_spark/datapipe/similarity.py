@@ -192,6 +192,10 @@ def build_ivf_index(
     Returns (assigned_corpus, kmeans_model). The assignment adds a
     ``centroid_id`` column — at scale, WRITE the corpus partitioned by
     ``centroid_id`` so probes prune at the file level.
+
+    The fit stays on MLlib's distributed KMeans rather than
+    ``ml.clustering.kmeans_assign``'s driver-side fit: an index is built
+    over a corpus, not a vocabulary, with 256 centroids by default.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector

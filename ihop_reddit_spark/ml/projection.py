@@ -165,16 +165,16 @@ def tsne_project(
     Returns a pandas DataFrame (id, tsne_x, tsne_y) like the reference's
     CSV artifact (``dvc.yaml:61-71``).
     """
-    import numpy as np
+    from .clustering import vectors_matrix
 
-    n = df.count()
-    if n > MAX_DRIVER_POINTS:
+    table = df.select(id_col, vec_col).limit(MAX_DRIVER_POINTS + 1).toArrow()
+    if table.num_rows > MAX_DRIVER_POINTS:
         raise ValueError(
             f"tsne_project is a driver-side op for <= {MAX_DRIVER_POINTS} "
-            f"points (got {n}); project with pca_project or pre-sample"
+            "points (got more); project with pca_project or pre-sample"
         )
-    pdf = df.select(id_col, vec_col).toPandas()
-    mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+    mat = vectors_matrix(table.column(1))
+    pdf = table.select([0]).to_pandas()
     try:
         from sklearn.manifold import TSNE  # noqa: PLC0415
 
@@ -187,4 +187,4 @@ def tsne_project(
             seed=tsne_kwargs.get("random_state", TSNE_DEFAULTS["random_state"]),
         )
     pdf["tsne_x"], pdf["tsne_y"] = coords[:, 0], coords[:, 1]
-    return pdf.drop(columns=[vec_col])
+    return pdf

@@ -18,7 +18,6 @@ from ihop_reddit_spark.ml.clustering import (
     cluster_quality,
     fit_lda,
     kmeans_assign,
-    silhouette,
     topic_terms,
 )
 from ihop_reddit_spark.ml.community2vec import (
@@ -159,7 +158,96 @@ def test_kmeans_recovers_blobs(blobs):
         .first()[0]
     )
     assert purity == 1
-    assert silhouette(out, "vec") > 0.8
+    assert cluster_quality(out, "vec")["silhouette"] > 0.8
+
+
+@pytest.fixture(scope="module")
+def emb_sf001(spark, sf_dir):
+    """The sf0.01 embeddings (500 vectors of dim 64), next to ``sf_dir``."""
+    import os
+
+    path = os.path.join(os.path.dirname(sf_dir), "sf0.01", "embeddings.parquet")
+    if not os.path.exists(path):
+        pytest.skip(f"no sf0.01 embeddings at {path}")
+    return spark.read.parquet(path)
+
+
+def _mllib_kmeans_cost(df, vec_col, k, seed):
+    """Within-cluster SSE of MLlib KMeans' own centres, the oracle for the
+    driver-side fit."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feat = df.withColumn("__f", array_to_vector(vec_col))
+    centres = np.array(
+        KMeans(k=k, seed=seed, maxIter=100, featuresCol="__f").fit(feat).clusterCenters()
+    )
+    X = np.array([r[vec_col] for r in df.select(vec_col).collect()], dtype=float)
+    return float(((X[:, None, :] - centres[None]) ** 2).sum(axis=2).min(axis=1).sum())
+
+
+@pytest.mark.parametrize("data", ["blobs", "emb_sf001"])
+def test_local_kmeans_matches_mllib_and_its_frame(request, data, count_jobs):
+    """The driver-side fit: within 1% of MLlib's cost, one Spark job, and
+    ``clusterSizes`` equal to the returned frame's counts."""
+    df = request.getfixturevalue(data)
+    vec_col = "vec" if data == "blobs" else "embedding"
+    k = 8
+    cfg = ClusteringConfig(n_clusters=k, seed=100)
+    (out, model), n_jobs = count_jobs(lambda: kmeans_assign(df, vec_col, cfg))
+    assert n_jobs <= 1
+    assert len(model.clusterCenters()) == k
+    assert model.summary.trainingCost <= 1.01 * _mllib_kmeans_cost(df, vec_col, k, 100)
+    counts = dict(out.groupBy("cluster_id").count().collect())
+    assert model.summary.clusterSizes == [counts.get(c, 0) for c in range(k)]
+    assert out.columns == [*df.columns, "cluster_id"]
+
+
+def test_local_kmeans_ignores_partitioning(emb_sf001):
+    cfg = ClusteringConfig(n_clusters=8, seed=100)
+
+    def assignment(df):
+        out, _ = kmeans_assign(df, "embedding", cfg, id_cols=["vec_id"])
+        return dict(out.collect())
+
+    one = assignment(emb_sf001.repartition(1))
+    assert one == assignment(emb_sf001.repartition(7))
+    assert len(one) == emb_sf001.count()
+
+
+def test_kmeans_above_the_guard_fits_mllib(blobs, monkeypatch):
+    from pyspark.ml.clustering import KMeansModel
+
+    from ihop_reddit_spark.ml import clustering
+
+    cfg = ClusteringConfig(n_clusters=3, seed=1)
+    local, _ = kmeans_assign(blobs, "vec", cfg)
+    monkeypatch.setattr(clustering, "MAX_LOCAL_POINTS", 10)
+    out, model = kmeans_assign(blobs, "vec", cfg)
+    assert isinstance(model, KMeansModel)
+    assert out.columns == local.columns
+    assert out.schema["cluster_id"].dataType == local.schema["cluster_id"].dataType
+    assert out.select("cluster_id").distinct().count() == 3
+
+
+def test_silhouette_matches_clustering_evaluator(emb_sf001):
+    from pyspark.ml.evaluation import ClusteringEvaluator
+    from pyspark.ml.functions import array_to_vector
+
+    out, _ = kmeans_assign(emb_sf001, "embedding", ClusteringConfig(n_clusters=8, seed=100))
+    # the same labeling with one point moved into a cluster of its own,
+    # which scores 0 (and must not divide by n_c − 1 = 0)
+    first = out.agg(F.min("vec_id")).first()[0]
+    alone = out.withColumn(
+        "cluster_id", F.when(F.col("vec_id") == first, 8).otherwise(F.col("cluster_id"))
+    )
+    evaluator = ClusteringEvaluator(
+        featuresCol="__f", predictionCol="cluster_id", metricName="silhouette"
+    )
+    for labeling in (out, alone):
+        expected = evaluator.evaluate(labeling.withColumn("__f", array_to_vector("embedding")))
+        got = cluster_quality(labeling, "embedding")["silhouette"]
+        assert abs(got - expected) <= 1e-9
 
 
 def test_cluster_quality_matches_closed_forms(blobs):
@@ -360,7 +448,7 @@ def test_metrics_run_in_few_spark_jobs(spark, blobs, count_jobs):
     )
     assert n <= 4
     _, n = count_jobs(lambda: cluster_quality(blobs, "vec", "true_label"))
-    assert n <= 9
+    assert n <= 5
 
 
 def test_greedy_max_match():
@@ -467,6 +555,22 @@ def test_tsne_project_runs_and_is_size_guarded(spark, sf_dir):
             tsne_project(emb.limit(60))
     finally:
         proj.MAX_DRIVER_POINTS = old
+
+
+def test_driver_side_ops_take_one_spark_job(spark, sf_dir, count_jobs):
+    """The size guard and the collect are one ``limit(max + 1)`` action."""
+    from ihop_reddit_spark.ml.clustering import sklearn_cluster_assign
+    from ihop_reddit_spark.ml.projection import tsne_project
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(60)
+    pdf, n = count_jobs(lambda: tsne_project(emb, perplexity=10.0))
+    assert n <= 1 and len(pdf) == 60
+    out, n = count_jobs(
+        lambda: sklearn_cluster_assign(emb, "embedding", "vec_id", n_clusters=4)
+    )
+    assert n <= 1 and out.count() == 60
+    with pytest.raises(ValueError, match="driver guard"):
+        sklearn_cluster_assign(emb, "embedding", "vec_id", max_driver_rows=59)
 
 
 def test_grid_search_picks_best_and_writes_metrics(spark, tmp_path):
@@ -888,10 +992,11 @@ def test_fleiss_kappa_closed_form(spark):
     assert rb["kappa"] is None
 
 
-def test_kmeans_elbow_finds_true_k(spark, blobs):
+def test_kmeans_elbow_finds_true_k(spark, blobs, count_jobs):
     from ihop_reddit_spark.ml.clustering import kmeans_elbow
 
-    sweep = kmeans_elbow(blobs, "vec", ks=[2, 3, 4, 5], seed=1)
+    sweep, n_jobs = count_jobs(lambda: kmeans_elbow(blobs, "vec", ks=[2, 3, 4, 5], seed=1))
+    assert n_jobs <= 1
     costs = [s["cost"] for s in sweep]
     assert all(a >= b for a, b in zip(costs, costs[1:]))
     assert next(s["k"] for s in sweep if s["is_elbow"]) == 3
