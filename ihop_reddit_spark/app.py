@@ -71,10 +71,11 @@ class ClusterExplorer:
         vocab-sized assignment frame. Returns metrics + model name,
         mirroring the reference's metrics display.
 
-        A vocab-sized frame (≤ ``ml.clustering.MAX_LOCAL_POINTS`` words)
-        is fitted on the driver from one collect, as the reference's
-        sklearn KMeans is; the assignments, the projection and the
-        metrics stay Spark frames and aggregates.
+        A frame of up to ``ml.clustering.MAX_LOCAL_POINTS`` words is
+        fitted on the driver from one collect, as the reference's sklearn
+        KMeans is, and its words come back with their labels as a local
+        relation; larger frames fit MLlib KMeans. The projection and the
+        metrics are Spark frames and aggregates either way.
 
         ``projection``: ``"pca"`` (distributed, default) or ``"tsne"``
         (the reference's literal choice — driver-side, size-guarded;

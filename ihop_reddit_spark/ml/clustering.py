@@ -5,13 +5,13 @@ Spark-native mappings of the reference's model zoo:
 * KMeans — :func:`kmeans_assign`. The reference fits sklearn KMeans on the
   driver over ≤10k embedded points (``ihop/clustering.py:353-447``). Up to
   :data:`MAX_LOCAL_POINTS` rows the fit does the same: one Arrow collect
-  brings the vectors to the driver, where numpy runs seeded greedy
+  brings the rows to the driver, where numpy runs seeded greedy
   k-means++ and Lloyd's algorithm with MLlib's stopping rule, keeping the
-  best of :data:`KMEANS_RESTARTS` runs. Only the fit moves: the
-  returned frame is a lazy projection that assigns each row to its nearest
-  centre (centres held as literals), so assigning costs no extra job. Above
-  the guard the distributed ``pyspark.ml.clustering.KMeans`` runs, whose
-  per-iteration jobs are the price of data that does not fit the driver.
+  best of :data:`KMEANS_RESTARTS` runs. The rows come back with the
+  driver's labels as a local relation, so no executor recomputes the
+  distances. Above the guard the distributed
+  ``pyspark.ml.clustering.KMeans`` runs; past a few thousand points its
+  parallel iterations beat one driver thread.
   ``datapipe/similarity.build_ivf_index`` stays on MLlib.
 * BisectingKMeans — ``pyspark.ml.clustering``; the scalable analog of the
   reference's AgglomerativeClustering.
@@ -37,10 +37,13 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Largest frame a KMeans fit (and the sklearn escape hatch) brings to the
-#: driver; above it :func:`kmeans_assign` and :func:`kmeans_elbow` fit MLlib
-#: KMeans. 20k vectors of dim 64 are 10 MiB of float64.
-MAX_LOCAL_POINTS = 20_000
+#: Largest frame :func:`kmeans_assign` and :func:`kmeans_elbow` fit on the
+#: driver; above it they fit MLlib KMeans. Set from measured fits of both
+#: (dim 64, k 8/50/250, 4 cores): up to 5k points the driver fit takes less
+#: wall and CPU time than MLlib at every k; at 10k MLlib is faster in wall
+#: time for k ≥ 50, at 20k for every k, because the driver fit is
+#: single-threaded and runs :data:`KMEANS_RESTARTS` seedings.
+MAX_LOCAL_POINTS = 5_000
 
 #: MLlib KMeans' default convergence tolerance: a fit stops when no centre
 #: moves more than this (Euclidean distance) in one Lloyd iteration.
@@ -140,24 +143,12 @@ def _double_lit(values) -> Column:
 
 def _sq_dist(vec_col: str, centre: Column) -> Column:
     """Squared Euclidean distance from ``vec_col`` to an array<double>
-    centre, summed left to right over the dimensions (:func:`_sq_dists_np`
-    reproduces the values bit for bit)."""
+    centre, summed left to right over the dimensions."""
     return F.aggregate(
         F.zip_with(vec_col, centre, lambda x, m: x.cast("double") - m),
         F.lit(0.0),
         lambda a, t: a + t * t,
     )
-
-
-def _sq_dists_np(X, centres):
-    """(n, k) squared distances accumulated in :func:`_sq_dist`'s order."""
-    import numpy as np
-
-    d = np.zeros((X.shape[0], centres.shape[0]))
-    for j in range(X.shape[1]):
-        t = X[:, j, None] - centres[None, :, j]
-        d += t * t
-    return d
 
 
 def _kmeans_pp(X, sq, k: int, rng):
@@ -186,27 +177,25 @@ def _kmeans_pp(X, sq, k: int, rng):
     return X[centres]
 
 
-def _lloyd(X, sq, centres, max_iter: int):
-    """Lloyd's algorithm: (centres, iterations, cost). Stops, as MLlib does,
-    when no centre moves more than :data:`KMEANS_TOL` or after ``max_iter``
-    iterations; a centre that loses all its points stays where it was.
-    Distances are ‖x‖² − 2x·c + ‖c‖², one product with the centres per
-    iteration. The products here and in :func:`_kmeans_pp` use
-    ``np.einsum``, not BLAS: at vocab sizes they are small, and BLAS worker
-    threads spin between calls (4× the CPU for the same wall time on a
-    4-core host at 2000×64, k=8). At the guard's top, 20k points and
-    k=250, a BLAS product would be 6× faster."""
+def _lloyd(X, centres, max_iter: int):
+    """Lloyd's algorithm: (centres, labels, iterations). Stops, as MLlib
+    does, when no centre moves more than :data:`KMEANS_TOL` or after
+    ``max_iter`` iterations; a centre that loses all its points stays where
+    it was. The nearest centre minimises ‖c‖² − 2x·c, one product with the
+    centres per iteration. The products here and in :func:`_kmeans_pp`
+    use ``np.einsum``, not BLAS: BLAS worker threads spin between the many
+    small calls, about 3× the CPU time of einsum for a fit on a 4-core host."""
     import numpy as np
 
-    def dists(c):
-        return sq[:, None] - 2.0 * np.einsum("nd,kd->nk", X, c) + (c * c).sum(axis=1)
+    def nearest(c):
+        return ((c * c).sum(axis=1) - 2.0 * np.einsum("nd,kd->nk", X, c)).argmin(axis=1)
 
     (k, dim), n_iter = centres.shape, 0
     # bin (cluster, dimension) of every matrix entry, to sum members per cluster
     dim_bins = np.arange(dim)
     while n_iter < max_iter:
         n_iter += 1
-        near = dists(centres).argmin(axis=1)
+        near = nearest(centres)
         counts = np.bincount(near, minlength=k)
         sums = np.bincount(
             (near[:, None] * dim + dim_bins).ravel(), weights=X.ravel(), minlength=k * dim
@@ -216,63 +205,68 @@ def _lloyd(X, sq, centres, max_iter: int):
         centres = moved
         if (shift <= KMEANS_TOL * KMEANS_TOL).all():
             break
-    return centres, n_iter, float(dists(centres).min(axis=1).sum())
+    return centres, nearest(centres), n_iter
 
 
-def _fit_local(X, cfg: ClusteringConfig) -> LocalKMeansModel:
-    """The driver-side fit: :data:`KMEANS_RESTARTS` greedy k-means++ +
-    Lloyd runs from one generator seeded with ``cfg.seed``, keeping the
-    lowest cost. Sizes and cost of the winner use :func:`_sq_dists_np`, the
-    assignment projection's arithmetic."""
+def _fit_local(X, cfg: ClusteringConfig):
+    """The driver-side fit: (model, labels of ``X``'s rows).
+    :data:`KMEANS_RESTARTS` greedy k-means++ + Lloyd runs from one
+    generator seeded with ``cfg.seed``; the one with the lowest cost
+    Σ‖x − c‖² wins, and its labels give the sizes."""
     import numpy as np
 
     rng = np.random.default_rng(cfg.seed)
     sq = (X * X).sum(axis=1)
-    runs = [
-        _lloyd(X, sq, _kmeans_pp(X, sq, cfg.n_clusters, rng), cfg.max_iter)
-        for _ in range(KMEANS_RESTARTS)
-    ]
-    centres, n_iter, _ = min(runs, key=lambda run: run[2])
-    d = _sq_dists_np(X, centres)
-    near = d.argmin(axis=1)
-    return LocalKMeansModel(
-        centres,
-        LocalKMeansSummary(
-            clusterSizes=np.bincount(near, minlength=len(centres)).tolist(),
-            trainingCost=float(d[np.arange(len(X)), near].sum()),
-            numIter=n_iter,
-        ),
+    best = None
+    for _ in range(KMEANS_RESTARTS):
+        centres, near, n_iter = _lloyd(X, _kmeans_pp(X, sq, cfg.n_clusters, rng), cfg.max_iter)
+        cost = float(((X - centres[near]) ** 2).sum())
+        if best is None or cost < best[0]:
+            best = (cost, centres, near, n_iter)
+    cost, centres, near, n_iter = best
+    summary = LocalKMeansSummary(
+        clusterSizes=np.bincount(near, minlength=len(centres)).tolist(),
+        trainingCost=cost,
+        numIter=n_iter,
     )
+    return LocalKMeansModel(centres, summary), near
 
 
-def _local_matrix(df: DataFrame, vec_col: str):
-    """The vectors of ``df`` as an (n, dim) matrix in lexicographic row
-    order, so a seeded fit depends only on the rows, not on partition
-    order; None when ``df`` has more than :data:`MAX_LOCAL_POINTS` rows."""
-    import numpy as np
-
-    table = df.select(vec_col).limit(MAX_LOCAL_POINTS + 1).toArrow()
+def _collect_within_guard(df: DataFrame):
+    """``df`` as an Arrow table in one Spark job, or None when it has more
+    than :data:`MAX_LOCAL_POINTS` rows. Above the guard the job has read
+    at most that many rows plus one, which are dropped."""
+    table = df.limit(MAX_LOCAL_POINTS + 1).toArrow()
     if table.num_rows > MAX_LOCAL_POINTS:
         return None
     if table.num_rows == 0:
         raise ValueError("KMeans needs at least one vector")
-    X = vectors_matrix(table.column(0))
-    return X[np.lexsort(X.T[::-1])]
+    return table
 
 
-def _fit_mllib(df: DataFrame, vec_col: str, cfg: ClusteringConfig, prediction_col: str):
-    """(MLlib KMeansModel, feature frame) for frames above the guard."""
+def _sorted_matrix(column):
+    """(X, order): the vectors as a matrix in lexicographic row order, so a
+    seeded fit depends only on the rows, not on partition order; row i of X
+    is row ``order[i]`` of ``column``."""
+    import numpy as np
+
+    X = vectors_matrix(column)
+    order = np.lexsort(X.T[::-1])
+    return X[order], order
+
+
+def _fit_mllib(feat: DataFrame, cfg: ClusteringConfig, prediction_col: str = "cluster_id"):
+    """MLlib KMeans over a ``__features`` vector column (frames above the
+    guard)."""
     from pyspark.ml.clustering import KMeans
 
-    feat = _with_features(df, vec_col)
-    model = KMeans(
+    return KMeans(
         k=cfg.n_clusters,
         seed=cfg.seed,
         maxIter=cfg.max_iter,
         featuresCol="__features",
         predictionCol=prediction_col,
     ).fit(feat)
-    return model, feat
 
 
 def kmeans_assign(
@@ -285,34 +279,38 @@ def kmeans_assign(
     """KMeans on (optionally pre-normalized) vectors.
 
     Returns (assignments DataFrame, fitted model): ``df``'s columns (or
-    ``id_cols``) plus an int ``prediction_col``. Up to
-    :data:`MAX_LOCAL_POINTS` rows the fit is one collect and a numpy
-    k-means++/Lloyd fit (:class:`LocalKMeansModel`), and the assignment is
-    a lazy projection: the nearest centre by squared distance, ties to the
-    lowest cluster id. Above the guard it is MLlib's ``KMeans``. Euclidean
-    on unit vectors is monotone in cosine — normalize first for the
-    reference's cosine semantics.
+    ``id_cols``) plus an int ``prediction_col``. Within the driver guard
+    (:func:`_collect_within_guard`) one collect brings those columns and
+    the vectors to the driver, numpy fits k-means++/Lloyd
+    (:class:`LocalKMeansModel`), and the frame returned is the collected
+    rows with the driver's labels, a local relation. Above the guard it is
+    MLlib's ``KMeans``. Euclidean on unit vectors is monotone in cosine —
+    normalize first for the reference's cosine semantics.
     """
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     cfg = cfg or ClusteringConfig()
-    X = _local_matrix(df, vec_col)
-    if X is None:
-        model, feat = _fit_mllib(df, vec_col, cfg, prediction_col)
-        out = model.transform(feat).drop("__features")
-    else:
-        model = _fit_local(X, cfg)
-        # two projections: the distances are read twice (see cluster_quality)
-        d = F.transform(_double_lit(model.centers), lambda c: _sq_dist(vec_col, c))
-        out = (
-            df.withColumn("__d", d)
-            .withColumn(
-                prediction_col,
-                (F.array_position("__d", F.array_min("__d")) - 1).cast("int"),
-            )
-            .drop("__d")
-        )
-    if id_cols:
-        out = out.select(*id_cols, prediction_col)
-    return out, model
+    keep = id_cols or df.columns
+    rows = df.select(*dict.fromkeys([*keep, vec_col]))
+    table = _collect_within_guard(rows)
+    if table is None:
+        feat = _with_features(df, vec_col)
+        model = _fit_mllib(feat, cfg, prediction_col)
+        return model.transform(feat).select(*keep, prediction_col), model
+    X, order = _sorted_matrix(table.column(vec_col))
+    model, near = _fit_local(X, cfg)
+    labels = np.empty(len(near), dtype=np.int32)
+    labels[order] = near
+    schema = StructType(
+        [*rows.schema.fields, StructField(prediction_col, IntegerType(), False)]
+    )
+    # at most MAX_LOCAL_POINTS rows: one partition, so a scan is one task
+    out = df.sparkSession.createDataFrame(
+        table.append_column(prediction_col, pa.array(labels)), schema
+    ).coalesce(1)
+    return out.select(*keep, prediction_col), model
 
 
 def bisecting_kmeans_assign(
@@ -355,21 +353,24 @@ def kmeans_elbow(
 
     Up to :data:`MAX_LOCAL_POINTS` rows the vectors are collected once and
     every k is fitted on the driver, as :func:`kmeans_assign` does; above
-    the guard each k is one MLlib fit. Returns
+    the guard each k is one MLlib fit over a feature frame cached for the
+    sweep. Returns
     ``[{"k": k, "cost": float, "is_elbow": bool}, ...]`` in ``ks``
     order.
     """
     if sorted(ks) != list(ks) or len(set(ks)) != len(ks):
         raise ValueError("ks must be strictly increasing")
-    X = _local_matrix(df, vec_col)
-    costs = []
-    for k in ks:
-        cfg = ClusteringConfig(n_clusters=k, seed=seed, max_iter=max_iter)
-        if X is None:
-            model, _ = _fit_mllib(df, vec_col, cfg, "cluster_id")
-        else:
-            model = _fit_local(X, cfg)
-        costs.append(float(model.summary.trainingCost))
+    cfgs = [ClusteringConfig(n_clusters=k, seed=seed, max_iter=max_iter) for k in ks]
+    table = _collect_within_guard(df.select(vec_col))
+    if table is None:
+        feat = _with_features(df, vec_col).persist()
+        try:
+            costs = [_fit_mllib(feat, cfg).summary.trainingCost for cfg in cfgs]
+        finally:
+            feat.unpersist()
+    else:
+        X, _ = _sorted_matrix(table.column(0))
+        costs = [_fit_local(X, cfg)[0].summary.trainingCost for cfg in cfgs]
     elbow_idx = None
     if len(ks) >= 3:
         # SECOND DIVIDED DIFFERENCE, not the index-based second
@@ -397,7 +398,7 @@ def sklearn_cluster_assign(
     id_col: str,
     algorithm: str = "agglomerative",
     n_clusters: int = 250,
-    max_driver_rows: int = MAX_LOCAL_POINTS,
+    max_driver_rows: int = 20_000,
     **kwargs,
 ):
     """Driver-side escape hatch (agglomerative / affinity), size-guarded.

@@ -123,7 +123,6 @@ def test_recategorize_labels_views(explorer):
         explorer.recategorize({})
 
 
-@pytest.mark.slow
 def test_http_round_trip(explorer):
     """The VERDICT item-4 contract: one select→filter→table round-trip
     driven end-to-end through the HTTP surface."""

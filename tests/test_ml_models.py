@@ -200,7 +200,8 @@ def test_local_kmeans_matches_mllib_and_its_frame(request, data, count_jobs):
     assert model.summary.trainingCost <= 1.01 * _mllib_kmeans_cost(df, vec_col, k, 100)
     counts = dict(out.groupBy("cluster_id").count().collect())
     assert model.summary.clusterSizes == [counts.get(c, 0) for c in range(k)]
-    assert out.columns == [*df.columns, "cluster_id"]
+    assert out.schema.fields[:-1] == df.schema.fields
+    assert out.schema["cluster_id"].dataType.simpleString() == "int"
 
 
 def test_local_kmeans_ignores_partitioning(emb_sf001):
@@ -1003,6 +1004,17 @@ def test_kmeans_elbow_finds_true_k(spark, blobs, count_jobs):
 
     with pytest.raises(ValueError, match="increasing"):
         kmeans_elbow(blobs, "vec", ks=[3, 2], seed=1)
+
+
+def test_kmeans_elbow_above_the_guard_fits_mllib(spark, blobs, monkeypatch):
+    from ihop_reddit_spark.ml import clustering
+
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size
+    before = cached()
+    monkeypatch.setattr(clustering, "MAX_LOCAL_POINTS", 10)
+    sweep = clustering.kmeans_elbow(blobs, "vec", ks=[2, 3, 4], seed=1)
+    assert next(s["k"] for s in sweep if s["is_elbow"]) == 3
+    assert cached() == before  # the sweep's shared feature cache is released
 
 
 def test_word2vec_text_format_roundtrip(spark, tmp_path):
