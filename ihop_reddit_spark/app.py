@@ -72,46 +72,33 @@ class ClusterExplorer:
         mirroring the reference's metrics display.
 
         A frame of up to ``ml.clustering.MAX_LOCAL_POINTS`` words is
-        fitted on the driver from one collect, as the reference's sklearn
-        KMeans is, and its words come back with their labels as a local
-        relation; larger frames fit MLlib KMeans. The projection and the
-        metrics are Spark frames and aggregates either way.
+        trained on the driver from one collect, as the reference's sklearn
+        KMeans and t-SNE are: numpy fits KMeans, projects the vectors and
+        computes the metrics, and the words come back with their labels
+        and coordinates as a local relation, so the retrain is one Spark
+        job. Larger frames fit MLlib KMeans, project with MLlib PCA and
+        take the metrics from Spark aggregates.
 
-        ``projection``: ``"pca"`` (distributed, default) or ``"tsne"``
-        (the reference's literal choice — driver-side, size-guarded;
-        right for vocab-sized frames only)."""
-        from .ml.clustering import ClusteringConfig, cluster_quality, kmeans_assign
-        from .ml.projection import pca_project, tsne_project
+        ``projection``: ``"pca"`` (default) or ``"tsne"`` (the
+        reference's literal choice — driver-side, size-guarded; right for
+        vocab-sized frames only)."""
+        from .ml.clustering import ClusteringConfig, _collect_within_guard
 
         if projection not in ("pca", "tsne"):
             raise ValueError(
                 f"unknown projection {projection!r}; use 'pca' or 'tsne'"
             )
         cfg = ClusteringConfig(n_clusters=n_clusters, seed=seed)
-        assigned, _model = kmeans_assign(self.vectors, self.vec_col, cfg)
-        if projection == "tsne":
-            pdf = tsne_project(self.vectors, self.vec_col, self.word_col)
-            coords = self.vectors.sparkSession.createDataFrame(
-                pdf.rename(columns={"tsne_x": "x", "tsne_y": "y"})
-            )
-            fresh = assigned.select(
-                self.word_col, self.vec_col, "cluster_id"
-            ).join(coords, self.word_col)
+        table = _collect_within_guard(
+            self.vectors.select(self.word_col, self.vec_col)
+        )
+        # both paths compute everything that can fail before touching
+        # session state, so a failed retrain leaves the previous model
+        # fully consistent (assignments + name + metrics all from one run)
+        if table is None:
+            fresh, metrics = self._train_distributed(cfg, projection)
         else:
-            fresh = pca_project(
-                assigned, self.vec_col, self.word_col, dims=2,
-                carry=[self.vec_col, "cluster_id"],
-            )
-        fresh = fresh.persist()
-        # compute EVERYTHING that can fail before touching session
-        # state, so a failed retrain leaves the previous model fully
-        # consistent (assignments + name + metrics all from one run);
-        # the first metric aggregate fills the cache
-        try:
-            metrics = cluster_quality(fresh, self.vec_col)
-        except Exception:
-            fresh.unpersist()
-            raise
+            fresh, metrics = self._train_local(table, cfg, projection)
         old = self.assignments
         self.assignments = fresh
         if old is not None:
@@ -123,6 +110,55 @@ class ClusterExplorer:
         )
         self.metrics = metrics
         return {"name": self.model_name, "metrics": self.metrics}
+
+    def _train_local(self, table, cfg, projection: str):
+        """(frame, metrics) from the collected ``(word, vector)`` rows: the
+        fit ``kmeans_assign`` makes, then the projection and the metrics
+        in numpy."""
+        import pyarrow as pa
+
+        from .ml.clustering import _fit_collected, cluster_quality_local
+        from .ml.projection import pca_local, tsne_local
+
+        _model, X, labels = _fit_collected(table.column(self.vec_col), cfg)
+        metrics = cluster_quality_local(X, labels)
+        xy = pca_local(X, dims=2) if projection == "pca" else tsne_local(X)
+        out = table.append_column("cluster_id", pa.array(labels))
+        out = out.append_column("x", pa.array(xy[:, 0]))
+        out = out.append_column("y", pa.array(xy[:, 1]))
+        # at most MAX_LOCAL_POINTS rows: one partition, so a scan is one task
+        fresh = self.vectors.sparkSession.createDataFrame(out).coalesce(1)
+        return fresh.persist(), metrics
+
+    def _train_distributed(self, cfg, projection: str):
+        """(frame, metrics) from MLlib KMeans, MLlib PCA (or the
+        driver-side t-SNE) and Spark aggregates, for frames above the
+        guard."""
+        from .ml.clustering import _fit_mllib, _with_features, cluster_quality
+        from .ml.projection import pca_project, tsne_project
+
+        feat = _with_features(self.vectors, self.vec_col)
+        assigned = _fit_mllib(feat, cfg).transform(feat).select(
+            self.word_col, self.vec_col, "cluster_id"
+        )
+        if projection == "tsne":
+            pdf = tsne_project(self.vectors, self.vec_col, self.word_col)
+            coords = self.vectors.sparkSession.createDataFrame(
+                pdf.rename(columns={"tsne_x": "x", "tsne_y": "y"})
+            )
+            fresh = assigned.join(coords, self.word_col)
+        else:
+            fresh = pca_project(
+                assigned, self.vec_col, self.word_col, dims=2,
+                carry=[self.vec_col, "cluster_id"],
+            )
+        fresh = fresh.persist()
+        # the first metric aggregate fills the cache
+        try:
+            return fresh, cluster_quality(fresh, self.vec_col)
+        except Exception:
+            fresh.unpersist()
+            raise
 
     def _require_trained(self) -> DataFrame:
         if self.assignments is None:

@@ -26,7 +26,9 @@ Spark-native mappings of the reference's model zoo:
 * quality metrics (M8) — :func:`cluster_quality`: one grouped Summarizer
   aggregate (count, mean, Σ‖x‖²) gives CH on the driver over k rows; one
   pass over the points against those k rows gives DB's per-cluster scatter
-  and Spark's squared-Euclidean silhouette.
+  and Spark's squared-Euclidean silhouette. :func:`cluster_quality_local`
+  computes the same per-cluster rows in numpy for a matrix already on the
+  driver; both finish in :func:`_quality_from_clusters`.
 """
 
 from __future__ import annotations
@@ -255,6 +257,19 @@ def _sorted_matrix(column):
     return X[order], order
 
 
+def _fit_collected(column, cfg: ClusteringConfig):
+    """(model, X, labels): the driver-side fit of a collected Arrow vector
+    column. Row i of the matrix X and ``labels[i]`` belong to row i of
+    ``column``; the fit itself sees the rows sorted (:func:`_sorted_matrix`)."""
+    import numpy as np
+
+    X, order = _sorted_matrix(column)
+    model, near = _fit_local(X, cfg)
+    matrix, labels = np.empty_like(X), np.empty(len(near), dtype=np.int32)
+    matrix[order], labels[order] = X, near
+    return model, matrix, labels
+
+
 def _fit_mllib(feat: DataFrame, cfg: ClusteringConfig, prediction_col: str = "cluster_id"):
     """MLlib KMeans over a ``__features`` vector column (frames above the
     guard)."""
@@ -287,7 +302,6 @@ def kmeans_assign(
     MLlib's ``KMeans``. Euclidean on unit vectors is monotone in cosine —
     normalize first for the reference's cosine semantics.
     """
-    import numpy as np
     import pyarrow as pa
     from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -299,10 +313,7 @@ def kmeans_assign(
         feat = _with_features(df, vec_col)
         model = _fit_mllib(feat, cfg, prediction_col)
         return model.transform(feat).select(*keep, prediction_col), model
-    X, order = _sorted_matrix(table.column(vec_col))
-    model, near = _fit_local(X, cfg)
-    labels = np.empty(len(near), dtype=np.int32)
-    labels[order] = near
+    model, _, labels = _fit_collected(table.column(vec_col), cfg)
     schema = StructType(
         [*rows.schema.fields, StructField(prediction_col, IntegerType(), False)]
     )
@@ -538,29 +549,60 @@ def topic_terms(model, vocab_df: DataFrame, max_terms: int = 10) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Quality metrics (M8) — from k per-cluster rows and one pass over the points
 # ---------------------------------------------------------------------------
+def _quality_from_clusters(sizes, means, sq_sums, scatter, sil_sum: float) -> dict[str, float]:
+    """Silhouette, Calinski-Harabasz and Davies-Bouldin from k per-cluster
+    rows: the counts n_c, the means μ_c, Σ‖x‖², the scatter s_c (the mean
+    distance to the own centroid) and the points' silhouette coefficients
+    summed.
+
+    * CH = (B/(k−1)) / (W/(n−k)):
+      W = Σ_c (Σ‖x‖² − n_c‖μ_c‖²), B = Σ_c n_c‖μ_c − μ‖².
+    * DB = mean_i max_{j≠i} (s_i+s_j)/‖μ_i−μ_j‖.
+
+    CH and silhouette are NaN when k ≤ 1 (and CH when n = k); DB is NaN
+    when k = 0.
+    """
+    import numpy as np
+
+    n, k = float(sizes.sum()), len(sizes)
+    nan = float("nan")
+    if k <= 1 or n == k:
+        ch = nan
+    else:
+        gmean = sizes @ means / n
+        w = float(sq_sums.sum() - sizes @ (means * means).sum(axis=1))
+        b = float(sizes @ ((means - gmean) ** 2).sum(axis=1))
+        ch = float((b / (k - 1)) / (w / (n - k)))
+    if k == 0:
+        return {"silhouette": nan, "calinski_harabasz": ch, "davies_bouldin": nan}
+    d = np.linalg.norm(means[:, None, :] - means[None, :, :], axis=2)
+    # coincident centroids (and i = j) contribute no ratio
+    ratio = np.divide(scatter[:, None] + scatter[None, :], d, out=np.zeros_like(d), where=d > 0)
+    return {
+        "silhouette": float(sil_sum / n) if k > 1 else nan,
+        "calinski_harabasz": ch,
+        "davies_bouldin": float(ratio.max(axis=1).mean()),
+    }
+
+
 def cluster_quality(
     assignments: DataFrame, vec_col: str, prediction_col: str = "cluster_id"
 ) -> dict[str, float]:
     """Silhouette, Calinski-Harabasz and Davies-Bouldin of one labeling.
 
     One grouped Summarizer aggregate gives, per cluster, the count n_c, the
-    mean μ_c and Σ‖x‖² (= Σ_d normL2_d²); k rows go to the driver.
+    mean μ_c and Σ‖x‖² (= Σ_d normL2_d²); k rows go to the driver. One pass
+    over the points, with the k means as literals, gives the rest per
+    cluster:
 
-    * CH = (B/(k−1)) / (W/(n−k)) on the driver:
-      W = Σ_c (Σ‖x‖² − n_c‖μ_c‖²), B = Σ_c n_c‖μ_c − μ‖².
-    * One pass over the points, with the k means as literals, gives the
-      rest per cluster:
+    - DB's scatter s_c, the mean distance to the own centroid;
+    - silhouette, Spark's squared-Euclidean definition (as
+      ``ClusteringEvaluator``): the mean squared distance from x to the
+      points of cluster c is ‖x‖² + Σ_c‖y‖²/n_c − 2x·μ_c, scaled by
+      n_c/(n_c−1) for x's own cluster; a point alone in its cluster
+      scores 0.
 
-      - DB = mean_i max_{j≠i} (s_i+s_j)/‖μ_i−μ_j‖, where the scatter s_c
-        is the mean distance to the own centroid;
-      - silhouette, Spark's squared-Euclidean definition (as
-        ``ClusteringEvaluator``): the mean squared distance from x to the
-        points of cluster c is ‖x‖² + Σ_c‖y‖²/n_c − 2x·μ_c, scaled by
-        n_c/(n_c−1) for x's own cluster; a point alone in its cluster
-        scores 0.
-
-    CH and silhouette are NaN when k ≤ 1 (and CH when n = k); DB is NaN
-    when k = 0.
+    :func:`_quality_from_clusters` finishes CH and DB on the driver.
     """
     import numpy as np
     from pyspark.ml.stat import Summarizer
@@ -582,17 +624,9 @@ def cluster_quality(
     means = np.array([r["s"]["mean"].toArray() for r in stats])
     # Σ‖x‖² per cluster = Σ_d (per-dimension L2 norm)²
     sq_sums = np.array([float((r["s"]["normL2"].toArray() ** 2).sum()) for r in stats])
-    n, k = float(sizes.sum()), len(clusters)
-    nan = float("nan")
-    if k <= 1 or n == k:
-        ch = nan
-    else:
-        gmean = sizes @ means / n
-        w = float(sq_sums.sum() - sizes @ (means * means).sum(axis=1))
-        b = float(sizes @ ((means - gmean) ** 2).sum(axis=1))
-        ch = float((b / (k - 1)) / (w / (n - k)))
+    k = len(clusters)
     if k == 0:
-        return {"silhouette": nan, "calinski_harabasz": ch, "davies_bouldin": nan}
+        return _quality_from_clusters(sizes, means, sq_sums, np.zeros(0), 0.0)
 
     ids = F.array(*[F.lit(c) for c in clusters]).cast(
         "array<" + dict(feat.dtypes)["__c"] + ">"
@@ -645,14 +679,33 @@ def cluster_quality(
         .agg(F.avg("__s").alias("scatter"), F.sum(coef).alias("sil"))
         .collect()
     }
-    s = np.array([per_cluster[i]["scatter"] for i in range(k)])
-    d = np.linalg.norm(means[:, None, :] - means[None, :, :], axis=2)
-    # coincident centroids (and i = j) contribute no ratio
-    ratio = np.divide(s[:, None] + s[None, :], d, out=np.zeros_like(d), where=d > 0)
-    return {
-        "silhouette": (
-            sum(per_cluster[i]["sil"] for i in range(k)) / n if k > 1 else nan
-        ),
-        "calinski_harabasz": ch,
-        "davies_bouldin": float(ratio.max(axis=1).mean()),
-    }
+    scatter = np.array([per_cluster[i]["scatter"] for i in range(k)])
+    sil_sum = sum(per_cluster[i]["sil"] for i in range(k))
+    return _quality_from_clusters(sizes, means, sq_sums, scatter, sil_sum)
+
+
+def cluster_quality_local(X, labels) -> dict[str, float]:
+    """:func:`cluster_quality` of an (n, dim) matrix on the driver and its
+    n labels: the same per-cluster rows and point terms in numpy."""
+    import numpy as np
+
+    _, own = np.unique(labels, return_inverse=True)
+    sizes = np.bincount(own).astype(np.float64)
+    k, rows = len(sizes), np.arange(len(X))
+    sums = np.zeros((k, X.shape[1]))
+    np.add.at(sums, own, X)
+    means = sums / sizes[:, None]
+    xx = np.einsum("nd,nd->n", X, X)
+    sq_sums = np.bincount(own, weights=xx, minlength=k)
+    dist = np.sqrt(((X - means[own]) ** 2).sum(axis=1))
+    scatter = np.bincount(own, weights=dist, minlength=k) / sizes
+    # mean squared distance from each point to the points of each cluster
+    d = xx[:, None] + sq_sums / sizes - 2.0 * np.einsum("nd,kd->nk", X, means)
+    n_own = sizes[own]
+    a = d[rows, own] * n_own / np.maximum(n_own - 1.0, 1.0)
+    d[rows, own] = np.inf
+    b = d.min(axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        coef = np.where(a < b, 1.0 - a / b, np.where(a > b, b / a - 1.0, 0.0))
+    coef[n_own <= 1] = 0.0  # a point alone in its cluster
+    return _quality_from_clusters(sizes, means, sq_sums, scatter, float(coef.sum()))

@@ -12,6 +12,10 @@ design. This module provides:
   the result is deterministic and driver-gateable; eigen-solver values are
   still floating-point, so catalog coverage stays rows+schema (no SQL oracle
   computes an eigendecomposition).
+* :func:`pca_local` — the same projection in numpy, for a matrix already on
+  the driver: the explorer's retrain uses it for frames within
+  ``ml.clustering.MAX_LOCAL_POINTS``, whose vectors its KMeans fit has
+  collected. Both paths take their signs from :func:`_canonical_signs`.
 * :func:`tsne_project` — the reference-literal TSNE, driver-side.
   Uses sklearn when available; otherwise a seeded pure-numpy exact t-SNE
   (:func:`_tsne_numpy` — van der Maaten's O(n²) formulation: perplexity
@@ -52,7 +56,6 @@ def pca_project(
     component is flipped (if needed) to make its largest-|loading| entry
     positive. The loading matrix is k×dim on the driver — tiny.
     """
-    import numpy as np
     from pyspark.ml.feature import PCA
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
@@ -61,11 +64,8 @@ def pca_project(
         *keep, array_to_vector(F.col(vec_col)).alias("__features")
     )
     model = PCA(k=dims, inputCol="__features", outputCol="__proj").fit(feat)
-    pc = model.pc.toArray()  # (n_features, dims) loadings, driver-local
-    signs = []
-    for j in range(pc.shape[1]):
-        lead = pc[int(np.argmax(np.abs(pc[:, j]))), j]
-        signs.append(-1.0 if lead < 0 else 1.0)
+    # (n_features, dims) loadings, driver-local
+    signs = _canonical_signs(model.pc.toArray()).tolist()
     proj = model.transform(feat).select(
         *keep, vector_to_array(F.col("__proj")).alias("__p")
     )
@@ -80,6 +80,31 @@ def pca_project(
             for j in range(dims)
         ],
     )
+
+
+def _canonical_signs(pc):
+    """±1 per column of a (dim, k) loading matrix: PCA fixes each
+    eigenvector only up to sign, so each component is flipped (if needed)
+    to make its largest-|loading| entry positive."""
+    import numpy as np
+
+    lead = pc[np.abs(pc).argmax(axis=0), np.arange(pc.shape[1])]
+    return np.where(lead < 0, -1.0, 1.0)
+
+
+def pca_local(X, dims: int = 2):
+    """:func:`pca_project`'s coordinates for an (n, dim) matrix on the
+    driver, as an (n, dims) matrix. MLlib's definition: the top ``dims``
+    eigenvectors of the sample covariance, applied to the uncentred rows,
+    with the same sign rule. The products use ``np.einsum``, not BLAS, as
+    ``ml.clustering._lloyd`` does: BLAS worker threads spin CPU time."""
+    import numpy as np
+
+    centred = X - X.mean(axis=0)
+    cov = np.einsum("ni,nj->ij", centred, centred) / max(len(X) - 1, 1)
+    _, vecs = np.linalg.eigh(cov)  # ascending eigenvalues
+    pc = vecs[:, ::-1][:, :dims]
+    return np.einsum("nd,dk->nk", X, pc * _canonical_signs(pc))
 
 
 def _tsne_numpy(
@@ -173,18 +198,24 @@ def tsne_project(
             f"tsne_project is a driver-side op for <= {MAX_DRIVER_POINTS} "
             "points (got more); project with pca_project or pre-sample"
         )
-    mat = vectors_matrix(table.column(1))
+    coords = tsne_local(vectors_matrix(table.column(1)), **tsne_kwargs)
     pdf = table.select([0]).to_pandas()
+    pdf["tsne_x"], pdf["tsne_y"] = coords[:, 0], coords[:, 1]
+    return pdf
+
+
+def tsne_local(X, **tsne_kwargs):
+    """:func:`tsne_project`'s 2-D coordinates for an (n, dim) matrix
+    already on the driver: sklearn's TSNE when importable, else
+    :func:`_tsne_numpy`."""
     try:
         from sklearn.manifold import TSNE  # noqa: PLC0415
 
         params = {**TSNE_DEFAULTS, **tsne_kwargs}
-        coords = TSNE(n_components=2, **params).fit_transform(mat)
+        return TSNE(n_components=2, **params).fit_transform(X)
     except ImportError:
-        coords = _tsne_numpy(
-            mat,
+        return _tsne_numpy(
+            X,
             perplexity=tsne_kwargs.get("perplexity", 30.0),
             seed=tsne_kwargs.get("random_state", TSNE_DEFAULTS["random_state"]),
         )
-    pdf["tsne_x"], pdf["tsne_y"] = coords[:, 0], coords[:, 1]
-    return pdf

@@ -1221,17 +1221,7 @@ from .c2v_prep import EVENTS_C2V_CFG as _C2V_CFG  # noqa: E402
     """,
 )
 def c2v_prep_contexts(spark, sf_dir):
-    from ..operators.partitioning import fan_out_if_narrow
-
-    # the top-N count, the semi-join probe and the context partial
-    # aggregate all run at the fact scan's parallelism — fan out an
-    # under-parallel scan hashed on the user key, which the contexts
-    # groupBy then reuses as its exchange (same shuffle count)
-    ev = fan_out_if_narrow(
-        _t(spark, sf_dir, "events"), _C2V_CFG.user_col,
-        heavy=True,  # fact-scan rescue: topN/semi/context partials
-    )
-    return user_contexts(ev, _C2V_CFG)
+    return user_contexts(_t(spark, sf_dir, "events"), _C2V_CFG)
 
 
 # ---------------------------------------------------------------------------

@@ -225,6 +225,47 @@ def test_scatter_html_page_highlight_flow(explorer):
         server.server_close()
 
 
+def test_numpy_pca_matches_pca_project(explorer):
+    """The driver-side retrain's coordinates are ``pca_project``'s."""
+    from ihop_reddit_spark.ml.projection import pca_project
+
+    frame = explorer.assignments
+    got = {r["word"]: (r["x"], r["y"]) for r in frame.collect()}
+    expected = pca_project(frame, "vector", "word", dims=2).collect()
+    assert len(expected) == len(got) == 24
+    for r in expected:
+        assert abs(got[r["word"]][0] - r["x"]) <= 1e-9
+        assert abs(got[r["word"]][1] - r["y"]) <= 1e-9
+
+
+@pytest.mark.parametrize("projection", ["pca", "tsne"])
+def test_train_under_the_guard_is_one_spark_job(explorer, count_jobs, projection):
+    try:
+        out, n = count_jobs(lambda: explorer.train(n_clusters=3, seed=1, projection=projection))
+        assert n <= 1
+        assert out["metrics"]["silhouette"] > 0.8
+    finally:
+        explorer.train(n_clusters=3, seed=1)
+
+
+def test_train_above_the_guard_takes_the_mllib_path(explorer, monkeypatch):
+    """Above ``MAX_LOCAL_POINTS`` the retrain fits MLlib KMeans and
+    projects with MLlib PCA; the frame and the metrics keep their shape."""
+    from ihop_reddit_spark.ml import clustering
+
+    local_types, local_keys = explorer.assignments.dtypes, set(explorer.metrics)
+    monkeypatch.setattr(clustering, "MAX_LOCAL_POINTS", 10)
+    try:
+        out = explorer.train(n_clusters=3, seed=1)
+        assert explorer.assignments.dtypes == local_types
+        assert set(out["metrics"]) == local_keys
+        assert out["metrics"]["silhouette"] > 0.8
+        assert explorer.assignments.count() == 24
+    finally:
+        monkeypatch.undo()
+        explorer.train(n_clusters=3, seed=1)
+
+
 @pytest.mark.slow
 def test_tsne_projection_option(spark, explorer):
     """The reference app plots t-SNE coordinates; train(projection=

@@ -293,6 +293,33 @@ def test_cluster_quality_matches_closed_forms(blobs):
     assert q["davies_bouldin"] == pytest.approx(db_expected, rel=1e-9)
 
 
+def _matrix_and_labels(df, vec_col, label_col):
+    rows = df.select(vec_col, label_col).collect()
+    return np.array([r[0] for r in rows], dtype=float), np.array([r[1] for r in rows])
+
+
+def test_numpy_metrics_match_cluster_quality(emb_sf001):
+    """The explorer's driver-side metrics equal ``cluster_quality`` on a
+    KMeans labeling, on the same labeling with one point alone in its
+    cluster, and on a single cluster (NaN silhouette and CH)."""
+    from ihop_reddit_spark.ml.clustering import cluster_quality_local
+
+    out, _ = kmeans_assign(emb_sf001, "embedding", ClusteringConfig(n_clusters=8, seed=100))
+    first = out.agg(F.min("vec_id")).first()[0]
+    alone = out.withColumn(
+        "cluster_id", F.when(F.col("vec_id") == first, 8).otherwise(F.col("cluster_id"))
+    )
+    single = out.withColumn("cluster_id", F.lit(0))
+    for labeling in (out, alone, single):
+        expected = cluster_quality(labeling, "embedding")
+        got = cluster_quality_local(*_matrix_and_labels(labeling, "embedding", "cluster_id"))
+        assert got.keys() == expected.keys()
+        for name, value in expected.items():
+            assert got[name] == pytest.approx(value, rel=1e-9, nan_ok=True), name
+    # the last labeling is the single cluster
+    assert np.isnan(got["silhouette"]) and np.isnan(got["calinski_harabasz"])
+
+
 def test_lda_fits_and_topic_terms(spark):
     from ihop_reddit_spark.ml.text_pipeline import SparkTextPipeline
 
@@ -535,6 +562,20 @@ def test_pca_project_shapes_and_variance_order(spark, sf_dir):
     }
     first = {r["vec_id"]: (r["x"], r["y"]) for r in out}
     assert first == again
+
+
+def test_numpy_pca_matches_pca_project(emb_sf001):
+    """``pca_local`` gives ``pca_project``'s coordinates, signs included."""
+    from ihop_reddit_spark.ml.projection import pca_local, pca_project
+
+    rows = emb_sf001.select("vec_id", "embedding").collect()
+    got = pca_local(np.array([r[1] for r in rows], dtype=float), dims=2)
+    spark_xy = {
+        r["vec_id"]: (r["x"], r["y"])
+        for r in pca_project(emb_sf001, "embedding", "vec_id", dims=2).collect()
+    }
+    expected = np.array([spark_xy[r[0]] for r in rows])
+    assert np.abs(got - expected).max() <= 1e-9
 
 
 def test_tsne_project_runs_and_is_size_guarded(spark, sf_dir):

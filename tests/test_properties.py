@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import bisect
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 import pytest
@@ -315,6 +315,61 @@ def test_star_components_match_union_find(spark, edges):
         for r in duplicate_components_star(pairs).collect()
     }
     assert uf == star
+
+
+def _union_find(edges):
+    """{node: smallest node of its component}, by path-halving union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _cycle(nodes):
+    return list(zip(nodes, nodes[1:] + nodes[:1]))
+
+
+@settings(SETTINGS, max_examples=4)
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(
+            lambda e: e[0] != e[1]
+        ),
+        min_size=1,
+        max_size=15,
+    )
+)
+# odd cycles, and stars with chords between their leaves: the shapes on
+# which a contraction round could map an edge set back onto an earlier one
+@example(edges=_cycle([0, 1, 2]))
+@example(edges=_cycle([3, 0, 4, 1, 2]))
+@example(edges=_cycle([6, 2, 5, 0, 3, 1, 4]))
+@example(edges=[(6, i) for i in range(6)] + [(0, 3), (1, 4), (2, 5)])
+@example(edges=[(0, i) for i in range(1, 7)] + [(1, 2), (3, 4), (5, 6), (2, 6)])
+def test_star_components_exit_at_a_single_round_fixpoint(spark, edges):
+    """``duplicate_components_star`` checks convergence every second
+    round, so its exit is only right if the edge set it exits with is
+    also a fixpoint of ONE round; its components must equal union-find's."""
+    from ihop_reddit_spark.datapipe.dedup import _star_round, duplicate_components_star
+
+    norm = sorted({(min(a, b), max(a, b)) for a, b in edges})
+    pairs = spark.createDataFrame(norm, "left_id long, right_id long")
+    out = {(r["doc_id"], r["component_id"]) for r in duplicate_components_star(pairs).collect()}
+    assert out == set(_union_find(norm).items())
+    # the exit edges are the output's non-root rows, (u, v) = (doc, root)
+    exit_edges = sorted((d, c) for d, c in out if d != c)
+    frame = spark.createDataFrame(exit_edges, "u long, v long")
+    assert {(r["u"], r["v"]) for r in _star_round(frame).collect()} == set(exit_edges)
 
 
 @pytest.mark.slow
