@@ -517,12 +517,13 @@ def component_split_assign(
     an old document inherits the old component's split).
 
     Plan: connected components over the (candidate-verified) pair graph
-    (O(log n) large-star/small-star rounds), one id-keyed LEFT join onto
+    (:func:`~.dedup.duplicate_components`: driver union-find under its
+    size guard, star contraction above it), one id-keyed LEFT join onto
     the corpus, then the zero-shuffle md5 projection.
     """
-    from .dedup import duplicate_components_star
+    from .dedup import duplicate_components
 
-    comp = duplicate_components_star(pairs).withColumnRenamed(
+    comp = duplicate_components(pairs).withColumnRenamed(
         "doc_id", id_col
     )
     keyed = df.join(comp, id_col, "left").withColumn(

@@ -621,201 +621,6 @@ def ngram_jaccard_pairs_prefix(
     )
 
 
-def duplicate_components(
-    pairs: DataFrame,
-    max_driver_pairs: int = 5_000_000,
-    on_overflow: str = "distribute",
-) -> DataFrame:
-    """Group near-duplicate PAIRS into duplicate CLUSTERS (connected
-    components): (doc_id, component_id = smallest id in the component).
-
-    Training-data dedup keeps one representative per component, not per
-    pair (A~B, B~C must collapse to one survivor even when A≁C directly).
-    Components of a thresholded similarity graph are tiny and the pair list
-    is already threshold-pruned, so this runs union-find on the driver with
-    an explicit size guard — the same driver-drop discipline as the
-    reference's ≤10k-point sklearn stages.
-
-    Past the guard the call AUTO-ROUTES to the distributed star-contraction
-    implementation (:func:`duplicate_components_star` — O(log n) rounds,
-    property-tested equal to the union-find) instead of failing: at 100 TB
-    a boilerplate-heavy shard can exceed any driver budget and the right
-    response is a plan change, not an abort mid-pipeline. Pass
-    ``on_overflow="raise"`` to restore the hard guard (e.g. in contexts
-    where an unexpectedly huge pair list signals an upstream bug).
-    """
-    if on_overflow not in ("distribute", "raise"):
-        raise ValueError(f"on_overflow must be distribute|raise, got {on_overflow!r}")
-    # the pair lineage (usually a similarity join) is consumed by TWO actions
-    # (guard count + edge iteration) — persist across them, drop after
-    pairs = pairs.persist()
-    cnt = pairs.count()
-    if cnt > max_driver_pairs:
-        if on_overflow == "distribute":
-            try:
-                return duplicate_components_star(pairs)
-            finally:
-                pairs.unpersist()
-        pairs.unpersist()
-        raise ValueError(
-            f"duplicate_components: {cnt} pairs exceed the driver guard "
-            f"({max_driver_pairs}); use an iterative CC implementation"
-        )
-    parent: dict = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for row in pairs.select("left_id", "right_id").toLocalIterator():
-        a, b = row[0], row[1]
-        for v in (a, b):
-            parent.setdefault(v, v)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    rows = [(v, find(v)) for v in parent]
-    spark = pairs.sparkSession
-    pairs.unpersist()
-    from pyspark.sql import types as T
-
-    id_type = pairs.schema["left_id"].dataType
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", id_type, False),
-            T.StructField("component_id", id_type, False),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
-
-
-def duplicate_components_distributed(
-    pairs: DataFrame,
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Distributed connected components: min-label propagation to fixpoint.
-
-    The scale path past :func:`duplicate_components`' driver guard — no
-    driver materialization of edges. Each iteration joins current labels
-    across undirected edges and takes the per-node min; convergence when an
-    iteration changes nothing. Near-dup graphs have tiny diameters (a dup
-    cluster is near-clique), so this converges in a handful of iterations;
-    each is one shuffle-join + one aggregation.
-
-    Lineage discipline: each iteration's frontier is cut with
-    ``localCheckpoint(eager=True)`` — ``persist()`` alone caches partitions
-    but leaves the LOGICAL plan nested one level deeper per iteration
-    (geometric plan growth; the driver OOMs just stringifying the plan long
-    before any data pressure). Checkpoint blocks from superseded iterations
-    are released by Spark's ContextCleaner once the frame is rebound. On a
-    real cluster where executor loss must be survivable, swap
-    ``localCheckpoint`` for reliable ``checkpoint`` (needs
-    ``spark.sparkContext.setCheckpointDir``) — same truncation, HDFS-backed.
-    Same output contract as the union-find:
-    (doc_id, component_id = min id in component).
-    """
-    edges = (
-        pairs.select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
-        .unionByName(
-            pairs.select(
-                F.col("right_id").alias("src"), F.col("left_id").alias("dst")
-            )
-        )
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("component_id", F.col("doc_id"))
-        .localCheckpoint(eager=False)
-    )
-    # lazy checkpoint (r15): the initial fingerprint below materializes
-    # it (and `edges`' persist) in the same job — the scoped persists the
-    # caller's pairs carried are released only after that first action,
-    # preserving the ownership hand-off duplicate_components_star pins
-    from ..caching import release_scoped_persists
-
-    # same convergence discipline as duplicate_components_star: a
-    # (count, decimal hash-sum) fingerprint per round, with the exact
-    # changed-labels join run only when the fingerprint reports a fixed
-    # point — labels only ever DECREASE, so an unchanged hash-sum with
-    # a real change would need a collision, which the exact confirm
-    # rules out either way
-    def _fingerprint(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64("doc_id", "component_id").cast("decimal(38,0)")
-            ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def _propagate(cur: DataFrame) -> DataFrame:
-        neighbor_min = (
-            edges.join(
-                cur.withColumnRenamed("doc_id", "dst").withColumnRenamed(
-                    "component_id", "nbr_label"
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("nbr_label").alias("nbr_min"))
-        )
-        return cur.join(neighbor_min, "doc_id", "left").select(
-            "doc_id",
-            F.least(
-                F.col("component_id"),
-                F.coalesce(F.col("nbr_min"), F.col("component_id")),
-            ).alias("component_id"),
-        )
-
-    # BATCHED iterations (r15, same shape and argument as the star
-    # loop): two propagation steps compose lazily per checkpoint, so
-    # the eager-checkpoint + fingerprint-collect fixed cost is paid
-    # every other step; labels only ever decrease, so a fixpoint of the
-    # composed map is a fixpoint of one step, the label SEQUENCE is
-    # unchanged, and the exact changed-rows confirmation still gates
-    # the exit.
-    rounds_per_check = 2
-    prev_fp = _fingerprint(labels)  # materializes the initial checkpoint
-    release_scoped_persists(pairs)
-    done = 0
-    changed = None  # set by the first fingerprint match's confirmation
-    while done < max_iterations:
-        new_labels = labels
-        for _ in range(min(rounds_per_check, max_iterations - done)):
-            new_labels = _propagate(new_labels)
-            done += 1
-        new_labels = new_labels.localCheckpoint(eager=False)
-        fp = _fingerprint(new_labels)  # one job: materialize + fingerprint
-        if fp == prev_fp:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "doc_id")
-                .where(F.col("n.component_id") != F.col("o.component_id"))
-                .count()
-            )
-            if changed == 0:
-                labels = new_labels
-                break
-        prev_fp = fp
-        labels = new_labels
-    else:
-        edges.unpersist()
-        still = "" if changed is None else f" ({changed} labels still changing)"
-        raise RuntimeError(
-            f"duplicate_components_distributed did not converge within "
-            f"{max_iterations} iterations{still}; "
-            "raise max_iterations (diameter-long duplicate chains)"
-        )
-    edges.unpersist()
-    return labels
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star round: every node links its LARGER neighbors to the
     minimum of its closed neighborhood. One shuffle (window on ``u``)."""
@@ -906,49 +711,44 @@ def _star_round(edges: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_components_star(
-    pairs: DataFrame,
-    max_iterations: int = 50,
-) -> DataFrame:
-    """Distributed connected components via alternating large-star /
-    small-star rounds (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14).
+#: Live edge count at or under which :func:`duplicate_components` stops
+#: contracting and finishes on the driver: one collect, then union-find.
+MAX_DRIVER_EDGES = 5_000_000
 
-    Same output contract as :func:`duplicate_components` /
-    :func:`duplicate_components_distributed`:
-    ``(doc_id, component_id = min id in component)``.
 
-    WHEN to prefer which distributed path: min-label propagation converges
-    in O(diameter) rounds — ideal for near-dup graphs (dup clusters are
-    near-cliques, diameter 2-3). Star contraction converges in O(log n)
-    rounds REGARDLESS of diameter, so it wins on chain-shaped duplicate
-    graphs (e.g. drifting near-dups A~B~C~...~Z where consecutive versions
-    match but distant ones don't). Each round is two window shuffles +
-    distinct; lineage is cut per round with ``localCheckpoint`` (same
-    discipline as the min-label loop — persist alone grows the plan
-    geometrically). The tests pin both the union-find equivalence and the
-    round-count advantage on a long path graph.
+def duplicate_components(pairs: DataFrame, max_iterations: int = 50) -> DataFrame:
+    """Group near-duplicate PAIRS into duplicate CLUSTERS (connected
+    components): ``(doc_id, component_id = smallest id in the component)``.
 
-    EAGER: the ``pairs`` plan runs during CONSTRUCTION (the initial
-    ``localCheckpoint(eager=True)`` plus one materialized round per
-    contraction step) — this is not a lazy operator. Because that first
-    checkpoint fully consumes the input plan, any scoped persists
+    Training-data dedup keeps one representative per component, not per
+    pair (A~B, B~C must collapse to one survivor even when A≁C directly).
+
+    One loop over the canonical ``(u > v)`` edge set. While its live edge
+    count is above :data:`MAX_DRIVER_EDGES`, it runs fused large-star /
+    small-star contraction rounds (:func:`_star_round`; Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14): O(log n)
+    rounds regardless of the graph's diameter, each cut from its lineage
+    by a lazy ``localCheckpoint`` (persist alone grows the plan
+    geometrically). Once a round's fingerprint reports a count at or under
+    the guard, the edges are collected in one action and finished with
+    union-find; the result is a local relation. Star rounds keep every
+    node and its component, so union-find over any round's edges gives the
+    same answer. Near-dup graphs are threshold-pruned and tiny, so inputs
+    under the guard take no contraction round at all. Above the guard, the
+    loop exits only at a fixpoint confirmed by an exact two-sided
+    ``exceptAll`` (the fingerprint alone is not a proof).
+
+    EAGER: the ``pairs`` plan runs during CONSTRUCTION — the first
+    fingerprint materializes the checkpointed edge set. Any scoped persists
     registered on ``pairs`` (e.g. the shingle stream cached inside
-    ``ngram_jaccard_pairs``) are RELEASED here — they can never be
-    re-read through this operator, and leaving them cached leaks
-    executor memory until session end. A caller that reuses the same
-    ``pairs`` object for other consumers afterward recomputes it (or
-    persists its own copy before calling).
+    ``ngram_jaccard_pairs``) are RELEASED right after that action: they
+    can never be re-read through this operator. A caller that reuses the
+    same ``pairs`` object afterward recomputes it (or persists its own
+    copy before calling). ``out._cc_rounds`` is the number of contraction
+    rounds run (0 when the input is already under the guard).
     """
     from ..caching import release_scoped_persists
 
-    # LAZY checkpoints throughout this loop (r15): a lazy localCheckpoint
-    # truncates lineage exactly like an eager one, but lets the very next
-    # fingerprint action materialize it — ONE Spark job per step instead
-    # of materialize + fingerprint, on a loop whose cost is all fixed
-    # per-job latency at small graph sizes. The initial fingerprint runs
-    # BEFORE the input's scoped persists are released, so the input plan
-    # still executes against its caches.
     edges = (
         pairs.select(
             F.greatest(F.col("left_id"), F.col("right_id")).alias("u"),
@@ -959,67 +759,78 @@ def duplicate_components_star(
         .localCheckpoint(eager=False)
     )
 
-    # convergence test: a (count, hash-sum) FINGERPRINT per round — one
-    # tiny agg over the just-checkpointed frame — and only when the
-    # fingerprint reports a fixed point, the exact two-sided exceptAll
-    # CONFIRMATION (hash-sum equality alone is not a proof). The exact
-    # check thus runs once at convergence instead of two wide shuffles
-    # every round — the per-round driver cost that dominated small
-    # graphs without weakening the exactness contract.
+    # (count, hash-sum) fingerprint: one job that materializes the
+    # just-checkpointed frame; decimal partials are exact and
+    # overflow-free under ANSI
     def _fingerprint(df: DataFrame) -> tuple:
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
-            # decimal partials: exact and overflow-free under ANSI
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
         ).collect()[0]
         return (row["n"], row["h"])
 
-    # BATCHED rounds (r15, guide §1.2 distributed-algorithm costs): two
-    # contraction rounds compose LAZILY between checkpoints, so the
-    # per-materialization fixed cost (eager checkpoint job + fingerprint
-    # collect — the dominant term on small graphs) is paid every OTHER
-    # round while lineage stays bounded at 2 rounds (6 exchanges).
-    # Convergence is unchanged: the round map is deterministic and its
-    # potential strictly decreases until the fixpoint, so "invariant
-    # under 2 rounds" ⟺ "invariant under 1", the visited edge-set
-    # SEQUENCE is identical (we merely materialize every other element),
-    # and the exact exceptAll confirmation still gates the exit — the
-    # only cost is up to ROUNDS_PER_CHECK-1 no-op rounds inside the
-    # final lazy batch.
-    rounds_per_check = 2
-    prev_fp = _fingerprint(edges)  # materializes the initial checkpoint
+    fp = _fingerprint(edges)  # runs the pair plan against its caches
     release_scoped_persists(pairs)
     rounds = 0
-    while rounds < max_iterations:
-        nxt = edges
-        for _ in range(min(rounds_per_check, max_iterations - rounds)):
-            nxt = _star_round(nxt)
-            rounds += 1
-        nxt = nxt.localCheckpoint(eager=False)
-        fp = _fingerprint(nxt)  # one job: materializes AND fingerprints
-        if fp == prev_fp and not (
+    while fp[0] > MAX_DRIVER_EDGES:
+        if rounds == max_iterations:
+            raise RuntimeError(
+                f"duplicate_components did not converge within "
+                f"{max_iterations} rounds"
+            )
+        nxt = _star_round(edges).localCheckpoint(eager=False)
+        rounds += 1
+        nxt_fp = _fingerprint(nxt)
+        if nxt_fp == fp and not (
             nxt.exceptAll(edges).limit(1).count()
             or edges.exceptAll(nxt).limit(1).count()
         ):
-            edges = nxt
-            break
-        prev_fp = fp
-        edges = nxt
-    else:
-        raise RuntimeError(
-            f"duplicate_components_star did not converge within "
-            f"{max_iterations} rounds"
-        )
-    roots = (
-        edges.select(F.col("v").alias("doc_id"))
-        .distinct()
-        .withColumn("component_id", F.col("doc_id"))
+            # fixpoint: every edge is (member, root)
+            roots = edges.select(F.col("v").alias("doc_id")).distinct()
+            out = (
+                edges.select(
+                    F.col("u").alias("doc_id"), F.col("v").alias("component_id")
+                )
+                .unionByName(roots.withColumn("component_id", F.col("doc_id")))
+                .distinct()
+            )
+            out._cc_rounds = rounds
+            return out
+        edges, fp = nxt, nxt_fp
+
+    import pyarrow as pa
+
+    table = edges.toArrow()  # at most MAX_DRIVER_EDGES rows
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in zip(*(table.column(c).to_pylist() for c in ("u", "v"))):
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    arrow_type, id_type = table.column("u").type, edges.schema["u"].dataType
+    out = edges.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "doc_id": pa.array(list(parent), arrow_type),
+                "component_id": pa.array([find(x) for x in parent], arrow_type),
+            }
+        ),
+        T.StructType(
+            [
+                T.StructField("doc_id", id_type, False),
+                T.StructField("component_id", id_type, False),
+            ]
+        ),
     )
-    nodes = edges.select(
-        F.col("u").alias("doc_id"), F.col("v").alias("component_id")
-    )
-    out = nodes.unionByName(roots).distinct()
-    out._cc_rounds = rounds  # observability for tests/benchmarks
+    out._cc_rounds = rounds
     return out
 
 
@@ -1590,8 +1401,9 @@ def dedup_keep_best(
     of sorting in one task (same skew rule as the C4 span canonical),
     and ids only need to be ORDERABLE, not numeric.
 
-    Plan: components via :func:`duplicate_components_star` (O(log n)
-    rounds), then component-keyed aggregates + one anti-join of the
+    Plan: components via :func:`duplicate_components` (driver union-find
+    under its size guard, star rounds above it), then component-keyed
+    aggregates + one anti-join of the
     drop set against the corpus. The drop set is cluster-member-bounded
     and often dimension-sized, but on boilerplate-heavy corpora it is a
     large corpus fraction — so the default is ``broadcast_drops=False``
@@ -1603,7 +1415,7 @@ def dedup_keep_best(
     if score is None:
         score = F.length(F.col(text_col))
     # components emit a literal doc_id column — align to the caller's id
-    comp = duplicate_components_star(pairs).withColumnRenamed(
+    comp = duplicate_components(pairs).withColumnRenamed(
         "doc_id", id_col
     )
     members = comp.join(

@@ -22,7 +22,7 @@ from ..operators.windows import top_k_per_group
 
 #: "queries are the small side" is a CONTRACT — enforce it like every other
 #: driver materialization in this engine (EmbeddingMatrix.from_vectors_df,
-#: duplicate_components, tsne_project) instead of trusting the caller.
+#: tsne_project) instead of trusting the caller.
 MAX_DRIVER_QUERIES = 200_000
 
 

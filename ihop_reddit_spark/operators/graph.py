@@ -17,7 +17,7 @@ standard message-passing plan. Edges and the node/degree frames are
 multi-consumer (reused every iteration) and carried as scoped persists;
 the per-iteration ``localCheckpoint(eager=False)`` bounds the logical
 plan to constant size so iteration K doesn't replan K nested joins
-(the same lineage rule as dedup.duplicate_components_distributed).
+(the same lineage rule as dedup.duplicate_components' star rounds).
 
 Truncation loses up to (out_degree-1) + 1 units per node per iteration —
 at unit=10^12 that is a relative error < 1e-8 per step, far below any
@@ -25,7 +25,7 @@ ranking-relevant signal; mass is not exactly conserved and that is fine
 for ranking (this mirrors how integer-quantized embedding math trades
 exact IEEE parity for exact integer parity, functions/vectors.py).
 
-Companion to connected components (datapipe/dedup.py:duplicate_components*);
+Companion to connected components (datapipe/dedup.py:duplicate_components);
 the reference has no graph tier at all — this is part of the engine's
 extension surface.
 """

@@ -12,9 +12,10 @@ plan over the ``documents`` table:
    default drops shingles with document frequency > ``max_shingle_df``
    from the join stream (a boilerplate shingle shared by 10⁸ documents
    is a 10¹⁶-row join key uncapped), and a Vernica prefix-filter
-   strategy is config-selectable for heavy-tailed corpora → distributed
-   connected components (star contraction, O(log n) rounds, no driver
-   union-find) → keep each component's smallest id.
+   strategy is config-selectable for heavy-tailed corpora → connected
+   components (``dedup.duplicate_components``: star contraction rounds
+   while the edge set is above a size guard, one driver union-find below
+   it) → keep each component's smallest id.
 5. **Token budget** — whitespace + BPE-ish token counts on the final corpus.
 
 Stage order is the cost order: each tier only sees the previous tier's
@@ -36,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..datapipe.dedup import (
-    duplicate_components_star,
+    duplicate_components,
     ngram_jaccard_pairs,
     ngram_jaccard_pairs_prefix,
 )
@@ -78,19 +79,20 @@ def prepare_corpus(
     ``(doc_id, n_tokens, bpe_tokens)``.
 
     EAGER: the near-dup tier runs during CONSTRUCTION —
-    ``duplicate_components_star`` materializes the pair join via
-    ``localCheckpoint(eager=True)`` per contraction round — so calling
-    this function executes the quality gates, exact dedup, and the
-    similarity self-join before returning; only the final survivor
-    anti-join and token counting stay lazy in the returned plan.
+    ``duplicate_components`` materializes the pair join behind a
+    ``localCheckpoint`` with its first fingerprint action, then finishes
+    on the driver (or contracts, above its size guard) — so calling this
+    function executes the quality gates, exact dedup, and the similarity
+    self-join before returning; only the final survivor anti-join and
+    token counting stay lazy in the returned plan.
 
     Caching ownership: the exact-dedup survivor frame is persisted here
     (it feeds both the pair join and the survivor scan) and registered
     on the returned DataFrame — call
     :func:`ihop_reddit_spark.caching.release_scoped_persists` on the
     RESULT once consumed. The shingle stream persisted inside the pairs
-    tier is released by ``duplicate_components_star`` itself as soon as
-    the contraction consumes it (it is never re-read afterward).
+    tier is released by ``duplicate_components`` itself right after its
+    first action consumes it (it is never re-read afterward).
     """
     cfg = cfg or CorpusPrepConfig()
     text = F.col(text_col)
@@ -113,7 +115,7 @@ def prepare_corpus(
     min_id = F.min(id_col).over(
         Window.partitionBy(TX.fingerprint(text))
     )
-    # `exact` feeds both the similarity join (driver-actioned inside
+    # `exact` feeds both the similarity join (actioned inside
     # duplicate_components) and the final survivor scan — persist it so the
     # scan + gates run once. MEMORY_AND_DISK: survivors of the gates are a
     # fraction of the corpus, and disk spill beats recompute here.
@@ -147,9 +149,9 @@ def prepare_corpus(
         )
     else:
         raise ValueError(f"pair_strategy must be prefix|exact, got {cfg.pair_strategy!r}")
-    # distributed star contraction — O(log n) rounds, no driver union-find,
-    # no toLocalIterator: the composed plan stays executor-side end to end
-    components = duplicate_components_star(pairs)
+    # components: a local relation when the pair graph is under the
+    # driver guard, star-contracted executor-side frames above it
+    components = duplicate_components(pairs)
     losers = components.where(F.col("doc_id") != F.col("component_id")).select(
         F.col("doc_id").alias(id_col)
     )

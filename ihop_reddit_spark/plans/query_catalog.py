@@ -1592,7 +1592,8 @@ def corpus_prep_survivors(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Dedup: near-duplicate PAIRS → duplicate COMPONENTS (connected components;
 # keep-one-per-cluster is the training-data dedup contract). Spark side =
-# threshold-pruned pairs + driver union-find (size-guarded); oracle =
+# threshold-pruned pairs + dedup.duplicate_components (driver union-find
+# under its size guard, star contraction rounds above it); oracle =
 # recursive-CTE transitive closure with min-label per node.
 # ---------------------------------------------------------------------------
 @query(
@@ -1609,26 +1610,6 @@ def duplicate_components_ngram(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2)
     return duplicate_components(pairs)
-
-
-# Same closure oracle, FULLY DISTRIBUTED Spark side: alternating
-# large-star/small-star contraction (O(log n) rounds regardless of
-# diameter) instead of the size-guarded driver union-find — the 100 TB
-# path, hash-gated against the identical recursive-CTE ground truth.
-@query(
-    "duplicate_components_star_ngram",
-    f"""
-    WITH {_jaccard_ctes("documents", 0.2)},
-    {_closure_ctes()}
-    SELECT a AS doc_id, MIN(b) AS component_id FROM reach GROUP BY a
-    """,
-)
-def duplicate_components_star_ngram(spark, sf_dir):
-    from ..datapipe.dedup import duplicate_components_star, ngram_jaccard_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2)
-    return duplicate_components_star(pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -12656,7 +12637,6 @@ _SCORING_PRIORITY = [
     # r15 touched paths (this round's plan/loop changes)
     "dedup_aware_splits",
     "duplicate_components_ngram",
-    "duplicate_components_star_ngram",
     "split_leakage_audit",
     "simhash_candidate_pairs",
     "stream_domain_quota",

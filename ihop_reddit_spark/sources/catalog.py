@@ -60,7 +60,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -105,27 +104,13 @@ def read_catalog_doc(cat: str, version: int) -> dict:
 
 
 def _commit_catalog_doc(cat: str, doc: dict) -> int:
+    """Atomically publish ``doc`` as catalog version ``doc['version']``
+    (the table commit protocol, ``manifest._publish_doc``; its
+    ``committed_at`` stamp drives catalog timestamp time travel)."""
     version = doc["version"]
-    # wall-clock commit stamp (epoch ns) for catalog timestamp time
-    # travel — same discipline as manifest._commit_version: readers
-    # make the series monotone (catalog_version_at_timestamp), so clock
-    # jitter between writers never flips resolution order vs versions
-    doc.setdefault("committed_at", time.time_ns())
-    d = _cat_dir(cat)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".tmp-v{version:08d}-{os.getpid()}.json")
-    with open(tmp, "w") as fh:
-        json.dump(doc, fh, indent=1, sort_keys=True)
-    try:
-        os.link(tmp, _cat_doc_path(cat, version))
-    except FileExistsError:
-        raise M.ConcurrentCommitError(
-            f"catalog version {version} at {cat} was committed by"
-            " another writer"
-        ) from None
-    finally:
-        os.unlink(tmp)
-    return version
+    return M._publish_doc(
+        _cat_doc_path(cat, version), doc, f"catalog version {version} at {cat}"
+    )
 
 
 def catalog_init(cat: str, tables: dict[str, str]) -> int:

@@ -58,6 +58,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,30 +126,41 @@ def read_version_doc(path: str, version: int) -> dict:
     return copy.deepcopy(doc)
 
 
-def _commit_version(path: str, doc: dict) -> int:
-    """Atomically publish ``doc`` as version ``doc['version']``.
+def _publish_doc(dst: str, doc: dict, what: str) -> int:
+    """Atomically publish the version doc ``doc`` at ``dst``; returns
+    ``doc['version']``. Shared by table and catalog commits.
 
-    os.link is create-if-absent on POSIX — the one concurrency primitive
-    the protocol needs (conditional PUT on an object store)."""
-    version = doc["version"]
+    The doc is staged in a temp file unique to this call (threads of one
+    process must not share it) and published with os.link, which is
+    create-if-absent on POSIX — the one concurrency primitive the
+    protocol needs (conditional PUT on an object store). Raises
+    ``ConcurrentCommitError`` naming ``what`` if ``dst`` already exists."""
     # wall-clock commit stamp (epoch ns) for timestamp time travel;
     # readers make the series monotone (version_at_timestamp), so clock
     # jitter between writers never flips resolution order vs versions
     doc.setdefault("committed_at", time.time_ns())
-    mdir = _manifest_dir(path)
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".tmp-v{version:08d}-{os.getpid()}.json")
+    d = os.path.dirname(dst)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}.json")
     with open(tmp, "w") as fh:
         json.dump(doc, fh, indent=1, sort_keys=True)
     try:
-        os.link(tmp, _version_doc_path(path, version))
+        os.link(tmp, dst)
     except FileExistsError:
         raise ConcurrentCommitError(
-            f"version {version} at {path} was committed by another writer"
+            f"{what} was committed by another writer"
         ) from None
     finally:
         os.unlink(tmp)
-    return version
+    return doc["version"]
+
+
+def _commit_version(path: str, doc: dict) -> int:
+    """Atomically publish ``doc`` as table version ``doc['version']``."""
+    version = doc["version"]
+    return _publish_doc(
+        _version_doc_path(path, version), doc, f"version {version} at {path}"
+    )
 
 
 def manifest_init(path: str) -> int:

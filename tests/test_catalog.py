@@ -491,3 +491,40 @@ def test_catalog_append_records_the_verified_constraint_snapshot(
         t.commit()
     assert C.catalog_latest(cat) == 1
     assert M.read_snapshot(spark, fact).count() == 4
+
+
+@pytest.mark.parametrize(
+    "commit, doc_path",
+    [
+        (M._commit_version, M._version_doc_path),
+        (C._commit_catalog_doc, C._cat_doc_path),
+    ],
+    ids=["table", "catalog"],
+)
+def test_nested_commit_of_one_version_has_one_winner(
+    tmp_path, monkeypatch, commit, doc_path
+):
+    """Two commits of one version from the same process: the second runs
+    to completion inside the first one's publish. Each must stage its own
+    temp file, so the inner commit wins with its own bytes and the outer
+    one loses cleanly."""
+    root = str(tmp_path / "t")
+    real_link = os.link
+    inner: list = []
+
+    def link_with_nested_commit(src, dst):
+        if not inner:
+            inner.append(None)  # the nested commit links for real
+            inner[0] = commit(root, {"version": 1, "operation": "inner"})
+        return real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", link_with_nested_commit)
+    with pytest.raises(M.ConcurrentCommitError):
+        commit(root, {"version": 1, "operation": "outer"})
+    assert inner == [1]
+    with open(doc_path(root, 1)) as fh:
+        published = json.load(fh)
+    assert published["operation"] == "inner"
+    with open(doc_path(root, 1)) as fh:
+        assert fh.read() == json.dumps(published, indent=1, sort_keys=True)
+    assert os.listdir(os.path.dirname(doc_path(root, 1))) == ["v00000001.json"]

@@ -359,7 +359,8 @@ def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.slow
-def test_duplicate_components_union_find(spark):
+def test_duplicate_components_union_find(spark, monkeypatch):
+    from ihop_reddit_spark.datapipe import dedup
     from ihop_reddit_spark.datapipe.dedup import duplicate_components
 
     pairs = spark.createDataFrame(
@@ -368,32 +369,61 @@ def test_duplicate_components_union_find(spark):
     )
     out = {r["doc_id"]: r["component_id"] for r in duplicate_components(pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 9: 7}
-
-    import pytest as _pytest
-
-    # past the guard: auto-routes to distributed star contraction with the
-    # SAME output (never aborts mid-pipeline at scale)
+    # above the guard: star contraction to a fixpoint, same output
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", 0)
     routed = {
         r["doc_id"]: r["component_id"]
-        for r in duplicate_components(pairs, max_driver_pairs=2).collect()
+        for r in duplicate_components(pairs).collect()
     }
     assert routed == out
-    # the hard guard stays available for callers that want the abort
-    with _pytest.raises(ValueError):
-        duplicate_components(pairs, max_driver_pairs=2, on_overflow="raise")
 
 
-def test_distributed_components_raise_when_not_converged(spark):
-    """A 5-node chain needs more than one propagation round; with one
-    allowed, the loop never sees a fingerprint match and must raise its
-    own error."""
-    from ihop_reddit_spark.datapipe.dedup import duplicate_components_distributed
+def test_distributed_components_raise_when_not_converged(spark, monkeypatch):
+    """A 5-node chain needs more than one contraction round; with one
+    allowed and the driver guard at 0, the loop never sees a fingerprint
+    match and must raise its own error."""
+    from ihop_reddit_spark.datapipe import dedup
 
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", 0)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "left_id long, right_id long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        duplicate_components_distributed(pairs, max_iterations=1)
+        dedup.duplicate_components(pairs, max_iterations=1)
+
+
+def test_components_under_the_guard_take_four_jobs(spark, count_jobs):
+    """Under the guard: the fingerprint (the distinct's shuffle-map job,
+    then the aggregate's map and result jobs) and one collect; no
+    contraction round."""
+    from ihop_reddit_spark.datapipe.dedup import duplicate_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 9), (4, 1)], "left_id long, right_id long"
+    )
+    out, n = count_jobs(lambda: duplicate_components(pairs))
+    assert n <= 4
+    assert out._cc_rounds == 0
+
+
+def test_components_of_ngram_pairs_match_across_the_guard(spark, sf_dir, monkeypatch):
+    """The star path on real n-gram pairs: the same rows with the guard at
+    0 (contraction to a fixpoint) as at its default (driver union-find)."""
+    from ihop_reddit_spark.caching import release_scoped_persists
+    from ihop_reddit_spark.datapipe import dedup
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    raw = dedup.ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2)
+    pairs = raw.localCheckpoint()  # one pair join for both runs
+    release_scoped_persists(raw)
+
+    def components():
+        return {tuple(r) for r in dedup.duplicate_components(pairs).collect()}
+
+    driver = components()
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", 0)
+    assert components() == driver
+    assert any(d != c for d, c in driver)  # the fixture has near-dups
 
 
 @pytest.mark.slow

@@ -667,14 +667,15 @@ def test_manifest_merge_and_cdf_plans(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_corpus_prep_composed_plan_is_distributed(spark, sf_dir):
-    """The round-6 verdict's two 100×-scale hazards in the flagship,
-    pinned closed: (a) the near-dup tier must not run an UNCAPPED shingle
-    self-join (the df-cap semi-join must appear in the pair plan), and
-    (b) connected components must not materialize on the driver — the
-    composed plan carries no LocalTableScan (the union-find's
-    createDataFrame signature); components arrive as checkpointed
-    distributed frames (Scan ExistingRDD)."""
+def test_corpus_prep_composed_plan_follows_the_components_guard(spark, sf_dir, monkeypatch):
+    """The flagship's near-dup tier at scale and at fixture size:
+    (a) it must not run an UNCAPPED shingle self-join (the df-cap
+    semi-join must appear in the pair plan); (b) above the components
+    guard, connected components stay executor-side — the composed plan
+    carries no LocalTableScan and reads the star rounds' checkpointed
+    frames (Scan ExistingRDD); (c) at the default guard the fixture's
+    few edges finish on the driver and arrive as a local relation."""
+    from ihop_reddit_spark.datapipe import dedup
     from ihop_reddit_spark.datapipe.dedup import ngram_jaccard_pairs
     from ihop_reddit_spark.plans.corpus_prep import (
         CorpusPrepConfig,
@@ -695,7 +696,10 @@ def test_corpus_prep_composed_plan_is_distributed(spark, sf_dir):
     )
     assert "__df" in pair_plan, pair_plan  # cap aggregate present
     assert cfg.max_shingle_df is not None  # flagship default is capped
-    # (b) composed plan: all-executor-side near-dup collapse
+    # (c) default guard: union-find's createDataFrame output
+    assert "LocalTableScan" in plan_of(prepare_corpus(docs, cfg))
+    # (b) guard below the fixture's edge count: all-executor-side collapse
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", 0)
     plan = plan_of(prepare_corpus(docs, cfg))
     assert "LocalTableScan" not in plan, plan
-    assert "Scan ExistingRDD" in plan  # star CC's checkpointed output
+    assert "Scan ExistingRDD" in plan  # star rounds' checkpointed output

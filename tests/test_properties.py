@@ -268,53 +268,22 @@ def test_salted_top_k_equals_window_path(spark, rows, k, n_salts):
     )
 )
 @pytest.mark.slow
-def test_distributed_components_match_union_find(spark, edges):
-    from ihop_reddit_spark.datapipe.dedup import (
-        duplicate_components,
-        duplicate_components_distributed,
-    )
+def test_components_match_union_find(spark, monkeypatch, edges):
+    """``duplicate_components`` equals a pure-Python union-find both
+    under the driver guard and, with the guard at 0, at the star
+    contraction's fixpoint."""
+    from ihop_reddit_spark.datapipe import dedup
 
     norm = sorted({(min(a, b), max(a, b)) for a, b in edges})
-    pairs = spark.createDataFrame(norm, "left_id long, right_id long")
-    uf = {
-        (r["doc_id"], r["component_id"])
-        for r in duplicate_components(pairs).collect()
-    }
-    dist = {
-        (r["doc_id"], r["component_id"])
-        for r in duplicate_components_distributed(pairs).collect()
-    }
-    assert uf == dist
-
-
-@SETTINGS
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(
-            lambda e: e[0] != e[1]
-        ),
-        min_size=1,
-        max_size=15,
-    )
-)
-@pytest.mark.slow
-def test_star_components_match_union_find(spark, edges):
-    from ihop_reddit_spark.datapipe.dedup import (
-        duplicate_components,
-        duplicate_components_star,
-    )
-
-    norm = sorted({(min(a, b), max(a, b)) for a, b in edges})
-    pairs = spark.createDataFrame(norm, "left_id long, right_id long")
-    uf = {
-        (r["doc_id"], r["component_id"])
-        for r in duplicate_components(pairs).collect()
-    }
-    star = {
-        (r["doc_id"], r["component_id"])
-        for r in duplicate_components_star(pairs).collect()
-    }
-    assert uf == star
+    want = set(_union_find(norm).items())
+    for guard in (dedup.MAX_DRIVER_EDGES, 0):
+        monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", guard)
+        pairs = spark.createDataFrame(norm, "left_id long, right_id long")
+        got = {
+            (r["doc_id"], r["component_id"])
+            for r in dedup.duplicate_components(pairs).collect()
+        }
+        assert got == want, guard
 
 
 def _union_find(edges):
@@ -356,15 +325,17 @@ def _cycle(nodes):
 @example(edges=_cycle([6, 2, 5, 0, 3, 1, 4]))
 @example(edges=[(6, i) for i in range(6)] + [(0, 3), (1, 4), (2, 5)])
 @example(edges=[(0, i) for i in range(1, 7)] + [(1, 2), (3, 4), (5, 6), (2, 6)])
-def test_star_components_exit_at_a_single_round_fixpoint(spark, edges):
-    """``duplicate_components_star`` checks convergence every second
-    round, so its exit is only right if the edge set it exits with is
-    also a fixpoint of ONE round; its components must equal union-find's."""
-    from ihop_reddit_spark.datapipe.dedup import _star_round, duplicate_components_star
+def test_star_components_exit_at_a_single_round_fixpoint(spark, monkeypatch, edges):
+    """With the driver guard at 0, ``duplicate_components`` contracts to a
+    distributed fixpoint: the edge set it exits with must be a fixpoint of
+    ONE round, and its components must equal union-find's."""
+    from ihop_reddit_spark.datapipe import dedup
+    from ihop_reddit_spark.datapipe.dedup import _star_round
 
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", 0)
     norm = sorted({(min(a, b), max(a, b)) for a, b in edges})
     pairs = spark.createDataFrame(norm, "left_id long, right_id long")
-    out = {(r["doc_id"], r["component_id"]) for r in duplicate_components_star(pairs).collect()}
+    out = {(r["doc_id"], r["component_id"]) for r in dedup.duplicate_components(pairs).collect()}
     assert out == set(_union_find(norm).items())
     # the exit edges are the output's non-root rows, (u, v) = (doc, root)
     exit_edges = sorted((d, c) for d, c in out if d != c)
@@ -373,20 +344,36 @@ def test_star_components_exit_at_a_single_round_fixpoint(spark, edges):
 
 
 @pytest.mark.slow
-def test_star_components_converge_fast_on_chains(spark):
-    """The reason duplicate_components_star exists: O(log n) rounds on
-    diameter-n graphs, where min-label propagation needs n-1 rounds (it
-    would blow its default iteration cap on this input)."""
-    from ihop_reddit_spark.datapipe.dedup import duplicate_components_star
+def test_star_components_converge_fast_on_chains(spark, monkeypatch):
+    """Why the loop above the guard contracts stars: O(log n) rounds on
+    diameter-n graphs, where min-label propagation needs n-1 rounds."""
+    from ihop_reddit_spark.datapipe import dedup
 
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", 0)
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "left_id long, right_id long"
     )
-    out = duplicate_components_star(pairs)
+    out = dedup.duplicate_components(pairs)
     rows = {(r["doc_id"], r["component_id"]) for r in out.collect()}
     assert rows == {(i, 0) for i in range(n)}
     assert out._cc_rounds <= 10  # log-ish, vs 63 label-propagation rounds
+
+
+def test_components_contract_then_finish_on_the_driver(spark, monkeypatch):
+    """A 12-node clique (66 edges) with the guard at 20: star rounds run
+    until the live edge set fits, then union-find finishes on the driver."""
+    from ihop_reddit_spark.datapipe import dedup
+
+    monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", 20)
+    clique = [(a, b) for a in range(12) for b in range(a + 1, 12)]
+    out = dedup.duplicate_components(
+        spark.createDataFrame(clique, "left_id long, right_id long")
+    )
+    assert out._cc_rounds >= 1
+    assert {(r["doc_id"], r["component_id"]) for r in out.collect()} == set(
+        _union_find(clique).items()
+    )
 
 
 @SETTINGS
