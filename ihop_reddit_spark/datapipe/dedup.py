@@ -713,7 +713,39 @@ def _star_round(edges: DataFrame) -> DataFrame:
 
 #: Live edge count at or under which :func:`duplicate_components` stops
 #: contracting and finishes on the driver: one collect, then union-find.
+#: ``tools/components_guard_probe.py 5000000`` (random graph, local[4],
+#: 4 GB driver heap): the driver finish takes 15 s with a 0.8 GB Python
+#: and 3.0 GB JVM peak RSS; star rounds to the fixpoint take 218 s
+#: (9 rounds of 24 s) with a 4.9 GB JVM peak.
 MAX_DRIVER_EDGES = 5_000_000
+
+
+def _driver_components(u, v):
+    """``(ids, roots)``: every node of the edge arrays ``u``/``v`` and the
+    smallest id of its component, by vectorized hook-and-compress.
+
+    Nodes are renumbered densely in id order, so the smallest index of a
+    component is its smallest id. Each pass hooks every root that has an
+    edge to a smaller root onto the smallest such root, then compresses
+    every node to its root; edges inside one component are dropped. Roots
+    only ever point to smaller indices, so the passes end once no edge
+    joins two components."""
+    import numpy as np
+
+    ids, dense = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = dense[: len(u)], dense[len(u) :]
+    parent = np.arange(len(ids))
+    while len(a):
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        a, b, ra, rb = a[cross], b[cross], ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+    return ids, ids[parent]
 
 
 def duplicate_components(pairs: DataFrame, max_iterations: int = 50) -> DataFrame:
@@ -723,30 +755,35 @@ def duplicate_components(pairs: DataFrame, max_iterations: int = 50) -> DataFram
     Training-data dedup keeps one representative per component, not per
     pair (A~B, B~C must collapse to one survivor even when A≁C directly).
 
-    One loop over the canonical ``(u > v)`` edge set. While its live edge
-    count is above :data:`MAX_DRIVER_EDGES`, it runs fused large-star /
-    small-star contraction rounds (:func:`_star_round`; Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14): O(log n)
-    rounds regardless of the graph's diameter, each cut from its lineage
-    by a lazy ``localCheckpoint`` (persist alone grows the plan
-    geometrically). Once a round's fingerprint reports a count at or under
-    the guard, the edges are collected in one action and finished with
-    union-find; the result is a local relation. Star rounds keep every
-    node and its component, so union-find over any round's edges gives the
-    same answer. Near-dup graphs are threshold-pruned and tiny, so inputs
-    under the guard take no contraction round at all. Above the guard, the
-    loop exits only at a fixpoint confirmed by an exact two-sided
-    ``exceptAll`` (the fingerprint alone is not a proof).
+    One loop over the canonical ``(u > v)`` distinct edge set. The first
+    action collects at most :data:`MAX_DRIVER_EDGES` + 1 of its rows; when
+    they are all of it, :func:`_driver_components` finishes on the driver
+    and the result is a local relation. Near-dup graphs are
+    threshold-pruned and small, so that is the common path: two Spark jobs,
+    no contraction round. Above the guard, the edge set is cut from its
+    lineage by a lazy ``localCheckpoint`` (the pair plan runs again,
+    against its caches) and fused large-star / small-star contraction
+    rounds (:func:`_star_round`; Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC'14) run while a round's ``(count,
+    hash-sum)`` fingerprint is above the guard: O(log n) rounds regardless
+    of the graph's diameter, each checkpointed the same way (persist alone
+    grows the plan geometrically). Star rounds keep every node and its
+    component, so once a round's count is at or under the guard, the
+    driver finish over its edges gives the same answer. Otherwise the loop
+    exits only at a fixpoint confirmed by an exact two-sided ``exceptAll``
+    (the fingerprint alone is not a proof).
 
-    EAGER: the ``pairs`` plan runs during CONSTRUCTION — the first
-    fingerprint materializes the checkpointed edge set. Any scoped persists
+    EAGER: the ``pairs`` plan runs during CONSTRUCTION. Any scoped persists
     registered on ``pairs`` (e.g. the shingle stream cached inside
-    ``ngram_jaccard_pairs``) are RELEASED right after that action: they
-    can never be re-read through this operator. A caller that reuses the
-    same ``pairs`` object afterward recomputes it (or persists its own
-    copy before calling). ``out._cc_rounds`` is the number of contraction
-    rounds run (0 when the input is already under the guard).
+    ``ngram_jaccard_pairs``) are RELEASED once the edge set is collected
+    (or, above the guard, checkpointed): they can never be re-read through
+    this operator. A caller that reuses the same ``pairs`` object afterward
+    recomputes it (or persists its own copy before calling).
+    ``out._cc_rounds`` is the number of contraction rounds run (0 when the
+    input is already under the guard).
     """
+    import pyarrow as pa
+
     from ..caching import release_scoped_persists
 
     edges = (
@@ -756,71 +793,62 @@ def duplicate_components(pairs: DataFrame, max_iterations: int = 50) -> DataFram
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-
-    # (count, hash-sum) fingerprint: one job that materializes the
-    # just-checkpointed frame; decimal partials are exact and
-    # overflow-free under ANSI
-    def _fingerprint(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    fp = _fingerprint(edges)  # runs the pair plan against its caches
-    release_scoped_persists(pairs)
+    table = edges.limit(MAX_DRIVER_EDGES + 1).toArrow()
     rounds = 0
-    while fp[0] > MAX_DRIVER_EDGES:
-        if rounds == max_iterations:
-            raise RuntimeError(
-                f"duplicate_components did not converge within "
-                f"{max_iterations} rounds"
-            )
-        nxt = _star_round(edges).localCheckpoint(eager=False)
-        rounds += 1
-        nxt_fp = _fingerprint(nxt)
-        if nxt_fp == fp and not (
-            nxt.exceptAll(edges).limit(1).count()
-            or edges.exceptAll(nxt).limit(1).count()
-        ):
-            # fixpoint: every edge is (member, root)
-            roots = edges.select(F.col("v").alias("doc_id")).distinct()
-            out = (
-                edges.select(
-                    F.col("u").alias("doc_id"), F.col("v").alias("component_id")
+    if table.num_rows > MAX_DRIVER_EDGES:
+        del table  # not all of the edge set; free it for the rounds
+
+        # (count, hash-sum) fingerprint: one action; decimal partials are
+        # exact and overflow-free under ANSI
+        def _fingerprint(df: DataFrame) -> tuple:
+            row = df.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+            ).collect()[0]
+            return (row["n"], row["h"])
+
+        edges = edges.localCheckpoint(eager=False)
+        fp = _fingerprint(edges)  # runs the pair plan against its caches
+        release_scoped_persists(pairs)
+        while fp[0] > MAX_DRIVER_EDGES:
+            if rounds == max_iterations:
+                raise RuntimeError(
+                    f"duplicate_components did not converge within "
+                    f"{max_iterations} rounds"
                 )
-                .unionByName(roots.withColumn("component_id", F.col("doc_id")))
-                .distinct()
-            )
-            out._cc_rounds = rounds
-            return out
-        edges, fp = nxt, nxt_fp
+            nxt = _star_round(edges).localCheckpoint(eager=False)
+            rounds += 1
+            nxt_fp = _fingerprint(nxt)
+            if nxt_fp == fp and not (
+                nxt.exceptAll(edges).limit(1).count()
+                or edges.exceptAll(nxt).limit(1).count()
+            ):
+                # fixpoint: every edge is (member, root)
+                roots = edges.select(F.col("v").alias("doc_id")).distinct()
+                out = (
+                    edges.select(
+                        F.col("u").alias("doc_id"), F.col("v").alias("component_id")
+                    )
+                    .unionByName(roots.withColumn("component_id", F.col("doc_id")))
+                    .distinct()
+                )
+                out._cc_rounds = rounds
+                return out
+            edges, fp = nxt, nxt_fp
+        table = edges.toArrow()  # at most MAX_DRIVER_EDGES rows
+    else:
+        release_scoped_persists(pairs)
 
-    import pyarrow as pa
-
-    table = edges.toArrow()  # at most MAX_DRIVER_EDGES rows
-    parent: dict = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in zip(*(table.column(c).to_pylist() for c in ("u", "v"))):
-        parent.setdefault(u, u)
-        parent.setdefault(v, v)
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[max(ru, rv)] = min(ru, rv)
+    ids, roots = _driver_components(
+        table.column("u").to_numpy(), table.column("v").to_numpy()
+    )
     arrow_type, id_type = table.column("u").type, edges.schema["u"].dataType
     out = edges.sparkSession.createDataFrame(
         pa.table(
             {
-                "doc_id": pa.array(list(parent), arrow_type),
-                "component_id": pa.array([find(x) for x in parent], arrow_type),
+                "doc_id": pa.array(ids, arrow_type),
+                "component_id": pa.array(roots, arrow_type),
             }
         ),
         T.StructType(

@@ -79,20 +79,21 @@ def prepare_corpus(
     ``(doc_id, n_tokens, bpe_tokens)``.
 
     EAGER: the near-dup tier runs during CONSTRUCTION —
-    ``duplicate_components`` materializes the pair join behind a
-    ``localCheckpoint`` with its first fingerprint action, then finishes
-    on the driver (or contracts, above its size guard) — so calling this
-    function executes the quality gates, exact dedup, and the similarity
-    self-join before returning; only the final survivor anti-join and
-    token counting stay lazy in the returned plan.
+    ``duplicate_components`` materializes the pair join with its first
+    action, a guarded collect of the edge set, then finishes on the
+    driver (or checkpoints and contracts, above its size guard) — so
+    calling this function executes the quality gates, exact dedup, and
+    the similarity self-join before returning; only the final survivor
+    anti-join and token counting stay lazy in the returned plan.
 
     Caching ownership: the exact-dedup survivor frame is persisted here
     (it feeds both the pair join and the survivor scan) and registered
     on the returned DataFrame — call
     :func:`ihop_reddit_spark.caching.release_scoped_persists` on the
     RESULT once consumed. The shingle stream persisted inside the pairs
-    tier is released by ``duplicate_components`` itself right after its
-    first action consumes it (it is never re-read afterward).
+    tier is released by ``duplicate_components`` itself once the edge set
+    is collected (or, above the guard, checkpointed); it is never re-read
+    afterward.
     """
     cfg = cfg or CorpusPrepConfig()
     text = F.col(text_col)

@@ -266,10 +266,7 @@ def roll_forward(cat: str) -> dict[int, dict[str, int]]:
             assigned[name] = done
         # marker content is derived from the table logs, so racing
         # roll-forwarders write identical bytes; os.replace is atomic
-        tmp = f"{marker}.tmp-{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(assigned, fh, indent=1, sort_keys=True)
-        os.replace(tmp, marker)
+        M._replace_doc(marker, assigned)
         applied[cv] = assigned
     return applied
 

@@ -126,24 +126,36 @@ def read_version_doc(path: str, version: int) -> dict:
     return copy.deepcopy(doc)
 
 
-def _publish_doc(dst: str, doc: dict, what: str) -> int:
-    """Atomically publish the version doc ``doc`` at ``dst``; returns
-    ``doc['version']``. Shared by table and catalog commits.
-
-    The doc is staged in a temp file unique to this call (threads of one
-    process must not share it) and published with os.link, which is
-    create-if-absent on POSIX — the one concurrency primitive the
-    protocol needs (conditional PUT on an object store). Raises
-    ``ConcurrentCommitError`` naming ``what`` if ``dst`` already exists."""
-    # wall-clock commit stamp (epoch ns) for timestamp time travel;
-    # readers make the series monotone (version_at_timestamp), so clock
-    # jitter between writers never flips resolution order vs versions
-    doc.setdefault("committed_at", time.time_ns())
+def _stage_doc(dst: str, doc: dict) -> str:
+    """Write ``doc`` to a temp file next to ``dst`` and return its path.
+    The name is unique to this call: threads of one process must not
+    share it."""
     d = os.path.dirname(dst)
     os.makedirs(d, exist_ok=True)
     tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}.json")
     with open(tmp, "w") as fh:
         json.dump(doc, fh, indent=1, sort_keys=True)
+    return tmp
+
+
+def _replace_doc(dst: str, doc: dict) -> None:
+    """Atomically overwrite ``dst`` with ``doc`` (last writer wins)."""
+    os.replace(_stage_doc(dst, doc), dst)
+
+
+def _publish_doc(dst: str, doc: dict, what: str) -> int:
+    """Atomically publish the version doc ``doc`` at ``dst``; returns
+    ``doc['version']``. Shared by table and catalog commits.
+
+    The doc is staged by :func:`_stage_doc` and published with os.link,
+    which is create-if-absent on POSIX — the one concurrency primitive
+    the protocol needs (conditional PUT on an object store). Raises
+    ``ConcurrentCommitError`` naming ``what`` if ``dst`` already exists."""
+    # wall-clock commit stamp (epoch ns) for timestamp time travel;
+    # readers make the series monotone (version_at_timestamp), so clock
+    # jitter between writers never flips resolution order vs versions
+    doc.setdefault("committed_at", time.time_ns())
+    tmp = _stage_doc(dst, doc)
     try:
         os.link(tmp, dst)
     except FileExistsError:
@@ -4082,10 +4094,7 @@ def manifest_vacuum(path: str, *, keep_from_version: int) -> int:
         base_doc["retired_physical"] = base_retired
     if base_constraints:
         base_doc["constraints"] = base_constraints
-    tmp = os.path.join(_manifest_dir(path), f".ckpt-{os.getpid()}.json")
-    with open(tmp, "w") as fh:
-        json.dump(base_doc, fh, indent=1, sort_keys=True)
-    os.replace(tmp, _version_doc_path(path, base))
+    _replace_doc(_version_doc_path(path, base), base_doc)
 
     doomed = sorted(ever - retained)
     for f in doomed:

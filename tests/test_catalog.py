@@ -528,3 +528,25 @@ def test_nested_commit_of_one_version_has_one_winner(
     with open(doc_path(root, 1)) as fh:
         assert fh.read() == json.dumps(published, indent=1, sort_keys=True)
     assert os.listdir(os.path.dirname(doc_path(root, 1))) == ["v00000001.json"]
+
+
+def test_nested_replace_of_one_doc_keeps_the_last_writer(tmp_path, monkeypatch):
+    """The retention checkpoint and the roll-forward marker overwrite a
+    doc in place. A second overwrite of the same doc from the same process
+    runs to completion inside the first one's ``os.replace``: both must
+    succeed, the outer (last) writer's bytes stay, no temp file is left."""
+    dst = str(tmp_path / "_catalog" / "applied-v00000001.json")
+    real_replace = os.replace
+    inner: list = []
+
+    def replace_with_nested_write(src, target):
+        if not inner:
+            inner.append(None)  # the nested write replaces for real
+            M._replace_doc(dst, {"writer": "inner"})
+        return real_replace(src, target)
+
+    monkeypatch.setattr(os, "replace", replace_with_nested_write)
+    M._replace_doc(dst, {"writer": "outer"})
+    with open(dst) as fh:
+        assert json.load(fh) == {"writer": "outer"}
+    assert os.listdir(os.path.dirname(dst)) == ["applied-v00000001.json"]

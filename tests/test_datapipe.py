@@ -392,17 +392,16 @@ def test_distributed_components_raise_when_not_converged(spark, monkeypatch):
         dedup.duplicate_components(pairs, max_iterations=1)
 
 
-def test_components_under_the_guard_take_four_jobs(spark, count_jobs):
-    """Under the guard: the fingerprint (the distinct's shuffle-map job,
-    then the aggregate's map and result jobs) and one collect; no
-    contraction round."""
+def test_components_under_the_guard_take_two_jobs(spark, count_jobs):
+    """Under the guard: one guarded collect (the distinct's shuffle-map
+    job and its result job), no fingerprint, no contraction round."""
     from ihop_reddit_spark.datapipe.dedup import duplicate_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 9), (4, 1)], "left_id long, right_id long"
     )
     out, n = count_jobs(lambda: duplicate_components(pairs))
-    assert n <= 4
+    assert n <= 2
     assert out._cc_rounds == 0
 
 

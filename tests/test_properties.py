@@ -17,6 +17,9 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 import pytest
 
+# bound at import, before any test patches the module's guard
+from ihop_reddit_spark.datapipe.dedup import MAX_DRIVER_EDGES as _DEFAULT_GUARD
+
 SETTINGS = settings(
     max_examples=12,
     deadline=None,
@@ -276,14 +279,16 @@ def test_components_match_union_find(spark, monkeypatch, edges):
 
     norm = sorted({(min(a, b), max(a, b)) for a, b in edges})
     want = set(_union_find(norm).items())
-    for guard in (dedup.MAX_DRIVER_EDGES, 0):
-        monkeypatch.setattr(dedup, "MAX_DRIVER_EDGES", guard)
-        pairs = spark.createDataFrame(norm, "left_id long, right_id long")
-        got = {
-            (r["doc_id"], r["component_id"])
-            for r in dedup.duplicate_components(pairs).collect()
-        }
+    # each guard patched for one call only: a patch left in place would
+    # carry over to the next hypothesis example
+    for guard in (_DEFAULT_GUARD, 0):
+        with monkeypatch.context() as mp:
+            mp.setattr(dedup, "MAX_DRIVER_EDGES", guard)
+            pairs = spark.createDataFrame(norm, "left_id long, right_id long")
+            out = dedup.duplicate_components(pairs)
+            got = {(r["doc_id"], r["component_id"]) for r in out.collect()}
         assert got == want, guard
+        assert (out._cc_rounds > 0) == (guard == 0), guard
 
 
 def _union_find(edges):
