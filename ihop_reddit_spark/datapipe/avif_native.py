@@ -35,7 +35,8 @@ stages, same as every other codec (zero shuffle, zero driver hops).
 from __future__ import annotations
 
 import ctypes as C
-import ctypes.util
+
+from .native import load
 
 
 class _RWData(C.Structure):
@@ -146,21 +147,20 @@ _MC_IDENTITY = 0
 _ADD_IMAGE_FORCE_KEYFRAME = 1
 _ADD_IMAGE_SINGLE = 2
 
-_LIB = None
-_TRIED = False
-_HAS_ENCODER = False
+_CANDIDATES = ("avif", "libavif.so.15", "libavif.so")
+_ENC_NEED = (
+    "avifEncoderCreate", "avifEncoderDestroy", "avifEncoderWrite",
+    "avifEncoderAddImage", "avifEncoderFinish", "avifImageRGBToYUV",
+)
+
+
+def _has_encoder(lib) -> bool:
+    return all(hasattr(lib, s) for s in _ENC_NEED)
 
 
 def _bind(lib) -> bool:
-    need = [
-        "avifDecoderCreate", "avifDecoderDestroy", "avifDecoderSetIOMemory",
-        "avifDecoderParse", "avifDecoderNextImage", "avifImageCreate",
-        "avifImageDestroy", "avifRGBImageSetDefaults", "avifImageYUVToRGB",
-        "avifRWDataFree", "avifResultToString",
-    ]
-    for sym in need:
-        if not hasattr(lib, sym):
-            return False
+    """Bind the decoder (every symbol required) and, where present, the
+    encoder; then :func:`_validate` the struct layouts."""
     lib.avifDecoderCreate.restype = C.POINTER(_Decoder)
     lib.avifDecoderDestroy.argtypes = [C.POINTER(_Decoder)]
     lib.avifDecoderSetIOMemory.restype = C.c_int
@@ -186,13 +186,7 @@ def _bind(lib) -> bool:
     lib.avifRWDataFree.argtypes = [C.POINTER(_RWData)]
     lib.avifResultToString.restype = C.c_char_p
     lib.avifResultToString.argtypes = [C.c_int]
-    enc_need = [
-        "avifEncoderCreate", "avifEncoderDestroy", "avifEncoderWrite",
-        "avifEncoderAddImage", "avifEncoderFinish", "avifImageRGBToYUV",
-    ]
-    global _HAS_ENCODER
-    _HAS_ENCODER = all(hasattr(lib, s) for s in enc_need)
-    if _HAS_ENCODER:
+    if _has_encoder(lib):
         lib.avifEncoderCreate.restype = C.POINTER(_Encoder)
         lib.avifEncoderDestroy.argtypes = [C.POINTER(_Encoder)]
         lib.avifEncoderWrite.restype = C.c_int
@@ -211,7 +205,7 @@ def _bind(lib) -> bool:
         lib.avifImageRGBToYUV.argtypes = [
             C.POINTER(_Image), C.POINTER(_RGBImage),
         ]
-    return True
+    return _validate(lib)
 
 
 def _validate(lib) -> bool:
@@ -246,7 +240,7 @@ def _validate(lib) -> bool:
             return False
     finally:
         lib.avifImageDestroy(img)
-    if _HAS_ENCODER:
+    if _has_encoder(lib):
         enc = lib.avifEncoderCreate()
         try:
             e = enc.contents
@@ -258,26 +252,13 @@ def _validate(lib) -> bool:
 
 
 def _lib():
-    global _LIB, _TRIED, _HAS_ENCODER
-    if _TRIED:
-        return _LIB
-    _TRIED = True
-    for cand in (
-        ctypes.util.find_library("avif"),
-        "libavif.so.15",
-        "libavif.so",
-    ):
-        if not cand:
-            continue
-        try:
-            lib = C.CDLL(cand)
-        except OSError:
-            continue
-        if _bind(lib) and _validate(lib):
-            _LIB = lib
-            break
-        _HAS_ENCODER = False
-    return _LIB
+    return load(_CANDIDATES, _bind)
+
+
+def _encoder_lib():
+    """The bound library when it also encodes, else None."""
+    lib = _lib()
+    return lib if lib is not None and _has_encoder(lib) else None
 
 
 def libavif_available() -> bool:
@@ -285,7 +266,7 @@ def libavif_available() -> bool:
 
 
 def libavif_encoder_available() -> bool:
-    return _lib() is not None and _HAS_ENCODER
+    return _encoder_lib() is not None
 
 
 def _check(lib, result: int, what: str) -> None:
@@ -421,8 +402,8 @@ def encode_rgb(
     (the default) roundtrips integer-exactly through
     :func:`decode_rgb`; ``quality`` is the AV1 quantizer (0 best, 63
     worst) when lossy."""
-    lib = _lib()
-    if lib is None or not _HAS_ENCODER:
+    lib = _encoder_lib()
+    if lib is None:
         raise NotImplementedError(
             "AVIF encode requires the system libavif built with an AV1"
             " encoder (aom), which is not installed"
@@ -452,8 +433,8 @@ def encode_frames(
     table — ``datapipe/mp4.py`` demuxes it like any MP4). Every frame
     is forced to a keyframe so each demuxed sample decodes
     independently (the property the per-sample video gate relies on)."""
-    lib = _lib()
-    if lib is None or not _HAS_ENCODER:
+    lib = _encoder_lib()
+    if lib is None:
         raise NotImplementedError(
             "AVIF encode requires the system libavif built with an AV1"
             " encoder (aom), which is not installed"

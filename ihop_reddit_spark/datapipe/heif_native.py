@@ -30,9 +30,10 @@ stages, same as every other codec (zero shuffle, zero driver hops).
 from __future__ import annotations
 
 import ctypes as C
-import ctypes.util
 import os
 import tempfile
+
+from .native import load
 
 
 class _Error(C.Structure):
@@ -95,52 +96,33 @@ _ENC_SIGNATURES = [
     ("heif_context_write_to_file", _Error, [_P, C.c_char_p]),
 ]
 
-_LIB = None
-_TRIED = False
-_HAS_ENCODER = False
+_CANDIDATES = ("heif", "libheif.so.1", "libheif.so")
+
+
+def _bind(lib) -> bool:
+    """Decode symbols are required; encoder symbols bind where present
+    (:func:`_encoder_lib` decides whether they add up to an encoder)."""
+    present = [sig for sig in _ENC_SIGNATURES if hasattr(lib, sig[0])]
+    for name, res, args in _SIGNATURES + present:
+        fn = getattr(lib, name)
+        fn.restype = res
+        fn.argtypes = args
+    # the HEVC plugin (libde265) ships separately — a libheif
+    # without it must report unavailable, not fail at first decode
+    return bool(lib.heif_have_decoder_for_format(_COMPRESSION_HEVC))
 
 
 def _lib():
-    global _LIB, _TRIED, _HAS_ENCODER
-    if _TRIED:
-        return _LIB
-    _TRIED = True
-    for cand in (
-        ctypes.util.find_library("heif"),
-        "libheif.so.1",
-        "libheif.so",
-    ):
-        if not cand:
-            continue
-        try:
-            lib = C.CDLL(cand)
-        except OSError:
-            continue
-        try:
-            for name, res, args in _SIGNATURES:
-                fn = getattr(lib, name)
-                fn.restype = res
-                fn.argtypes = args
-        except AttributeError:
-            continue
-        # the HEVC plugin (libde265) ships separately — a libheif
-        # without it must report unavailable, not fail at first decode
-        if not lib.heif_have_decoder_for_format(_COMPRESSION_HEVC):
-            continue
-        enc_ok = True
-        try:
-            for name, res, args in _ENC_SIGNATURES:
-                fn = getattr(lib, name)
-                fn.restype = res
-                fn.argtypes = args
-        except AttributeError:
-            enc_ok = False
-        _HAS_ENCODER = enc_ok and bool(
-            lib.heif_have_encoder_for_format(_COMPRESSION_HEVC)
-        )
-        _LIB = lib
-        break
-    return _LIB
+    return load(_CANDIDATES, _bind)
+
+
+def _encoder_lib():
+    """The bound library when it has every encoder symbol and an HEVC
+    encoder plugin (x265), else None."""
+    lib = _lib()
+    if lib is None or not all(hasattr(lib, n) for n, _, _ in _ENC_SIGNATURES):
+        return None
+    return lib if lib.heif_have_encoder_for_format(_COMPRESSION_HEVC) else None
 
 
 def libheif_available() -> bool:
@@ -148,7 +130,7 @@ def libheif_available() -> bool:
 
 
 def libheif_encoder_available() -> bool:
-    return _lib() is not None and _HAS_ENCODER
+    return _encoder_lib() is not None
 
 
 def _check(err: _Error, what: str) -> None:
@@ -268,8 +250,8 @@ def encode_rgb(
     is not a hot path."""
     import numpy as np
 
-    lib = _lib()
-    if lib is None or not _HAS_ENCODER:
+    lib = _encoder_lib()
+    if lib is None:
         raise NotImplementedError(
             "HEIC encode requires the system libheif built with an HEVC"
             " encoder (x265), which is not installed"

@@ -13,22 +13,24 @@ stubbed):
   meta STRUCT<width INT, height INT, channels INT, sample_rate INT,
   n_frames INT, mime STRING>``. Opaque bytes + enough typed metadata to plan
   work (e.g. partition video by n_frames) without touching the payload.
-* **Decode is the slow path**: it crosses to Python once per Arrow batch
-  (``mapInPandas``), never per row. Batch size is governed by
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` — at 100 TB size it so a
-  batch of payloads fits executor memory (payloads are MBs, not KBs; 64-256
-  rows/batch is typical for images).
-* **Real, dependency-free decode paths**: PNG (stdlib zlib inflate +
-  CRC + full five-filter unfiltering, :func:`decode_png`), 24-bit BMP
-  (:func:`decode_bmp`), animated GIF (:func:`decode_gif`), baseline
-  JPEG (:mod:`.jpeg_codec`, r6), RIFF/WAVE PCM16 (:func:`decode_wav`),
-  AVI/MJPEG (:mod:`.avi`, r6), and MP4 motion-JPEG (:mod:`.mp4`, r9 —
-  full ISO-BMFF demux; compressed codecs avc1/hev1/… demux but raise
-  the libav stub at decode) — oracle-gated on planted closed-form
-  pixels/samples. The remaining generic codecs (PIL / libav /
-  torchaudio: WebP, H.264, …) are NOT in this container —
-  ``decode_fn="real"`` raises ``NotImplementedError`` at the first batch. The
-  default ``decode_fn="fake"`` derives every "decoded" statistic
+* **Decode is the slow path**: every fixture and decoder below is one
+  row function over :func:`_map_rows`, a single ``mapInPandas`` that
+  crosses to Python once per Arrow batch, never per row. Batch size is
+  governed by ``spark.sql.execution.arrow.maxRecordsPerBatch`` — at 100
+  TB size it so a batch of payloads fits executor memory (payloads are
+  MBs, not KBs; 64-256 rows/batch is typical for images).
+* **Real decode paths**: PNG (stdlib zlib inflate + CRC + full
+  five-filter unfiltering, :func:`decode_png`), 24-bit BMP
+  (:func:`decode_bmp`), animated GIF (:func:`decode_gif`), baseline and
+  progressive JPEG (:mod:`.jpeg_codec`), lossless WebP (:mod:`.webp`),
+  baseline TIFF (:mod:`.tiff`), WAV PCM16/G.711 (:func:`decode_wav`),
+  FLAC (:mod:`.flac`), AVI/MJPEG (:mod:`.avi`) and MP4 (:mod:`.mp4`)
+  decode in-tree; lossy WebP, non-baseline TIFF, AVIF/AV1, HEIC/HEVC and
+  SVG decode through the system libraries the ``*_native`` modules bind
+  (one loader, :mod:`.native`) and raise the marked
+  ``NotImplementedError`` when a library is absent. Every path is
+  oracle-gated on planted closed-form pixels/samples. The default
+  ``decode_fn="fake"`` derives every "decoded" statistic
   deterministically from the payload's md5 digest, so tests assert exact
   values and the whole plumbing (schema, batching, partitioning, UDF
   signature) runs for real.
@@ -41,9 +43,12 @@ stubbed):
 from __future__ import annotations
 
 import hashlib
+import struct
+import zlib
 from collections.abc import Iterator
 from typing import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -90,6 +95,83 @@ FRAME_FEATURE_SCHEMA = T.StructType(
         T.StructField("frame_mean", T.DoubleType()),
     ]
 )
+
+
+def _map_rows(
+    df: DataFrame, fn: Callable, schema: T.StructType | str
+) -> DataFrame:
+    """The codec tier's one pandas→Spark lifter: a single Arrow-batched
+    ``mapInPandas`` that calls ``fn(*row)`` on every input row (columns
+    in ``df`` order) and emits each tuple ``fn`` yields as a row of
+    ``schema``. Python is entered once per batch, never per row; every
+    fixture and decoder below is one ``fn`` over this loop."""
+    names = (
+        T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    ).fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for row in pdf.itertuples(index=False, name=None)
+                for out in fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
+
+
+_PAYLOAD = "asset_id long, payload binary"
+
+
+def _synth(df: DataFrame, id_col: str, encode: Callable) -> DataFrame:
+    """``(asset_id, payload)`` fixture: one ``encode(id)`` per id."""
+    return _map_rows(df.select(id_col), lambda i: [(i, encode(i))], _PAYLOAD)
+
+
+def _planted_blocks(
+    i: int,
+    mult: int,
+    size: int = 16,
+    frame: int = 0,
+    frame_step: int = 0,
+    rgb: bool = False,
+):
+    """The planted block image of the block-coded gates: ``size×size``
+    gray made of four solid ``(size/2)²`` blocks, block ``k`` (raster
+    order) at ``(mult·i + 80·k + frame_step·frame) % 256``; ``rgb``
+    replicates the gray to H×W×3. Each gate picks its own ``mult`` so a
+    decoder silently taking another format's path cannot pass two."""
+    vals = np.array(
+        [[(mult * i + 80 * k + frame_step * frame) % 256 for k in ks]
+         for ks in ((0, 1), (2, 3))],
+        dtype=np.uint8,
+    )
+    px = np.repeat(np.repeat(vals, size // 2, axis=0), size // 2, axis=1)
+    return np.repeat(px[..., None], 3, axis=2) if rgb else px
+
+
+def _solid(
+    i: int,
+    shape: tuple[int, int],
+    mults: tuple[int, int, int] = (37, 59, 83),
+    frame: int = 0,
+    steps: tuple[int, int, int] = (11, 13, 17),
+):
+    """Solid H×W×3 color ``((m·i + s·frame) % 256)`` per channel — the
+    planted closed form of the bmp/png/tiff/real-image/gif gates."""
+    color = np.array(
+        [(m * i + s * frame) % 256 for m, s in zip(mults, steps)],
+        dtype=np.uint8,
+    )
+    return np.broadcast_to(color, (*shape, 3))
+
+
+def _md5_cycled(payload: bytes, size: int) -> bytes:
+    """The fake codec's output: the payload's md5 digest cycled to
+    exactly ``size`` bytes."""
+    digest = hashlib.md5(payload).digest()
+    return (digest * (size // len(digest) + 1))[:size]
 
 
 def synthesize_assets(
@@ -140,8 +222,6 @@ def _real_decode_stats(payload: bytes) -> tuple[float, float]:
     "real" decoder mode computes genuine pixel statistics. Formats
     outside the dispatch still raise its marked boundary — unknown
     magic must fail loudly, not fall back to fake stats."""
-    import numpy as np
-
     px = np.asarray(decode_image(payload), dtype=np.float64)
     return float(px.mean()), float(px.std())
 
@@ -163,27 +243,18 @@ def extract_image_features(
     sizes, not row counts, drive task cost).
     """
     decode = _DECODERS[decode_fn]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            stats = [decode(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": [m["width"] for m in pdf["meta"]],
-                    "height": [m["height"] for m in pdf["meta"]],
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                    "pixel_mean": [s[0] for s in stats],
-                    "pixel_std": [s[1] for s in stats],
-                }
-            )
-
     images = assets.where(F.col("kind") == "image").select(
         "asset_id", "payload", "meta"
     )
     if partitions:
         images = images.repartition(partitions, "asset_id")
-    return images.mapInPandas(batches, IMAGE_FEATURE_SCHEMA)
+    return _map_rows(
+        images,
+        lambda i, payload, meta: [
+            (i, meta["width"], meta["height"], len(payload), *decode(payload))
+        ],
+        IMAGE_FEATURE_SCHEMA,
+    )
 
 
 def sample_frames(
@@ -209,23 +280,13 @@ def sample_frames(
         )
         .repartition("asset_id", "frame_index")
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            means = [
-                _fake_frame_mean(decode, p, i)
-                for p, i in zip(pdf["payload"], pdf["frame_index"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "frame_index": pdf["frame_index"],
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                    "frame_mean": means,
-                }
-            )
-
-    return frames.mapInPandas(batches, FRAME_FEATURE_SCHEMA)
+    return _map_rows(
+        frames,
+        lambda i, payload, f: [
+            (i, f, len(payload), _fake_frame_mean(decode, payload, f))
+        ],
+        FRAME_FEATURE_SCHEMA,
+    )
 
 
 def _fake_frame_mean(decode, payload: bytes, frame_index: int) -> float:
@@ -254,44 +315,26 @@ def resize_images(
     deterministic payload of exactly ``width·height·channels`` bytes
     (md5 digest of the source payload cycled to length), so tests assert
     byte-exact outputs while the batching/schema plumbing is real. The
-    ``"real"`` codec is the marked PIL stub.
+    ``"real"`` codec decodes any :func:`decode_image` format and
+    re-encodes lossless PNG.
     """
     decode = _DECODERS[decode_fn]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for pdf in it:
-            for _, row in pdf.iterrows():
-                if decode_fn == "real":
-                    # decode → resample → re-encode, all real (r11):
-                    # any decode_image format in, lossless PNG out
-                    px = decode_image(bytes(row["payload"]))
-                    out = resample_rgb(px, width, height)
-                    payload = png_bytes(out)
-                    channels = 3
-                else:
-                    decode(row["payload"])  # the decode step
-                    channels = row["meta"]["channels"]
-                    size = width * height * channels
-                    digest = hashlib.md5(row["payload"]).digest()
-                    payload = (digest * (size // len(digest) + 1))[:size]
-                meta = dict(row["meta"])
-                meta["width"], meta["height"] = width, height
-                meta["channels"] = channels
-                rows.append(
-                    {
-                        "asset_id": row["asset_id"],
-                        "kind": row["kind"],
-                        "payload": payload,
-                        "meta": meta,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-                rows = []
+    def resize(i, kind, payload, meta):
+        if decode_fn == "real":
+            px = resample_rgb(decode_image(payload), width, height)
+            payload, channels = png_bytes(px), 3
+        else:
+            decode(payload)  # the decode step
+            channels = meta["channels"]
+            payload = _md5_cycled(payload, width * height * channels)
+        meta = {**meta, "width": width, "height": height, "channels": channels}
+        return [(i, kind, payload, meta)]
 
     images = assets.where(F.col("kind") == "image")
-    return images.mapInPandas(batches, ASSET_SCHEMA)
+    return _map_rows(
+        images.select("asset_id", "kind", "payload", "meta"), resize, ASSET_SCHEMA
+    )
 
 
 def resample_rgb(px, width: int, height: int):
@@ -300,8 +343,6 @@ def resample_rgb(px, width: int, height: int):
     the result is integer-exact, which is what the resize gate pins.
     Everything else is bilinear with half-pixel-aligned sample centers
     (the OpenCV/PIL convention), pure numpy, no library variance."""
-    import numpy as np
-
     px = np.asarray(px, dtype=np.uint8)
     h, w = px.shape[:2]
     if px.ndim == 2:
@@ -348,47 +389,30 @@ def resample_audio(
     if decode_fn not in _DECODERS:
         raise KeyError(decode_fn)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                if decode_fn == "real":
-                    src_rate, samples, _bps = decode_audio(
-                        bytes(row["payload"])
-                    )
-                    out = resample_pcm(samples, src_rate, target_rate)
-                    # wav_bytes takes float [-1, 1]; decode_audio hands
-                    # back 16-bit-scaled integers — /32767 is its exact
-                    # inverse (wav_bytes rounds v/32767*32767 back to v)
-                    payload = wav_bytes(
-                        np.clip(out, -32767, 32767) / 32767.0,
-                        target_rate,
-                    )
-                else:
-                    _fake_decode_stats(row["payload"])
-                    src_rate = row["meta"]["sample_rate"]
-                    size = len(row["payload"]) * target_rate // src_rate
-                    digest = hashlib.md5(row["payload"]).digest()
-                    payload = (digest * (size // len(digest) + 1))[:size]
-                meta = dict(row["meta"])
-                meta["sample_rate"] = target_rate
-                rows.append(
-                    {
-                        "asset_id": row["asset_id"],
-                        "kind": row["kind"],
-                        "payload": payload,
-                        "meta": meta,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+    def resample(i, kind, payload, meta):
+        if decode_fn == "real":
+            src_rate, samples, _bps = decode_audio(payload)
+            out = resample_pcm(samples, src_rate, target_rate)
+            # wav_bytes takes float [-1, 1]; decode_audio hands
+            # back 16-bit-scaled integers — /32767 is its exact
+            # inverse (wav_bytes rounds v/32767*32767 back to v)
+            payload = wav_bytes(
+                np.clip(out, -32767, 32767) / 32767.0, target_rate
+            )
+        else:
+            _fake_decode_stats(payload)
+            size = len(payload) * target_rate // meta["sample_rate"]
+            payload = _md5_cycled(payload, size)
+        return [(i, kind, payload, {**meta, "sample_rate": target_rate})]
 
     audio = assets.where(
         (F.col("kind") == "audio") & (F.col("meta.sample_rate") > 0)
     )
-    return audio.mapInPandas(batches, ASSET_SCHEMA)
+    return _map_rows(
+        audio.select("asset_id", "kind", "payload", "meta"),
+        resample,
+        ASSET_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -406,36 +430,15 @@ def synthesize_const_wav_assets(
     samples at ``rate`` Hz. A constant signal survives ANY linear
     resampler exactly, which is what lets the real-resample gate assert
     sample-exact output in closed form."""
-    import numpy as np
-    import pandas as pd
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                amp = ((107 * i) % 60001) - 30000
-                n = 800 + (i % 5) * 160
-                payload = wav_bytes(
-                    np.full(n, amp, np.float64) / 32767.0, rate
-                )
-                rows.append(
-                    {
-                        "asset_id": i,
-                        "kind": "audio",
-                        "payload": payload,
-                        "meta": {
-                            "width": 0,
-                            "height": 0,
-                            "channels": 1,
-                            "sample_rate": rate,
-                            "duration_s": n / rate,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def asset(i):
+        amp = ((107 * i) % 60001) - 30000
+        n = 800 + (i % 5) * 160
+        payload = wav_bytes(np.full(n, amp, np.float64) / 32767.0, rate)
+        meta = {"width": 0, "height": 0, "channels": 1, "sample_rate": rate}
+        return [(i, "audio", payload, meta)]
 
-    return df.select(id_col).mapInPandas(gen, ASSET_SCHEMA)
+    return _map_rows(df.select(id_col), asset, ASSET_SCHEMA)
 
 
 def resample_pcm(samples, src_rate: int, dst_rate: int):
@@ -447,8 +450,6 @@ def resample_pcm(samples, src_rate: int, dst_rate: int):
     picks. Deliberately no anti-alias prefilter — this is the
     torchaudio "linear" mode; content above dst/2 aliases, which the
     docstring states rather than hides."""
-    import numpy as np
-
     x = np.asarray(samples, dtype=np.float64)
     n = len(x)
     if n == 0 or src_rate <= 0 or dst_rate <= 0:
@@ -467,10 +468,6 @@ def resample_pcm(samples, src_rate: int, dst_rate: int):
 
 def wav_bytes(samples, sample_rate: int) -> bytes:
     """PCM16 mono RIFF/WAVE encoder (float samples in [-1, 1])."""
-    import struct
-
-    import numpy as np
-
     pcm = np.clip(np.asarray(samples, dtype=np.float64), -1.0, 1.0)
     pcm16 = (pcm * 32767.0).round().astype("<i2").tobytes()
     n = len(pcm16)
@@ -486,8 +483,6 @@ def _parse_wav_chunks(payload: bytes):
     """RIFF/WAVE chunk walk → (fmt_tag, channels, rate, bits, data).
     fmt/data may have siblings (LIST, fact, cue) — all skipped with
     word-aligned stepping."""
-    import struct
-
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, fmt, data = 12, None, None
@@ -515,8 +510,6 @@ def _parse_wav_chunks(payload: bytes):
 # gates hash-exact — and the same formulas are SQL-expressible for the
 # DuckDB oracle.
 def _build_g711_tables():
-    import numpy as np
-
     mu = np.empty(256, dtype=np.int64)
     for code in range(256):
         u = ~code & 0xFF
@@ -543,8 +536,6 @@ _G711_TAGS = {6: "alaw", 7: "mulaw"}
 
 def g711_expand(codes, law: str):
     """8-bit G.711 codes → int64 linear samples (exact table lookup)."""
-    import numpy as np
-
     lut = {"mulaw": _MULAW_LUT, "alaw": _ALAW_LUT}[law]
     return lut[np.asarray(codes, dtype=np.uint8)]
 
@@ -553,8 +544,6 @@ def g711_compress(linear, law: str):
     """int linear samples → 8-bit G.711 codes (nearest-code quantizer
     via searchsorted on the sorted decode table — exact inverse of
     :func:`g711_expand` on its own output, pytest-pinned)."""
-    import numpy as np
-
     lut = {"mulaw": _MULAW_LUT, "alaw": _ALAW_LUT}[law]
     order = np.argsort(lut, kind="stable")
     sorted_vals = lut[order]
@@ -568,10 +557,6 @@ def g711_compress(linear, law: str):
 def g711_wav_bytes(codes, sample_rate: int, law: str = "mulaw") -> bytes:
     """G.711 mono RIFF/WAVE encoder: raw 8-bit codes, fmt tag 7 (μ-law)
     or 6 (A-law), plus the `fact` chunk non-PCM formats require."""
-    import struct
-
-    import numpy as np
-
     tag = {"mulaw": 7, "alaw": 6}[law]
     raw = np.asarray(codes, dtype=np.uint8).tobytes()
     n = len(raw)
@@ -588,8 +573,6 @@ def decode_wav(payload: bytes):
     """Parse RIFF/WAVE mono → (sample_rate, float64 samples in [-1, 1]):
     PCM16 (tag 1), μ-law (7) and A-law (6) — G.711 expands through the
     exact integer LUTs then normalizes by the 13/14-bit full scale."""
-    import numpy as np
-
     fmt_tag, channels, rate, bits, data = _parse_wav_chunks(payload)
     if fmt_tag == 1 and channels == 1 and bits == 16:
         return rate, np.frombuffer(data, dtype="<i2").astype(np.float64) / 32767.0
@@ -609,8 +592,6 @@ def decode_wav(payload: bytes):
 def decode_wav_g711(payload: bytes):
     """Parse a G.711 RIFF/WAVE → (sample_rate, law, int64 linear
     samples) with NO float normalization — the hash-exact gate surface."""
-    import numpy as np
-
     fmt_tag, channels, rate, bits, data = _parse_wav_chunks(payload)
     if fmt_tag not in _G711_TAGS or channels != 1 or bits != 8:
         raise ValueError(
@@ -629,8 +610,6 @@ def decode_audio(payload: bytes):
     every audio consumer (envelope hash, feature stats) flows the same
     dedup path whatever the container. MP3/Vorbis/Opus remain the
     marked libav stub."""
-    import numpy as np
-
     payload = bytes(payload)
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         fmt_tag, channels, rate, bits, data = _parse_wav_chunks(payload)
@@ -679,55 +658,23 @@ def synthesize_wav_assets(
     ``5 + id % 20`` WHOLE cycles over the buffer (integer cycle counts make
     the sampled RMS exactly A/√2 up to PCM16 rounding — the closed-form
     gate)."""
-    import numpy as np
-    import pandas as pd
-
-    def gen(it):
-        t = np.arange(n_samples, dtype=np.float64) / n_samples
-        for pdf in it:
-            ids = pdf[id_col].to_numpy()
-            payloads = [
-                wav_bytes(
-                    amplitude * np.sin(2 * np.pi * (5 + int(i) % 20) * t),
-                    sample_rate,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame({"asset_id": ids, "payload": payloads})
-
-    return df.select(id_col).mapInPandas(
-        gen, "asset_id long, payload binary"
-    )
+    t = np.arange(n_samples, dtype=np.float64) / n_samples
+    return _synth(df, id_col, lambda i: wav_bytes(
+        amplitude * np.sin(2 * np.pi * (5 + i % 20) * t), sample_rate
+    ))
 
 
 def wav_feature_stats(assets: DataFrame) -> DataFrame:
     """(asset_id, sample_rate, n_samples, duration_s, rms) via the REAL
     WAV parser — Arrow-batched, numpy vector math per payload."""
-    import numpy as np
-    import pandas as pd
 
-    def stats(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                rate, samples = decode_wav(bytes(row["payload"]))
-                rows.append(
-                    (
-                        row["asset_id"],
-                        rate,
-                        len(samples),
-                        len(samples) / rate,
-                        float(np.sqrt((samples**2).mean())),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "sample_rate", "n_samples", "duration_s", "rms"
-                ],
-            )
+    def stats(i, payload):
+        rate, samples = decode_wav(bytes(payload))
+        n = len(samples)
+        return [(i, rate, n, n / rate, float(np.sqrt((samples**2).mean())))]
 
-    return assets.mapInPandas(
+    return _map_rows(
+        assets.select("asset_id", "payload"),
         stats,
         "asset_id long, sample_rate long, n_samples long,"
         " duration_s double, rms double",
@@ -746,21 +693,12 @@ def synthesize_g711_assets(
     ``(31·id + 7·n) % 256`` — every code value is hit across ids, so the
     decode gate covers the full 256-entry expansion table of BOTH laws
     with an integer closed form the SQL oracle replays bit-exactly."""
-    import numpy as np
-    import pandas as pd
-
-    def gen(it):
-        n = np.arange(n_samples, dtype=np.int64)
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                codes = ((31 * i + 7 * n) % 256).astype(np.uint8)
-                law = "mulaw" if i % 2 == 0 else "alaw"
-                rows.append((i, g711_wav_bytes(codes, sample_rate, law)))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    n = np.arange(n_samples, dtype=np.int64)
+    return _synth(df, id_col, lambda i: g711_wav_bytes(
+        ((31 * i + 7 * n) % 256).astype(np.uint8),
+        sample_rate,
+        "mulaw" if i % 2 == 0 else "alaw",
+    ))
 
 
 def g711_feature_stats(assets: DataFrame) -> DataFrame:
@@ -768,24 +706,13 @@ def g711_feature_stats(assets: DataFrame) -> DataFrame:
     REAL G.711 WAV parse + integer expansion — no float normalization,
     so every column is hash-exact against the SQL replay of the G.711
     formulas."""
-    import pandas as pd
 
-    def stats(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                rate, law, lin = decode_wav_g711(bytes(row["payload"]))
-                rows.append(
-                    (row["asset_id"], law, rate, len(lin), int(lin.sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "law", "sample_rate", "n_samples", "sum_linear"
-                ],
-            )
+    def stats(i, payload):
+        rate, law, lin = decode_wav_g711(bytes(payload))
+        return [(i, law, rate, len(lin), int(lin.sum()))]
 
-    return assets.mapInPandas(
+    return _map_rows(
+        assets.select("asset_id", "payload"),
         stats,
         "asset_id long, law string, sample_rate long, n_samples long,"
         " sum_linear long",
@@ -806,70 +733,41 @@ def synthesize_flac_assets(
     (i%5==0), all over 256-sample frames with a partial tail. FLAC is
     lossless over integers, so the gate's closed-form SUM is exact —
     and every payload's STREAMINFO MD5 re-verifies the full decode."""
-    import numpy as np
-    import pandas as pd
-
     from .flac import flac_bytes
 
     modes = ("independent", "left_side", "right_side", "mid_side")
+    n = np.arange(n_samples, dtype=np.int64)
 
-    def gen(it):
-        n = np.arange(n_samples, dtype=np.int64)
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                ch = 1 + i % 2
-                sig = np.stack(
-                    [((67 * i + 13 * n + 29 * c) % 4001) - 2000
-                     for c in range(ch)],
-                    axis=1,
-                )
-                rows.append((
-                    i,
-                    flac_bytes(
-                        sig if ch == 2 else sig[:, 0],
-                        sample_rate,
-                        block_size=256,
-                        subframe="verbatim" if i % 5 == 0 else "auto",
-                        stereo_mode=modes[(i // 2) % 4] if ch == 2
-                        else "independent",
-                    ),
-                ))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
+    def encode(i):
+        ch = 1 + i % 2
+        sig = np.stack(
+            [((67 * i + 13 * n + 29 * c) % 4001) - 2000 for c in range(ch)],
+            axis=1,
+        )
+        return flac_bytes(
+            sig if ch == 2 else sig[:, 0],
+            sample_rate,
+            block_size=256,
+            subframe="verbatim" if i % 5 == 0 else "auto",
+            stereo_mode=modes[(i // 2) % 4] if ch == 2 else "independent",
+        )
 
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, encode)
 
 
 def flac_feature_stats(assets: DataFrame) -> DataFrame:
     """(asset_id, sample_rate, n_channels, n_samples, sum_linear) via
     the REAL FLAC decoder — raw stream integers, no float scaling, so
     the gate hash is exact. Arrow-batched, row-local, zero shuffle."""
-    import pandas as pd
-
     from .flac import decode_flac
 
-    def stats(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                rate, _bps, samples = decode_flac(bytes(row["payload"]))
-                rows.append((
-                    row["asset_id"],
-                    rate,
-                    samples.shape[1],
-                    samples.shape[0],
-                    int(samples.sum()),
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "sample_rate", "n_channels", "n_samples",
-                    "sum_linear",
-                ],
-            )
+    def stats(i, payload):
+        rate, _bps, samples = decode_flac(bytes(payload))
+        n, channels = samples.shape
+        return [(i, rate, channels, n, int(samples.sum()))]
 
-    return assets.mapInPandas(
+    return _map_rows(
+        assets.select("asset_id", "payload"),
         stats,
         "asset_id long, sample_rate long, n_channels long,"
         " n_samples long, sum_linear long",
@@ -878,10 +776,6 @@ def flac_feature_stats(assets: DataFrame) -> DataFrame:
 
 def bmp_bytes(pixels) -> bytes:
     """24-bit uncompressed BMP encoder (H×W×3 uint8, RGB)."""
-    import struct
-
-    import numpy as np
-
     px = np.asarray(pixels, dtype=np.uint8)
     h, w, _ = px.shape
     row_size = (w * 3 + 3) & ~3
@@ -897,10 +791,6 @@ def bmp_bytes(pixels) -> bytes:
 
 def decode_bmp(payload: bytes):
     """Parse 24-bit uncompressed BMP → H×W×3 uint8 RGB array."""
-    import struct
-
-    import numpy as np
-
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
     (offset,) = struct.unpack("<I", payload[10:14])
@@ -936,11 +826,6 @@ def png_bytes(pixels, *, cycle_filters: bool = True) -> bytes:
     round-trip exercises ALL five unfilter paths (None/Sub/Up/Average/
     Paeth) — the realistic shape, since real encoders mix filters
     per row."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     px = np.asarray(pixels, dtype=np.uint8)
     h, w, ch = px.shape
     if ch != 3:
@@ -1000,11 +885,6 @@ def decode_png(payload: bytes):
     decoder's interlace sibling); returns H×W×3 uint8 RGB (gray
     replicated, alpha stripped). The r9 sub-byte stub is closed: every
     color-type x depth combination the PNG spec allows decodes here."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     if payload[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG payload")
     pos = 8
@@ -1142,13 +1022,16 @@ def decode_png(payload: bytes):
 
 
 def decode_image(payload: bytes):
-    """Magic-byte image dispatch → H×W×3 uint8 RGB: PNG, 24-bit BMP,
+    """Magic-byte image dispatch → H×W×3 uint8 RGB. PNG, 24-bit BMP,
     GIF (first rendered frame), baseline AND progressive JPEG, WebP
-    (lossless in-tree, lossy via the system libwebp), and baseline
-    TIFF (r10 — none/PackBits/LZW/Deflate strips; BigTIFF/tiles/CCITT
-    via the system libtiff) decode for REAL; AVIF/HEIC remain the
-    marked PIL stub. Every image consumer (aHash, feature stats) goes
-    through this, so every real format flows the same dedup path."""
+    (lossless in-tree, lossy via the system libwebp) and baseline TIFF
+    (none/PackBits/LZW/Deflate strips; BigTIFF/tiles/CCITT via the
+    system libtiff) decode in-tree or through a system library; AVIF
+    (libavif), HEIC (libheif) and SVG (librsvg + cairo) decode through
+    their system libraries and raise the marked ``NotImplementedError``
+    when the library is absent. Every image consumer (aHash, feature
+    stats) goes through this, so every real format flows the same dedup
+    path."""
     payload = bytes(payload)
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
         return decode_png(payload)
@@ -1209,51 +1092,49 @@ def synthesize_png_assets(
     (83i)%256), height ``8 + id % 4``) but encoded through deflate with
     per-row filter cycling — so the ``png_decode_gate`` oracle proves
     inflate + CRC + unfilter arrive at exactly the planted pixels."""
-    import numpy as np
-    import pandas as pd
+    return _synth(df, id_col, lambda i: png_bytes(_solid(i, (8 + i % 4, width))))
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                h = 8 + i % 4
-                color = np.array(
-                    [(37 * i) % 256, (59 * i) % 256, (83 * i) % 256],
-                    dtype=np.uint8,
-                )
-                px = np.broadcast_to(color, (h, width, 3))
-                rows.append((i, png_bytes(px)))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
 
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+#: per-frame stats schema; ``{0}`` is the integer type of the frame
+#: index and dimensions (``long``, or ``int`` for the MP4 gates)
+_FRAME_STATS = (
+    "asset_id long, frame_index {0}, width {0}, height {0},"
+    " mean_r double, mean_g double, mean_b double"
+)
+
+
+def _per_frame(
+    assets: DataFrame, frames: Callable, stat: Callable, schema: str
+) -> DataFrame:
+    """One row ``(asset_id, frame_index, *stat(px))`` per frame that
+    ``frames(payload)`` decodes — the body of every image, GIF, AVI and
+    MP4 stats and aHash mapper."""
+
+    def rows(i, payload):
+        for f, px in enumerate(frames(bytes(payload))):
+            yield (i, f, *stat(px))
+
+    return _map_rows(assets.select("asset_id", "payload"), rows, schema)
+
+
+def _rgb_means(px) -> tuple:
+    """(width, height, mean_r, mean_g, mean_b) of one H×W×3 frame."""
+    h, w, _ = px.shape
+    m = px.reshape(-1, 3).mean(axis=0)
+    return w, h, float(m[0]), float(m[1]), float(m[2])
+
+
+def _still(payload: bytes) -> list:
+    """A still image as a one-frame sequence."""
+    return [decode_image(payload)]
 
 
 def image_feature_stats(assets: DataFrame) -> DataFrame:
     """(asset_id, width, height, mean_r, mean_g, mean_b) through
-    :func:`decode_image` — one code path for PNG and BMP payloads."""
-    import pandas as pd
-
-    def stats(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                px = decode_image(row["payload"])
-                h, w, _ = px.shape
-                m = px.reshape(-1, 3).mean(axis=0)
-                rows.append(
-                    (row["asset_id"], w, h, float(m[0]), float(m[1]), float(m[2]))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "width", "height", "mean_r", "mean_g", "mean_b"],
-            )
-
-    return assets.mapInPandas(
-        stats,
-        "asset_id long, width long, height long,"
-        " mean_r double, mean_g double, mean_b double",
-    )
+    :func:`decode_image` — one code path for every image format."""
+    return _per_frame(
+        assets, _still, _rgb_means, _FRAME_STATS.format("long")
+    ).drop("frame_index")
 
 
 def synthesize_jpeg_assets(
@@ -1268,26 +1149,11 @@ def synthesize_jpeg_assets(
     varying magnitude categories incl. negative) + dequant + IDCT arrive
     at exactly the planted pixels. Mean over the image =
     ``(v0+v1+v2+v3)/4`` per channel — integer-exact SQL."""
-    import numpy as np
-    import pandas as pd
-
     from .jpeg_codec import QUANT_DC8, jpeg_bytes
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                vals = np.array(
-                    [[(37 * i) % 256, (37 * i + 80) % 256],
-                     [(37 * i + 160) % 256, (37 * i + 240) % 256]],
-                    dtype=np.uint8,
-                )
-                px = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                rows.append((i, jpeg_bytes(px, quant_luma=QUANT_DC8)))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: jpeg_bytes(
+        _planted_blocks(i, 37), quant_luma=QUANT_DC8
+    ))
 
 
 def synthesize_progressive_jpeg_assets(
@@ -1301,28 +1167,11 @@ def synthesize_progressive_jpeg_assets(
     successive-approximation refinement scan, then the non-interleaved
     AC band scan. DC-step-8 quantization keeps solid blocks lossless, so
     the gate is integer-exact."""
-    import numpy as np
-    import pandas as pd
-
     from .jpeg_codec import QUANT_DC8, jpeg_bytes
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                vals = np.array(
-                    [[(59 * i) % 256, (59 * i + 80) % 256],
-                     [(59 * i + 160) % 256, (59 * i + 240) % 256]],
-                    dtype=np.uint8,
-                )
-                px = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                rows.append(
-                    (i, jpeg_bytes(px, quant_luma=QUANT_DC8, progressive=True))
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: jpeg_bytes(
+        _planted_blocks(i, 59), quant_luma=QUANT_DC8, progressive=True
+    ))
 
 
 def synthesize_real_image_assets(
@@ -1332,52 +1181,25 @@ def synthesize_real_image_assets(
     (png, bmp, gif, jpeg), every payload a genuine encoded file with the
     SAME planted solid color ``((37i)%256, (59i)%256, (83i)%256)``
     (grayscale ``(37i)%256`` for JPEG — no color transform, so the
-    DC-step-8 round trip is bit-exact). One table, four container
-    formats, one :func:`decode_image` dispatch — the per-row hash oracle
-    for the feature-extraction tier."""
-    import numpy as np
-    import pandas as pd
-
+    DC-step-8 round trip is bit-exact; the GIF is two 16×16 frames, the
+    second at the :func:`synthesize_gif_assets` frame step). One table,
+    four container formats, one :func:`decode_image` dispatch — the
+    per-row hash oracle for the feature-extraction tier."""
     from .jpeg_codec import QUANT_DC8, jpeg_bytes
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                h = 8 + i % 4
-                color = np.array(
-                    [(37 * i) % 256, (59 * i) % 256, (83 * i) % 256],
-                    dtype=np.uint8,
-                )
-                fmt = i % 4
-                if fmt == 0:
-                    payload = png_bytes(np.broadcast_to(color, (h, width, 3)))
-                elif fmt == 1:
-                    payload = bmp_bytes(np.broadcast_to(color, (h, width, 3)))
-                elif fmt == 2:
-                    frames = [
-                        np.broadcast_to(
-                            np.array(
-                                [
-                                    (37 * i + 11 * f) % 256,
-                                    (59 * i + 13 * f) % 256,
-                                    (83 * i + 17 * f) % 256,
-                                ],
-                                dtype=np.uint8,
-                            ),
-                            (16, 16, 3),
-                        )
-                        for f in range(2)
-                    ]
-                    payload = gif_bytes(frames)
-                else:
-                    gray = np.full((h, width), (37 * i) % 256, dtype=np.uint8)
-                    payload = jpeg_bytes(gray, quant_luma=QUANT_DC8)
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
+    def encode(i):
+        h = 8 + i % 4
+        fmt = i % 4
+        if fmt == 0:
+            return png_bytes(_solid(i, (h, width)))
+        if fmt == 1:
+            return bmp_bytes(_solid(i, (h, width)))
+        if fmt == 2:
+            return gif_bytes([_solid(i, (16, 16), frame=f) for f in range(2)])
+        gray = np.full((h, width), (37 * i) % 256, dtype=np.uint8)
+        return jpeg_bytes(gray, quant_luma=QUANT_DC8)
 
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, encode)
 
 
 def synthesize_bmp_assets(
@@ -1386,24 +1208,7 @@ def synthesize_bmp_assets(
     """Real BMP payloads per id: a solid color ((37i)%256, (59i)%256,
     (83i)%256) at height ``8 + id % 4`` rows — the planted closed form the
     decode gate checks exactly."""
-    import numpy as np
-    import pandas as pd
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                h = 8 + i % 4
-                color = np.array(
-                    [(37 * i) % 256, (59 * i) % 256, (83 * i) % 256],
-                    dtype=np.uint8,
-                )
-                px = np.broadcast_to(color, (h, width, 3))
-                rows.append((i, bmp_bytes(px)))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: bmp_bytes(_solid(i, (8 + i % 4, width))))
 
 
 def synthesize_tiff_assets(
@@ -1418,63 +1223,19 @@ def synthesize_tiff_assets(
     strip layout (i%3==0: multi-strip at 3 rows), so one gate run
     covers every writer-reachable baseline combination through the
     SAME ``decode_image`` dispatch as png/bmp/gif/jpeg/webp."""
-    import numpy as np
-    import pandas as pd
-
     from .tiff import tiff_bytes
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                h = 8 + i % 4
-                color = np.array(
-                    [(61 * i) % 256, (97 * i) % 256, (113 * i) % 256],
-                    dtype=np.uint8,
-                )
-                px = np.broadcast_to(color, (h, width, 3))
-                comp = ("none", "packbits", "lzw", "deflate")[i % 4]
-                rows.append((
-                    i,
-                    tiff_bytes(
-                        px,
-                        compression=comp,
-                        byte_order="II" if i % 2 == 0 else "MM",
-                        predictor=2 if comp == "deflate" else 1,
-                        rows_per_strip=3 if i % 3 == 0 else None,
-                    ),
-                ))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
+    def encode(i):
+        comp = ("none", "packbits", "lzw", "deflate")[i % 4]
+        return tiff_bytes(
+            _solid(i, (8 + i % 4, width), (61, 97, 113)),
+            compression=comp,
+            byte_order="II" if i % 2 == 0 else "MM",
+            predictor=2 if comp == "deflate" else 1,
+            rows_per_strip=3 if i % 3 == 0 else None,
+        )
 
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
-
-
-def bmp_feature_stats(assets: DataFrame) -> DataFrame:
-    """(asset_id, width, height, mean_r, mean_g, mean_b) via the REAL BMP
-    parser."""
-    import pandas as pd
-
-    def stats(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                px = decode_bmp(bytes(row["payload"]))
-                h, w, _ = px.shape
-                m = px.reshape(-1, 3).mean(axis=0)
-                rows.append(
-                    (row["asset_id"], w, h, float(m[0]), float(m[1]), float(m[2]))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "width", "height", "mean_r", "mean_g", "mean_b"],
-            )
-
-    return assets.mapInPandas(
-        stats,
-        "asset_id long, width long, height long,"
-        " mean_r double, mean_g double, mean_b double",
-    )
+    return _synth(df, id_col, encode)
 
 
 # ---------------------------------------------------------------------------
@@ -1489,6 +1250,17 @@ def _block_white(i: int, bx: int, by: int) -> bool:
     return (i * 7 + bx * 3 + by * 5) % 11 < 5
 
 
+def _block_px(white: Callable):
+    """32×32 RGB of 8×8 blocks of 4×4 px, block ``(bx, by)`` white where
+    ``white(bx, by)`` and black elsewhere."""
+    px = np.zeros((32, 32, 3), dtype=np.uint8)
+    for by in range(8):
+        for bx in range(8):
+            if white(bx, by):
+                px[by * 4 : by * 4 + 4, bx * 4 : bx * 4 + 4] = 255
+    return px
+
+
 def synthesize_block_bmp_assets(
     df: DataFrame, id_col: str = "doc_id", *, dup_offset: int = 100_000
 ) -> DataFrame:
@@ -1497,32 +1269,15 @@ def synthesize_block_bmp_assets(
     ``id + dup_offset`` whose (0,0) block is forced white — so the
     planted aHash hamming between an image and its dup is exactly
     ``0 if _block_white(i,0,0) else 1``."""
-    import numpy as np
-    import pandas as pd
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                for offset, force00 in ((0, False), (dup_offset, True)):
-                    px = np.zeros((32, 32, 3), dtype=np.uint8)
-                    for by in range(8):
-                        for bx in range(8):
-                            white = _block_white(i, bx, by) or (
-                                force00 and bx == 0 and by == 0
-                            )
-                            if white:
-                                px[
-                                    by * 4 : by * 4 + 4,
-                                    bx * 4 : bx * 4 + 4,
-                                ] = 255
-                    rows.append((i + offset, bmp_bytes(px)))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
+    def pair(i):
+        for offset, force00 in ((0, False), (dup_offset, True)):
+            yield i + offset, bmp_bytes(_block_px(
+                lambda bx, by: _block_white(i, bx, by)
+                or (force00 and bx == 0 and by == 0)
+            ))
 
-    return df.select(id_col).mapInPandas(
-        gen, "asset_id long, payload binary"
-    )
+    return _map_rows(df.select(id_col), pair, _PAYLOAD)
 
 
 def _ahash_bits(px, blocks: int) -> list[bool]:
@@ -1552,25 +1307,23 @@ def _ahash_bits(px, blocks: int) -> list[bool]:
     return bits
 
 
+def _frame_ahash(assets: DataFrame, frames: Callable, blocks: int) -> DataFrame:
+    """(asset_id, frame_index, bits) per decoded frame."""
+    return _per_frame(
+        assets,
+        frames,
+        lambda px: (_ahash_bits(px, blocks),),
+        "asset_id long, frame_index long, bits array<boolean>",
+    )
+
+
 def image_ahash(assets: DataFrame, blocks: int = 8) -> DataFrame:
     """Average-hash through the real codecs (:func:`decode_image` — PNG,
     24-bit BMP, or GIF-first-frame payloads, magic-dispatched): see
     :func:`_ahash_bits` for the exact-integer bit rule. Returns
     ``(asset_id, bits array<boolean>)`` in row-major block order.
     Row-local mapInPandas; zero shuffle."""
-    import pandas as pd
-
-    def hash_batch(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                bits = _ahash_bits(decode_image(row["payload"]), blocks)
-                rows.append((row["asset_id"], bits))
-            yield pd.DataFrame(rows, columns=["asset_id", "bits"])
-
-    return assets.mapInPandas(
-        hash_batch, "asset_id long, bits array<boolean>"
-    )
+    return _frame_ahash(assets, _still, blocks).drop("frame_index")
 
 
 def ahash_hamming(pairs: DataFrame, hashes: DataFrame) -> DataFrame:
@@ -1627,29 +1380,18 @@ def synthesize_envelope_wav_assets(
     Amplitudes are exact under the encode→decode round-trip (a/32767
     encodes back to integer a), so segment energies are exact integers.
     """
-    import numpy as np
-    import pandas as pd
+    sign = np.where(np.arange(seg_samples) % 2 == 0, 1.0, -1.0)
 
-    def gen(it):
-        sign = np.where(np.arange(seg_samples) % 2 == 0, 1.0, -1.0)
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                for offset, force0 in ((0, False), (dup_offset, True)):
-                    segs = []
-                    for s in range(segments):
-                        loud = _segment_loud(i, s) or (force0 and s == 0)
-                        amp = (16384 if loud else 1024) / 32767.0
-                        segs.append(amp * sign)
-                    rows.append(
-                        (i + offset, wav_bytes(np.concatenate(segs), 8000))
-                    )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
+    def pair(i):
+        for offset, force0 in ((0, False), (dup_offset, True)):
+            segs = [
+                (16384 if _segment_loud(i, s) or (force0 and s == 0)
+                 else 1024) / 32767.0 * sign
+                for s in range(segments)
+            ]
+            yield i + offset, wav_bytes(np.concatenate(segs), 8000)
 
-    return df.select(id_col).mapInPandas(
-        gen, "asset_id long, payload binary"
-    )
+    return _map_rows(df.select(id_col), pair, _PAYLOAD)
 
 
 def audio_envelope_hash(assets: DataFrame, segments: int = 64) -> DataFrame:
@@ -1660,26 +1402,21 @@ def audio_envelope_hash(assets: DataFrame, segments: int = 64) -> DataFrame:
     (``e_s · nseg >= total``). Returns ``(asset_id, bits)`` — the same
     shape :func:`ahash_hamming` consumes, so image and audio near-dup
     share one distance operator. Row-local; zero shuffle."""
-    import numpy as np
-    import pandas as pd
 
-    def hash_batch(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                # magic dispatch (r10): WAV-PCM16 yields the identical
-                # raw ints as the historical rint(float·32767) path;
-                # FLAC payloads now flow the same envelope operator
-                _rate, ints, _bps = decode_audio(bytes(row["payload"]))
-                n = len(ints) // segments * segments
-                e = (ints[:n] ** 2).reshape(segments, -1).sum(axis=1)
-                total = int(e.sum())
-                bits = [int(x) * segments >= total for x in e]
-                rows.append((row["asset_id"], bits))
-            yield pd.DataFrame(rows, columns=["asset_id", "bits"])
+    def envelope(i, payload):
+        # magic dispatch (r10): WAV-PCM16 yields the identical
+        # raw ints as the historical rint(float·32767) path;
+        # FLAC payloads now flow the same envelope operator
+        _rate, ints, _bps = decode_audio(payload)
+        n = len(ints) // segments * segments
+        e = (ints[:n] ** 2).reshape(segments, -1).sum(axis=1)
+        total = int(e.sum())
+        return [(i, [int(x) * segments >= total for x in e])]
 
-    return assets.mapInPandas(
-        hash_batch, "asset_id long, bits array<boolean>"
+    return _map_rows(
+        assets.select("asset_id", "payload"),
+        envelope,
+        "asset_id long, bits array<boolean>",
     )
 
 
@@ -1708,33 +1445,18 @@ def synthesize_block_video_assets(
     by :func:`_video_block_white`, plus a near-duplicate at
     ``id + dup_offset`` whose FIRST frame is replaced with all-white
     (a bumper/intro swap — the classic video near-dup case)."""
-    import numpy as np
-    import pandas as pd
 
-    def frame_px(i: int, f: int, all_white: bool):
-        px = np.zeros((32, 32, 3), dtype=np.uint8)
-        for by in range(8):
-            for bx in range(8):
-                if all_white or _video_block_white(i, f, bx, by):
-                    px[by * 4 : by * 4 + 4, bx * 4 : bx * 4 + 4] = 255
-        return px
+    def pair(i):
+        for offset, swap0 in ((0, False), (dup_offset, True)):
+            yield i + offset, b"".join(
+                bmp_bytes(_block_px(
+                    lambda bx, by: (swap0 and f == 0)
+                    or _video_block_white(i, f, bx, by)
+                ))
+                for f in range(frames)
+            )
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                for offset, swap0 in ((0, False), (dup_offset, True)):
-                    payload = b"".join(
-                        bmp_bytes(frame_px(i, f, swap0 and f == 0))
-                        for f in range(frames)
-                    )
-                    rows.append((i + offset, payload))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(
-        gen, "asset_id long, payload binary"
-    )
+    return _map_rows(df.select(id_col), pair, _PAYLOAD)
 
 
 def video_frames(
@@ -1885,10 +1607,6 @@ def gif_bytes(frames, *, delay_cs: int = 4) -> bytes:
     from the union of frame colors (≤ 256 distinct RGB values — the GIF
     format's own limit), disposal=1 (keep), real LZW data. Frames are
     H×W×3 uint8 arrays of identical shape."""
-    import struct
-
-    import numpy as np
-
     frames = [np.asarray(f, dtype=np.uint8) for f in frames]
     h, w, _ = frames[0].shape
     colors: dict[tuple, int] = {}
@@ -1933,10 +1651,6 @@ def decode_gif(payload: bytes):
     (canvas composition: disposal none/keep/background/previous,
     transparency skip, interlace supported, local color tables
     supported). Stdlib-only."""
-    import struct
-
-    import numpy as np
-
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     w, h, packed, bg, _ar = struct.unpack("<HHBBB", payload[6:13])
@@ -2035,65 +1749,15 @@ def synthesize_gif_assets(
     the planted closed form ``frame f of asset i = ((37i + 11f) % 256,
     (59i + 13f) % 256, (83i + 17f) % 256)`` — per-frame means are exact
     through palette + LZW + composition, so the gate is SQL-derivable."""
-    import numpy as np
-    import pandas as pd
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                frames = [
-                    np.broadcast_to(
-                        np.array(
-                            [
-                                (37 * i + 11 * f) % 256,
-                                (59 * i + 13 * f) % 256,
-                                (83 * i + 17 * f) % 256,
-                            ],
-                            dtype=np.uint8,
-                        ),
-                        (size, size, 3),
-                    )
-                    for f in range(2 + i % 3)
-                ]
-                rows.append((i, gif_bytes(frames)))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: gif_bytes(
+        [_solid(i, (size, size), frame=f) for f in range(2 + i % 3)]
+    ))
 
 
 def gif_frame_stats(assets: DataFrame) -> DataFrame:
     """(asset_id, frame_index, width, height, mean_r, mean_g, mean_b)
     through the REAL GIF decoder — the decode gate surface."""
-    import pandas as pd
-
-    def stats(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                for f, px in enumerate(decode_gif(bytes(row["payload"]))):
-                    h, w, _ = px.shape
-                    m = px.reshape(-1, 3).mean(axis=0)
-                    rows.append(
-                        (
-                            row["asset_id"], f, w, h,
-                            float(m[0]), float(m[1]), float(m[2]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "frame_index", "width", "height",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return assets.mapInPandas(
-        stats,
-        "asset_id long, frame_index long, width long, height long,"
-        " mean_r double, mean_g double, mean_b double",
-    )
+    return _per_frame(assets, decode_gif, _rgb_means, _FRAME_STATS.format("long"))
 
 
 def gif_frame_ahash(assets: DataFrame, blocks: int = 8) -> DataFrame:
@@ -2101,22 +1765,7 @@ def gif_frame_ahash(assets: DataFrame, blocks: int = 8) -> DataFrame:
     through decode→compose→:func:`_ahash_bits` — feeds the same
     :func:`ahash_hamming` candidate-pair join as the image/video tiers
     (join key ``(asset_id, frame_index)`` rolled up by the caller)."""
-    import pandas as pd
-
-    def hash_batch(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                for f, px in enumerate(decode_gif(bytes(row["payload"]))):
-                    rows.append((row["asset_id"], f, _ahash_bits(px, blocks)))
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "frame_index", "bits"]
-            )
-
-    return assets.mapInPandas(
-        hash_batch,
-        "asset_id long, frame_index long, bits array<boolean>",
-    )
+    return _frame_ahash(assets, decode_gif, blocks)
 
 
 # ---------------------------------------------------------------------------
@@ -2137,35 +1786,14 @@ def synthesize_avi_assets(
     varying per frame so frame ORDER through the container is proven
     too). Frame payload sizes vary and include odd lengths, so the
     writer/parser word-alignment path is exercised on every asset."""
-    import numpy as np
-    import pandas as pd
-
     from .avi import avi_bytes
     from .jpeg_codec import QUANT_DC8, jpeg_bytes
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                frames = []
-                for f in range(2 + i % 3):
-                    vals = np.array(
-                        [[(37 * i + 80 * 0 + 71 * f) % 256,
-                          (37 * i + 80 * 1 + 71 * f) % 256],
-                         [(37 * i + 80 * 2 + 71 * f) % 256,
-                          (37 * i + 80 * 3 + 71 * f) % 256]],
-                        dtype=np.uint8,
-                    )
-                    px = np.repeat(np.repeat(vals, size // 2, axis=0),
-                                   size // 2, axis=1)
-                    frames.append(jpeg_bytes(px, quant_luma=QUANT_DC8))
-                rows.append(
-                    (i, avi_bytes(frames, width=size, height=size, fps=10))
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: avi_bytes(
+        [jpeg_bytes(_planted_blocks(i, 37, size, f, 71), quant_luma=QUANT_DC8)
+         for f in range(2 + i % 3)],
+        width=size, height=size, fps=10,
+    ))
 
 
 def synthesize_webp_assets(
@@ -2179,30 +1807,11 @@ def synthesize_webp_assets(
     residual r=b=0 → the red/blue codes collapse to the SIMPLE form),
     so one gate run exercises both code forms and the transform
     inverse."""
-    import numpy as np
-    import pandas as pd
-
     from .webp import webp_bytes
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                vals = np.array(
-                    [[(47 * i + 80 * 0) % 256, (47 * i + 80 * 1) % 256],
-                     [(47 * i + 80 * 2) % 256, (47 * i + 80 * 3) % 256]],
-                    dtype=np.uint8,
-                )
-                px = np.repeat(np.repeat(vals, size // 2, axis=0),
-                               size // 2, axis=1)
-                px = np.repeat(px[..., None], 3, axis=2)
-                rows.append(
-                    (i, webp_bytes(px, subtract_green=bool(i % 2)))
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: webp_bytes(
+        _planted_blocks(i, 47, size, rgb=True), subtract_green=bool(i % 2)
+    ))
 
 
 def synthesize_lossy_webp_assets(
@@ -2216,28 +1825,11 @@ def synthesize_lossy_webp_assets(
     fixed-point rounding), which is what the gate asserts. Raises the
     marked ``NotImplementedError`` when libwebp is absent — the gate
     then fails loudly rather than fake a lossy decode."""
-    import numpy as np
-    import pandas as pd
-
     from .webp_native import encode_lossy_rgb
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                vals = np.array(
-                    [[(53 * i + 80 * 0) % 256, (53 * i + 80 * 1) % 256],
-                     [(53 * i + 80 * 2) % 256, (53 * i + 80 * 3) % 256]],
-                    dtype=np.uint8,
-                )
-                px = np.repeat(np.repeat(vals, size // 2, axis=0),
-                               size // 2, axis=1)
-                px = np.repeat(px[..., None], 3, axis=2)
-                rows.append((i, encode_lossy_rgb(px, 95.0)))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: encode_lossy_rgb(
+        _planted_blocks(i, 53, size, rgb=True), 95.0
+    ))
 
 
 def synthesize_mp4_assets(
@@ -2250,35 +1842,14 @@ def synthesize_mp4_assets(
     (different multipliers so a cross-wired container path cannot pass
     both gates). Sample sizes vary per frame, so the two-per-chunk
     ``stsc``/``stco`` walk resolves non-trivial offsets on every asset."""
-    import numpy as np
-    import pandas as pd
-
     from .jpeg_codec import QUANT_DC8, jpeg_bytes
     from .mp4 import mp4_bytes
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                frames = []
-                for f in range(2 + i % 3):
-                    vals = np.array(
-                        [[(41 * i + 80 * 0 + 67 * f) % 256,
-                          (41 * i + 80 * 1 + 67 * f) % 256],
-                         [(41 * i + 80 * 2 + 67 * f) % 256,
-                          (41 * i + 80 * 3 + 67 * f) % 256]],
-                        dtype=np.uint8,
-                    )
-                    px = np.repeat(np.repeat(vals, size // 2, axis=0),
-                                   size // 2, axis=1)
-                    frames.append(jpeg_bytes(px, quant_luma=QUANT_DC8))
-                rows.append(
-                    (i, mp4_bytes(frames, width=size, height=size, fps=10))
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: mp4_bytes(
+        [jpeg_bytes(_planted_blocks(i, 41, size, f, 67), quant_luma=QUANT_DC8)
+         for f in range(2 + i % 3)],
+        width=size, height=size, fps=10,
+    ))
 
 
 def synthesize_avif_assets(
@@ -2294,28 +1865,11 @@ def synthesize_avif_assets(
     system decoder a conformance oracle for the container + codec
     plumbing. Raises the marked ``NotImplementedError`` when libavif is
     absent — the gate then fails loudly rather than fake a decode."""
-    import numpy as np
-    import pandas as pd
-
     from .avif_native import encode_rgb
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                vals = np.array(
-                    [[(79 * i + 80 * 0) % 256, (79 * i + 80 * 1) % 256],
-                     [(79 * i + 80 * 2) % 256, (79 * i + 80 * 3) % 256]],
-                    dtype=np.uint8,
-                )
-                px = np.repeat(np.repeat(vals, size // 2, axis=0),
-                               size // 2, axis=1)
-                px = np.repeat(px[..., None], 3, axis=2)
-                rows.append((i, encode_rgb(px, lossless=True)))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: encode_rgb(
+        _planted_blocks(i, 79, size, rgb=True), lossless=True
+    ))
 
 
 def synthesize_heic_assets(
@@ -2328,28 +1882,11 @@ def synthesize_heic_assets(
     gate asserts exact means. Multiplier 73 is distinct from every
     other format gate. Raises the marked ``NotImplementedError`` when
     libheif/x265 is absent — the gate fails loudly, never fakes."""
-    import numpy as np
-    import pandas as pd
-
     from .heif_native import encode_rgb
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                vals = np.array(
-                    [[(73 * i + 80 * 0) % 256, (73 * i + 80 * 1) % 256],
-                     [(73 * i + 80 * 2) % 256, (73 * i + 80 * 3) % 256]],
-                    dtype=np.uint8,
-                )
-                px = np.repeat(np.repeat(vals, size // 2, axis=0),
-                               size // 2, axis=1)
-                px = np.repeat(px[..., None], 3, axis=2)
-                rows.append((i, encode_rgb(px, lossless=True)))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: encode_rgb(
+        _planted_blocks(i, 73, size, rgb=True), lossless=True
+    ))
 
 
 def synthesize_av1_video_assets(
@@ -2360,37 +1897,16 @@ def synthesize_av1_video_assets(
     sample table with stsc/stco/stsz/stts and an ``av1C`` record),
     planted at ``(71·id + 80·k + 29·f) % 256`` for block ``k`` of frame
     ``f`` (multipliers distinct from the motion-JPEG containers: avi
-    uses 43/67, mp4 41/67). The gate demuxes with the ENGINE's
+    uses 37/71, mp4 41/67). The gate demuxes with the ENGINE's
     ``parse_mp4`` box walker and decodes each sample independently
     through the system AV1 decoder — exact means end to end."""
-    import numpy as np
-    import pandas as pd
-
     from .avif_native import encode_frames
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                frames = []
-                for f in range(2 + i % 3):
-                    vals = np.array(
-                        [[(71 * i + 80 * 0 + 29 * f) % 256,
-                          (71 * i + 80 * 1 + 29 * f) % 256],
-                         [(71 * i + 80 * 2 + 29 * f) % 256,
-                          (71 * i + 80 * 3 + 29 * f) % 256]],
-                        dtype=np.uint8,
-                    )
-                    px = np.repeat(np.repeat(vals, size // 2, axis=0),
-                                   size // 2, axis=1)
-                    frames.append(np.repeat(px[..., None], 3, axis=2))
-                rows.append(
-                    (i, encode_frames(frames, fps=5, lossless=True))
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, lambda i: encode_frames(
+        [_planted_blocks(i, 71, size, f, 29, rgb=True)
+         for f in range(2 + i % 3)],
+        fps=5, lossless=True,
+    ))
 
 
 def synthesize_svg_assets(
@@ -2401,33 +1917,26 @@ def synthesize_svg_assets(
     anti-aliased interior ⇒ the rasterized means are EXACT). SVG is
     text, so the fixture needs no encoder: the gate tests the
     RENDERER (librsvg + cairo) against markup the engine authors."""
-    import pandas as pd
+    half = size // 2
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            half = size // 2
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                rects = []
-                for k in range(4):
-                    v = (103 * i + 80 * k) % 256
-                    x, y = (k % 2) * half, (k // 2) * half
-                    rects.append(
-                        f'<rect x="{x}" y="{y}" width="{half}"'
-                        f' height="{half}"'
-                        f' fill="#{v:02x}{v:02x}{v:02x}"/>'
-                    )
-                svg = (
-                    '<?xml version="1.0"?>'
-                    '<svg xmlns="http://www.w3.org/2000/svg"'
-                    f' width="{size}" height="{size}">'
-                    + "".join(rects) + "</svg>"
-                ).encode("utf-8")
-                rows.append((i, svg))
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
+    def encode(i):
+        rects = []
+        for k in range(4):
+            v = (103 * i + 80 * k) % 256
+            x, y = (k % 2) * half, (k // 2) * half
+            rects.append(
+                f'<rect x="{x}" y="{y}" width="{half}"'
+                f' height="{half}"'
+                f' fill="#{v:02x}{v:02x}{v:02x}"/>'
+            )
+        return (
+            '<?xml version="1.0"?>'
+            '<svg xmlns="http://www.w3.org/2000/svg"'
+            f' width="{size}" height="{size}">'
+            + "".join(rects) + "</svg>"
+        ).encode("utf-8")
 
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, encode)
 
 
 def synthesize_hevc_video_assets(
@@ -2442,90 +1951,41 @@ def synthesize_hevc_video_assets(
     (length-prefixed NALs), which is what makes the mux legitimate.
     64×64 (the CTU size) avoids the encoder's grid wrapper, so coded
     size == displayed size and lossless gray plants are INTEGER-EXACT:
-    four solid 32×32 blocks at ``(101·id + 80·k + 23·f) % 256``."""
-    import numpy as np
-    import pandas as pd
-
+    four solid 32×32 blocks at ``(101·id + 80·k + 23·f) % 256``
+    (multipliers distinct from every other video gate)."""
     from .heif_native import encode_rgb, extract_hevc
     from .mp4 import mp4_bytes
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for i in pdf[id_col].to_numpy():
-                i = int(i)
-                samples = []
-                hvcc = None
-                for f in range(2 + i % 3):
-                    vals = np.array(
-                        [[(101 * i + 80 * 0 + 23 * f) % 256,
-                          (101 * i + 80 * 1 + 23 * f) % 256],
-                         [(101 * i + 80 * 2 + 23 * f) % 256,
-                          (101 * i + 80 * 3 + 23 * f) % 256]],
-                        dtype=np.uint8,
-                    )
-                    px = np.repeat(np.repeat(vals, size // 2, axis=0),
-                                   size // 2, axis=1)
-                    px = np.repeat(px[..., None], 3, axis=2)
-                    sample, cfg, w, h = extract_hevc(
-                        encode_rgb(px, lossless=True)
-                    )
-                    if (w, h) != (size, size):
-                        raise ValueError(
-                            f"encoder padded {size}x{size} to {w}x{h}"
-                        )
-                    if hvcc is None:
-                        hvcc = cfg
-                    elif hvcc != cfg:
-                        raise ValueError(
-                            "hvcC drifted between same-shape frames"
-                        )
-                    samples.append(sample)
-                rows.append(
-                    (i, mp4_bytes(
-                        samples, width=size, height=size, fps=5,
-                        codec="hvc1", codec_config=hvcc,
-                    ))
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
+    def encode(i):
+        samples = []
+        hvcc = None
+        for f in range(2 + i % 3):
+            sample, cfg, w, h = extract_hevc(encode_rgb(
+                _planted_blocks(i, 101, size, f, 23, rgb=True), lossless=True
+            ))
+            if (w, h) != (size, size):
+                raise ValueError(f"encoder padded {size}x{size} to {w}x{h}")
+            if hvcc is None:
+                hvcc = cfg
+            elif hvcc != cfg:
+                raise ValueError("hvcC drifted between same-shape frames")
+            samples.append(sample)
+        return mp4_bytes(
+            samples, width=size, height=size, fps=5,
+            codec="hvc1", codec_config=hvcc,
+        )
 
-    return df.select(id_col).mapInPandas(gen, "asset_id long, payload binary")
+    return _synth(df, id_col, encode)
 
 
 def mp4_frame_stats(assets: DataFrame) -> DataFrame:
     """(asset_id, frame_index, width, height, mean_r, mean_g, mean_b)
     through the REAL MP4 demuxer + JPEG decoder — same gate surface as
-    :func:`avi_frame_stats`."""
-    import pandas as pd
-
+    :func:`avi_frame_stats`, with ``int`` frame index and dimensions."""
     from .mp4 import decode_mp4
 
-    def stats(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                _mp4, frames = decode_mp4(bytes(row["payload"]))
-                for f, px in enumerate(frames):
-                    h, w, _ = px.shape
-                    m = px.reshape(-1, 3).mean(axis=0)
-                    rows.append(
-                        (
-                            row["asset_id"], f, w, h,
-                            float(m[0]), float(m[1]), float(m[2]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "frame_index", "width", "height",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return assets.mapInPandas(
-        stats,
-        "asset_id long, frame_index int, width int, height int,"
-        " mean_r double, mean_g double, mean_b double",
+    return _per_frame(
+        assets, lambda p: decode_mp4(p)[1], _rgb_means, _FRAME_STATS.format("int")
     )
 
 
@@ -2533,36 +1993,10 @@ def avi_frame_stats(assets: DataFrame) -> DataFrame:
     """(asset_id, frame_index, width, height, mean_r, mean_g, mean_b)
     through the REAL AVI parser + JPEG decoder — the container decode
     gate surface (same shape as :func:`gif_frame_stats`)."""
-    import pandas as pd
-
     from .avi import decode_avi
 
-    def stats(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                _avi, frames = decode_avi(bytes(row["payload"]))
-                for f, px in enumerate(frames):
-                    h, w, _ = px.shape
-                    m = px.reshape(-1, 3).mean(axis=0)
-                    rows.append(
-                        (
-                            row["asset_id"], f, w, h,
-                            float(m[0]), float(m[1]), float(m[2]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "frame_index", "width", "height",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return assets.mapInPandas(
-        stats,
-        "asset_id long, frame_index long, width long, height long,"
-        " mean_r double, mean_g double, mean_b double",
+    return _per_frame(
+        assets, lambda p: decode_avi(p)[1], _rgb_means, _FRAME_STATS.format("long")
     )
 
 
@@ -2570,22 +2004,6 @@ def avi_frame_ahash(assets: DataFrame, blocks: int = 8) -> DataFrame:
     """Per-frame aHash of AVI/MJPEG videos — feeds the same
     :func:`ahash_hamming` candidate-pair join as the image/GIF tiers,
     so container video flows the standard near-dup path."""
-    import pandas as pd
-
     from .avi import decode_avi
 
-    def hash_batch(it):
-        for pdf in it:
-            rows = []
-            for _, row in pdf.iterrows():
-                _avi, frames = decode_avi(bytes(row["payload"]))
-                for f, px in enumerate(frames):
-                    rows.append((row["asset_id"], f, _ahash_bits(px, blocks)))
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "frame_index", "bits"]
-            )
-
-    return assets.mapInPandas(
-        hash_batch,
-        "asset_id long, frame_index long, bits array<boolean>",
-    )
+    return _frame_ahash(assets, lambda p: decode_avi(p)[1], blocks)

@@ -24,7 +24,8 @@ stages, same as every other codec (zero shuffle, zero driver hops).
 from __future__ import annotations
 
 import ctypes as C
-import ctypes.util
+
+from .native import load
 
 
 class _Rect(C.Structure):
@@ -39,60 +40,59 @@ class _Rect(C.Structure):
 _P = C.c_void_p
 _FORMAT_ARGB32 = 0
 
-_LIBS = None
-_TRIED = False
+_RSVG = ("rsvg-2", "librsvg-2.so.2")
+_CAIRO = ("cairo", "libcairo.so.2")
+_GOBJECT = ("gobject-2.0", "libgobject-2.0.so.0")
+
+
+def _bind_rsvg(rsvg) -> bool:
+    rsvg.rsvg_handle_new_from_data.restype = _P
+    rsvg.rsvg_handle_new_from_data.argtypes = [
+        C.c_char_p, C.c_size_t, C.POINTER(_P),
+    ]
+    rsvg.rsvg_handle_render_document.restype = C.c_int
+    rsvg.rsvg_handle_render_document.argtypes = [
+        _P, _P, C.POINTER(_Rect), C.POINTER(_P),
+    ]
+    rsvg.rsvg_handle_get_intrinsic_size_in_pixels.restype = C.c_int
+    rsvg.rsvg_handle_get_intrinsic_size_in_pixels.argtypes = [
+        _P, C.POINTER(C.c_double), C.POINTER(C.c_double),
+    ]
+    return True
+
+
+def _bind_cairo(cairo) -> bool:
+    cairo.cairo_image_surface_create.restype = _P
+    cairo.cairo_image_surface_create.argtypes = [
+        C.c_int, C.c_int, C.c_int,
+    ]
+    cairo.cairo_create.restype = _P
+    cairo.cairo_create.argtypes = [_P]
+    cairo.cairo_destroy.argtypes = [_P]
+    cairo.cairo_surface_destroy.argtypes = [_P]
+    cairo.cairo_surface_flush.argtypes = [_P]
+    cairo.cairo_status.restype = C.c_int
+    cairo.cairo_status.argtypes = [_P]
+    cairo.cairo_image_surface_get_data.restype = C.POINTER(C.c_uint8)
+    cairo.cairo_image_surface_get_data.argtypes = [_P]
+    cairo.cairo_image_surface_get_stride.restype = C.c_int
+    cairo.cairo_image_surface_get_stride.argtypes = [_P]
+    return True
+
+
+def _bind_gobject(gobj) -> bool:
+    gobj.g_object_unref.argtypes = [_P]
+    return True
 
 
 def _libs():
-    global _LIBS, _TRIED
-    if _TRIED:
-        return _LIBS
-    _TRIED = True
-    try:
-        rsvg = C.CDLL(
-            ctypes.util.find_library("rsvg-2") or "librsvg-2.so.2"
-        )
-        cairo = C.CDLL(
-            ctypes.util.find_library("cairo") or "libcairo.so.2"
-        )
-        gobj = C.CDLL(
-            ctypes.util.find_library("gobject-2.0") or "libgobject-2.0.so.0"
-        )
-    except OSError:
-        return None
-    try:
-        rsvg.rsvg_handle_new_from_data.restype = _P
-        rsvg.rsvg_handle_new_from_data.argtypes = [
-            C.c_char_p, C.c_size_t, C.POINTER(_P),
-        ]
-        rsvg.rsvg_handle_render_document.restype = C.c_int
-        rsvg.rsvg_handle_render_document.argtypes = [
-            _P, _P, C.POINTER(_Rect), C.POINTER(_P),
-        ]
-        rsvg.rsvg_handle_get_intrinsic_size_in_pixels.restype = C.c_int
-        rsvg.rsvg_handle_get_intrinsic_size_in_pixels.argtypes = [
-            _P, C.POINTER(C.c_double), C.POINTER(C.c_double),
-        ]
-        cairo.cairo_image_surface_create.restype = _P
-        cairo.cairo_image_surface_create.argtypes = [
-            C.c_int, C.c_int, C.c_int,
-        ]
-        cairo.cairo_create.restype = _P
-        cairo.cairo_create.argtypes = [_P]
-        cairo.cairo_destroy.argtypes = [_P]
-        cairo.cairo_surface_destroy.argtypes = [_P]
-        cairo.cairo_surface_flush.argtypes = [_P]
-        cairo.cairo_status.restype = C.c_int
-        cairo.cairo_status.argtypes = [_P]
-        cairo.cairo_image_surface_get_data.restype = C.POINTER(C.c_uint8)
-        cairo.cairo_image_surface_get_data.argtypes = [_P]
-        cairo.cairo_image_surface_get_stride.restype = C.c_int
-        cairo.cairo_image_surface_get_stride.argtypes = [_P]
-        gobj.g_object_unref.argtypes = [_P]
-    except AttributeError:
-        return None
-    _LIBS = (rsvg, cairo, gobj)
-    return _LIBS
+    """(rsvg, cairo, gobject), or None unless all three bind."""
+    libs = (
+        load(_RSVG, _bind_rsvg),
+        load(_CAIRO, _bind_cairo),
+        load(_GOBJECT, _bind_gobject),
+    )
+    return libs if all(lib is not None for lib in libs) else None
 
 
 def librsvg_available() -> bool:

@@ -23,66 +23,48 @@ blobs, so this is a tmpfs write, not an I/O tier.
 from __future__ import annotations
 
 import ctypes
-import ctypes.util
 import os
 import tempfile
 
-_LIB = None
-_TRIED = False
+from .native import load
+
+_CANDIDATES = ("tiff", "libtiff.so.6", "libtiff.so.5", "libtiff.so")
+
+
+def _bind(lib) -> bool:
+    lib.TIFFOpen.restype = ctypes.c_void_p
+    lib.TIFFOpen.argtypes = [ctypes.c_char_p, ctypes.c_char_p]
+    lib.TIFFClose.restype = None
+    lib.TIFFClose.argtypes = [ctypes.c_void_p]
+    lib.TIFFReadRGBAImageOriented.restype = ctypes.c_int
+    lib.TIFFReadRGBAImageOriented.argtypes = [
+        ctypes.c_void_p,
+        ctypes.c_uint32,
+        ctypes.c_uint32,
+        ctypes.POINTER(ctypes.c_uint32),
+        ctypes.c_int,
+        ctypes.c_int,
+    ]
+    # TIFFGetField is varargs — leave argtypes unset and pass
+    # explicitly-typed ctypes values at the call sites
+    lib.TIFFGetField.restype = ctypes.c_int
+    # silence libtiff's stderr chatter; failures surface as None /
+    # zero returns which we convert to loud ValueErrors
+    handler_t = ctypes.CFUNCTYPE(
+        None, ctypes.c_char_p, ctypes.c_char_p, ctypes.c_void_p
+    )
+    try:
+        lib.TIFFSetErrorHandler.restype = handler_t
+        lib.TIFFSetErrorHandler(ctypes.cast(None, handler_t))
+        lib.TIFFSetWarningHandler.restype = handler_t
+        lib.TIFFSetWarningHandler(ctypes.cast(None, handler_t))
+    except AttributeError:
+        pass
+    return True
 
 
 def _lib():
-    global _LIB, _TRIED
-    if _TRIED:
-        return _LIB
-    _TRIED = True
-    candidates = [
-        ctypes.util.find_library("tiff"),
-        "libtiff.so.6",
-        "libtiff.so.5",
-        "libtiff.so",
-    ]
-    for cand in candidates:
-        if not cand:
-            continue
-        try:
-            lib = ctypes.CDLL(cand)
-            lib.TIFFOpen
-            lib.TIFFReadRGBAImageOriented
-            lib.TIFFClose
-        except (OSError, AttributeError):
-            continue
-        lib.TIFFOpen.restype = ctypes.c_void_p
-        lib.TIFFOpen.argtypes = [ctypes.c_char_p, ctypes.c_char_p]
-        lib.TIFFClose.restype = None
-        lib.TIFFClose.argtypes = [ctypes.c_void_p]
-        lib.TIFFReadRGBAImageOriented.restype = ctypes.c_int
-        lib.TIFFReadRGBAImageOriented.argtypes = [
-            ctypes.c_void_p,
-            ctypes.c_uint32,
-            ctypes.c_uint32,
-            ctypes.POINTER(ctypes.c_uint32),
-            ctypes.c_int,
-            ctypes.c_int,
-        ]
-        # TIFFGetField is varargs — leave argtypes unset and pass
-        # explicitly-typed ctypes values at the call sites
-        lib.TIFFGetField.restype = ctypes.c_int
-        # silence libtiff's stderr chatter; failures surface as None /
-        # zero returns which we convert to loud ValueErrors
-        handler_t = ctypes.CFUNCTYPE(
-            None, ctypes.c_char_p, ctypes.c_char_p, ctypes.c_void_p
-        )
-        try:
-            lib.TIFFSetErrorHandler.restype = handler_t
-            lib.TIFFSetErrorHandler(ctypes.cast(None, handler_t))
-            lib.TIFFSetWarningHandler.restype = handler_t
-            lib.TIFFSetWarningHandler(ctypes.cast(None, handler_t))
-        except AttributeError:
-            pass
-        _LIB = lib
-        break
-    return _LIB
+    return load(_CANDIDATES, _bind)
 
 
 def libtiff_available() -> bool:

@@ -21,58 +21,38 @@ stages, same as every other codec (zero shuffle, zero driver hops).
 from __future__ import annotations
 
 import ctypes
-import ctypes.util
 
-_LIB = None
-_TRIED = False
+from .native import load
+
+_CANDIDATES = ("webp", "libwebp.so.7", "libwebp.so")
+
+
+def _bind(lib) -> bool:
+    c_int, c_size_t = ctypes.c_int, ctypes.c_size_t
+    u8p = ctypes.POINTER(ctypes.c_uint8)
+    lib.WebPGetInfo.restype = c_int
+    lib.WebPGetInfo.argtypes = [
+        ctypes.c_char_p, c_size_t,
+        ctypes.POINTER(c_int), ctypes.POINTER(c_int),
+    ]
+    decoders = [lib.WebPDecodeRGBInto]  # RGBA and the encoder are optional
+    if hasattr(lib, "WebPDecodeRGBAInto"):
+        decoders.append(lib.WebPDecodeRGBAInto)
+    for fn in decoders:
+        fn.restype = u8p
+        fn.argtypes = [ctypes.c_char_p, c_size_t, u8p, c_size_t, c_int]
+    if hasattr(lib, "WebPEncodeRGB"):
+        lib.WebPEncodeRGB.restype = c_size_t
+        lib.WebPEncodeRGB.argtypes = [
+            u8p, c_int, c_int, c_int, ctypes.c_float, ctypes.POINTER(u8p),
+        ]
+    lib.WebPFree.restype = None
+    lib.WebPFree.argtypes = [ctypes.c_void_p]
+    return True
 
 
 def _lib():
-    global _LIB, _TRIED
-    if _TRIED:
-        return _LIB
-    _TRIED = True
-    c_int, c_size_t = ctypes.c_int, ctypes.c_size_t
-    u8p = ctypes.POINTER(ctypes.c_uint8)
-    candidates = [
-        ctypes.util.find_library("webp"),
-        "libwebp.so.7",
-        "libwebp.so",
-    ]
-    for cand in candidates:
-        if not cand:
-            continue
-        try:
-            lib = ctypes.CDLL(cand)
-            lib.WebPGetInfo
-            lib.WebPDecodeRGBInto
-            lib.WebPFree
-        except (OSError, AttributeError):
-            continue
-        lib.WebPGetInfo.restype = c_int
-        lib.WebPGetInfo.argtypes = [
-            ctypes.c_char_p, c_size_t,
-            ctypes.POINTER(c_int), ctypes.POINTER(c_int),
-        ]
-        for sym, channels in (("WebPDecodeRGBInto", 3),
-                              ("WebPDecodeRGBAInto", 4)):
-            if hasattr(lib, sym):
-                fn = getattr(lib, sym)
-                fn.restype = u8p
-                fn.argtypes = [
-                    ctypes.c_char_p, c_size_t, u8p, c_size_t, c_int,
-                ]
-        if hasattr(lib, "WebPEncodeRGB"):
-            lib.WebPEncodeRGB.restype = c_size_t
-            lib.WebPEncodeRGB.argtypes = [
-                u8p, c_int, c_int, c_int, ctypes.c_float,
-                ctypes.POINTER(u8p),
-            ]
-        lib.WebPFree.restype = None
-        lib.WebPFree.argtypes = [ctypes.c_void_p]
-        _LIB = lib
-        break
-    return _LIB
+    return load(_CANDIDATES, _bind)
 
 
 def libwebp_available() -> bool:

@@ -3558,14 +3558,14 @@ def mixture_upsampled_counts(spark, sf_dir):
 )
 def media_decode_gate(spark, sf_dir):
     from ..datapipe.multimodal import (
-        bmp_feature_stats,
+        image_feature_stats,
         synthesize_bmp_assets,
         synthesize_wav_assets,
         wav_feature_stats,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    bmp = bmp_feature_stats(synthesize_bmp_assets(docs))
+    bmp = image_feature_stats(synthesize_bmp_assets(docs))
     i = F.col("asset_id")
     bmp_ok = bmp.select(
         (

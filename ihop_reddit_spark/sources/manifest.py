@@ -315,8 +315,8 @@ def _write_clustered_stage(
     once the per-batch ``files_cap`` budget is exceeded (the same
     bounded-file-count behaviour the pinned range partitioning had).
     File names are deterministic per (task, chunk) and land via atomic
-    rename from a dot-prefixed temp name the stage's ``.parquet`` filter
-    ignores, so task retries and speculative attempts REPLACE their own
+    rename from a dot-prefixed, per-attempt temp name the stage's
+    ``.parquet`` filter ignores, so task retries and speculative attempts REPLACE their own
     output instead of duplicating it — safe because nothing references
     a staged file until the commit doc is written, after which files
     are immutable (the DV-coordinate contract needs immutability only
@@ -342,7 +342,8 @@ def _write_clustered_stage(
             tbl = pa.Table.from_batches(got).sort_by(
                 [(cluster_col, "ascending")]
             )
-            pid = TaskContext.get().partitionId()
+            ctx = TaskContext.get()
+            pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
             arr = tbl.column(cluster_col).combine_chunks()
             n = len(arr)
             if n > 1:
@@ -365,7 +366,9 @@ def _write_clustered_stage(
             for fi, k0 in enumerate(range(0, n_keys, kpf)):
                 length = int(counts[k0 : k0 + kpf].sum())
                 name = f"part-{pid:05d}-{fi:04d}.parquet"
-                tmp = os.path.join(out, f".{name}.inprogress")
+                # the temp name is unique per attempt: two attempts of
+                # one partition must not write into each other's file
+                tmp = os.path.join(out, f".{name}.{attempt}.inprogress")
                 pq.write_table(
                     tbl.slice(start, length), tmp, compression=codec
                 )

@@ -63,19 +63,22 @@ def read_jsonl_zst(
     ``README.md:84``).
 
     This container's Hadoop lacks the native zstd codec (NativeCodeLoader
-    falls back to builtin-java, which has no zstd), so decompression rides
-    pyarrow's zstd stream inside ``mapInPandas``: ``binaryFile`` yields one
-    row per ``.zst`` file, each executor streams its file through
-    ``pa.input_stream(compression="zstd")``, and the decoded lines re-enter
-    the same schema-on-read path as :func:`read_jsonl` (``from_json`` +
-    ``_corrupt_record`` channel). On a cluster with the native codec
-    installed, plain ``read_jsonl`` over ``*.zst`` subsumes this.
+    falls back to builtin-java, which has no zstd), so the lines come
+    from the ``zstjsonl`` Python Data Source
+    (:mod:`.zst_datasource`): one task per ``.zst`` file, each streaming
+    its file through pyarrow's zstd decoder in 1 MiB chunks. The lines
+    then take the same schema-on-read path as :func:`read_jsonl`
+    (``from_json`` + ``_corrupt_record`` channel). On a cluster with the
+    native codec installed, plain ``read_jsonl`` over ``*.zst`` subsumes
+    this.
 
     Scale note: single-frame ``.zst`` (Pushshift's layout) is not
     splittable, so one file = one task is the honest parallelism ceiling —
     exactly the reference's one-dump-per-month unit. Repartition after
     parsing when files are few and large.
     """
+    from .zst_datasource import ZstJsonlDataSource
+
     if isinstance(paths, str):
         paths = [paths]
     read_schema = schema
@@ -83,27 +86,8 @@ def read_jsonl_zst(
         read_schema = T.StructType(
             list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
         )
-
-    def decode(batches):
-        import pandas as pd
-        import pyarrow as pa
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                stream = pa.input_stream(
-                    pa.py_buffer(bytes(content)), compression="zstd"
-                )
-                text = stream.read().decode("utf-8")
-                lines = [ln for ln in text.split("\n") if ln.strip()]
-                if lines:
-                    yield pd.DataFrame({"value": lines})
-
-    lines = (
-        spark.read.format("binaryFile")
-        .load(list(paths))
-        .select("content")
-        .mapInPandas(decode, "value string")
-    )
+    spark.dataSource.register(ZstJsonlDataSource)
+    lines = spark.read.format("zstjsonl").load(list(paths))
     parsed = lines.select(
         F.from_json(
             F.col("value"),

@@ -1,25 +1,25 @@
-"""`zstjsonl` — a Spark 4 Python Data Source for zstd-compressed
+"""`zstjsonl` — a Spark 4 Python Data Source that streams zstd-compressed
 JSON-lines (the Pushshift dump format the reference pre-decompresses in a
-shell stage, ``dvc.yaml:3-9``).
-
-This is the engine-native surface for what ``sources/reddit.read_jsonl_zst``
-does with binaryFile + ``mapInPandas``::
+shell stage, ``dvc.yaml:3-9``) as raw lines, one ``value string`` row per
+non-blank line. :func:`~.reddit.read_jsonl_zst` parses those lines with
+``from_json`` under the fixed schema and its PERMISSIVE
+``_corrupt_record`` channel::
 
     spark.dataSource.register(ZstJsonlDataSource)
-    df = (spark.read.format("zstjsonl").schema(ddl)
-          .option("path", "dumps/RC_2023-01.zst").load())
+    lines = spark.read.format("zstjsonl").load("dumps/RC_2023-01.zst")
 
-Why a Data Source and not the mapInPandas bridge: the planner sees a real
-scan with one task per ``.zst`` file (single-frame zstd is not splittable
-— one file per task IS the parallelism ceiling, the reference's
-one-dump-per-month unit), files enumerate at planning time instead of
-through a binaryFile scan, and the reader composes with everything a scan
-supports (select/filter pushdown happens after parse, as with Spark's own
-JSON source).
+Each path is a file, a glob, or a directory searched recursively for
+``*.zst``; ``load([...])`` takes several. The planner sees a real scan
+with one task per file — single-frame zstd is not splittable, so one
+file per task IS the parallelism ceiling, the reference's
+one-dump-per-month unit — and files enumerate at planning time. Each
+task streams its file in 1 MiB chunks, so no dump is ever held whole:
+the ``binaryFile`` row per file this replaced was capped at 2 GiB and
+decoded in one step. Bytes that are not UTF-8 decode with replacement
+characters, so they reach the parser as a corrupt line instead of
+failing the task.
 
-Corrupt handling: a line that fails to parse yields NULL for every data
-field; when the schema carries ``_corrupt_record`` the raw line lands
-there (PERMISSIVE semantics, same contract as ``read_jsonl``).
+This module also hosts ``eventgen``, the streaming source below.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ import json
 import os
 from collections.abc import Iterator, Sequence
 
-from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -37,66 +36,48 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-CORRUPT_COL = "_corrupt_record"
-
 
 class _FilePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
 
 
+def _zst_files(path: str) -> list[str]:
+    if os.path.isdir(path):
+        return sorted(
+            glob.glob(os.path.join(path, "**", "*.zst"), recursive=True)
+        )
+    return sorted(glob.glob(path)) or [path]
+
+
+def _text_lines(raw_lines) -> Iterator[tuple[str]]:
+    for raw in raw_lines:
+        if raw.strip():
+            yield (raw.decode("utf-8", "replace"),)
+
+
 class ZstJsonlReader(DataSourceReader):
-    def __init__(self, schema: T.StructType, options: dict):
-        self.schema = schema
-        path = options.get("path")
-        if not path:
+    def __init__(self, options: dict):
+        # load(path) sets "path"; load([...]) sets "paths" to a JSON list
+        paths = json.loads(options.get("paths", "[]")) or [options.get("path")]
+        if not all(paths):
             raise ValueError("zstjsonl requires a path")
-        if os.path.isdir(path):
-            self.files = sorted(
-                glob.glob(os.path.join(path, "**", "*.zst"), recursive=True)
-            )
-        else:
-            self.files = sorted(glob.glob(path)) or [path]
+        self.files = [f for p in paths for f in _zst_files(p)]
 
     def partitions(self) -> Sequence[InputPartition]:
         # one task per file: single-frame zstd is not splittable
         return [_FilePartition(f) for f in self.files]
 
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
+    def read(self, partition: _FilePartition) -> Iterator[tuple[str]]:
         import pyarrow as pa  # executor-side import
 
-        names = [f.name for f in self.schema.fields]
-        data_names = [n for n in names if n != CORRUPT_COL]
-        has_corrupt = CORRUPT_COL in names
         with pa.input_stream(partition.path, compression="zstd") as stream:
             buf = b""
-            while True:
-                chunk = stream.read(1 << 20)
-                if not chunk:
-                    break
+            while chunk := stream.read(1 << 20):
                 buf += chunk
                 *lines, buf = buf.split(b"\n")
-                yield from self._parse(lines, names, data_names, has_corrupt)
-            if buf.strip():
-                yield from self._parse([buf], names, data_names, has_corrupt)
-
-    @staticmethod
-    def _parse(lines, names, data_names, has_corrupt):
-        for raw in lines:
-            if not raw.strip():
-                continue
-            try:
-                obj = json.loads(raw)
-                if not isinstance(obj, dict):
-                    raise ValueError("not an object")
-                row = {n: obj.get(n) for n in data_names}
-                if has_corrupt:
-                    row[CORRUPT_COL] = None
-            except (ValueError, json.JSONDecodeError):
-                row = {n: None for n in data_names}
-                if has_corrupt:
-                    row[CORRUPT_COL] = raw.decode("utf-8", "replace")
-            yield tuple(row[n] for n in names)
+                yield from _text_lines(lines)
+            yield from _text_lines([buf])
 
 
 class ZstJsonlDataSource(DataSource):
@@ -104,14 +85,11 @@ class ZstJsonlDataSource(DataSource):
     def name(cls) -> str:
         return "zstjsonl"
 
-    def schema(self):
-        raise ValueError(
-            "zstjsonl is schema-on-read: pass .schema(...) explicitly "
-            "(the engine's fixed-schema contract, sources/reddit.py)"
-        )
+    def schema(self) -> str:
+        return "value string"
 
-    def reader(self, schema: T.StructType) -> ZstJsonlReader:
-        return ZstJsonlReader(schema, self.options)
+    def reader(self, schema) -> ZstJsonlReader:
+        return ZstJsonlReader(self.options)
 
 
 # ---------------------------------------------------------------------------

@@ -530,6 +530,26 @@ def test_nested_commit_of_one_version_has_one_winner(
     assert os.listdir(os.path.dirname(doc_path(root, 1))) == ["v00000001.json"]
 
 
+def test_clustered_stage_temp_name_is_unique_per_attempt(spark, tmp_path):
+    """Two attempts of one partition must not share a staging temp file.
+    A leftover at the per-partition temp name — here a directory, which
+    no write can replace — must not stop a later attempt from staging
+    every row under the deterministic final names."""
+    df = spark.range(0, 40).select(
+        (F.col("id") % 8).alias("k"), F.col("id").alias("v")
+    )
+    out = tmp_path / "stage"
+    for pid in range(2):
+        for fi in range(4):
+            name = f".part-{pid:05d}-{fi:04d}.parquet.inprogress"
+            (out / name).mkdir(parents=True)
+    M._write_clustered_stage(df, str(out), "k", tasks=2, files_cap=8)
+    files = sorted(p.name for p in out.glob("*.parquet"))
+    assert files and all(f.startswith("part-") for f in files)
+    back = spark.read.parquet(*[str(out / f) for f in files])
+    assert sorted(r.v for r in back.collect()) == list(range(40))
+
+
 def test_nested_replace_of_one_doc_keeps_the_last_writer(tmp_path, monkeypatch):
     """The retention checkpoint and the roll-forward marker overwrite a
     doc in place. A second overwrite of the same doc from the same process

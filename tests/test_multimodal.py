@@ -173,8 +173,8 @@ def test_bmp_round_trip_and_planted_colors(spark):
 
     from ihop_reddit_spark.datapipe.multimodal import (
         bmp_bytes,
-        bmp_feature_stats,
         decode_bmp,
+        image_feature_stats,
         synthesize_bmp_assets,
     )
 
@@ -183,7 +183,7 @@ def test_bmp_round_trip_and_planted_colors(spark):
 
     ids = spark.range(0, 12).withColumnRenamed("id", "doc_id")
     stats = {r["asset_id"]: r for r in
-             bmp_feature_stats(synthesize_bmp_assets(ids)).collect()}
+             image_feature_stats(synthesize_bmp_assets(ids)).collect()}
     for i in range(12):
         r = stats[i]
         assert (r["width"], r["height"]) == (16, 8 + i % 4)
@@ -2099,33 +2099,6 @@ def test_avif_decode_image_dispatch():
     assert (out == px).all()
 
 
-def test_avif_absent_library_raises_marked_boundary(monkeypatch):
-    """Simulated absence: decode paths raise the marked boundary, and
-    an av01 MP4 decode reports the capability gate rather than failing
-    inside ctypes."""
-    import numpy as np
-    import pytest
-
-    from ihop_reddit_spark.datapipe import avif_native as A
-
-    if not _avif_ready():
-        pytest.skip("system libavif not installed")
-    # two frames: a 1-image sequence collapses to a still AVIF
-    frames = [np.full((16, 16, 3), v, np.uint8) for v in (60, 90)]
-    payload = A.encode_frames(frames, fps=5, lossless=True)
-    still = A.encode_rgb(frames[0], lossless=True)
-    monkeypatch.setattr(A, "_LIB", None)
-    monkeypatch.setattr(A, "_TRIED", True)
-    with pytest.raises(NotImplementedError, match="libavif"):
-        A.decode_rgb(still)
-    with pytest.raises(NotImplementedError, match="libavif"):
-        A.encode_rgb(frames[0])
-    from ihop_reddit_spark.datapipe.mp4 import decode_mp4
-
-    with pytest.raises(NotImplementedError, match="libavif"):
-        decode_mp4(payload)
-
-
 def test_wrap_av1_sample_minimal_container_is_strict_mode_valid():
     """The minimal still-AVIF wrapper must satisfy libavif's STRICT
     default flags (7) — ispe + pixi + essential av1C all present."""
@@ -2202,7 +2175,7 @@ def test_heic_color_444_bounded_and_lossy_differs():
     assert (lossy != col).any()
 
 
-def test_heic_decode_image_dispatch_and_absence(monkeypatch):
+def test_heic_decode_image_dispatch():
     import numpy as np
     import pytest
 
@@ -2212,14 +2185,7 @@ def test_heic_decode_image_dispatch_and_absence(monkeypatch):
     if not _heif_ready():
         pytest.skip("system libheif (+x265/libde265) not installed")
     px = np.full((8, 8, 3), 77, np.uint8)
-    payload = H.encode_rgb(px, lossless=True)
-    assert (decode_image(payload) == px).all()
-    monkeypatch.setattr(H, "_LIB", None)
-    monkeypatch.setattr(H, "_TRIED", True)
-    with pytest.raises(NotImplementedError, match="libheif"):
-        H.decode_rgb(payload)
-    with pytest.raises(NotImplementedError, match="libheif"):
-        H.encode_rgb(px)
+    assert (decode_image(H.encode_rgb(px, lossless=True)) == px).all()
 
 
 def test_hevc_mp4_demux_and_per_sample_decode():
@@ -2325,7 +2291,7 @@ def test_svg_render_exact_and_scaled():
     assert abs(int(tr[2, 2, 0]) - 128) <= 1
 
 
-def test_svg_dispatch_sniff_and_errors(monkeypatch):
+def test_svg_dispatch_sniff_and_errors():
     import pytest
 
     from ihop_reddit_spark.datapipe import svg_native as S
@@ -2345,10 +2311,74 @@ def test_svg_dispatch_sniff_and_errors(monkeypatch):
     assert (decode_image(svg) == 64).all()
     with pytest.raises(ValueError, match="rejected"):
         S.render_rgb(b"<svg this is not xml")
-    monkeypatch.setattr(S, "_LIBS", None)
-    monkeypatch.setattr(S, "_TRIED", True)
-    with pytest.raises(NotImplementedError, match="librsvg"):
-        S.render_rgb(svg)
+
+
+_SVG_GRAY = (
+    b'<svg xmlns="http://www.w3.org/2000/svg" width="4" height="4">'
+    b'<rect width="4" height="4" fill="#404040"/></svg>'
+)
+
+
+@pytest.mark.parametrize(
+    "module, candidates, probe, decode, encode, marker",
+    [
+        ("webp_native", "_CANDIDATES", "libwebp_available", "decode_rgb",
+         "encode_lossy_rgb", "libwebp"),
+        ("tiff_native", "_CANDIDATES", "libtiff_available", "decode_rgb",
+         None, "libtiff"),
+        ("avif_native", "_CANDIDATES", "libavif_available", "decode_rgb",
+         "encode_rgb", "libavif"),
+        ("heif_native", "_CANDIDATES", "libheif_available", "decode_rgb",
+         "encode_rgb", "libheif"),
+        ("svg_native", "_RSVG", "librsvg_available", "render_rgb",
+         None, "librsvg"),
+    ],
+    ids=["webp", "tiff", "avif", "heic", "svg"],
+)
+def test_native_library_absence_raises_marked_boundary(
+    module, candidates, probe, decode, encode, marker, monkeypatch
+):
+    """Every binding loads through ``datapipe.native.load``: a candidate
+    list that cannot load makes the capability probe report False and
+    every decode/encode path raise the marked ``NotImplementedError``.
+    The loader caches per candidate tuple, so the real library binds
+    again once the patch is undone."""
+    import importlib
+
+    import numpy as np
+
+    from ihop_reddit_spark.datapipe.mp4 import decode_mp4
+    from ihop_reddit_spark.datapipe.multimodal import decode_image
+    from ihop_reddit_spark.datapipe.tiff import tiff_bytes
+
+    mod = importlib.import_module(f"ihop_reddit_spark.datapipe.{module}")
+    if not getattr(mod, probe)():
+        pytest.skip(f"system {marker} not installed")
+    px = np.full((16, 16, 3), 60, np.uint8)
+    # payloads are encoded while the library still loads
+    if module == "tiff_native":
+        payload = tiff_bytes(px)
+    elif module == "svg_native":
+        payload = _SVG_GRAY
+    else:
+        payload = getattr(mod, encode)(px)
+    calls = [lambda: getattr(mod, decode)(payload)]
+    if module != "tiff_native":  # baseline TIFF decodes in-tree
+        calls.append(lambda: decode_image(payload))
+    if encode:
+        calls.append(lambda: getattr(mod, encode)(px))
+    if module == "avif_native":
+        # an av01 MP4 reports the capability gate, not a ctypes failure
+        # (two frames: a 1-image sequence collapses to a still AVIF)
+        video = mod.encode_frames([px, px + 30], fps=5, lossless=True)
+        calls.append(lambda: decode_mp4(video))
+    monkeypatch.setattr(mod, candidates, ("ihop-absent-library",))
+    assert not getattr(mod, probe)()
+    for call in calls:
+        with pytest.raises(NotImplementedError, match=marker):
+            call()
+    monkeypatch.undo()
+    assert getattr(mod, probe)()
 
 
 def test_resample_rgb_box_exact_and_bilinear():

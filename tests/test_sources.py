@@ -58,23 +58,39 @@ def test_read_jsonl_bz2_transparent_decompression(spark, tmp_path):
 
 
 def test_read_jsonl_zst_roundtrip(spark, tmp_path):
+    """zstd JSON-lines through the streaming ``zstjsonl`` scan: one task
+    per file, parsed rows and the corrupt-record channel as in the
+    uncompressed path (blank lines skipped)."""
     import pyarrow as pa
 
     from ihop_reddit_spark.schemas import COMMENTS_SCHEMA
-    from ihop_reddit_spark.sources.reddit import read_jsonl_zst
+    from ihop_reddit_spark.sources.reddit import CORRUPT_COL, read_jsonl_zst
 
     bad = '{"id": broken'
-    p = tmp_path / "comments.json.zst"
-    with pa.output_stream(str(p), compression="zstd") as out:
-        out.write((COMMENT + "\n" + bad + "\n").encode())
-    df = read_jsonl_zst(spark, str(p), COMMENTS_SCHEMA)
-    rows = {r["id"]: r for r in df.collect()}
-    assert rows["c1"]["author"] == "alice" and rows["c1"]["score"] == 4
+    d = tmp_path / "dumps"
+    d.mkdir()
+    for name, text in (
+        ("a.zst", COMMENT + "\n"),
+        ("b.zst", bad + "\n\nnot json at all"),
+    ):
+        with pa.output_stream(str(d / name), compression="zstd") as out:
+            out.write(text.encode())
+    df = read_jsonl_zst(spark, str(d), COMMENTS_SCHEMA)
+    assert df.rdd.getNumPartitions() == 2  # one task per .zst file
+    rows = df.collect()
+    assert len(rows) == 3
+    c1 = next(r for r in rows if r["id"] == "c1")
+    assert c1["author"] == "alice" and c1["score"] == 4
     # corrupt-record channel parity with the uncompressed path
     with_corrupt = read_jsonl_zst(
-        spark, str(p), COMMENTS_SCHEMA, keep_corrupt=True
+        spark, [str(d / "a.zst"), str(d / "b.zst")], COMMENTS_SCHEMA,
+        keep_corrupt=True,
     )
-    assert corrupt_record_count(with_corrupt) == 1
+    assert with_corrupt.rdd.getNumPartitions() == 2
+    got = sorted((r["id"], r[CORRUPT_COL]) for r in with_corrupt.collect()
+                 if r[CORRUPT_COL] is not None)
+    assert got == sorted([(None, bad), (None, "not json at all")])
+    assert corrupt_record_count(with_corrupt) == 2
 
 
 def test_parquet_sink_partitioned_roundtrip(spark, tmp_path):
@@ -231,37 +247,6 @@ def test_overwrite_partitions_touches_only_present_partitions(spark, tmp_path):
         (r.id, r.part): r.v for r in spark.read.parquet(path).collect()
     }
     assert again == got
-
-
-def test_zstjsonl_datasource_parallel_read(spark, tmp_path):
-    import pyarrow as pa
-
-    from ihop_reddit_spark.sources.zst_datasource import ZstJsonlDataSource
-
-    spark.dataSource.register(ZstJsonlDataSource)
-    rows1 = b'{"id": 1, "body": "hello"}\n{"id": 2, "body": "world"}\n'
-    rows2 = b'{"id": 3, "body": "third"}\nnot json at all\n'
-    d = tmp_path / "dumps"
-    d.mkdir()
-    for name, payload in (("a.zst", rows1), ("b.zst", rows2)):
-        with pa.output_stream(str(d / name), compression="zstd") as out:
-            out.write(payload)
-
-    df = (
-        spark.read.format("zstjsonl")
-        .schema("id long, body string, _corrupt_record string")
-        .option("path", str(d))
-        .load()
-    )
-    # one task per .zst file
-    assert df.rdd.getNumPartitions() == 2
-    got = sorted(
-        [(r["id"], r["body"], r["_corrupt_record"]) for r in df.collect()],
-        key=lambda t: (t[0] is None, t[0] or 0),
-    )
-    assert got[:3] == [(1, "hello", None), (2, "world", None),
-                       (3, "third", None)]
-    assert got[3][0] is None and "not json" in got[3][2]
 
 
 def test_observed_write_reports_metrics_in_one_pass(spark, tmp_path):
