@@ -249,6 +249,35 @@ def test_overwrite_partitions_touches_only_present_partitions(spark, tmp_path):
     assert again == got
 
 
+def test_zstjsonl_datasource_parallel_read(spark, tmp_path):
+    """The raw ``zstjsonl`` scan: one task per file, one ``value`` row per
+    non-blank line, and a line that straddles the 1 MiB read chunk comes
+    back whole."""
+    import pyarrow as pa
+
+    from ihop_reddit_spark.sources.zst_datasource import ZstJsonlDataSource
+
+    spark.dataSource.register(ZstJsonlDataSource)
+    long_line = '{"id": 4, "body": "' + "x" * ((1 << 20) + 7) + '"}'
+    rows1 = b'{"id": 1, "body": "hello"}\n{"id": 2, "body": "world"}\n'
+    rows2 = ('{"id": 3, "body": "third"}\n\nnot json at all\n'
+             + long_line).encode()
+    d = tmp_path / "dumps"
+    d.mkdir()
+    for name, payload in (("a.zst", rows1), ("b.zst", rows2)):
+        with pa.output_stream(str(d / name), compression="zstd") as out:
+            out.write(payload)
+
+    df = spark.read.format("zstjsonl").option("path", str(d)).load()
+    # one task per .zst file
+    assert df.rdd.getNumPartitions() == 2
+    got = sorted(r["value"] for r in df.collect())
+    assert got == sorted([
+        '{"id": 1, "body": "hello"}', '{"id": 2, "body": "world"}',
+        '{"id": 3, "body": "third"}', "not json at all", long_line,
+    ])
+
+
 def test_observed_write_reports_metrics_in_one_pass(spark, tmp_path):
     from ihop_reddit_spark.sources.io import observed_write
 
