@@ -146,7 +146,9 @@ def catalog_tables(cat: str) -> dict[str, str]:
     return dict(read_catalog_doc(cat, 0)["tables"])
 
 
-def _find_materialized(path: str, cat: str, cat_version: int) -> int | None:
+def _find_materialized(
+    snap: M._Snapshot, cat: str, cat_version: int
+) -> int | None:
     """The table version whose doc carries this catalog txn tag, or
     None — scanned newest-first (txns only ever materialize forward).
 
@@ -159,8 +161,7 @@ def _find_materialized(path: str, cat: str, cat_version: int) -> int | None:
     point-in-time pins below the horizon are gone anyway — the same
     contract as single-table time travel after vacuum)."""
     key = {"catalog": os.path.abspath(cat), "catalog_version": cat_version}
-    for v in reversed(M.list_versions(path)):
-        doc = M.read_version_doc(path, v)
+    for v, doc in reversed(snap.log):
         if doc.get("catalog_txn") == key:
             return v
         if key in doc.get("catalog_txns_applied", []):
@@ -192,14 +193,15 @@ def roll_forward(cat: str) -> dict[int, dict[str, int]]:
             path = tables[name]
             done = None
             while done is None:
-                # head is read BEFORE the idempotency scan: a concurrent
-                # roll-forwarder materializing this same txn between the
-                # scan and our commit lands at head+1 first, our
+                # head and the idempotency scan come from ONE snapshot:
+                # a concurrent roll-forwarder materializing this same
+                # txn after it lands at head+1 first, our
                 # create-if-absent conflicts, and the rescan finds its
-                # tag — the scan-then-read order would instead commit
+                # tag — a scan older than the head would instead commit
                 # the same payload twice at two different versions
-                head = M.latest_version(path)
-                done = _find_materialized(path, cat, cv)
+                snap = M._snapshot(path)
+                head = snap.version
+                done = _find_materialized(snap, cat, cv)
                 if done is not None:
                     break
                 # a CHECK constraint that landed on the table log AFTER
@@ -210,7 +212,7 @@ def roll_forward(cat: str) -> dict[int, dict[str, int]]:
                 # common no-new-constraint path costs one dict compare.
                 delta = {
                     n: e
-                    for n, e in M.constraints_of(path, head).items()
+                    for n, e in snap.constraints.items()
                     if payload.get("constraints", {}).get(n) != e
                 }
                 if delta:
@@ -224,7 +226,7 @@ def roll_forward(cat: str) -> dict[int, dict[str, int]]:
                         )
                     M._verify_constraints(
                         spark,
-                        path,
+                        snap,
                         [os.path.join(path, r) for r in payload["added"]],
                         cons=delta,
                     )
@@ -238,7 +240,6 @@ def roll_forward(cat: str) -> dict[int, dict[str, int]]:
                     # the materialized doc carries schema=None unless the
                     # table has no schema at all yet; the stage-time
                     # schema is kept as provenance.
-                    cur_schema = M._schema_of(path, head)
                     M._commit_version(
                         path,
                         {
@@ -246,7 +247,7 @@ def roll_forward(cat: str) -> dict[int, dict[str, int]]:
                             "parent": head,
                             "operation": "append",
                             "schema": payload["schema"]
-                            if cur_schema is None
+                            if snap.schema is None
                             else None,
                             "staged_schema": payload["schema"],
                             "added": payload["added"],
@@ -262,7 +263,7 @@ def roll_forward(cat: str) -> dict[int, dict[str, int]]:
                     )
                     done = head + 1
                 except M.ConcurrentCommitError:
-                    done = _find_materialized(path, cat, cv)
+                    done = _find_materialized(M._snapshot(path), cat, cv)
             assigned[name] = done
         # marker content is derived from the table logs, so racing
         # roll-forwarders write identical bytes; os.replace is atomic
@@ -383,24 +384,22 @@ class CatalogTransaction:
                 " union the frames into one append"
             )
         path = self.tables[table]
-        M._check_schema(df, path)
-        # constraint snapshot taken ONCE, before staging: the same dict
-        # is both verified against the staged files and recorded in the
-        # payload, so recorded == verified by construction. Reading a
-        # second snapshot after the _stage_stats/_rebuild_blooms jobs
-        # would let a constraint added in that window be recorded as
-        # seen yet never verified — and the commit()/roll_forward delta
-        # compare (which only re-verifies entries that DIFFER from the
-        # recorded set) would then skip it.
-        cons = M.constraints_of(path)
+        # ONE table snapshot, taken before staging: its constraints are
+        # both verified against the staged files and recorded in the
+        # payload, so recorded == verified by construction. A second
+        # read after the _stage_stats/_rebuild_blooms jobs would let a
+        # constraint added in that window be recorded as seen yet never
+        # verified — and the commit()/roll_forward delta compare (which
+        # only re-verifies entries that DIFFER from the recorded set)
+        # would then skip it.
+        snap = M._snapshot(path)
+        M._check_schema(df, snap)
         stage_dir, added = M._stage_batch(
-            df, path, M.latest_version(path) + 1, verify=True, cons=cons
+            df, path, snap.version + 1, snap=snap, verify=True
         )
         stats, row_counts = M._stage_stats(path, added)
-        blooms = M._rebuild_blooms(
-            df.sparkSession, path, added, M.latest_version(path)
-        )
-        schema = M._schema_of(path)
+        blooms = M._rebuild_blooms(df.sparkSession, snap, added)
+        schema = snap.schema
         self._payloads[table] = {
             "op": "append",
             "schema": (df.schema if schema is None else schema).jsonValue(),
@@ -410,7 +409,7 @@ class CatalogTransaction:
             "blooms": blooms,
             # the pre-stage snapshot verified above — roll_forward
             # re-verifies any constraint added after it
-            "constraints": cons,
+            "constraints": snap.constraints,
         }
         self._stage_dirs.append((path, stage_dir))
 
@@ -452,9 +451,10 @@ class CatalogTransaction:
         # guard covers the residual publish-time race window.
         for table, payload in self._payloads.items():
             path = self.tables[table]
+            snap = M._snapshot(path)
             delta = {
                 n: e
-                for n, e in M.constraints_of(path).items()
+                for n, e in snap.constraints.items()
                 if payload.get("constraints", {}).get(n) != e
             }
             if delta:
@@ -475,7 +475,7 @@ class CatalogTransaction:
                 try:
                     M._verify_constraints(
                         spark,
-                        path,
+                        snap,
                         [
                             os.path.join(path, r)
                             for r in payload["added"]
@@ -563,8 +563,7 @@ def catalog_vacuum_orphans(cat: str, *, min_age_seconds: float = 86400) -> int:
             )
     for name, path in catalog_tables(cat).items():
         referenced: set[str] = set(staged_by_catalog.get(name, set()))
-        for v in M.list_versions(path):
-            doc = M.read_version_doc(path, v)
+        for _v, doc in M._snapshot(path).log:
             referenced.update(doc["added"])
             referenced.update(doc.get("dv_added", []))
             referenced.update(doc.get("dv_matched", []))

@@ -32,6 +32,18 @@ Layout (all paths relative to the table root):
   the only operations that retire vectors (materialize, compact)
   retire every live vector in one commit, which keeps replay exact.
 
+Reading the log: ``_snapshot`` is its one reader. It lists the
+versions once, reads each doc once, and folds them into a
+``_Snapshot`` (live files, schema, column mapping, retired names,
+constraints, per-file stats/row counts/blooms, live vectors, stream
+batch ids) — ``_Snapshot.advance`` is the one place a doc's fields are
+interpreted (vacuum's single walk folds through it too). Every
+operation takes one snapshot up front and reads only from it, so no
+operation mixes two versions; ``_Snapshot.scan`` is the one data read
+path (vectors applied), and ``_Snapshot.checkpoint_doc`` decides what
+vacuum's checkpoint and a clone carry. The public readers
+(``live_files``, ``live_dv_state``, …) are views over one snapshot.
+
 Commit protocol: the doc is staged as a hidden temp file then published
 with ``os.link`` (atomic create-if-absent on POSIX) — two racing
 writers cannot both claim version N; the loser gets
@@ -54,6 +66,7 @@ module belongs to the training-data-pipeline tier the brief adds on top.
 from __future__ import annotations
 
 import copy
+import dataclasses
 import json
 import os
 import shutil
@@ -99,10 +112,9 @@ def latest_version(path: str) -> int:
 #: (abs doc path) -> (mtime_ns, size, parsed doc). Version docs are
 #: immutable once committed (vacuum's checkpoint rewrite replaces the
 #: file, changing its mtime/size — the validators below catch it), and
-#: the log-replay helpers (live_files / live_dv_state / blooms / stats)
-#: each walk EVERY doc per call: without a cache, a streaming sink's
+#: every snapshot walks EVERY doc: without a cache, a streaming sink's
 #: per-batch driver cost grows with table age as commit docs (which
-#: carry bloom bitmaps) get re-parsed dozens of times per micro-batch.
+#: carry bloom bitmaps) get re-parsed on every micro-batch.
 _VERSION_DOC_CACHE: dict[str, tuple[int, int, dict]] = {}
 
 
@@ -192,67 +204,224 @@ def manifest_init(path: str) -> int:
     )
 
 
+@dataclasses.dataclass
+class _Snapshot:
+    """The table's state at one version, folded from the commit log in
+    ONE pass over its docs — the one reader of the log. Every
+    operation takes one snapshot up front and reads only from it, so
+    head, live files, schema, mapping and vector state can never come
+    from two different versions.
+
+    ``files`` are the live data files in commit order (added ∪ … −
+    removed). ``schema``, ``mapping`` (LOGICAL → PHYSICAL column name,
+    non-identity entries only: a physical name is assigned once, when
+    a column first receives data, and never changes — a rename moves
+    the logical name while the files stay byte-identical), ``retired``
+    (physical names of dropped columns, which adds avoid forever) and
+    ``constraints`` ({name: SQL boolean over logical names}) come from
+    the newest doc carrying each. ``stats``/``blooms`` map every live file to its recorded
+    entry ({} when its commit predates them); ``row_counts`` holds only
+    recorded files. ``dv_files``/``dv_targets`` are the live deletion
+    vectors and deleted-row counts per data file; their replay leans on
+    two invariants: vector retirement is all-or-nothing (materialize
+    and compact retire EVERY live vector in one commit), and removing a
+    data file retires its count. ``stream_batch_ids`` are the stream
+    batch ids committed at or below ``version``. ``log`` keeps the
+    replayed ``(version, doc)`` pairs for readers that walk commits."""
+
+    path: str = dataclasses.field(compare=False)
+    version: int = -1
+    files: list = dataclasses.field(default_factory=list)
+    schema: T.StructType | None = None
+    mapping: dict = dataclasses.field(default_factory=dict)
+    retired: list = dataclasses.field(default_factory=list)
+    constraints: dict = dataclasses.field(default_factory=dict)
+    stats: dict = dataclasses.field(default_factory=dict)
+    row_counts: dict = dataclasses.field(default_factory=dict)
+    blooms: dict = dataclasses.field(default_factory=dict)
+    dv_files: list = dataclasses.field(default_factory=list)
+    dv_targets: dict = dataclasses.field(default_factory=dict)
+    stream_batch_ids: set = dataclasses.field(default_factory=set)
+    log: list = dataclasses.field(
+        default_factory=list, compare=False, repr=False
+    )
+
+    def advance(self, version: int, doc: dict) -> None:
+        """Apply one commit doc on top of this state."""
+        self.version = version
+        self.log.append((version, doc))
+        removed = set(doc["removed"])
+        added = doc["added"]
+        self.files = [f for f in self.files if f not in removed] + added
+        if doc.get("schema") is not None:
+            self.schema = T.StructType.fromJson(doc["schema"])
+        if "mapping" in doc:
+            self.mapping = dict(doc["mapping"])
+        if "retired_physical" in doc:
+            self.retired = list(doc["retired_physical"])
+        if "constraints" in doc:
+            self.constraints = dict(doc["constraints"])
+        for f in removed:
+            self.stats.pop(f, None)
+            self.row_counts.pop(f, None)
+            self.blooms.pop(f, None)
+            self.dv_targets.pop(f, None)
+        stats, counts = doc.get("stats", {}), doc.get("row_counts", {})
+        blooms = doc.get("blooms", {})
+        for f in added:
+            self.stats[f] = stats.get(f, {})
+            self.blooms[f] = blooms.get(f, {})
+            if f in counts:
+                self.row_counts[f] = counts[f]
+        dv_removed = set(doc.get("dv_removed", []))
+        if dv_removed:
+            self.dv_files = [f for f in self.dv_files if f not in dv_removed]
+            if not self.dv_files:
+                self.dv_targets = {}
+        self.dv_files = self.dv_files + doc.get("dv_added", [])
+        for f, n in doc.get("dv_targets", {}).items():
+            self.dv_targets[f] = self.dv_targets.get(f, 0) + n
+        if "stream_batch_id" in doc:
+            self.stream_batch_ids.add(doc["stream_batch_id"])
+        # vacuum and clone fold the batch ids of dropped ancestor
+        # commits into their checkpoint doc as a list
+        self.stream_batch_ids.update(doc.get("stream_batch_ids", []))
+
+    @classmethod
+    def fold(cls, path: str, log, version: int) -> "_Snapshot":
+        """The state after the ``(version, doc)`` pairs of ``log`` up to
+        ``version``; pairs past it are never pulled."""
+        snap = cls(path)
+        for v, doc in log:
+            if v > version:
+                break
+            snap.advance(v, doc)
+        snap.version = version
+        return snap
+
+    def at(self, version: int) -> "_Snapshot":
+        """The state at an earlier ``version``, refolded from ``log``
+        in memory — no listing, no doc read."""
+        return _Snapshot.fold(self.path, self.log, version)
+
+    def scan(
+        self,
+        spark: SparkSession,
+        files: list[str] | None = None,
+        *,
+        keep_pos: bool = False,
+        dvs: DataFrame | list[str] | None = None,
+    ) -> DataFrame:
+        """``files`` (default: every live file) read under this
+        version's LOGICAL schema, with deletion vectors applied — the
+        one data read path. Files are read under physical names (a
+        widened type resolves through Spark's parquet type promotion,
+        so an int32 file reads as the table's post-widen bigint) and
+        renamed to logical at once; absent columns read as NULL.
+
+        ``dvs`` picks the vectors: None applies this snapshot's live
+        vectors, a list names vector files (empty: none), and a frame
+        of (file, pos) rows is applied as given. ``keep_pos`` keeps
+        ``__dv_file`` (the root-relative data-file path, recovered from
+        ``_metadata.file_path`` by the layout's own ``data/bNNNNNNNN/``
+        shape) and ``__dv_pos`` (``_metadata.row_index``, the row's
+        position in its immutable file) — the deletion-vector key of
+        each row. A read with neither is a plain parquet scan with no
+        metadata columns and no join."""
+        files = self.files if files is None else files
+        schema = self.schema
+        if not files:
+            if schema is None:
+                raise ValueError(
+                    f"table at {self.path} is empty and has no recorded"
+                    " schema"
+                )
+            if keep_pos:
+                schema = T.StructType(
+                    list(schema.fields)
+                    + [
+                        T.StructField("__dv_file", T.StringType()),
+                        T.StructField("__dv_pos", T.LongType()),
+                    ]
+                )
+            return spark.createDataFrame([], schema)
+        if schema is not None and self.mapping:
+            schema = _physical_schema(schema, self.mapping)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        out = _to_logical(
+            reader.parquet(*(os.path.join(self.path, f) for f in files)),
+            self.mapping,
+        )
+        if dvs is None:
+            dvs = self.dv_files if self.dv_targets else []
+        if isinstance(dvs, list):
+            dvs = _dv_frame(spark, self.path, dvs) if dvs else None
+        if dvs is None and not keep_pos:
+            return out
+        out = out.withColumns(
+            {
+                "__dv_file": F.regexp_extract(
+                    F.col("_metadata.file_path"), _DATA_REL_PATTERN, 1
+                ),
+                "__dv_pos": F.col("_metadata.row_index"),
+            }
+        )
+        if dvs is not None:
+            out = _dv_join(out, dvs, "left_anti")
+        return out if keep_pos else out.drop("__dv_file", "__dv_pos")
+
+    def checkpoint_doc(self, base: dict | None = None, **fields) -> dict:
+        """A commit doc that replays to this snapshot on its own: the
+        one place that decides which state a log carries past a dropped
+        chain (vacuum's checkpoint, a clone's version 0). ``base``'s
+        own fields carry over verbatim except its delta (its files,
+        vectors and stream ids, replaced by the full state); ``fields``
+        (version, operation, provenance) go on top."""
+        doc = {
+            k: v
+            for k, v in (base or {}).items()
+            if k not in ("dv_matched", "stream_batch_id")
+        }
+        doc.update(
+            parent=None,
+            schema=None if self.schema is None else self.schema.jsonValue(),
+            added=list(self.files),
+            removed=[],
+            stats=dict(self.stats),
+            row_counts=dict(self.row_counts),
+            blooms=dict(self.blooms),
+            dv_added=list(self.dv_files),
+            dv_removed=[],
+            dv_targets=dict(self.dv_targets),
+        )
+        for key, value in (
+            ("mapping", self.mapping),
+            ("retired_physical", self.retired),
+            ("constraints", self.constraints),
+            ("stream_batch_ids", sorted(self.stream_batch_ids)),
+        ):
+            if value:
+                doc[key] = value
+        return {**doc, **fields}
+
+
+def _snapshot(path: str, version: int | None = None) -> _Snapshot:
+    """The table at ``version`` (default: head): ONE listing of the log
+    and one read per doc up to ``version``."""
+    versions = list_versions(path)
+    if version is None:
+        if not versions:
+            raise FileNotFoundError(f"manifest dir at {path} has no versions")
+        version = versions[-1]
+    return _Snapshot.fold(
+        path, ((v, read_version_doc(path, v)) for v in versions), version
+    )
+
+
 def live_files(path: str, version: int | None = None) -> list[str]:
     """The data files visible at ``version`` (default: head), in commit
-    order — replayed from the version docs (added ∪ … − removed)."""
-    if version is None:
-        version = latest_version(path)
-    live: list[str] = []
-    for v in list_versions(path):
-        if v > version:
-            break
-        doc = read_version_doc(path, v)
-        removed = set(doc["removed"])
-        live = [f for f in live if f not in removed] + doc["added"]
-    return live
-
-
-def _schema_of(path: str, version: int | None = None) -> T.StructType | None:
-    if version is None:
-        version = latest_version(path)
-    for v in reversed([x for x in list_versions(path) if x <= version]):
-        doc = read_version_doc(path, v)
-        if doc["schema"] is not None:
-            return T.StructType.fromJson(doc["schema"])
-    return None
-
-
-def _mapping_of(path: str, version: int | None = None) -> dict:
-    """LOGICAL column name → PHYSICAL column name at ``version`` —
-    non-identity entries only ({} means every file column is named what
-    the table schema names it). Physical names are assigned once, when
-    a column first receives data, and NEVER change; ``rename`` moves
-    the logical name while the files stay byte-identical (the Delta
-    column-mapping / Iceberg field-id discipline, spelled with names
-    because parquet field-ids are not plumbed through every reader).
-    Carried by ``alter_schema`` commits and folded into the checkpoint
-    doc by vacuum, so it survives retention."""
-    if version is None:
-        try:
-            version = latest_version(path)
-        except FileNotFoundError:
-            # staging into a directory with no manifest yet (raw batch
-            # helpers, tests) — identity mapping by definition
-            return {}
-    for v in reversed([x for x in list_versions(path) if x <= version]):
-        doc = read_version_doc(path, v)
-        if "mapping" in doc:
-            return dict(doc["mapping"])
-    return {}
-
-
-def _retired_of(path: str, version: int | None = None) -> list[str]:
-    """PHYSICAL names no longer mapped by any logical column (dropped
-    columns). A re-added column of the same name must NOT resurrect the
-    old files' bytes, so adds avoid these names forever. Cumulative —
-    each alter commit carries the full list forward."""
-    if version is None:
-        version = latest_version(path)
-    for v in reversed([x for x in list_versions(path) if x <= version]):
-        doc = read_version_doc(path, v)
-        if "retired_physical" in doc:
-            return list(doc["retired_physical"])
-    return []
+    order."""
+    return _snapshot(path, version).files
 
 
 def _physical_schema(
@@ -389,9 +558,9 @@ def _stage_batch(
     path: str,
     version: int,
     *,
+    snap: _Snapshot | None = None,
     prefix: str = "b",
     verify: bool = False,
-    cons: dict | None = None,
     cluster_by: str | None = None,
     cluster_tasks: int = 1,
     cluster_files_cap: int = 64,
@@ -401,12 +570,12 @@ def _stage_batch(
     "b" stages data batches, "dv" stages deletion-vector batches.
 
     Data batches arrive in LOGICAL column names and are written under
-    the table's PHYSICAL names (``_mapping_of`` at head) — the one
-    write-side chokepoint of column mapping, mirroring the read-side
-    rename in ``_scan_with_pos``. DV batches (file/pos coordinates)
-    never pass through the mapping.
+    the PHYSICAL names of ``snap``'s column mapping (identity without a
+    snapshot) — the one write-side chokepoint of column mapping,
+    mirroring the read-side rename in ``_Snapshot.scan``. DV batches
+    (file/pos coordinates) never pass through the mapping.
 
-    ``verify=True`` additionally enforces the table's CHECK constraints
+    ``verify=True`` additionally enforces ``snap``'s CHECK constraints
     against the freshly staged files (NEW-row write paths: append,
     merge, update post-image, evict-admit, catalog transactions). The
     check reads the staged parquet back — one cheap extra scan of the
@@ -424,7 +593,7 @@ def _stage_batch(
     import uuid
 
     if prefix == "b":
-        mapping = _mapping_of(path)
+        mapping = {} if snap is None else snap.mapping
         renames = {
             l: p for l, p in mapping.items() if l in set(df.columns)
         }
@@ -442,14 +611,11 @@ def _stage_batch(
         df.write.parquet(out)
     if prefix == "b" and verify:
         try:
-            # ``cons`` lets the caller pin the verified set to a
-            # snapshot it took BEFORE staging (catalog transactions
-            # record the verified set in the payload; reading it here,
-            # after the stage write, would let a constraint landing in
-            # that window be recorded as stage-time-seen yet never
-            # verified — the roll-forward delta compare would then
-            # skip it)
-            _verify_constraints(df.sparkSession, path, out, cons=cons)
+            # the constraints of the snapshot taken BEFORE staging:
+            # catalog transactions record that same set in the payload,
+            # so a constraint landing after it is never recorded as
+            # seen-but-unverified (roll-forward re-verifies the delta)
+            _verify_constraints(df.sparkSession, snap, out)
         except Exception:
             shutil.rmtree(out, ignore_errors=True)
             raise
@@ -463,21 +629,17 @@ def constraints_of(path: str, version: int | None = None) -> dict:
     table's CHECK constraints at ``version``. Cumulative like the
     column mapping: each alter-constraint commit carries the full set,
     and vacuum folds it into the checkpoint doc."""
-    if version is None:
-        try:
-            version = latest_version(path)
-        except FileNotFoundError:
-            return {}
-    for v in reversed([x for x in list_versions(path) if x <= version]):
-        doc = read_version_doc(path, v)
-        if "constraints" in doc:
-            return dict(doc["constraints"])
-    return {}
+    try:
+        return _snapshot(path, version).constraints
+    except FileNotFoundError:
+        if version is not None:
+            raise
+        return {}
 
 
 def _verify_constraints(
     spark: SparkSession,
-    path: str,
+    snap: _Snapshot,
     staged_dir: str | list[str],
     cons: dict | None = None,
 ) -> None:
@@ -486,31 +648,21 @@ def _verify_constraints(
     violates when the expression is FALSE; UNKNOWN (NULL) passes —
     spell NOT NULL explicitly (``col IS NOT NULL``) when null
     rejection is wanted. One combined scan; per-constraint counts only
-    on the failure path. ``cons`` overrides the set checked (used by
+    on the failure path. ``cons`` overrides ``snap``'s set (used by
     catalog roll-forward to verify only the constraints added since
     stage time)."""
     if cons is None:
-        cons = constraints_of(path)
+        cons = snap.constraints
     if not cons:
         return
     paths = staged_dir if isinstance(staged_dir, list) else [staged_dir]
     if not paths:
         return  # an empty staged batch has no rows to violate
-    # read under the table's CURRENT physical schema, not the files'
-    # own footer schema: a constraint referencing a column added after
-    # the batch was staged must see NULL (SQL UNKNOWN passes), not an
+    # read under the snapshot's physical schema, not the files' own
+    # footer schema: a constraint referencing a column added after the
+    # batch was staged must see NULL (SQL UNKNOWN passes), not an
     # unresolved-column error
-    schema = _schema_of(path)
-    mapping = _mapping_of(path)
-    read_schema = (
-        _physical_schema(schema, mapping)
-        if (schema is not None and mapping)
-        else schema
-    )
-    reader = (
-        spark.read if read_schema is None else spark.read.schema(read_schema)
-    )
-    sdf = _to_logical(reader.parquet(*paths), mapping)
+    sdf = snap.scan(spark, paths, dvs=[])
     viol = [
         (name, ~F.coalesce(F.expr(expr), F.lit(True)))
         for name, expr in sorted(cons.items())
@@ -546,17 +698,16 @@ def manifest_add_constraint(
     (append, merge, update post-image, evict-admit, catalog
     transaction) enforces it against its staged batch and aborts —
     stage deleted, table untouched — on violation."""
-    head = latest_version(path)
-    cons = constraints_of(path, head)
+    snap = _snapshot(path)
+    head, cons = snap.version, snap.constraints
     if name in cons:
         raise ValueError(f"constraint {name!r} already exists")
     try:
         F.expr(expr)
     except Exception as exc:
         raise ValueError(f"unparsable constraint expression {expr!r}") from exc
-    if live_files(path, head):
-        existing = read_snapshot(spark, path, head)
-        n_bad = existing.where(
+    if snap.files:
+        n_bad = snap.scan(spark).where(
             ~F.coalesce(F.expr(expr), F.lit(True))
         ).count()
         if n_bad:
@@ -580,8 +731,8 @@ def manifest_add_constraint(
 
 def manifest_drop_constraint(path: str, name: str) -> int:
     """Drop a named CHECK constraint (metadata commit)."""
-    head = latest_version(path)
-    cons = constraints_of(path, head)
+    snap = _snapshot(path)
+    head, cons = snap.version, snap.constraints
     if name not in cons:
         raise ValueError(f"no constraint named {name!r}")
     cons.pop(name)
@@ -633,6 +784,45 @@ def _commit_or_cleanup(path: str, doc: dict, stage_dirs: list[str]) -> int:
         raise
 
 
+def _stage_overlapped(spark: SparkSession, path: str, work: dict) -> dict:
+    """Run a write's independent pre-commit thunks — ``"pre"`` (a check
+    that must pass before the commit), ``"data"`` and ``"dv"`` (stagings
+    returning ``(rel_dir, files)``) — and return {kind: result}. More
+    than one runs CONCURRENTLY: they share no state and the stagings
+    land in separate uniquely-named dirs (atomicity lives in the one
+    commit doc, not in write order), so the fixed job latency is paid
+    once, not per part. Each thread inherits the session's job
+    properties and tags. Every future is joined; on any failure every
+    staged dir is removed (nothing references them yet) and the error
+    is raised in the sequential order's priority: pre, data, dv."""
+    if len(work) <= 1:
+        return {kind: fn() for kind, fn in work.items()}
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    results: dict = {}
+    errors: dict = {}
+    with ThreadPoolExecutor(max_workers=len(work)) as pool:
+        futs = {
+            kind: pool.submit(inheritable_thread_target(spark)(fn))
+            for kind, fn in work.items()
+        }
+        for kind, fut in futs.items():
+            try:
+                results[kind] = fut.result()
+            except Exception as exc:  # noqa: BLE001 - raised below
+                errors[kind] = exc
+    if errors:
+        for kind in ("data", "dv"):
+            if kind in results:
+                shutil.rmtree(
+                    os.path.join(path, results[kind][0]), ignore_errors=True
+                )
+        raise next(errors[k] for k in ("pre", "data", "dv") if k in errors)
+    return results
+
+
 def _file_column_stats(fp: str) -> dict:
     """Per-column [min, max] for one parquet file, read from the FOOTER
     metadata only (pyarrow — no data scan): the per-file pendant to
@@ -682,22 +872,10 @@ def _stage_stats(path: str, added: list[str]) -> tuple[dict, dict]:
 
 
 def live_file_stats(path: str, version: int | None = None) -> dict:
-    """rel-path → {col: [min, max]} for the live files at ``version``,
-    replayed from the version docs (older docs may predate stats — those
-    files map to {} and are never pruned)."""
-    if version is None:
-        version = latest_version(path)
-    out: dict[str, dict] = {}
-    for v in list_versions(path):
-        if v > version:
-            break
-        doc = read_version_doc(path, v)
-        for f in doc["removed"]:
-            out.pop(f, None)
-        file_stats = doc.get("stats", {})
-        for f in doc["added"]:
-            out[f] = file_stats.get(f, {})
-    return out
+    """rel-path → {col: [min, max]} for the live files at ``version``
+    (older docs may predate stats — those files map to {} and are never
+    pruned)."""
+    return _snapshot(path, version).stats
 
 
 def _prune_files(
@@ -733,94 +911,21 @@ def live_row_counts(path: str, version: int | None = None) -> dict:
     """rel-path → exact footer row count for the live files at
     ``version``. Files committed before row counts were recorded are
     absent — metadata-only readers treat absence as "must scan"."""
-    if version is None:
-        version = latest_version(path)
-    out: dict[str, int] = {}
-    for v in list_versions(path):
-        if v > version:
-            break
-        doc = read_version_doc(path, v)
-        for f in doc["removed"]:
-            out.pop(f, None)
-        counts = doc.get("row_counts", {})
-        for f in doc["added"]:
-            if f in counts:
-                out[f] = counts[f]
-    return out
+    return _snapshot(path, version).row_counts
 
 
 def live_dv_state(
     path: str, version: int | None = None
 ) -> tuple[list[str], dict[str, int]]:
     """(live deletion-vector files, live deleted-row counts per data
-    file) at ``version``, replayed from the version docs.
-
-    Replay leans on two structural invariants: (a) vector retirement is
-    all-or-nothing (materialize/compact retire EVERY live vector in one
-    commit), and (b) removing a data file retires its deleted-row count
-    (the positions pointed into a file that no longer exists)."""
-    if version is None:
-        version = latest_version(path)
-    dv_files: list[str] = []
-    targets: dict[str, int] = {}
-    for v in list_versions(path):
-        if v > version:
-            break
-        doc = read_version_doc(path, v)
-        for f in doc["removed"]:
-            targets.pop(f, None)
-        dv_removed = set(doc.get("dv_removed", []))
-        if dv_removed:
-            dv_files = [f for f in dv_files if f not in dv_removed]
-            if not dv_files:
-                targets = {}
-        dv_files = dv_files + doc.get("dv_added", [])
-        for f, n in doc.get("dv_targets", {}).items():
-            targets[f] = targets.get(f, 0) + n
-    return dv_files, targets
+    file) at ``version``."""
+    snap = _snapshot(path, version)
+    return snap.dv_files, snap.dv_targets
 
 
 #: Matches both the legacy version-keyed batch dirs (``data/bNNNNNNNN``)
 #: and the race-safe per-writer suffixed ones (``data/bNNNNNNNN-abcdef01``).
 _DATA_REL_PATTERN = r"(data/b\d{8}(?:-[0-9a-f]+)?/[^/]+)$"
-
-
-def _scan_with_pos(
-    spark: SparkSession,
-    path: str,
-    files: list[str],
-    schema: T.StructType | None,
-    mapping: dict | None = None,
-) -> DataFrame:
-    """Scan ``files`` with two extra columns: ``__dv_file`` (the
-    root-relative data-file path, recovered from the reader's
-    ``_metadata.file_path`` by matching the layout's own
-    ``data/bNNNNNNNN/part-*`` shape — scheme- and root-independent) and
-    ``__dv_pos`` (``_metadata.row_index``, the row's position in its
-    immutable file). (file, pos) is the deletion-vector key.
-
-    ``schema`` is the LOGICAL schema of the version being read;
-    ``mapping`` its logical→physical column mapping. Files are read
-    under physical names (widened types resolve through Spark's
-    parquet type promotion, so an int32 file reads as the table's
-    post-widen bigint) and renamed to logical immediately — every
-    downstream operator sees logical names only."""
-    read_schema = schema
-    if schema is not None and mapping:
-        read_schema = _physical_schema(schema, mapping)
-    reader = (
-        spark.read if read_schema is None else spark.read.schema(read_schema)
-    )
-    scan = reader.parquet(*(os.path.join(path, f) for f in files))
-    scan = _to_logical(scan, mapping or {})
-    return scan.withColumns(
-        {
-            "__dv_file": F.regexp_extract(
-                F.col("_metadata.file_path"), _DATA_REL_PATTERN, 1
-            ),
-            "__dv_pos": F.col("_metadata.row_index"),
-        }
-    )
 
 
 #: deletion-vector files have exactly this layout (written by the
@@ -854,25 +959,22 @@ def _dv_file_counts(path: str, dv_files: list[str]) -> dict[str, int]:
     return dict(out)
 
 
-def _apply_dvs(
-    scanned: DataFrame, dvs: DataFrame, *, keep_pos: bool = False
-) -> DataFrame:
-    """Drop the deleted (file, pos) rows — an equi anti-join the
-    optimizer is free to broadcast when the vectors are small (the
-    common case: deletes are a sliver of a 100 TB table), with AQE
-    falling back to a shuffle join when they are not. The vector
-    columns are renamed before joining so a table whose own schema
-    contains ``file``/``pos`` columns cannot make the condition
-    ambiguous. ``keep_pos`` retains the ``__dv_file``/``__dv_pos``
-    helper columns for callers that go on to write new vectors."""
+def _dv_join(scanned: DataFrame, dvs: DataFrame, how: str) -> DataFrame:
+    """Join a positioned scan (``__dv_file``/``__dv_pos``) to vector
+    rows on (file, pos): ``left_anti`` drops the deleted rows — the
+    optimizer is free to broadcast small vectors (the common case:
+    deletes are a sliver of a 100 TB table), with AQE falling back to a
+    shuffle join when they are not — and ``left_semi`` keeps exactly
+    them. The vector columns are renamed before joining so a table
+    whose own schema contains ``file``/``pos`` columns cannot make the
+    condition ambiguous."""
     d = dvs.select(
         F.col("file").alias("__dvv_file"), F.col("pos").alias("__dvv_pos")
     )
     cond = (F.col("__dv_file") == F.col("__dvv_file")) & (
         F.col("__dv_pos") == F.col("__dvv_pos")
     )
-    out = scanned.join(d, cond, "left_anti")
-    return out if keep_pos else out.drop("__dv_file", "__dv_pos")
+    return scanned.join(d, cond, how)
 
 
 def _bloom_position_cols(col: str, m: int, k: int) -> list:
@@ -1137,38 +1239,21 @@ def live_file_blooms(path: str, version: int | None = None) -> dict:
     """rel-path → {col: bloom entry} for the live files at ``version``.
     Files without blooms map to {} — readers treat absence as "cannot
     prune", never as "no match"."""
-    if version is None:
-        version = latest_version(path)
-    out: dict[str, dict] = {}
-    for v in list_versions(path):
-        if v > version:
-            break
-        doc = read_version_doc(path, v)
-        for f in doc["removed"]:
-            out.pop(f, None)
-        blooms = doc.get("blooms", {})
-        for f in doc["added"]:
-            out[f] = blooms.get(f, {})
-    return out
-
-
-def _bloom_config(path: str, version: int | None = None) -> dict:
-    """{col: (m, k)} union over the live files' blooms — how rewrite
-    operations (compact/materialize/delete) know which blooms to rebuild
-    so file skipping survives a rewrite."""
-    cfg: dict[str, tuple[int, int]] = {}
-    for per_file in live_file_blooms(path, version).values():
-        for col, e in per_file.items():
-            cfg[col] = (e["m"], e["k"])
-    return cfg
+    return _snapshot(path, version).blooms
 
 
 def _rebuild_blooms(
-    spark: SparkSession, path: str, added: list[str], head: int
+    spark: SparkSession, snap: _Snapshot, added: list[str]
 ) -> dict:
-    """Blooms for freshly rewritten files, preserving the live config;
-    {} when the table never had blooms (zero cost on the common path)."""
-    cfg = _bloom_config(path, head)
+    """Blooms for freshly rewritten files under ``snap``'s bloom config
+    ({col: (m, k)} over its live files' blooms) — how rewrites
+    (compact/materialize/delete) keep file skipping; {} when the table
+    never had blooms (zero cost on the common path)."""
+    cfg = {
+        col: (e["m"], e["k"])
+        for per_file in snap.blooms.values()
+        for col, e in per_file.items()
+    }
     if not cfg or not added:
         return {}
     by_mk: dict[tuple[int, int], list[str]] = {}
@@ -1176,7 +1261,7 @@ def _rebuild_blooms(
         by_mk.setdefault(mk, []).append(col)
     out: dict[str, dict] = {f: {} for f in added}
     for (m, k), cols in by_mk.items():
-        built = _build_blooms(spark, path, added, cols, m, k)
+        built = _build_blooms(spark, snap.path, added, cols, m, k)
         for f, entry in built.items():
             out[f].update(entry)
     return out
@@ -1271,39 +1356,47 @@ def _prune_files_eq(
 
 
 def _check_schema(
-    df: DataFrame, path: str, *, allow_additive: bool = False
+    df: DataFrame, snap: _Snapshot, *, allow_additive: bool = False
 ) -> None:
-    stored = _schema_of(path)
+    """``df`` must carry ``snap``'s schema exactly — or, with
+    ``allow_additive``, every existing column with its exact type plus
+    new columns. A new column stages under its own name as its physical
+    name, so names claimed physically by a renamed column or retired by
+    a drop are refused (the old files' bytes would leak into the new
+    column); ``manifest_alter_schema`` assigns a fresh physical name for
+    exactly this case."""
+    stored = snap.schema
     if stored is None:
         return
     got = [(f.name, f.dataType) for f in df.schema.fields]
     want = [(f.name, f.dataType) for f in stored.fields]
-    if got == want:
-        return
-    if allow_additive and set(want).issubset(got):
-        # additive evolution: every existing column present with its
-        # exact type; new columns join the table schema, and older files
-        # read them as NULL (read_snapshot pins the version's schema)
-        return
-    raise ValueError(
-        f"append schema {got} does not match table schema {want};"
-        " pass allow_additive=True to add columns, or migrate explicitly"
-    )
+    # additive evolution: new columns join the table schema, and older
+    # files read them as NULL (reads pin the version's schema)
+    if got != want and not (allow_additive and set(want).issubset(got)):
+        raise ValueError(
+            f"append schema {got} does not match table schema {want};"
+            " pass allow_additive=True to add columns, or migrate"
+            " explicitly"
+        )
+    claimed = {
+        snap.mapping.get(f.name, f.name) for f in stored.fields
+    } | set(snap.retired)
+    bad = [c for c in df.columns if c not in stored.names and c in claimed]
+    if bad:
+        raise ValueError(
+            f"additive column(s) {bad} collide with physical"
+            " names in use or retired; use manifest_alter_schema"
+            " add= instead"
+        )
 
 
 def committed_stream_batches(path: str) -> set[int]:
     """Stream batch ids already committed to this table — the replay
     guard for the foreachBatch sink (a retried micro-batch finds its id
-    here and skips; see ``streaming.events.manifest_sink_stream``)."""
-    out = set()
-    for v in list_versions(path):
-        doc = read_version_doc(path, v)
-        if "stream_batch_id" in doc:
-            out.add(doc["stream_batch_id"])
-        # vacuum folds the batch ids of dropped ancestor commits into the
-        # checkpoint doc as a list — replay protection survives retention
-        out.update(doc.get("stream_batch_ids", []))
-    return out
+    here and skips; see ``streaming.events.manifest_sink_stream``).
+    Vacuum folds the ids of dropped commits into its checkpoint, so
+    replay protection survives retention."""
+    return _snapshot(path).stream_batch_ids
 
 
 def manifest_append(
@@ -1333,31 +1426,12 @@ def manifest_append(
     one distributed pass over the freshly staged files; rewrites
     (compact/materialize/delete) rebuild them automatically, so a
     table keeps skipping after maintenance."""
-    head = latest_version(path)
-    _check_schema(df, path, allow_additive=allow_additive)
-    if allow_additive:
-        # a brand-new column stages under its own name as its physical
-        # name — refuse names already claimed physically by a renamed
-        # column or retired by a drop (the old files' bytes would leak
-        # into the new column); manifest_alter_schema assigns a fresh
-        # physical name for exactly this case
-        stored = _schema_of(path, head)
-        if stored is not None:
-            amap = _mapping_of(path, head)
-            claimed = {
-                amap.get(f.name, f.name) for f in stored.fields
-            } | set(_retired_of(path, head))
-            fresh = [c for c in df.columns if c not in set(stored.names)]
-            bad = [c for c in fresh if c in claimed]
-            if bad:
-                raise ValueError(
-                    f"additive column(s) {bad} collide with physical"
-                    " names in use or retired; use manifest_alter_schema"
-                    " add= instead"
-                )
+    snap = _snapshot(path)
+    _check_schema(df, snap, allow_additive=allow_additive)
+    head = snap.version
     version = head + 1
-    stage_dir, added = _stage_batch(df, path, version, verify=True)
-    n_live = len(live_files(path, head)) + len(added)
+    stage_dir, added = _stage_batch(df, path, version, snap=snap, verify=True)
+    n_live = len(snap.files) + len(added)
     if n_live > max_manifest_files:
         shutil.rmtree(os.path.join(path, stage_dir), ignore_errors=True)
         raise ValueError(
@@ -1366,18 +1440,17 @@ def manifest_append(
         )
     stats, row_counts = _stage_stats(path, added)
     spark = df.sparkSession
-    bmap = _mapping_of(path, head)
     blooms = (
         _build_blooms(
             spark,
             path,
             added,
-            [bmap.get(c, c) for c in bloom_columns],
+            [snap.mapping.get(c, c) for c in bloom_columns],
             bloom_bits,
             bloom_hashes,
         )
         if bloom_columns
-        else _rebuild_blooms(spark, path, added, head)
+        else _rebuild_blooms(spark, snap, added)
     )
     return _commit_or_cleanup(
         path,
@@ -1489,66 +1562,22 @@ def read_snapshot(
                 "pass version OR as_of_timestamp, not both"
             )
         version = version_at_timestamp(path, as_of_timestamp)
-
-    def _empty() -> DataFrame:
-        s = schema
-        if with_pos and s is not None:
-            s = T.StructType(
-                list(s.fields)
-                + [
-                    T.StructField("__dv_file", T.StringType()),
-                    T.StructField("__dv_pos", T.LongType()),
-                ]
-            )
-        return spark.createDataFrame([], s)
-
-    files = live_files(path, version)
-    schema = _schema_of(path, version)
-    mapping = _mapping_of(path, version)
-    if not files:
-        if schema is None:
-            raise ValueError(
-                f"table at {path} is empty and has no recorded schema"
-            )
-        return _empty()
+    snap = _snapshot(path, version)
+    files = snap.files
+    # manifest stats/blooms are keyed by PHYSICAL column names (they come
+    # from the data files' footers); callers prune by logical
     if prune:
-        # manifest stats/blooms are keyed by PHYSICAL column names (they
-        # come from the data files' footers); callers prune by logical
-        phys_prune = {mapping.get(c, c): v for c, v in prune.items()}
-        files = _prune_files(
-            files, live_file_stats(path, version), phys_prune
-        )
+        phys_prune = {snap.mapping.get(c, c): v for c, v in prune.items()}
+        files = _prune_files(files, snap.stats, phys_prune)
     if prune_eq:
-        phys_eq = {mapping.get(c, c): v for c, v in prune_eq.items()}
-        files = _prune_files_eq(
-            spark, files, live_file_blooms(path, version), phys_eq
-        )
-    if not files:
-        return _empty()
-    dv_files, dv_targets = live_dv_state(path, version)
-    if dv_files and dv_targets:
-        scanned = _scan_with_pos(spark, path, files, schema, mapping)
-        return _apply_dvs(
-            scanned, _dv_frame(spark, path, dv_files), keep_pos=with_pos
-        )
-    if with_pos:
-        return _scan_with_pos(spark, path, files, schema, mapping)
-    # pin the VERSION's schema on the scan: after additive evolution,
-    # files written before a column existed read it as NULL, time
-    # travel to an old version surfaces that version's own (narrower)
-    # schema and column NAMES, and post-rename/widen reads resolve
-    # through the column mapping + parquet type promotion
-    read_schema = (
-        _physical_schema(schema, mapping)
-        if (schema is not None and mapping)
-        else schema
-    )
-    reader = (
-        spark.read if read_schema is None else spark.read.schema(read_schema)
-    )
-    return _to_logical(
-        reader.parquet(*(os.path.join(path, f) for f in files)), mapping
-    )
+        phys_eq = {snap.mapping.get(c, c): v for c, v in prune_eq.items()}
+        files = _prune_files_eq(spark, files, snap.blooms, phys_eq)
+    # the VERSION's schema is pinned on the scan: after additive
+    # evolution, files written before a column existed read it as NULL,
+    # time travel to an old version surfaces that version's own
+    # (narrower) schema and column NAMES, and post-rename/widen reads
+    # resolve through the column mapping + parquet type promotion
+    return snap.scan(spark, files, keep_pos=with_pos)
 
 
 def _merge_pos_ranges(a, b):
@@ -1598,9 +1627,7 @@ def _map_through_segments(segments: list, source_ranges: dict):
     return _merge_pos_ranges(out_ranges, [])
 
 
-def _since_visibility(
-    path: str, since_version: int, version: int
-) -> dict:
+def _since_visibility(snap: _Snapshot, since_version: int) -> dict:
     """file -> positions holding rows VISIBLE at ``since_version``
     (None = every position, [lo, hi) list = a subset), for every file a
     range deletion vector may target: files live at ``since_version``
@@ -1610,12 +1637,11 @@ def _since_visibility(
     rewrite outputs without recorded provenance) — the change feed's
     delete side skips them rather than over-emit."""
     vis: dict[str, list | None] = {
-        f: None for f in live_files(path, since_version)
+        f: None for f in snap.at(since_version).files
     }
-    for v in list_versions(path):
-        if v <= since_version or v > version:
+    for v, doc in snap.log:
+        if v <= since_version:
             continue
-        doc = read_version_doc(path, v)
         if doc.get("operation", "append") in (
             "compact",
             "materialize",
@@ -1694,11 +1720,35 @@ def read_changes(
       commits without ``dv_matched`` fall back to the same pure-only
       survivor rule with file-grain eviction elsewhere.
     """
-    if version is None:
-        version = latest_version(path)
+    return _read_changes(spark, _snapshot(path, version), since_version)
+
+
+def _within_ranges(scanned: DataFrame, ranges: dict) -> DataFrame:
+    """Rows of a positioned scan inside ``ranges`` ({file: None (every
+    row) or [lo, hi) position ranges})."""
+    whole = sorted(f for f, rg in ranges.items() if rg is None)
+    cond = F.col("__dv_file").isin(whole) if whole else F.lit(False)
+    for f, rgs in sorted(
+        (f, rg) for f, rg in ranges.items() if rg is not None
+    ):
+        in_rg = F.lit(False)
+        for lo, hi in rgs:
+            in_rg = in_rg | (
+                (F.col("__dv_pos") >= int(lo)) & (F.col("__dv_pos") < int(hi))
+            )
+        cond = cond | ((F.col("__dv_file") == f) & in_rg)
+    return scanned.where(cond)
+
+
+def _read_changes(
+    spark: SparkSession, snap: _Snapshot, since_version: int
+) -> DataFrame:
+    """:func:`read_changes` over the range ``(since_version,
+    snap.version]`` of one snapshot's log."""
+    path, version = snap.path, snap.version
     if since_version > version:
         raise ValueError(f"since_version {since_version} > version {version}")
-    oldest = list_versions(path)[0]
+    oldest = snap.log[0][0] if snap.log else version + 1
     if since_version < oldest:
         # vacuum dropped the commits below the horizon — the range can no
         # longer be reconstructed; fail loudly rather than under-emit
@@ -1776,10 +1826,9 @@ def read_changes(
             all_pure = all_pure and pure
         return scan, all_pure
 
-    for v in list_versions(path):
-        if v <= since_version or v > version:
+    for v, doc in snap.log:
+        if v <= since_version:
             continue
-        doc = read_version_doc(path, v)
         op = doc.get("operation", "append")
         range_dvs += doc.get("dv_added", [])
         if doc.get("dv_added"):
@@ -1953,10 +2002,9 @@ def read_changes(
                 lineage[n] = (dict(surv_scan), False)
                 if n in del_segments:
                     if del_folded is None:
-                        parent_dvs, _pt = live_dv_state(
-                            path, doc.get("parent")
-                        )
-                        del_folded = list(parent_dvs) + list(matched_dv)
+                        del_folded = list(
+                            snap.at(doc["parent"]).dv_files
+                        ) + list(matched_dv)
                     indirect_prov[n] = (
                         del_segments[n], del_folded, removed
                     )
@@ -1967,133 +2015,108 @@ def read_changes(
         for n in doc["added"]:
             scan_ranges[n] = None
             lineage[n] = ({n: None}, True)
-    schema = _schema_of(path, version)
-    mapping = _mapping_of(path, version)
     if not scan_ranges:
-        if schema is None:
+        if snap.schema is None:
             raise ValueError(f"no schema recorded at {path} yet")
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], snap.schema)
     whole = sorted(f for f, rg in scan_ranges.items() if rg is None)
-    ranged = {f: rg for f, rg in scan_ranges.items() if rg is not None}
-    if range_dvs or ranged:
-        # rows row-deleted within the range are not live at its end; the
-        # anti-join self-restricts to the files actually scanned (vectors
-        # aimed at archive files match nothing here). Segment-restricted
-        # files additionally filter to their range-new position ranges.
-        scanned = _scan_with_pos(
-            spark, path, sorted(scan_ranges), schema, mapping
-        )
-        if ranged:
-            cond = (
-                F.col("__dv_file").isin(whole) if whole else F.lit(False)
-            )
-            for f, rgs in sorted(ranged.items()):
-                in_rg = F.lit(False)
-                for lo, hi in rgs:
-                    in_rg = in_rg | (
-                        (F.col("__dv_pos") >= int(lo))
-                        & (F.col("__dv_pos") < int(hi))
-                    )
-                cond = cond | ((F.col("__dv_file") == f) & in_rg)
-            scanned = scanned.where(cond)
-        if range_dvs:
-            base_dvf = _dv_frame(spark, path, sorted(set(range_dvs)))
-            dvf = base_dvf
-            scanned_set = set(scan_ranges)
-            # hop-by-hop chain translation (r12): rows re-addressed onto
-            # an INTERMEDIATE rewrite output (itself indirectly scanned)
-            # re-enter the worklist with that output's own recorded
-            # provenance, so vectors compose through chained rewrites —
-            # affine and whole-file-survivors hops alike. Bounded by the
-            # same depth guard the acceptance cover uses, so an accepted
-            # target always drains before the bound.
-            work = [
-                (t, *translate[t], base_dvf) for t in sorted(translate)
-            ]
-            for _hop in range(_MAX_CHAIN_HOPS):
-                nxt: list = []
-                for t, segs, folded, src_frame in work:
-                    hop_files = sorted(
-                        {
-                            s
-                            for s, _lo, _cnt in segs
-                            if s not in scanned_set
-                            and s in indirect_prov
-                        }
-                    )
-                    extra = _translated_dv(
-                        spark, path, schema, t, segs, folded,
-                        src_frame, scanned_set | set(hop_files), mapping,
-                    )
-                    if extra is None:
-                        continue
-                    if hop_files:
-                        # multi-consumed below (direct slice + one per
-                        # hop file): materialize ONCE — each filter
-                        # would otherwise re-run the whole translation,
-                        # including sentinel-segment source scans
-                        extra = extra.localCheckpoint(eager=True)
-                        dvf = dvf.unionByName(
-                            extra.where(~F.col("file").isin(hop_files))
-                        )
-                        for m in hop_files:
-                            p = indirect_prov[m]
-                            nxt.append(
-                                (
-                                    m,
-                                    p[0],
-                                    p[1],
-                                    extra.where(F.col("file") == m),
-                                )
-                            )
-                    else:
-                        dvf = dvf.unionByName(extra)
-                if not nxt:
-                    break
-                work = nxt
-            else:
-                # reachable ONLY with nxt non-empty (a drained worklist
-                # breaks): the loop exhausted its hop budget with
-                # targets still pending. _chain_cover's identical depth
-                # bound makes this unreachable TODAY (an accepted
-                # target always drains before the bound) — but that
-                # invariant lives in a different function, and if the
-                # two constants ever diverge, silently dropping the
-                # residual vectors would OVER-EMIT in the change feed
-                # (deleted rows emitted as inserts). Fail loudly.
-                raise RuntimeError(
-                    f"chain translation at {path} exhausted"
-                    f" {_MAX_CHAIN_HOPS} hops with"
-                    f" {len(nxt)} targets still pending"
-                    f" ({sorted(t for t, *_ in nxt)[:5]}…) —"
-                    " _MAX_CHAIN_HOPS no longer matches"
-                    " _chain_cover's acceptance bound"
+    if not range_dvs and len(whole) == len(scan_ranges):
+        return snap.scan(spark, whole, dvs=[])
+    # rows row-deleted within the range are not live at its end; the
+    # anti-join self-restricts to the files actually scanned (vectors
+    # aimed at archive files match nothing here). Segment-restricted
+    # files additionally filter to their range-new position ranges.
+    dvf = None
+    if range_dvs:
+        base_dvf = _dv_frame(spark, path, sorted(set(range_dvs)))
+        dvf = base_dvf
+        scanned_set = set(scan_ranges)
+        # hop-by-hop chain translation (r12): rows re-addressed onto
+        # an INTERMEDIATE rewrite output (itself indirectly scanned)
+        # re-enter the worklist with that output's own recorded
+        # provenance, so vectors compose through chained rewrites —
+        # affine and whole-file-survivors hops alike. Bounded by the
+        # same depth guard the acceptance cover uses, so an accepted
+        # target always drains before the bound.
+        work = [
+            (t, *translate[t], base_dvf) for t in sorted(translate)
+        ]
+        for _hop in range(_MAX_CHAIN_HOPS):
+            nxt: list = []
+            for t, segs, folded, src_frame in work:
+                hop_files = sorted(
+                    {
+                        s
+                        for s, _lo, _cnt in segs
+                        if s not in scanned_set
+                        and s in indirect_prov
+                    }
                 )
-            return _apply_dvs(scanned, dvf)
-        return scanned.drop("__dv_file", "__dv_pos")
-    read_schema = (
-        _physical_schema(schema, mapping)
-        if (schema is not None and mapping)
-        else schema
+                extra = _translated_dv(
+                    spark, snap, t, segs, folded,
+                    src_frame, scanned_set | set(hop_files),
+                )
+                if extra is None:
+                    continue
+                if hop_files:
+                    # multi-consumed below (direct slice + one per
+                    # hop file): materialize ONCE — each filter
+                    # would otherwise re-run the whole translation,
+                    # including sentinel-segment source scans
+                    extra = extra.localCheckpoint(eager=True)
+                    dvf = dvf.unionByName(
+                        extra.where(~F.col("file").isin(hop_files))
+                    )
+                    for m in hop_files:
+                        p = indirect_prov[m]
+                        nxt.append(
+                            (
+                                m,
+                                p[0],
+                                p[1],
+                                extra.where(F.col("file") == m),
+                            )
+                        )
+                else:
+                    dvf = dvf.unionByName(extra)
+            if not nxt:
+                break
+            work = nxt
+        else:
+            # reachable ONLY with nxt non-empty (a drained worklist
+            # breaks): the loop exhausted its hop budget with
+            # targets still pending. _chain_cover's identical depth
+            # bound makes this unreachable TODAY (an accepted
+            # target always drains before the bound) — but that
+            # invariant lives in a different function, and if the
+            # two constants ever diverge, silently dropping the
+            # residual vectors would OVER-EMIT in the change feed
+            # (deleted rows emitted as inserts). Fail loudly.
+            raise RuntimeError(
+                f"chain translation at {path} exhausted"
+                f" {_MAX_CHAIN_HOPS} hops with"
+                f" {len(nxt)} targets still pending"
+                f" ({sorted(t for t, *_ in nxt)[:5]}…) —"
+                " _MAX_CHAIN_HOPS no longer matches"
+                " _chain_cover's acceptance bound"
+            )
+    scanned = snap.scan(
+        spark, sorted(scan_ranges), keep_pos=True,
+        dvs=[] if dvf is None else dvf,
     )
-    reader = (
-        spark.read if read_schema is None else spark.read.schema(read_schema)
-    )
-    return _to_logical(
-        reader.parquet(*(os.path.join(path, f) for f in whole)), mapping
-    )
+    if len(whole) < len(scan_ranges):
+        scanned = _within_ranges(scanned, scan_ranges)
+    return scanned.drop("__dv_file", "__dv_pos")
 
 
 def _translated_dv(
     spark: SparkSession,
-    path: str,
-    schema,
+    snap: _Snapshot,
     target: str,
     segs: list,
     folded: list[str],
     dvf: DataFrame,
     scanned_files: set,
-    mapping: dict | None = None,
 ) -> DataFrame | None:
     """Vector rows aimed at ``target`` — an indirectly-scanned rewrite
     output — re-addressed to SOURCE coordinates through the output's
@@ -2144,15 +2167,9 @@ def _translated_dv(
     sent_scanned = [r for r in sentinel if r[0] in scanned_files]
     if sent_scanned:
         srcs = [s for s, _c, _o in sent_scanned]
-        scan = _scan_with_pos(spark, path, srcs, schema, mapping).select(
-            "__dv_file", "__dv_pos"
-        )
-        if folded:
-            scan = _apply_dvs(
-                scan,
-                _dv_frame(spark, path, sorted(set(folded))),
-                keep_pos=True,
-            )
+        scan = snap.scan(
+            spark, srcs, keep_pos=True, dvs=sorted(set(folded))
+        ).select("__dv_file", "__dv_pos")
         w = Window.partitionBy("__dv_file").orderBy("__dv_pos")
         off = F.create_map(
             *[
@@ -2206,21 +2223,19 @@ def read_change_feed(
     and emit nothing, as ever). Cost: the insert side scans only
     range-added files; the delete side scans only files the range's
     vectors point into."""
-    if version is None:
-        version = latest_version(path)
-    inserts = read_changes(spark, path, since_version, version)
+    snap = _snapshot(path, version)
+    inserts = _read_changes(spark, snap, since_version).withColumn(
+        "_change_type", F.lit("insert")
+    )
     # deletion vectors committed in the range — including the matched
     # sets of file-targeted deletes (their originals stay on disk until
     # vacuum, so the content read below still resolves)
-    range_dvs: list[str] = []
-    for v in list_versions(path):
-        if since_version < v <= version:
-            doc = read_version_doc(path, v)
-            range_dvs += doc.get("dv_added", [])
-            range_dvs += doc.get("dv_matched", [])
-    schema = _schema_of(path, version)
-    mapping = _mapping_of(path, version)
-    inserts = inserts.withColumn("_change_type", F.lit("insert"))
+    range_dvs = [
+        f
+        for v, doc in snap.log
+        if v > since_version
+        for f in doc.get("dv_added", []) + doc.get("dv_matched", [])
+    ]
     if not range_dvs:
         return inserts
     dvs = _dv_frame(spark, path, range_dvs)
@@ -2228,7 +2243,7 @@ def read_change_feed(
     # live then — wholly for files live at since, through segment
     # composition for rewrite outputs; vectors into range-added files
     # net out against inserts instead
-    vis = _since_visibility(path, since_version, version)
+    vis = _since_visibility(snap, since_version)
     targets = sorted(
         {
             r["file"]
@@ -2238,32 +2253,12 @@ def read_change_feed(
     )
     if not targets:
         return inserts
-    scanned = _scan_with_pos(spark, path, targets, schema, mapping)
-    ranged = {f: vis[f] for f in targets if vis[f] is not None}
-    if ranged:
-        whole = [f for f in targets if vis[f] is None]
-        cond = F.col("__dv_file").isin(whole) if whole else F.lit(False)
-        for f, rgs in sorted(ranged.items()):
-            in_rg = F.lit(False)
-            for lo, hi in rgs:
-                in_rg = in_rg | (
-                    (F.col("__dv_pos") >= int(lo))
-                    & (F.col("__dv_pos") < int(hi))
-                )
-            cond = cond | ((F.col("__dv_file") == f) & in_rg)
-        scanned = scanned.where(cond)
-    # the feed wants exactly the vectors' matches — a semi-join on the
-    # same renamed keys _apply_dvs anti-joins on
-    d = dvs.select(
-        F.col("file").alias("__dvv_file"), F.col("pos").alias("__dvv_pos")
-    )
+    scanned = snap.scan(spark, targets, keep_pos=True, dvs=[])
+    if any(vis[f] is not None for f in targets):
+        scanned = _within_ranges(scanned, {f: vis[f] for f in targets})
+    # the feed wants exactly the vectors' matches
     deleted = (
-        scanned.join(
-            d,
-            (F.col("__dv_file") == F.col("__dvv_file"))
-            & (F.col("__dv_pos") == F.col("__dvv_pos")),
-            "left_semi",
-        )
+        _dv_join(scanned, dvs, "left_semi")
         .drop("__dv_file", "__dv_pos")
         .withColumn("_change_type", F.lit("delete"))
     )
@@ -2290,20 +2285,13 @@ def manifest_delete_where(
 
     Returns (new_version, n_files_rewritten).
     """
-    head = latest_version(path)
-    files = live_files(path, head)
-    if not files:
+    snap = _snapshot(path)
+    head = snap.version
+    if not snap.files:
         return head, 0
-    schema = _schema_of(path, head)
-    mapping = _mapping_of(path, head)
-    dv_files, dv_targets = live_dv_state(path, head)
-    live = _scan_with_pos(spark, path, files, schema, mapping)
-    if dv_files and dv_targets:
-        # a row already row-deleted must neither trigger a rewrite nor
-        # survive into one
-        live = _apply_dvs(
-            live, _dv_frame(spark, path, dv_files), keep_pos=True
-        )
+    # a row already row-deleted must neither trigger a rewrite nor
+    # survive into one
+    live = snap.scan(spark, keep_pos=True)
     version = head + 1
     # ONE full scan stages the matched positions as a vector over the
     # (immutable) hit files — row-exact change tracking for incremental
@@ -2323,72 +2311,29 @@ def manifest_delete_where(
     # survivor rewrite scans ONLY the hit files. Keep every row where
     # the condition is not TRUE — a NULL-evaluating predicate must keep
     # the row, not silently drop it
-    hit_scan = _scan_with_pos(spark, path, hit_rel, schema, mapping)
-    if dv_files and dv_targets:
-        hit_scan = _apply_dvs(
-            hit_scan, _dv_frame(spark, path, dv_files), keep_pos=True
-        )
     keep_cond = ~F.coalesce(condition, F.lit(False))
-    survivors = hit_scan.where(keep_cond).drop("__dv_file", "__dv_pos")
-    # survivor emptiness from METADATA when footer counts cover the hit
-    # files (count − already-vectored − newly-matched, all exact)
-    rc = live_row_counts(path, head)
+    survivors = snap.scan(spark, hit_rel).where(keep_cond)
+    rc = snap.row_counts
     stage_dirs: list[str] = [dv_dir]
     added: list[str] = []
     segments: dict[str, list] = {}
     if all(f in rc for f in hit_rel):
-        # metadata-exact survivor counts → ORDER-PINNED rewrite (one
-        # output, sources concatenated in name order, each source's
-        # survivors in position order) with whole-file-survivors
-        # ``segments`` ([src, -1, n]) — the same discipline as
-        # ``manifest_materialize_deletes``, which is what lets
-        # ``read_changes`` net a LATER deletion vector aimed at this
+        # survivor counts are metadata-exact (count − already-vectored
+        # − newly-matched) → the order-pinned rewrite, whose segments
+        # let ``read_changes`` net a LATER deletion vector aimed at this
         # survivor file back to the scanned originals row-exactly
         # instead of exiting at file grain
         surv_n = {
-            f: rc[f] - dv_targets.get(f, 0) - matched_counts[f]
+            f: rc[f] - snap.dv_targets.get(f, 0) - matched_counts[f]
             for f in hit_rel
         }
-        live_srcs = [f for f in hit_rel if surv_n[f] > 0]
-        sizes = {
-            f: os.path.getsize(os.path.join(path, f)) for f in live_srcs
-        }
-        bins: list[list[str]] = [[]]
-        acc = 0
-        for f in live_srcs:  # name-sorted (hit_rel is sorted)
-            if bins[-1] and acc + sizes[f] > 128 << 20:
-                bins.append([])
-                acc = 0
-            bins[-1].append(f)
-            acc += sizes[f]
-        for bin_files in bins:
-            if not bin_files:
-                continue
-            bin_scan = _scan_with_pos(
-                spark, path, bin_files, schema, mapping
-            )
-            if dv_files and dv_targets:
-                bin_scan = _apply_dvs(
-                    bin_scan, _dv_frame(spark, path, dv_files),
-                    keep_pos=True,
-                )
-            packed = (
-                bin_scan.where(keep_cond)
-                .coalesce(1)
-                .sortWithinPartitions("__dv_file", "__dv_pos")
-                .drop("__dv_file", "__dv_pos")
-            )
-            d, a = _stage_batch(packed, path, version)
-            stage_dirs.append(d)
-            added += a
-            if a:
-                segments[a[0]] = [
-                    [f, -1, surv_n[f]] for f in bin_files
-                ]
-    else:
-        if survivors.limit(1).count():
-            d, added = _stage_batch(survivors, path, version)
-            stage_dirs.append(d)
+        dirs, added, segments = _rewrite_survivors(
+            spark, snap, surv_n, 128 << 20, keep=keep_cond
+        )
+        stage_dirs += dirs
+    elif survivors.limit(1).count():
+        d, added = _stage_batch(survivors, path, version, snap=snap)
+        stage_dirs.append(d)
     stats, row_counts = _stage_stats(path, added)
     _validate_segments(path, segments, row_counts, stage_dirs, "delete")
     _commit_or_cleanup(
@@ -2397,18 +2342,75 @@ def manifest_delete_where(
             "version": version,
             "parent": head,
             "operation": "delete",
-            "schema": (schema or survivors.schema).jsonValue(),
+            "schema": (snap.schema or survivors.schema).jsonValue(),
             "added": added,
             "removed": hit_rel,
             "dv_matched": matched_dv,
             "stats": stats,
             "row_counts": row_counts,
-            "blooms": _rebuild_blooms(spark, path, added, head),
+            "blooms": _rebuild_blooms(spark, snap, added),
             **({"segments": segments} if segments else {}),
         },
         stage_dirs,
     )
     return version, len(hit_rel)
+
+
+def _pack_bins(
+    files: list[str], sizes: dict[str, int], target_bytes: int
+) -> list[list[str]]:
+    """First-fit bins of whole files, in ``files`` order, each closed
+    once the next file would push it past ``target_bytes``."""
+    bins: list[list[str]] = []
+    acc = 0
+    for f in files:
+        if not bins or acc + sizes[f] > target_bytes:
+            bins.append([])
+            acc = 0
+        bins[-1].append(f)
+        acc += sizes[f]
+    return bins
+
+
+def _rewrite_survivors(
+    spark: SparkSession,
+    snap: _Snapshot,
+    surv_n: dict[str, int],
+    target_bytes: int,
+    *,
+    keep=None,
+) -> tuple[list[str], list[str], dict]:
+    """ORDER-PINNED survivor rewrite of the files in ``surv_n`` ({file:
+    metadata-exact survivor count}; files with none are skipped): bins
+    of whole files up to ``target_bytes``, each staged as ONE output —
+    sources in name order, each source's survivors (live vectors
+    applied, ``keep`` filtered) in position order — with
+    whole-file-survivors ``segments`` ({output: [[source, -1, n]]}).
+    Shared by ``manifest_delete_where`` and
+    ``manifest_materialize_deletes``; returns (stage dirs, added files,
+    segments)."""
+    live_srcs = [f for f in sorted(surv_n) if surv_n[f] > 0]
+    sizes = {
+        f: os.path.getsize(os.path.join(snap.path, f)) for f in live_srcs
+    }
+    stage_dirs: list[str] = []
+    added: list[str] = []
+    segments: dict[str, list] = {}
+    for bin_files in _pack_bins(live_srcs, sizes, target_bytes):
+        scan = snap.scan(spark, bin_files, keep_pos=True)
+        if keep is not None:
+            scan = scan.where(keep)
+        packed = (
+            scan.coalesce(1)
+            .sortWithinPartitions("__dv_file", "__dv_pos")
+            .drop("__dv_file", "__dv_pos")
+        )
+        d, a = _stage_batch(packed, snap.path, snap.version + 1, snap=snap)
+        stage_dirs.append(d)
+        added += a
+        if a:
+            segments[a[0]] = [[f, -1, surv_n[f]] for f in bin_files]
+    return stage_dirs, added, segments
 
 
 def manifest_delete_rows(
@@ -2459,23 +2461,14 @@ def manifest_delete_rows(
         raise ValueError("pass exactly one of condition= or keys=/on=")
     if keys is not None and on is None:
         raise ValueError("keys= requires on=")
-    head = latest_version(path)
-    files = live_files(path, head)
-    mapping = _mapping_of(path, head)
+    snap = _snapshot(path)
+    head, files = snap.version, snap.files
     if prune_eq:
-        phys_eq = {mapping.get(c, c): v for c, v in prune_eq.items()}
-        files = _prune_files_eq(
-            spark, files, live_file_blooms(path, head), phys_eq
-        )
+        phys_eq = {snap.mapping.get(c, c): v for c, v in prune_eq.items()}
+        files = _prune_files_eq(spark, files, snap.blooms, phys_eq)
     if not files:
         return head, 0
-    schema = _schema_of(path, head)
-    dv_files, dv_targets = live_dv_state(path, head)
-    live = _scan_with_pos(spark, path, files, schema, mapping)
-    if dv_files and dv_targets:
-        live = _apply_dvs(
-            live, _dv_frame(spark, path, dv_files), keep_pos=True
-        )
+    live = snap.scan(spark, files, keep_pos=True)
     if keys is not None:
         matched = live.join(keys, on, "left_semi")
     else:
@@ -2499,7 +2492,7 @@ def manifest_delete_rows(
             "version": version,
             "parent": head,
             "operation": "rowdelete",
-            "schema": None if schema is None else schema.jsonValue(),
+            "schema": None if snap.schema is None else snap.schema.jsonValue(),
             "added": [],
             "removed": [],
             "dv_added": added_dv,
@@ -2539,75 +2532,33 @@ def manifest_merge_upsert(
     replaced counts the OLD rows vectored out (a key duplicated in the
     table replaces every copy), appended counts all of ``df``."""
     on_cols = [on] if isinstance(on, str) else list(on)
-    head = latest_version(path)
-    _check_schema(df, path)
-    files = live_files(path, head)
-    schema = _schema_of(path, head)
+    snap = _snapshot(path)
+    _check_schema(df, snap)
+    head = snap.version
     version = head + 1
-    n_replaced = 0
-    added_dv: list[str] = []
-    per_file: dict[str, int] = {}
-    dv_dir: str | None = None
-    if files:
-        dv_files, dv_targets = live_dv_state(path, head)
-        live = _scan_with_pos(
-            spark, path, files, schema, _mapping_of(path, head)
-        )
-        if dv_files and dv_targets:
-            live = _apply_dvs(
-                live, _dv_frame(spark, path, dv_files), keep_pos=True
-            )
+    work = {}
+    if snap.files:
         hits = (
-            live.join(df.select(*on_cols).distinct(), on_cols, "left_semi")
+            snap.scan(spark, keep_pos=True)
+            .join(df.select(*on_cols).distinct(), on_cols, "left_semi")
             .select(
                 F.col("__dv_file").alias("file"),
                 F.col("__dv_pos").alias("pos"),
             )
             .coalesce(max(1, dv_target_files))
         )
-        # overlap the vector write and the data write (r15 — the same
-        # independent-staging argument as manifest_evict_admit: both
-        # land in uniquely-named dirs, atomicity is the commit doc)
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        stage_dir = None
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_dv = pool.submit(
-                inheritable_thread_target(
-                    lambda: _stage_batch(hits, path, version, prefix="dv")
-                )
-            )
-            fut_data = pool.submit(
-                inheritable_thread_target(
-                    lambda: _stage_batch(df, path, version, verify=True)
-                )
-            )
-            dv_exc = data_exc = None
-            try:
-                dv_dir, added_dv = fut_dv.result()
-            except Exception as exc:  # noqa: BLE001 - joined below
-                dv_exc = exc
-            try:
-                stage_dir, added = fut_data.result()
-            except Exception as exc:  # noqa: BLE001 - joined below
-                data_exc = exc
-        if dv_exc is not None or data_exc is not None:
-            for rel in (dv_dir, stage_dir):
-                if rel is not None:
-                    shutil.rmtree(
-                        os.path.join(path, rel), ignore_errors=True
-                    )
-            raise data_exc or dv_exc
-        per_file = _dv_file_counts(path, added_dv)
-        if not per_file:
-            shutil.rmtree(os.path.join(path, dv_dir), ignore_errors=True)
-            added_dv = []
-            dv_dir = None
-        n_replaced = sum(per_file.values())
-    else:
-        stage_dir, added = _stage_batch(df, path, version, verify=True)
+        work["dv"] = lambda: _stage_batch(hits, path, version, prefix="dv")
+    work["data"] = lambda: _stage_batch(
+        df, path, version, snap=snap, verify=True
+    )
+    staged = _stage_overlapped(spark, path, work)
+    stage_dir, added = staged["data"]
+    dv_dir, added_dv = staged.get("dv", (None, []))
+    per_file = _dv_file_counts(path, added_dv)
+    if not per_file and dv_dir is not None:
+        shutil.rmtree(os.path.join(path, dv_dir), ignore_errors=True)
+        added_dv = []
+    n_replaced = sum(per_file.values())
     stats, row_counts = _stage_stats(path, added)
     n_appended = sum(row_counts.values())
     _commit_or_cleanup(
@@ -2621,7 +2572,7 @@ def manifest_merge_upsert(
             "removed": [],
             "stats": stats,
             "row_counts": row_counts,
-            "blooms": _rebuild_blooms(spark, path, added, head),
+            "blooms": _rebuild_blooms(spark, snap, added),
             "dv_added": added_dv,
             "dv_removed": [],
             "dv_targets": per_file,
@@ -2718,12 +2669,11 @@ def manifest_merge_into(
             "with_schema_evolution requires not_matched_insert=True —"
             " only the INSERT clause introduces new columns"
         )
-    head = latest_version(path)
-    files = live_files(path, head)
-    schema = _schema_of(path, head)
-    if schema is None and files:
+    snap = _snapshot(path)
+    head, schema = snap.version, snap.schema
+    if schema is None and snap.files:
         raise ValueError(f"no schema recorded at {path}")
-    if not files:
+    if not snap.files:
         # empty target: only the NOT MATCHED insert clause can fire
         if not not_matched_insert:
             return head, 0, 0, 0
@@ -2749,20 +2699,13 @@ def manifest_merge_into(
             if with_schema_evolution:
                 keep += [c for c in source.columns if c not in keep]
             ins = ins.select(*[F.col(c) for c in keep])
-        version, _e, n_ins = manifest_evict_admit(
-            spark, path, hits=None, df=ins,
+        version, _e, n_ins = _evict_admit(
+            spark, snap, hits=None, df=ins,
             dv_target_files=dv_target_files, extra=extra,
             allow_additive=with_schema_evolution,
         )
         return version, 0, 0, n_ins if version != head else 0
-    dv_files, dv_targets = live_dv_state(path, head)
-    live = _scan_with_pos(
-        spark, path, files, schema, _mapping_of(path, head)
-    )
-    if dv_files and dv_targets:
-        live = _apply_dvs(
-            live, _dv_frame(spark, path, dv_files), keep_pos=True
-        )
+    live = snap.scan(spark, keep_pos=True)
     data_cols = [
         c for c in live.columns if c not in ("__dv_file", "__dv_pos")
     ]
@@ -2971,9 +2914,9 @@ def manifest_merge_into(
         # batch is already advisory-sized (measured: 1-2 files per
         # commit at bench scale; a REBALANCE hint added an exchange for
         # zero file-count change)
-        version, n_evicted, n_admitted = manifest_evict_admit(
+        version, n_evicted, n_admitted = _evict_admit(
             spark,
-            path,
+            snap,
             hits=hits,
             df=admits,
             dv_target_files=dv_target_files,
@@ -3019,24 +2962,15 @@ def manifest_update_where(
 
     Returns (new_version, n_rows_updated); no commit if nothing
     matched."""
-    head = latest_version(path)
-    files = live_files(path, head)
-    if not files:
+    snap = _snapshot(path)
+    head = snap.version
+    if not snap.files:
         return head, 0
-    schema = _schema_of(path, head)
-    if schema is not None:
-        unknown = [c for c in set_exprs if c not in set(schema.names)]
+    if snap.schema is not None:
+        unknown = [c for c in set_exprs if c not in set(snap.schema.names)]
         if unknown:
             raise ValueError(f"set_exprs assigns unknown columns {unknown}")
-    dv_files, dv_targets = live_dv_state(path, head)
-    live = _scan_with_pos(
-        spark, path, files, schema, _mapping_of(path, head)
-    )
-    if dv_files and dv_targets:
-        live = _apply_dvs(
-            live, _dv_frame(spark, path, dv_files), keep_pos=True
-        )
-    matched = live.where(F.coalesce(condition, F.lit(False))).persist()
+    matched = snap.scan(spark, keep_pos=True).where(F.coalesce(condition, F.lit(False))).persist()
     try:
         data_cols = [
             c for c in matched.columns if c not in ("__dv_file", "__dv_pos")
@@ -3047,9 +2981,9 @@ def manifest_update_where(
                 for c in data_cols
             ]
         )
-        version, n_evicted, n_admitted = manifest_evict_admit(
+        version, n_evicted, n_admitted = _evict_admit(
             spark,
-            path,
+            snap,
             hits=matched.select("__dv_file", "__dv_pos"),
             df=updated,
             dv_target_files=dv_target_files,
@@ -3101,7 +3035,7 @@ def manifest_alter_schema(
       pairs). Existing files read them as NULL.
     * ``rename``: ``{old: new}``. Files keep their PHYSICAL column name
       forever; the commit's column mapping re-labels it at read time
-      (``_scan_with_pos``/``read_snapshot``) and back at write time
+      (``_Snapshot.scan``) and back at write time
       (``_stage_batch``) — Delta column-mapping semantics, so a rename
       is O(1) regardless of table size.
     * ``widen``: ``{col: ddl}`` along :data:`_WIDENINGS` (int→long,
@@ -3121,14 +3055,14 @@ def manifest_alter_schema(
     duplicate result names, or non-widening type changes, and
     ``ConcurrentCommitError`` when racing another writer (retry on the
     new head — the alter is cheap to recompute)."""
-    head = latest_version(path)
-    schema = _schema_of(path, head)
+    snap = _snapshot(path)
+    head, schema = snap.version, snap.schema
     if schema is None:
         raise ValueError(
             f"table at {path} has no schema yet; append data first"
         )
-    mapping = _mapping_of(path, head)
-    retired = list(_retired_of(path, head))
+    mapping = dict(snap.mapping)
+    retired = list(snap.retired)
     fields = list(schema.fields)
     version = head + 1
 
@@ -3137,7 +3071,7 @@ def manifest_alter_schema(
     # expression — refuse (the Delta rule), drop the constraint first.
     # Conservative word-boundary match: a false positive merely asks the
     # user to drop/re-add, a false negative would corrupt enforcement.
-    cons = constraints_of(path, head)
+    cons = snap.constraints
     if cons:
         import re as _re
 
@@ -3284,41 +3218,54 @@ def manifest_evict_admit(
     error wins over any staging error — the observable outcome (no
     commit, table unchanged, the refusal's exception) is identical to
     running it first."""
-    head = latest_version(path)
+    return _evict_admit(
+        spark, _snapshot(path), hits=hits, df=df,
+        dv_target_files=dv_target_files, bloom_columns=bloom_columns,
+        bloom_bits=bloom_bits, bloom_hashes=bloom_hashes, extra=extra,
+        allow_additive=allow_additive, cluster_by=cluster_by,
+        cluster_tasks=cluster_tasks, pre_commit=pre_commit,
+    )
+
+
+def _evict_admit(
+    spark: SparkSession,
+    snap: _Snapshot,
+    *,
+    hits: DataFrame | None,
+    df: DataFrame | None,
+    dv_target_files: int = 1,
+    bloom_columns: tuple[str, ...] | list[str] = (),
+    bloom_bits: int = 1 << 17,
+    bloom_hashes: int = 7,
+    extra: dict | None = None,
+    allow_additive: bool = False,
+    cluster_by: str | None = None,
+    cluster_tasks: int = 1,
+    pre_commit=None,
+) -> tuple[int, int, int]:
+    """:func:`manifest_evict_admit` on top of ``snap`` — the snapshot
+    the caller positioned ``hits`` against (MERGE, UPDATE), so the
+    commit lands on exactly that head or loses the race."""
+    path, head = snap.path, snap.version
     if df is not None:
-        _check_schema(df, path, allow_additive=allow_additive)
-        if allow_additive:
-            # same physical-name guard as manifest_append: a brand-new
-            # column stages under its own name — refuse names claimed
-            # by a renamed column's physical name or retired by a drop
-            # (the old files' bytes would leak into the new column)
-            stored = _schema_of(path, head)
-            if stored is not None:
-                amap = _mapping_of(path, head)
-                claimed = {
-                    amap.get(f.name, f.name) for f in stored.fields
-                } | set(_retired_of(path, head))
-                fresh = [
-                    c for c in df.columns if c not in set(stored.names)
-                ]
-                bad = [c for c in fresh if c in claimed]
-                if bad:
-                    raise ValueError(
-                        f"additive column(s) {bad} collide with physical"
-                        " names in use or retired; use"
-                        " manifest_alter_schema add= instead"
-                    )
-    schema = _schema_of(path, head)
+        _check_schema(df, snap, allow_additive=allow_additive)
     version = head + 1
     stage_dirs: list[str] = []
-    added_dv: list[str] = []
     per_file: dict[str, int] = {}
-    dv_dir: str | None = None
-    data_dir: str | None = None
-    added: list[str] = []
-
-    def _stage_dv() -> tuple[str, list[str]]:
-        return _stage_batch(
+    work = {}
+    if pre_commit is not None:
+        work["pre"] = pre_commit
+    if df is not None:
+        # cluster_by routes the admit half through the clustered
+        # one-task-many-files writer (per-key file granularity at
+        # cluster_tasks writer tasks — the streaming state-table
+        # grain); None keeps the plain parallel parquet write
+        work["data"] = lambda: _stage_batch(
+            df, path, version, snap=snap, verify=True,
+            cluster_by=cluster_by, cluster_tasks=cluster_tasks,
+        )
+    if hits is not None:
+        work["dv"] = lambda: _stage_batch(
             hits.select(
                 F.col("__dv_file").alias("file"),
                 F.col("__dv_pos").alias("pos"),
@@ -3327,76 +3274,9 @@ def manifest_evict_admit(
             version,
             prefix="dv",
         )
-
-    def _stage_data() -> tuple[str, list[str]]:
-        # cluster_by routes the admit half through the clustered
-        # one-task-many-files writer (per-key file granularity at
-        # cluster_tasks writer tasks — the streaming state-table
-        # grain); None keeps the plain parallel parquet write
-        return _stage_batch(
-            df, path, version, verify=True,
-            cluster_by=cluster_by, cluster_tasks=cluster_tasks,
-        )
-
-    work = []
-    if pre_commit is not None:
-        work.append(("pre", pre_commit))
-    if df is not None:
-        work.append(("data", _stage_data))
-    if hits is not None:
-        work.append(("dv", _stage_dv))
-    if len(work) > 1:
-        # OVERLAP the independent pre-commit jobs (r15, VERDICT r14
-        # item 4 / guide §2.6): the dv write, the admit write and the
-        # caller's pre-commit check share no state and the writes land
-        # in separate uniquely-named dirs — atomicity lives in the
-        # single commit doc below, not in write order — so per
-        # MERGE/evict-admit commit the fixed job latency is paid once,
-        # not N times. Inheritable threads keep job descriptions /
-        # groups correct per job.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        results: dict = {}
-        errors: dict = {}
-        with ThreadPoolExecutor(max_workers=len(work)) as pool:
-            futs = {
-                kind: pool.submit(inheritable_thread_target(fn))
-                for kind, fn in work
-            }
-            for kind, fut in futs.items():
-                try:
-                    results[kind] = fut.result()
-                except Exception as exc:  # noqa: BLE001 - joined below
-                    errors[kind] = exc
-        if "dv" in results:
-            dv_dir, added_dv = results["dv"]
-        if "data" in results:
-            data_dir, added = results["data"]
-        if errors:
-            # a refusal or staging failure on ANY part must not orphan
-            # the others' staged files — nothing references them yet.
-            # Error priority mirrors the sequential order this replaces:
-            # the caller's refusal wins over an admit-half abort, which
-            # wins over a dv failure.
-            for rel in (dv_dir, data_dir):
-                if rel is not None:
-                    shutil.rmtree(
-                        os.path.join(path, rel), ignore_errors=True
-                    )
-            raise (
-                errors.get("pre") or errors.get("data") or errors.get("dv")
-            )
-    elif work:
-        kind, fn = work[0]
-        if kind == "dv":
-            dv_dir, added_dv = fn()
-        elif kind == "data":
-            data_dir, added = fn()
-        else:
-            fn()
-
+    staged = _stage_overlapped(spark, path, work)
+    data_dir, added = staged.get("data", (None, []))
+    dv_dir, added_dv = staged.get("dv", (None, []))
     if added_dv:
         per_file = _dv_file_counts(path, added_dv)
         if not per_file:
@@ -3414,22 +3294,21 @@ def manifest_evict_admit(
             added, stats, row_counts = [], {}, {}
         else:
             stage_dirs.append(data_dir)
-            emap = _mapping_of(path, head)
             blooms = (
                 _build_blooms(
                     spark, path, added,
-                    [emap.get(c, c) for c in bloom_columns],
+                    [snap.mapping.get(c, c) for c in bloom_columns],
                     bloom_bits, bloom_hashes,
                 )
                 if bloom_columns
-                else _rebuild_blooms(spark, path, added, head)
+                else _rebuild_blooms(spark, snap, added)
             )
     if not added and not per_file:
         return head, 0, 0
     doc_schema = (
         df.schema.jsonValue()
         if df is not None
-        else (None if schema is None else schema.jsonValue())
+        else (None if snap.schema is None else snap.schema.jsonValue())
     )
     _commit_or_cleanup(
         path,
@@ -3474,60 +3353,28 @@ def manifest_materialize_deletes(
     counts fall back to the single-stage rewrite with no segments.
 
     Returns (new_version, n_files_rewritten)."""
-    head = latest_version(path)
-    dv_files, dv_targets = live_dv_state(path, head)
+    snap = _snapshot(path)
+    head, dv_files, dv_targets = snap.version, snap.dv_files, snap.dv_targets
     if not dv_files or not dv_targets:
         return head, 0
     affected = sorted(dv_targets)
-    schema = _schema_of(path, head)
-    mapping = _mapping_of(path, head)
-    dvs = _dv_frame(spark, path, dv_files)
     version = head + 1
-    rc = live_row_counts(path, head)
+    rc = snap.row_counts
     stage_dirs: list[str] = []
     added: list[str] = []
     segments: dict[str, list] = {}
     if all(f in rc for f in affected):
         # metadata-exact survivor counts per file; skip files with none
-        surv_n = {f: rc[f] - dv_targets.get(f, 0) for f in affected}
-        live_srcs = [f for f in affected if surv_n[f] > 0]
-        sizes = {
-            f: os.path.getsize(os.path.join(path, f)) for f in live_srcs
-        }
-        bins: list[list[str]] = [[]]
-        acc = 0
-        for f in live_srcs:  # name-sorted (affected is sorted)
-            if bins[-1] and acc + sizes[f] > target_file_bytes:
-                bins.append([])
-                acc = 0
-            bins[-1].append(f)
-            acc += sizes[f]
-        for bin_files in bins:
-            if not bin_files:
-                continue
-            survivors = _apply_dvs(
-                _scan_with_pos(spark, path, bin_files, schema, mapping),
-                dvs,
-                keep_pos=True,
-            )
-            packed = (
-                survivors.coalesce(1)
-                .sortWithinPartitions("__dv_file", "__dv_pos")
-                .drop("__dv_file", "__dv_pos")
-            )
-            d, a = _stage_batch(packed, path, version)
-            stage_dirs.append(d)
-            added += a
-            if a:
-                segments[a[0]] = [
-                    [f, -1, surv_n[f]] for f in bin_files
-                ]
-    else:
-        survivors = _apply_dvs(
-            _scan_with_pos(spark, path, affected, schema, mapping), dvs
+        stage_dirs, added, segments = _rewrite_survivors(
+            spark,
+            snap,
+            {f: rc[f] - dv_targets.get(f, 0) for f in affected},
+            target_file_bytes,
         )
+    else:
+        survivors = snap.scan(spark, affected)
         if survivors.limit(1).count():
-            d, added = _stage_batch(survivors, path, version)
+            d, added = _stage_batch(survivors, path, version, snap=snap)
             stage_dirs.append(d)
     stats, row_counts = _stage_stats(path, added)
     _validate_segments(path, segments, row_counts, stage_dirs, "materialize")
@@ -3537,12 +3384,12 @@ def manifest_materialize_deletes(
             "version": version,
             "parent": head,
             "operation": "materialize",
-            "schema": None if schema is None else schema.jsonValue(),
+            "schema": None if snap.schema is None else snap.schema.jsonValue(),
             "added": added,
             "removed": affected,
             "stats": stats,
             "row_counts": row_counts,
-            "blooms": _rebuild_blooms(spark, path, added, head),
+            "blooms": _rebuild_blooms(spark, snap, added),
             "dv_added": [],
             "dv_removed": dv_files,
             "dv_targets": {},
@@ -3575,17 +3422,14 @@ def metadata_only_stats(
     * string stats are refused — parquet writers may truncate string
       min/max in the footer, so only numerically-typed stats are exact.
     """
-    if version is None:
-        version = latest_version(path)
-    files = live_files(path, version)
-    rc = live_row_counts(path, version)
+    snap = _snapshot(path, version)
+    files, rc, dv_targets = snap.files, snap.row_counts, snap.dv_targets
     missing = [f for f in files if f not in rc]
     if missing:
         raise ValueError(
             f"{len(missing)} live file(s) predate recorded row counts"
             f" (e.g. {missing[0]}); compact or re-append to record them"
         )
-    dv_files, dv_targets = live_dv_state(path, version)
     n = sum(rc[f] for f in files) - sum(
         dv_targets.get(f, 0) for f in files
     )
@@ -3598,8 +3442,7 @@ def metadata_only_stats(
             " live (a vector may delete the extreme row);"
             " materialize_deletes first"
         )
-    stats = live_file_stats(path, version)
-    mapping = _mapping_of(path, version)
+    stats, mapping = snap.stats, snap.mapping
     # a 0-row file has no footer column stats and cannot hold the
     # extreme row — exactness only needs stats on files WITH rows
     occupied = [f for f in files if rc[f] > 0]
@@ -3643,17 +3486,16 @@ def manifest_compact(
     (``sources.layout.zvalue`` — bounded rectangles in both dims), the
     classic layout for two-column prune workloads. Still a data no-op.
     """
-    head = latest_version(path)
-    files = live_files(path, head)
-    dv_files, _dv_targets = live_dv_state(path, head)
+    snap = _snapshot(path)
+    head, files, dv_files = snap.version, snap.files, snap.dv_files
     if len(files) <= target_files and not cluster_by and not dv_files:
         return head
-    # read_snapshot applies any live deletion vectors, so compaction
-    # doubles as materialization — every vector is retired below
-    snap = read_snapshot(spark, path, head)
+    # the scan applies any live deletion vectors, so compaction doubles
+    # as materialization — every vector is retired below
+    rows = snap.scan(spark)
     if cluster_by:
         if len(cluster_by) == 1:
-            clustered = snap.repartitionByRange(
+            clustered = rows.repartitionByRange(
                 target_files, cluster_by[0]
             ).sortWithinPartitions(cluster_by[0])
         elif len(cluster_by) == 2:
@@ -3665,8 +3507,7 @@ def manifest_compact(
             # value space). Normalize each dim to the bits-wide grid
             # by its LIVE global min/max first — read from footer
             # stats (metadata-only) with a one-row agg fallback.
-            stats = live_file_stats(path, head)
-            cmap = _mapping_of(path, head)
+            stats, cmap = snap.stats, snap.mapping
             grid = (1 << zorder_bits) - 1
             dims = []
             for c in cluster_by:
@@ -3689,7 +3530,7 @@ def manifest_compact(
                 if mins and maxs and numeric:
                     lo, hi = min(mins), max(maxs)
                 else:
-                    r = snap.agg(F.min(c), F.max(c)).collect()[0]
+                    r = rows.agg(F.min(c), F.max(c)).collect()[0]
                     lo, hi = r[0], r[1]
                 if lo is None or hi is None:
                     raise ValueError(
@@ -3706,7 +3547,7 @@ def manifest_compact(
                 )
             z = zvalue(dims[0], dims[1], zorder_bits)
             clustered = (
-                snap.withColumn("__z", z)
+                rows.withColumn("__z", z)
                 .repartitionByRange(target_files, "__z")
                 .sortWithinPartitions("__z")
                 .drop("__z")
@@ -3714,9 +3555,9 @@ def manifest_compact(
         else:
             raise ValueError("cluster_by supports 1 or 2 columns")
     else:
-        clustered = snap.coalesce(target_files)
+        clustered = rows.coalesce(target_files)
     version = head + 1
-    stage_dir, added = _stage_batch(clustered, path, version)
+    stage_dir, added = _stage_batch(clustered, path, version, snap=snap)
     stats, row_counts = _stage_stats(path, added)
     return _commit_or_cleanup(
         path,
@@ -3724,12 +3565,12 @@ def manifest_compact(
             "version": version,
             "parent": head,
             "operation": "compact",
-            "schema": snap.schema.jsonValue(),
+            "schema": rows.schema.jsonValue(),
             "added": added,
             "removed": files,
             "stats": stats,
             "row_counts": row_counts,
-            "blooms": _rebuild_blooms(spark, path, added, head),
+            "blooms": _rebuild_blooms(spark, snap, added),
             "dv_added": [],
             "dv_removed": dv_files,
             "dv_targets": {},
@@ -3797,10 +3638,9 @@ def manifest_compact_small(
     Returns (head_after, n_files_packed); no commit when fewer than two
     pack candidates exist or packing would not reduce the file count.
     """
-    head = latest_version(path)
-    files = live_files(path, head)
-    dv_files, dv_targets = live_dv_state(path, head)
-    vectored = set(dv_targets) if dv_files else set()
+    snap = _snapshot(path)
+    head, files, stats = snap.version, snap.files, snap.stats
+    vectored = set(snap.dv_targets) if snap.dv_files else set()
     sizes = {f: os.path.getsize(os.path.join(path, f)) for f in files}
     small = sorted(
         f
@@ -3814,9 +3654,8 @@ def manifest_compact_small(
             "cluster_stat and cluster_stat_pair are mutually exclusive"
         )
     if cluster_stat:
-        stats = live_file_stats(path, head)
         # footer stats are keyed by PHYSICAL name; callers order by logical
-        cs = _mapping_of(path, head).get(cluster_stat, cluster_stat)
+        cs = snap.mapping.get(cluster_stat, cluster_stat)
         small.sort(
             key=lambda f: (
                 (0, stats[f][cs][0])
@@ -3825,8 +3664,7 @@ def manifest_compact_small(
             )
         )
     elif cluster_stat_pair:
-        stats = live_file_stats(path, head)
-        cmap = _mapping_of(path, head)
+        cmap = snap.mapping
         ca, cb = (
             cmap.get(cluster_stat_pair[0], cluster_stat_pair[0]),
             cmap.get(cluster_stat_pair[1], cluster_stat_pair[1]),
@@ -3868,31 +3706,22 @@ def manifest_compact_small(
             )
     # first-fit bins over the ordered candidates — whole files only,
     # so every output's row provenance is exact metadata
-    bins: list[list[str]] = [[]]
-    acc = 0
-    for f in small:
-        if bins[-1] and acc + sizes[f] > target_file_bytes:
-            bins.append([])
-            acc = 0
-        bins[-1].append(f)
-        acc += sizes[f]
+    bins = _pack_bins(small, sizes, target_file_bytes)
     if len(bins) >= len(small):
         return head, 0
-    schema = _schema_of(path, head)
-    rc = live_row_counts(path, head)
+    rc = snap.row_counts
     version = head + 1
     stage_dirs: list[str] = []
     added: list[str] = []
     segments: dict[str, list] = {}
-    cmap = _mapping_of(path, head)
     for bin_files in bins:
         packed = (
-            _scan_with_pos(spark, path, bin_files, schema, cmap)
+            snap.scan(spark, bin_files, keep_pos=True, dvs=[])
             .coalesce(1)
             .sortWithinPartitions("__dv_file", "__dv_pos")
             .drop("__dv_file", "__dv_pos")
         )
-        d, a = _stage_batch(packed, path, version)
+        d, a = _stage_batch(packed, path, version, snap=snap)
         stage_dirs.append(d)
         added += a
         if a:
@@ -3914,12 +3743,12 @@ def manifest_compact_small(
             "version": version,
             "parent": head,
             "operation": "compact",
-            "schema": None if schema is None else schema.jsonValue(),
+            "schema": None if snap.schema is None else snap.schema.jsonValue(),
             "added": added,
             "removed": small,
             "stats": stats,
             "row_counts": row_counts,
-            "blooms": _rebuild_blooms(spark, path, added, head),
+            "blooms": _rebuild_blooms(spark, snap, added),
             "dv_added": [],
             "dv_removed": [],
             "dv_targets": {},
@@ -3953,11 +3782,11 @@ def manifest_auto_optimize(
     Returns {"materialized": n_files_rewritten, "compacted": bool,
     "version": head_after} — all zeros/False when no threshold trips, in
     which case NO version is committed (idempotent under cron)."""
-    head = latest_version(path)
-    out = {"materialized": 0, "compacted": False, "version": head}
-    _dv_files, dv_targets = live_dv_state(path, head)
+    snap = _snapshot(path)
+    out = {"materialized": 0, "compacted": False, "version": snap.version}
+    dv_targets = snap.dv_targets
     if dv_targets:
-        rc = live_row_counts(path, head)
+        rc = snap.row_counts
         affected_rows = sum(
             rc.get(f, 0) for f in dv_targets if f in rc
         )
@@ -3965,8 +3794,7 @@ def manifest_auto_optimize(
         if affected_rows and deleted / affected_rows > max_deleted_fraction:
             _v, n = manifest_materialize_deletes(spark, path)
             out["materialized"] = n
-    head = latest_version(path)
-    if len(live_files(path, head)) > max_files:
+    if len(live_files(path)) > max_files:
         manifest_compact(
             spark, path, target_files=target_files, cluster_by=cluster_by
         )
@@ -3989,114 +3817,59 @@ def manifest_vacuum(path: str, *, keep_from_version: int) -> int:
             f"keep_from_version {keep_from_version} retains no versions"
         )
     base = keep_versions[0]
+    # ONE walk of the log: the folded state at each retained version
+    # names what must survive, and at the base it becomes the checkpoint
+    state = _Snapshot(path)
     retained: set[str] = set()
-    for v in keep_versions:
-        retained.update(live_files(path, v))
-        retained.update(live_dv_state(path, v)[0])
+    ever: set[str] = set()
+    # CATALOG-TRANSACTION tags (sources/catalog.py) of the base and its
+    # dropped ancestors: roll-forward's idempotency scan must still find
+    # them, or a lost marker file would let it RE-APPLY the txn
+    dropped_txns: list = []
+    for v in versions:
+        doc = read_version_doc(path, v)
+        state.advance(v, doc)
+        ever.update(doc["added"])
+        ever.update(doc.get("dv_added", []))
+        ever.update(doc.get("dv_matched", []))
+        if v <= base:
+            for t in [doc.get("catalog_txn")] + doc.get(
+                "catalog_txns_applied", []
+            ):
+                if t is not None and t not in dropped_txns:
+                    dropped_txns.append(t)
+        if v == base:
+            # the base doc becomes self-contained (full live set, no
+            # parent), so later docs still apply incrementally on top
+            base_doc = state.checkpoint_doc(
+                doc, version=base, operation="checkpoint"
+            )
+        if v < base:
+            continue
+        retained.update(state.files)
+        retained.update(state.dv_files)
         # a retained doc's own dv_added / dv_matched must stay readable
         # even after the vectors are retired from live state —
         # read_changes / read_change_feed over retained ranges scan them
         # directly
-        retained.update(read_version_doc(path, v).get("dv_added", []))
-        retained.update(read_version_doc(path, v).get("dv_matched", []))
+        retained.update(doc.get("dv_added", []))
+        retained.update(doc.get("dv_matched", []))
         # likewise data files appended by retained data-changing commits:
         # read_changes scans the ORIGINAL files even after an in-range
         # rewrite retired them from the live set. SEGMENTED rewrite
         # outputs are feed-scannable too (read_changes follows mixed
         # rewrites through their recorded provenance), so they survive
         # vacuum the same way
-        doc = read_version_doc(path, v)
         if doc.get("operation", "append") not in (
             "compact",
             "materialize",
             "checkpoint",
         ) or doc.get("segments"):
             retained.update(doc["added"])
-    ever: set[str] = set()
-    for v in versions:
-        doc = read_version_doc(path, v)
-        ever.update(doc["added"])
-        ever.update(doc.get("dv_added", []))
-        ever.update(doc.get("dv_matched", []))
-
-    # checkpoint the base BEFORE dropping its ancestors: its doc becomes
-    # self-contained (full live set, no parent), so later docs still
-    # apply incrementally on top. Maintenance op → os.replace, not the
-    # create-if-absent commit path.
-    _CHECKPOINT_FIELDS = {
-        "version",
-        "parent",
-        "operation",
-        "schema",
-        "added",
-        "removed",
-        "stats",
-        "row_counts",
-        "blooms",
-        "dv_added",
-        "dv_removed",
-        "dv_targets",
-        "dv_matched",
-        "stream_batch_id",
-        "stream_batch_ids",
-    }
-    orig_base = read_version_doc(path, base)
-    # stream replay guard must survive retention: union the batch ids of
-    # every DROPPED ancestor (and the base's own) into the checkpoint.
-    # Same for CATALOG-TRANSACTION tags (sources/catalog.py): roll-
-    # forward's idempotency scan must still find a dropped ancestor's
-    # txn tag, or a lost marker file would let it RE-APPLY the txn.
-    dropped_sbids: set = set()
-    dropped_txns: list = []
-    for v in versions:
-        if v >= keep_from_version and v != base:
-            continue
-        d = read_version_doc(path, v)
-        if "stream_batch_id" in d:
-            dropped_sbids.add(d["stream_batch_id"])
-        dropped_sbids.update(d.get("stream_batch_ids", []))
-        if "catalog_txn" in d:
-            dropped_txns.append(d["catalog_txn"])
-        dropped_txns.extend(d.get("catalog_txns_applied", []))
-    base_schema = _schema_of(path, base)
-    base_mapping = _mapping_of(path, base)
-    base_retired = _retired_of(path, base)
-    base_constraints = constraints_of(path, base)
-    base_dv_files, base_dv_targets = live_dv_state(path, base)
-    base_doc = {
-        # unknown/extra fields a writer attached to the base commit
-        # (lineage tags, app metadata) carry over verbatim
-        **{k: v for k, v in orig_base.items() if k not in _CHECKPOINT_FIELDS},
-        "version": base,
-        "parent": None,
-        "operation": "checkpoint",
-        "schema": None if base_schema is None else base_schema.jsonValue(),
-        "added": live_files(path, base),
-        "removed": [],
-        "stats": live_file_stats(path, base),
-        "row_counts": live_row_counts(path, base),
-        "blooms": live_file_blooms(path, base),
-        "dv_added": base_dv_files,
-        "dv_removed": [],
-        "dv_targets": base_dv_targets,
-    }
-    if dropped_sbids:
-        base_doc["stream_batch_ids"] = sorted(dropped_sbids)
     if dropped_txns:
-        # dedup while preserving JSON-safe dict tags
-        seen: list = []
-        for t in dropped_txns:
-            if t not in seen:
-                seen.append(t)
-        base_doc["catalog_txns_applied"] = seen
-    # column mapping + retired-physical survive retention: the alter
-    # commits that carried them may be below the horizon
-    if base_mapping:
-        base_doc["mapping"] = base_mapping
-    if base_retired:
-        base_doc["retired_physical"] = base_retired
-    if base_constraints:
-        base_doc["constraints"] = base_constraints
+        base_doc["catalog_txns_applied"] = dropped_txns
+    # checkpoint the base BEFORE dropping its ancestors. Maintenance op
+    # → os.replace, not the create-if-absent commit path.
     _replace_doc(_version_doc_path(path, base), base_doc)
 
     doomed = sorted(ever - retained)
@@ -4143,13 +3916,10 @@ def manifest_clone(
     deletes, schema changes, compaction, and vacuum on either side
     never observe the other. Returns the clone's head version (0).
     """
-    if version is None:
-        version = latest_version(src)
     if os.path.isdir(_manifest_dir(dst)) and list_versions(dst):
         raise FileExistsError(f"manifest table already exists at {dst}")
-
-    files = live_files(src, version)
-    dv_files, dv_targets = live_dv_state(src, version)
+    snap = _snapshot(src, version)
+    files, dv_files = snap.files, snap.dv_files
     linked = True
     for rel in [*files, *dv_files]:
         sfp = os.path.join(src, rel)
@@ -4166,44 +3936,13 @@ def manifest_clone(
         except OSError:
             shutil.copy2(sfp, dfp)  # cross-device (EXDEV): real copy
             linked = False
-
-    schema = _schema_of(src, version)
-    mapping = _mapping_of(src, version)
-    retired = _retired_of(src, version)
-    cons = constraints_of(src, version)
-    sbids: set = set()
-    for v in list_versions(src):
-        if v > version:
-            break
-        d = read_version_doc(src, v)
-        if "stream_batch_id" in d:
-            sbids.add(d["stream_batch_id"])
-        sbids.update(d.get("stream_batch_ids", []))
-    doc = {
-        "version": 0,
-        "parent": None,
-        "operation": "clone",
-        "clone_source": os.path.abspath(src),
-        "clone_source_version": version,
-        "linked": linked,
-        "schema": None if schema is None else schema.jsonValue(),
-        "added": files,
-        "removed": [],
-        "stats": live_file_stats(src, version),
-        "row_counts": live_row_counts(src, version),
-        "blooms": live_file_blooms(src, version),
-        "dv_added": dv_files,
-        "dv_removed": [],
-        "dv_targets": dv_targets,
-    }
-    if mapping:
-        doc["mapping"] = mapping
-    if retired:
-        doc["retired_physical"] = retired
-    if cons:
-        doc["constraints"] = cons
-    if sbids:
-        doc["stream_batch_ids"] = sorted(sbids)
+    doc = snap.checkpoint_doc(
+        version=0,
+        operation="clone",
+        clone_source=os.path.abspath(src),
+        clone_source_version=snap.version,
+        linked=linked,
+    )
     try:
         return _commit_version(dst, doc)
     except ConcurrentCommitError:
@@ -4230,8 +3969,7 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
     the other layers stamp (stream batch ids, catalog transaction tags,
     clone sources). Newest first."""
     rows = []
-    for v in reversed(list_versions(path)):
-        doc = read_version_doc(path, v)
+    for v, doc in reversed(_snapshot(path).log):
         rc = doc.get("row_counts", {})
         txn = doc.get("catalog_txn")
         rows.append(

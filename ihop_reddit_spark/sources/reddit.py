@@ -8,6 +8,7 @@ null-filled (the reference's known failure mode, ``README.md:84``).
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,6 +18,10 @@ from pyspark.sql import types as T
 from ..schemas import COMMENTS_SCHEMA, CONTEXTS_SCHEMA, SUBMISSIONS_SCHEMA
 
 CORRUPT_COL = "_corrupt_record"
+
+#: sessions the ``zstjsonl`` data source is registered with: Spark warns
+#: on every re-registration; weak, so a discarded session drops out
+_ZST_SESSIONS: weakref.WeakSet = weakref.WeakSet()
 
 
 def read_jsonl(
@@ -86,7 +91,9 @@ def read_jsonl_zst(
         read_schema = T.StructType(
             list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
         )
-    spark.dataSource.register(ZstJsonlDataSource)
+    if spark not in _ZST_SESSIONS:
+        spark.dataSource.register(ZstJsonlDataSource)
+        _ZST_SESSIONS.add(spark)
     lines = spark.read.format("zstjsonl").load(list(paths))
     parsed = lines.select(
         F.from_json(

@@ -93,6 +93,38 @@ def test_read_jsonl_zst_roundtrip(spark, tmp_path):
     assert corrupt_record_count(with_corrupt) == 2
 
 
+def test_read_jsonl_zst_registers_the_source_once_per_session(
+    spark, tmp_path, monkeypatch
+):
+    """Two reads in one session register ``zstjsonl`` once: Spark logs a
+    replaced-data-source warning on every re-registration."""
+    import weakref
+
+    import pyarrow as pa
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from ihop_reddit_spark.schemas import COMMENTS_SCHEMA
+    from ihop_reddit_spark.sources import reddit
+
+    p = tmp_path / "a.zst"
+    with pa.output_stream(str(p), compression="zstd") as out:
+        out.write((COMMENT + "\n").encode())
+    calls = []
+    real = DataSourceRegistration.register
+
+    def counting(self, source):
+        calls.append(source.name())
+        return real(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    # forget earlier tests' reads: this session starts unregistered
+    monkeypatch.setattr(reddit, "_ZST_SESSIONS", weakref.WeakSet())
+    for _ in range(2):
+        df = reddit.read_jsonl_zst(spark, str(p), COMMENTS_SCHEMA)
+        assert df.count() == 1
+    assert calls == ["zstjsonl"]
+
+
 def test_parquet_sink_partitioned_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "2021-04", "a"), (2, "2021-04", "b"), (3, "2021-05", "c")],
@@ -1904,22 +1936,22 @@ def test_manifest_evict_admit_race_cleans_both_stages(spark, tmp_path):
     hits = state.where(F.col("id") < 3).select("__dv_file", "__dv_pos")
     admit = spark.range(100, 105)
 
-    # another writer wins version 2 between this writer's head read and
+    # another writer wins version 2 between this writer's snapshot and
     # its commit: force it by committing v2 out from under evict_admit
-    real_latest = M.latest_version
+    real_snapshot = M._snapshot
 
-    def stale_then_real(path):
-        M.latest_version = real_latest
-        head = real_latest(path)
+    def stale_then_real(path, version=None):
+        M._snapshot = real_snapshot
+        snap = real_snapshot(path, version)
         M.manifest_append(spark.range(50, 55), root)  # the racing winner
-        return head
+        return snap
 
-    M.latest_version = stale_then_real
+    M._snapshot = stale_then_real
     try:
         with pytest.raises(M.ConcurrentCommitError):
             M.manifest_evict_admit(spark, root, hits=hits, df=admit)
     finally:
-        M.latest_version = real_latest
+        M._snapshot = real_snapshot
     # both of the loser's stage dirs are gone: data/ holds only files
     # referenced by version docs
     referenced = set()
@@ -2370,7 +2402,7 @@ def test_manifest_clone_carries_mapping_blooms_and_stream_guard(
     # renamed logical schema readable; physical mapping carried
     snap = M.read_snapshot(spark, dst)
     assert snap.columns == ["k", "val"]
-    assert M._mapping_of(dst, 0) == M._mapping_of(src)
+    assert M._snapshot(dst, 0).mapping == M._snapshot(src).mapping
     # blooms carried (same per-file entries), so point lookups skip
     assert M.live_file_blooms(dst, 0) == M.live_file_blooms(
         src, M.latest_version(src)
@@ -2496,6 +2528,111 @@ def test_manifest_constraints_survive_vacuum_and_clone(spark, tmp_path):
     assert M.constraints_of(dst) == {"k_pos": "k > 0"}
     with pytest.raises(ValueError, match="k_pos"):
         M.manifest_append(spark.createDataFrame([(-3,)], "k long"), dst)
+
+
+def test_manifest_ops_replay_the_log_once(spark, tmp_path, monkeypatch):
+    """Each operation reads the commit log through ONE snapshot: one
+    listing and at most one read per version doc, so head, schema,
+    mapping and vector state all come from the same version."""
+    import collections
+
+    from ihop_reddit_spark.sources import manifest as M
+
+    root = str(tmp_path / "tbl")
+    M.manifest_init(root)
+    for i in range(4):
+        M.manifest_append(
+            spark.range(i * 10, i * 10 + 10).withColumn("v", F.col("id")),
+            root,
+        )
+    calls: collections.Counter = collections.Counter()
+    real_list, real_read = M.list_versions, M.read_version_doc
+
+    def counting_list(path):
+        calls["list"] += 1
+        return real_list(path)
+
+    def counting_read(path, version):
+        calls["read"] += 1
+        return real_read(path, version)
+
+    monkeypatch.setattr(M, "list_versions", counting_list)
+    monkeypatch.setattr(M, "read_version_doc", counting_read)
+    ops = {
+        "manifest_append": lambda: M.manifest_append(
+            spark.range(100, 105).withColumn("v", F.col("id")), root
+        ),
+        # leaves a live deletion vector for the two ops after it
+        "manifest_merge_upsert": lambda: M.manifest_merge_upsert(
+            spark, root, spark.range(0, 3).withColumn("v", -F.col("id")),
+            "id",
+        ),
+        "manifest_delete_where": lambda: M.manifest_delete_where(
+            spark, root, F.col("id") == 15
+        ),
+        "read_snapshot": lambda: M.read_snapshot(spark, root).count(),
+    }
+    for name, op in ops.items():
+        n_versions = len(real_list(root))
+        calls.clear()
+        op()
+        assert calls["list"] == 1, (name, calls)
+        assert calls["read"] <= n_versions, (name, calls)
+    assert M.read_snapshot(spark, root).count() == 44
+
+
+def test_manifest_snapshot_survives_vacuum_and_clone_whole(spark, tmp_path):
+    """Every replayed field — files, schema, column mapping, retired
+    names, constraints, per-file stats/row counts/blooms, live vectors,
+    stream batch ids — reads the same at each retained version after
+    vacuum folds the chain into a checkpoint, and from a clone."""
+    import dataclasses
+
+    from ihop_reddit_spark.sources import manifest as M
+
+    root = str(tmp_path / "tbl")
+    M.manifest_init(root)
+    M.manifest_append(  # v1
+        spark.range(0, 12).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
+            F.lit("x").alias("w"),
+        ).repartition(2),
+        root, bloom_columns=("k",), extra={"stream_batch_id": 1},
+    )
+    M.manifest_alter_schema(root, rename={"v": "val"}, drop=["w"])  # v2
+    M.manifest_add_constraint(spark, root, "k_nonneg", "k >= 0")  # v3
+
+    def batch(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("val")
+        )
+
+    M.manifest_append(batch(12, 20), root, extra={"stream_batch_id": 2})
+    M.manifest_delete_rows(  # v5: a live deletion vector
+        spark, root, F.col("k") == 3, extra={"stream_batch_id": 3}
+    )
+    M.manifest_append(batch(20, 24), root, extra={"stream_batch_id": 4})
+    head = M.latest_version(root)
+    assert head == 6
+    before = {v: M._snapshot(root, v) for v in range(4, head + 1)}
+    top = before[head]
+    assert top.mapping == {"val": "v"} and top.retired == ["w"]
+    assert top.constraints == {"k_nonneg": "k >= 0"}
+    assert top.dv_files and top.dv_targets
+    assert all(top.blooms[f] for f in top.files)
+    assert top.stream_batch_ids == {1, 2, 3, 4}
+
+    M.manifest_vacuum(root, keep_from_version=4)
+    assert M.list_versions(root) == [4, 5, 6]
+    for v, snap in before.items():
+        assert M._snapshot(root, v) == snap, v
+
+    for v in (5, head):
+        dst = str(tmp_path / f"clone{v}")
+        M.manifest_clone(root, dst, version=v)
+        clone = M._snapshot(dst, 0)
+        assert dataclasses.replace(clone, version=v) == before[v], v
+    assert M.read_snapshot(spark, dst).count() == 23
 
 
 def test_catalog_txn_append_enforces_constraints(spark, tmp_path):
