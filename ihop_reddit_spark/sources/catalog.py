@@ -169,6 +169,37 @@ def _find_materialized(
     return None
 
 
+def _verify_constraint_delta(
+    snap: M._Snapshot, payload: dict, what: str, table: str
+) -> None:
+    """Verify a payload's staged rows against the CHECK constraints of
+    ``snap`` that differ from the set the payload recorded at stage
+    time. A constraint that landed on the table log after the stage
+    (table-log order puts it BEFORE the materialized version) must
+    still gate these rows, and stage-time verify cannot have seen it;
+    the common no-new-constraint path costs one dict compare. Raises
+    when such a delta exists and no SparkSession is active."""
+    delta = {
+        n: e
+        for n, e in snap.constraints.items()
+        if payload.get("constraints", {}).get(n) != e
+    }
+    if not delta:
+        return
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        raise RuntimeError(
+            f"{what} must re-verify constraints {sorted(delta)} on table"
+            f" {table!r} but no SparkSession is active"
+        )
+    M._verify_constraints(
+        spark,
+        snap,
+        [os.path.join(snap.path, r) for r in payload["added"]],
+        cons=delta,
+    )
+
+
 def roll_forward(cat: str) -> dict[int, dict[str, int]]:
     """Materialize every committed-but-unapplied catalog transaction as
     ordinary table version docs, IN CATALOG ORDER (the serialization
@@ -204,32 +235,10 @@ def roll_forward(cat: str) -> dict[int, dict[str, int]]:
                 done = _find_materialized(snap, cat, cv)
                 if done is not None:
                     break
-                # a CHECK constraint that landed on the table log AFTER
-                # this txn staged (table-log order puts it BEFORE our
-                # materialized version) must still gate these rows —
-                # stage-time verify can't have seen it. Verify only the
-                # delta vs the payload's recorded stage-time set; the
-                # common no-new-constraint path costs one dict compare.
-                delta = {
-                    n: e
-                    for n, e in snap.constraints.items()
-                    if payload.get("constraints", {}).get(n) != e
-                }
-                if delta:
-                    spark = SparkSession.getActiveSession()
-                    if spark is None:
-                        raise RuntimeError(
-                            f"catalog roll-forward of {cat} v{cv} must"
-                            f" re-verify constraints {sorted(delta)} on"
-                            f" table {name!r} but no SparkSession is"
-                            " active"
-                        )
-                    M._verify_constraints(
-                        spark,
-                        snap,
-                        [os.path.join(path, r) for r in payload["added"]],
-                        cons=delta,
-                    )
+                _verify_constraint_delta(
+                    snap, payload, f"catalog roll-forward of {cat} v{cv}",
+                    name,
+                )
                 try:
                     # a schema-bearing commit newer than the stage wins:
                     # committing the stage-time schema verbatim would
@@ -387,26 +396,28 @@ class CatalogTransaction:
         # ONE table snapshot, taken before staging: its constraints are
         # both verified against the staged files and recorded in the
         # payload, so recorded == verified by construction. A second
-        # read after the _stage_stats/_rebuild_blooms jobs would let a
-        # constraint added in that window be recorded as seen yet never
-        # verified — and the commit()/roll_forward delta compare (which
-        # only re-verifies entries that DIFFER from the recorded set)
-        # would then skip it.
+        # read after the stats/blooms jobs would let a constraint added
+        # in that window be recorded as seen yet never verified — and
+        # the commit()/roll_forward delta compare (which only
+        # re-verifies entries that DIFFER from the recorded set) would
+        # then skip it.
         snap = M._snapshot(path)
         M._check_schema(df, snap)
-        stage_dir, added = M._stage_batch(
-            df, path, snap.version + 1, snap=snap, verify=True
-        )
-        stats, row_counts = M._stage_stats(path, added)
-        blooms = M._rebuild_blooms(df.sparkSession, snap, added)
-        schema = snap.schema
+        # the table write's stage-and-finish steps without its publish:
+        # a failure removes the stage, success hands it to this
+        # transaction, whose catalog doc is the atomic point
+        with M._Txn(snap, df.sparkSession) as txn:
+            stage_dir, added = txn.stage(df, verify=True)
+            doc = txn.finish("append", added=added)
         self._payloads[table] = {
             "op": "append",
-            "schema": (df.schema if schema is None else schema).jsonValue(),
+            "schema": (
+                df.schema if snap.schema is None else snap.schema
+            ).jsonValue(),
             "added": added,
-            "stats": stats,
-            "row_counts": row_counts,
-            "blooms": blooms,
+            "stats": doc["stats"],
+            "row_counts": doc["row_counts"],
+            "blooms": doc["blooms"],
             # the pre-stage snapshot verified above — roll_forward
             # re-verifies any constraint added after it
             "constraints": snap.constraints,
@@ -444,47 +455,23 @@ class CatalogTransaction:
             return self._committed
         if not self._payloads:
             raise ValueError("empty transaction")
-        # constraints that landed since stage time gate this txn's rows
-        # (table-log order puts them before our materialized version).
+        # constraints that landed since stage time gate this txn's rows.
         # Re-verify the delta pre-publish so the common case fails
         # CLEAN — stage deleted, catalog untouched; the roll-forward
-        # guard covers the residual publish-time race window.
-        for table, payload in self._payloads.items():
-            path = self.tables[table]
-            snap = M._snapshot(path)
-            delta = {
-                n: e
-                for n, e in snap.constraints.items()
-                if payload.get("constraints", {}).get(n) != e
-            }
-            if delta:
-                spark = SparkSession.getActiveSession()
-                if spark is None:
-                    # mirror roll_forward: publishing unverified would
-                    # leave a committed-but-unmaterializable txn that
-                    # wedges every catalog reader/writer (all of which
-                    # roll forward) until the constraint is dropped —
-                    # failing BEFORE publish is clean (stage aborted,
-                    # catalog untouched)
-                    self.abort()
-                    raise RuntimeError(
-                        f"catalog commit at {self.cat} must re-verify"
-                        f" constraints {sorted(delta)} on table"
-                        f" {table!r} but no SparkSession is active"
-                    )
-                try:
-                    M._verify_constraints(
-                        spark,
-                        snap,
-                        [
-                            os.path.join(path, r)
-                            for r in payload["added"]
-                        ],
-                        cons=delta,
-                    )
-                except ValueError:
-                    self.abort()
-                    raise
+        # guard covers the residual publish-time race window. Without a
+        # session, publishing unverified would leave a committed but
+        # unmaterializable txn that wedges every catalog reader and
+        # writer (all of which roll forward) until the constraint is
+        # dropped, so that fails before publish too.
+        try:
+            for table, payload in self._payloads.items():
+                _verify_constraint_delta(
+                    M._snapshot(self.tables[table]), payload,
+                    f"catalog commit at {self.cat}", table,
+                )
+        except (RuntimeError, ValueError):
+            self.abort()
+            raise
         last: Exception | None = None
         sbid = (extra or {}).get("stream_batch_id")
         for _ in range(max_retries):

@@ -44,12 +44,20 @@ path (vectors applied), and ``_Snapshot.checkpoint_doc`` decides what
 vacuum's checkpoint and a clone carry. The public readers
 (``live_files``, ``live_dv_state``, …) are views over one snapshot.
 
-Commit protocol: the doc is staged as a hidden temp file then published
-with ``os.link`` (atomic create-if-absent on POSIX) — two racing
-writers cannot both claim version N; the loser gets
-``ConcurrentCommitError`` and retries on the new head. On an object
-store the same protocol maps to a conditional PUT; it is isolated in
-``_commit_version`` on purpose.
+Commit protocol: every table write is one ``_Txn`` on top of its
+snapshot. It stages uniquely named batch directories for version
+head+1, finishes the commit doc (footer stats and row counts of the
+added files, the segment check, blooms, version/parent/schema) and
+publishes it through ``_commit_version``; any failure before the
+publish removes every directory the transaction staged, so a failed
+write leaves the table exactly as it was. The doc is staged as a
+hidden temp file then published with ``os.link`` (atomic
+create-if-absent on POSIX) — two racing writers cannot both claim
+version N; the loser gets ``ConcurrentCommitError`` and retries on the
+new head. On an object store the same protocol maps to a conditional
+PUT; it is isolated in ``_commit_version`` on purpose. A catalog
+transaction (``catalog.py``) runs the same stage-and-finish steps and
+publishes through its own catalog doc instead.
 
 Scale shape: manifests enumerate FILES, not rows — the driver holds a
 file list (thousands of entries at 100 TB with sane file sizes, guarded
@@ -587,9 +595,10 @@ def _stage_batch(
     The directory carries a per-writer random suffix so two writers
     racing on the same head+1 NEVER touch each other's staged files —
     the race is decided solely by ``_commit_version``'s create-if-absent
-    on the version doc, and the loser deletes its own stage (see
-    ``_commit_or_cleanup``). This is the Delta/Iceberg discipline:
-    data file names are unique per writer; only the log is contended."""
+    on the version doc, and the loser's :class:`_Txn` deletes its own
+    stages. This is the Delta/Iceberg discipline: data file names are
+    unique per writer; only the log is contended. Table writes stage
+    through :meth:`_Txn.stage`, which owns the directory from here on."""
     import uuid
 
     if prefix == "b":
@@ -699,7 +708,7 @@ def manifest_add_constraint(
     transaction) enforces it against its staged batch and aborts —
     stage deleted, table untouched — on violation."""
     snap = _snapshot(path)
-    head, cons = snap.version, snap.constraints
+    cons = snap.constraints
     if name in cons:
         raise ValueError(f"constraint {name!r} already exists")
     try:
@@ -715,86 +724,147 @@ def manifest_add_constraint(
                 f"cannot add constraint {name!r}: {n_bad} existing"
                 " row(s) violate it"
             )
-    return _commit_version(
-        path,
-        {
-            "version": head + 1,
-            "parent": head,
-            "operation": "alter_constraint",
-            "schema": None,
-            "added": [],
-            "removed": [],
-            "constraints": {**cons, name: expr},
-        },
-    )
+    return _Txn(snap).commit(
+        "alter_constraint", schema=None, constraints={**cons, name: expr}
+    )["version"]
 
 
 def manifest_drop_constraint(path: str, name: str) -> int:
     """Drop a named CHECK constraint (metadata commit)."""
     snap = _snapshot(path)
-    head, cons = snap.version, snap.constraints
+    cons = snap.constraints
     if name not in cons:
         raise ValueError(f"no constraint named {name!r}")
     cons.pop(name)
-    return _commit_version(
-        path,
-        {
-            "version": head + 1,
-            "parent": head,
-            "operation": "alter_constraint",
-            "schema": None,
-            "added": [],
-            "removed": [],
-            "constraints": cons,
-        },
-    )
+    return _Txn(snap).commit(
+        "alter_constraint", schema=None, constraints=cons
+    )["version"]
 
 
-def _validate_segments(
-    path: str,
-    segments: dict,
-    row_counts: dict,
-    stage_dirs: list[str],
-    op: str,
-) -> None:
-    """Provenance must be exact or absent — a wrong segment map would
-    silently corrupt incremental feeds. On mismatch, remove this
-    writer's staged dirs BEFORE raising: nothing references them yet
-    (no version doc points at them), and vacuum only deletes files
-    referenced by version docs, so leaving them would leak permanently."""
-    for out, segs in segments.items():
-        if sum(s[2] for s in segs) != row_counts.get(out):
-            for rel in stage_dirs:
-                shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
-            raise ValueError(
-                f"{op} segment rows disagree with staged {out}"
-            )
+class _Txn:
+    """One table write on top of ``snap`` (the snapshot the caller
+    positioned against): the stage directories it owns and the commit
+    that publishes them as version ``snap.version + 1``.
+
+    Used as a context manager around everything from the first stage
+    to the publish. An exception anywhere in that span — staging, a
+    constraint check, footer stats, blooms, a segment mismatch, a lost
+    version race — removes every directory the transaction staged and
+    re-raises unchanged: nothing references a stage before its version
+    doc exists, and vacuum only deletes files some doc names, so a stage
+    left behind would leak for good. A normal exit keeps the stages:
+    either ``commit`` published them, or the caller (a catalog
+    transaction) hands them to its own atomic point."""
+
+    def __init__(self, snap: _Snapshot, spark: SparkSession | None = None):
+        self.snap = snap
+        self.spark = spark
+        self.version = snap.version + 1
+        self.staged: list[str] = []
+
+    def __enter__(self) -> "_Txn":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is not None:
+            for rel in list(self.staged):
+                self.drop(rel)
+
+    def stage(self, df: DataFrame, **kw) -> tuple[str, list[str]]:
+        """:func:`_stage_batch` for this version; the directory is
+        owned by the transaction from here on."""
+        rel, files = _stage_batch(
+            df, self.snap.path, self.version, snap=self.snap, **kw
+        )
+        self.staged.append(rel)
+        return rel, files
+
+    def drop(self, rel: str) -> None:
+        """Remove a stage (one judged empty: the commit goes on without
+        it)."""
+        self.staged.remove(rel)
+        shutil.rmtree(os.path.join(self.snap.path, rel), ignore_errors=True)
+
+    def blooms(
+        self, added: list[str], columns: tuple[str, ...] | list[str],
+        m: int, k: int,
+    ) -> dict:
+        """Blooms for ``added`` over ``columns`` (logical names), or under
+        the table's existing bloom config when none are named."""
+        if not columns or not added:
+            return _rebuild_blooms(self.spark, self.snap, added)
+        return _build_blooms(
+            self.spark, self.snap.path, added,
+            [self.snap.mapping.get(c, c) for c in columns], m, k,
+        )
+
+    def finish(
+        self,
+        operation: str,
+        *,
+        added: list[str] | None = None,
+        removed: list[str] = (),
+        segments: dict | None = None,
+        **fields,
+    ) -> dict:
+        """The commit doc of this version. ``schema`` defaults to the
+        snapshot's (a StructType, or None for "unchanged"). A commit
+        that names ``added`` files records their footer stats and row
+        counts (unless passed), checks ``segments`` against those row
+        counts — provenance must be exact or absent, a wrong segment map
+        would silently corrupt incremental feeds — and records blooms
+        under the table's bloom config (unless passed); one without
+        ``added`` (vector or metadata only) records none of them.
+        ``fields`` go into the doc verbatim."""
+        schema = fields.pop("schema", self.snap.schema)
+        if added is not None:
+            if "row_counts" not in fields:
+                fields["stats"], fields["row_counts"] = _stage_stats(
+                    self.snap.path, added
+                )
+            for out, segs in (segments or {}).items():
+                if sum(s[2] for s in segs) != fields["row_counts"].get(out):
+                    raise ValueError(
+                        f"{operation} segment rows disagree with staged"
+                        f" {out}"
+                    )
+            if segments is not None:
+                fields["segments"] = segments
+            if "blooms" not in fields:
+                fields["blooms"] = _rebuild_blooms(
+                    self.spark, self.snap, added
+                )
+        return {
+            "version": self.version,
+            "parent": self.snap.version,
+            "operation": operation,
+            "schema": None if schema is None else schema.jsonValue(),
+            "added": added or [],
+            "removed": list(removed),
+            **fields,
+        }
+
+    def commit(self, operation: str, **kw) -> dict:
+        """:meth:`finish` the doc and publish it through
+        :func:`_commit_version`; returns the published doc. From here on
+        the doc owns the stages."""
+        doc = self.finish(operation, **kw)
+        _commit_version(self.snap.path, doc)
+        self.staged = []
+        return doc
 
 
-def _commit_or_cleanup(path: str, doc: dict, stage_dirs: list[str]) -> int:
-    """Commit ``doc``; on losing the version race, remove this writer's
-    own staged directories (nothing references them — the winner's doc
-    points at its uniquely-named files) and re-raise so the caller can
-    retry on the new head with a fresh stage."""
-    try:
-        return _commit_version(path, doc)
-    except ConcurrentCommitError:
-        for rel in stage_dirs:
-            shutil.rmtree(os.path.join(path, rel), ignore_errors=True)
-        raise
-
-
-def _stage_overlapped(spark: SparkSession, path: str, work: dict) -> dict:
+def _stage_overlapped(spark: SparkSession, work: dict) -> dict:
     """Run a write's independent pre-commit thunks — ``"pre"`` (a check
     that must pass before the commit), ``"data"`` and ``"dv"`` (stagings
-    returning ``(rel_dir, files)``) — and return {kind: result}. More
-    than one runs CONCURRENTLY: they share no state and the stagings
-    land in separate uniquely-named dirs (atomicity lives in the one
-    commit doc, not in write order), so the fixed job latency is paid
-    once, not per part. Each thread inherits the session's job
-    properties and tags. Every future is joined; on any failure every
-    staged dir is removed (nothing references them yet) and the error
-    is raised in the sequential order's priority: pre, data, dv."""
+    through one :class:`_Txn`, returning ``(rel_dir, files)``) — and
+    return {kind: result}. More than one runs CONCURRENTLY: they share
+    no state and the stagings land in separate uniquely-named dirs
+    (atomicity lives in the one commit doc, not in write order), so the
+    fixed job latency is paid once, not per part. Each thread inherits
+    the session's job properties and tags. Every future is joined
+    before any error is raised (the transaction then removes whatever
+    was staged), in the sequential order's priority: pre, data, dv."""
     if len(work) <= 1:
         return {kind: fn() for kind, fn in work.items()}
     from concurrent.futures import ThreadPoolExecutor
@@ -814,11 +884,6 @@ def _stage_overlapped(spark: SparkSession, path: str, work: dict) -> dict:
             except Exception as exc:  # noqa: BLE001 - raised below
                 errors[kind] = exc
     if errors:
-        for kind in ("data", "dv"):
-            if kind in results:
-                shutil.rmtree(
-                    os.path.join(path, results[kind][0]), ignore_errors=True
-                )
         raise next(errors[k] for k in ("pre", "data", "dv") if k in errors)
     return results
 
@@ -1428,46 +1493,22 @@ def manifest_append(
     table keeps skipping after maintenance."""
     snap = _snapshot(path)
     _check_schema(df, snap, allow_additive=allow_additive)
-    head = snap.version
-    version = head + 1
-    stage_dir, added = _stage_batch(df, path, version, snap=snap, verify=True)
-    n_live = len(snap.files) + len(added)
-    if n_live > max_manifest_files:
-        shutil.rmtree(os.path.join(path, stage_dir), ignore_errors=True)
-        raise ValueError(
-            f"table would reach {n_live} files > max_manifest_files="
-            f"{max_manifest_files}; compact before appending"
-        )
-    stats, row_counts = _stage_stats(path, added)
-    spark = df.sparkSession
-    blooms = (
-        _build_blooms(
-            spark,
-            path,
-            added,
-            [snap.mapping.get(c, c) for c in bloom_columns],
-            bloom_bits,
-            bloom_hashes,
-        )
-        if bloom_columns
-        else _rebuild_blooms(spark, snap, added)
-    )
-    return _commit_or_cleanup(
-        path,
-        {
-            "version": version,
-            "parent": head,
-            "operation": "append",
-            "schema": df.schema.jsonValue(),
-            "added": added,
-            "removed": [],
-            "stats": stats,
-            "row_counts": row_counts,
-            "blooms": blooms,
+    with _Txn(snap, df.sparkSession) as txn:
+        _, added = txn.stage(df, verify=True)
+        n_live = len(snap.files) + len(added)
+        if n_live > max_manifest_files:
+            raise ValueError(
+                f"table would reach {n_live} files > max_manifest_files="
+                f"{max_manifest_files}; compact before appending"
+            )
+        txn.commit(
+            "append",
+            added=added,
+            schema=df.schema,
+            blooms=txn.blooms(added, bloom_columns, bloom_bits, bloom_hashes),
             **(extra or {}),
-        },
-        [stage_dir],
-    )
+        )
+    return txn.version
 
 
 def resolve_at_timestamp(versions, read_doc, ts: float, what: str) -> int:
@@ -2292,7 +2333,6 @@ def manifest_delete_where(
     # a row already row-deleted must neither trigger a rewrite nor
     # survive into one
     live = snap.scan(spark, keep_pos=True)
-    version = head + 1
     # ONE full scan stages the matched positions as a vector over the
     # (immutable) hit files — row-exact change tracking for incremental
     # readers (see docstring). The hit-file set then falls out of the
@@ -2302,58 +2342,45 @@ def manifest_delete_where(
     matched = live.where(F.coalesce(condition, F.lit(False))).select(
         F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos")
     ).coalesce(1)
-    dv_dir, matched_dv = _stage_batch(matched, path, version, prefix="dv")
-    matched_counts = _dv_file_counts(path, matched_dv)
-    if not matched_counts:
-        shutil.rmtree(os.path.join(path, dv_dir), ignore_errors=True)
-        return head, 0
-    hit_rel = sorted(matched_counts)
-    # survivor rewrite scans ONLY the hit files. Keep every row where
-    # the condition is not TRUE — a NULL-evaluating predicate must keep
-    # the row, not silently drop it
-    keep_cond = ~F.coalesce(condition, F.lit(False))
-    survivors = snap.scan(spark, hit_rel).where(keep_cond)
-    rc = snap.row_counts
-    stage_dirs: list[str] = [dv_dir]
-    added: list[str] = []
-    segments: dict[str, list] = {}
-    if all(f in rc for f in hit_rel):
-        # survivor counts are metadata-exact (count − already-vectored
-        # − newly-matched) → the order-pinned rewrite, whose segments
-        # let ``read_changes`` net a LATER deletion vector aimed at this
-        # survivor file back to the scanned originals row-exactly
-        # instead of exiting at file grain
-        surv_n = {
-            f: rc[f] - snap.dv_targets.get(f, 0) - matched_counts[f]
-            for f in hit_rel
-        }
-        dirs, added, segments = _rewrite_survivors(
-            spark, snap, surv_n, 128 << 20, keep=keep_cond
+    with _Txn(snap, spark) as txn:
+        dv_dir, matched_dv = txn.stage(matched, prefix="dv")
+        matched_counts = _dv_file_counts(path, matched_dv)
+        if not matched_counts:
+            txn.drop(dv_dir)
+            return head, 0
+        hit_rel = sorted(matched_counts)
+        # survivor rewrite scans ONLY the hit files. Keep every row where
+        # the condition is not TRUE — a NULL-evaluating predicate must
+        # keep the row, not silently drop it
+        keep_cond = ~F.coalesce(condition, F.lit(False))
+        survivors = snap.scan(spark, hit_rel).where(keep_cond)
+        rc = snap.row_counts
+        added: list[str] = []
+        segments: dict[str, list] = {}
+        if all(f in rc for f in hit_rel):
+            # survivor counts are metadata-exact (count − already-vectored
+            # − newly-matched) → the order-pinned rewrite, whose segments
+            # let ``read_changes`` net a LATER deletion vector aimed at
+            # this survivor file back to the scanned originals row-exactly
+            # instead of exiting at file grain
+            surv_n = {
+                f: rc[f] - snap.dv_targets.get(f, 0) - matched_counts[f]
+                for f in hit_rel
+            }
+            added, segments = _rewrite_survivors(
+                txn, surv_n, 128 << 20, keep=keep_cond
+            )
+        elif survivors.limit(1).count():
+            _, added = txn.stage(survivors)
+        txn.commit(
+            "delete",
+            added=added,
+            removed=hit_rel,
+            schema=snap.schema or survivors.schema,
+            dv_matched=matched_dv,
+            segments=segments or None,
         )
-        stage_dirs += dirs
-    elif survivors.limit(1).count():
-        d, added = _stage_batch(survivors, path, version, snap=snap)
-        stage_dirs.append(d)
-    stats, row_counts = _stage_stats(path, added)
-    _validate_segments(path, segments, row_counts, stage_dirs, "delete")
-    _commit_or_cleanup(
-        path,
-        {
-            "version": version,
-            "parent": head,
-            "operation": "delete",
-            "schema": (snap.schema or survivors.schema).jsonValue(),
-            "added": added,
-            "removed": hit_rel,
-            "dv_matched": matched_dv,
-            "stats": stats,
-            "row_counts": row_counts,
-            "blooms": _rebuild_blooms(spark, snap, added),
-            **({"segments": segments} if segments else {}),
-        },
-        stage_dirs,
-    )
-    return version, len(hit_rel)
+    return txn.version, len(hit_rel)
 
 
 def _pack_bins(
@@ -2373,13 +2400,12 @@ def _pack_bins(
 
 
 def _rewrite_survivors(
-    spark: SparkSession,
-    snap: _Snapshot,
+    txn: _Txn,
     surv_n: dict[str, int],
     target_bytes: int,
     *,
     keep=None,
-) -> tuple[list[str], list[str], dict]:
+) -> tuple[list[str], dict]:
     """ORDER-PINNED survivor rewrite of the files in ``surv_n`` ({file:
     metadata-exact survivor count}; files with none are skipped): bins
     of whole files up to ``target_bytes``, each staged as ONE output —
@@ -2387,13 +2413,13 @@ def _rewrite_survivors(
     applied, ``keep`` filtered) in position order — with
     whole-file-survivors ``segments`` ({output: [[source, -1, n]]}).
     Shared by ``manifest_delete_where`` and
-    ``manifest_materialize_deletes``; returns (stage dirs, added files,
-    segments)."""
+    ``manifest_materialize_deletes``, staged through their ``txn``;
+    returns (added files, segments)."""
+    spark, snap = txn.spark, txn.snap
     live_srcs = [f for f in sorted(surv_n) if surv_n[f] > 0]
     sizes = {
         f: os.path.getsize(os.path.join(snap.path, f)) for f in live_srcs
     }
-    stage_dirs: list[str] = []
     added: list[str] = []
     segments: dict[str, list] = {}
     for bin_files in _pack_bins(live_srcs, sizes, target_bytes):
@@ -2405,12 +2431,11 @@ def _rewrite_survivors(
             .sortWithinPartitions("__dv_file", "__dv_pos")
             .drop("__dv_file", "__dv_pos")
         )
-        d, a = _stage_batch(packed, snap.path, snap.version + 1, snap=snap)
-        stage_dirs.append(d)
+        _, a = txn.stage(packed)
         added += a
         if a:
             segments[a[0]] = [[f, -1, surv_n[f]] for f in bin_files]
-    return stage_dirs, added, segments
+    return added, segments
 
 
 def manifest_delete_rows(
@@ -2480,29 +2505,20 @@ def manifest_delete_rows(
         )
         .coalesce(max(1, dv_target_files))
     )
-    version = head + 1
-    dv_dir, added_dv = _stage_batch(hits, path, version, prefix="dv")
-    per_file = _dv_file_counts(path, added_dv)
-    if not per_file:
-        shutil.rmtree(os.path.join(path, dv_dir), ignore_errors=True)
-        return head, 0
-    _commit_or_cleanup(
-        path,
-        {
-            "version": version,
-            "parent": head,
-            "operation": "rowdelete",
-            "schema": None if snap.schema is None else snap.schema.jsonValue(),
-            "added": [],
-            "removed": [],
-            "dv_added": added_dv,
-            "dv_removed": [],
-            "dv_targets": per_file,
+    with _Txn(snap, spark) as txn:
+        dv_dir, added_dv = txn.stage(hits, prefix="dv")
+        per_file = _dv_file_counts(path, added_dv)
+        if not per_file:
+            txn.drop(dv_dir)
+            return head, 0
+        txn.commit(
+            "rowdelete",
+            dv_added=added_dv,
+            dv_removed=[],
+            dv_targets=per_file,
             **(extra or {}),
-        },
-        [dv_dir],
-    )
-    return version, sum(per_file.values())
+        )
+    return txn.version, sum(per_file.values())
 
 
 def manifest_merge_upsert(
@@ -2534,53 +2550,41 @@ def manifest_merge_upsert(
     on_cols = [on] if isinstance(on, str) else list(on)
     snap = _snapshot(path)
     _check_schema(df, snap)
-    head = snap.version
-    version = head + 1
-    work = {}
-    if snap.files:
-        hits = (
-            snap.scan(spark, keep_pos=True)
-            .join(df.select(*on_cols).distinct(), on_cols, "left_semi")
-            .select(
-                F.col("__dv_file").alias("file"),
-                F.col("__dv_pos").alias("pos"),
+    with _Txn(snap, spark) as txn:
+        work = {}
+        if snap.files:
+            hits = (
+                snap.scan(spark, keep_pos=True)
+                .join(df.select(*on_cols).distinct(), on_cols, "left_semi")
+                .select(
+                    F.col("__dv_file").alias("file"),
+                    F.col("__dv_pos").alias("pos"),
+                )
+                .coalesce(max(1, dv_target_files))
             )
-            .coalesce(max(1, dv_target_files))
-        )
-        work["dv"] = lambda: _stage_batch(hits, path, version, prefix="dv")
-    work["data"] = lambda: _stage_batch(
-        df, path, version, snap=snap, verify=True
-    )
-    staged = _stage_overlapped(spark, path, work)
-    stage_dir, added = staged["data"]
-    dv_dir, added_dv = staged.get("dv", (None, []))
-    per_file = _dv_file_counts(path, added_dv)
-    if not per_file and dv_dir is not None:
-        shutil.rmtree(os.path.join(path, dv_dir), ignore_errors=True)
-        added_dv = []
-    n_replaced = sum(per_file.values())
-    stats, row_counts = _stage_stats(path, added)
-    n_appended = sum(row_counts.values())
-    _commit_or_cleanup(
-        path,
-        {
-            "version": version,
-            "parent": head,
-            "operation": "merge",
-            "schema": df.schema.jsonValue(),
-            "added": added,
-            "removed": [],
-            "stats": stats,
-            "row_counts": row_counts,
-            "blooms": _rebuild_blooms(spark, snap, added),
-            "dv_added": added_dv,
-            "dv_removed": [],
-            "dv_targets": per_file,
+            work["dv"] = lambda: txn.stage(hits, prefix="dv")
+        work["data"] = lambda: txn.stage(df, verify=True)
+        staged = _stage_overlapped(spark, work)
+        _, added = staged["data"]
+        dv_dir, added_dv = staged.get("dv", (None, []))
+        per_file = _dv_file_counts(path, added_dv)
+        if not per_file and dv_dir is not None:
+            txn.drop(dv_dir)
+            added_dv = []
+        doc = txn.commit(
+            "merge",
+            added=added,
+            schema=df.schema,
+            dv_added=added_dv,
+            dv_removed=[],
+            dv_targets=per_file,
             **(extra or {}),
-        },
-        [stage_dir] + ([dv_dir] if added_dv else []),
+        )
+    return (
+        txn.version,
+        sum(per_file.values()),
+        sum(doc["row_counts"].values()),
     )
-    return version, n_replaced, n_appended
 
 
 def manifest_merge_into(
@@ -3056,7 +3060,7 @@ def manifest_alter_schema(
     ``ConcurrentCommitError`` when racing another writer (retry on the
     new head — the alter is cheap to recompute)."""
     snap = _snapshot(path)
-    head, schema = snap.version, snap.schema
+    schema = snap.schema
     if schema is None:
         raise ValueError(
             f"table at {path} has no schema yet; append data first"
@@ -3064,7 +3068,7 @@ def manifest_alter_schema(
     mapping = dict(snap.mapping)
     retired = list(snap.retired)
     fields = list(schema.fields)
-    version = head + 1
+    version = snap.version + 1
 
     # CHECK constraints reference LOGICAL names as SQL text: renaming or
     # dropping a referenced column would silently break or orphan the
@@ -3146,21 +3150,12 @@ def manifest_alter_schema(
         # nullable regardless of the spec: old files have no values
         fields.append(T.StructField(fld.name, fld.dataType, True))
 
-    mapping = {l: p for l, p in mapping.items() if l != p}
-    return _commit_or_cleanup(
-        path,
-        {
-            "version": version,
-            "parent": head,
-            "operation": "alter_schema",
-            "schema": T.StructType(fields).jsonValue(),
-            "mapping": mapping,
-            "retired_physical": sorted(retired),
-            "added": [],
-            "removed": [],
-        },
-        [],
-    )
+    return _Txn(snap).commit(
+        "alter_schema",
+        schema=T.StructType(fields),
+        mapping={l: p for l, p in mapping.items() if l != p},
+        retired_physical=sorted(retired),
+    )["version"]
 
 
 def manifest_evict_admit(
@@ -3246,90 +3241,56 @@ def _evict_admit(
     """:func:`manifest_evict_admit` on top of ``snap`` — the snapshot
     the caller positioned ``hits`` against (MERGE, UPDATE), so the
     commit lands on exactly that head or loses the race."""
-    path, head = snap.path, snap.version
+    path = snap.path
     if df is not None:
         _check_schema(df, snap, allow_additive=allow_additive)
-    version = head + 1
-    stage_dirs: list[str] = []
-    per_file: dict[str, int] = {}
-    work = {}
-    if pre_commit is not None:
-        work["pre"] = pre_commit
-    if df is not None:
-        # cluster_by routes the admit half through the clustered
-        # one-task-many-files writer (per-key file granularity at
-        # cluster_tasks writer tasks — the streaming state-table
-        # grain); None keeps the plain parallel parquet write
-        work["data"] = lambda: _stage_batch(
-            df, path, version, snap=snap, verify=True,
-            cluster_by=cluster_by, cluster_tasks=cluster_tasks,
-        )
-    if hits is not None:
-        work["dv"] = lambda: _stage_batch(
-            hits.select(
-                F.col("__dv_file").alias("file"),
-                F.col("__dv_pos").alias("pos"),
-            ).coalesce(max(1, dv_target_files)),
-            path,
-            version,
-            prefix="dv",
-        )
-    staged = _stage_overlapped(spark, path, work)
-    data_dir, added = staged.get("data", (None, []))
-    dv_dir, added_dv = staged.get("dv", (None, []))
-    if added_dv:
-        per_file = _dv_file_counts(path, added_dv)
-        if not per_file:
-            shutil.rmtree(os.path.join(path, dv_dir), ignore_errors=True)
-            added_dv = []
-        else:
-            stage_dirs.append(dv_dir)
-    stats: dict = {}
-    row_counts: dict = {}
-    blooms: dict = {}
-    if data_dir is not None:
-        stats, row_counts = _stage_stats(path, added)
-        if sum(row_counts.values()) == 0:
-            shutil.rmtree(os.path.join(path, data_dir), ignore_errors=True)
-            added, stats, row_counts = [], {}, {}
-        else:
-            stage_dirs.append(data_dir)
-            blooms = (
-                _build_blooms(
-                    spark, path, added,
-                    [snap.mapping.get(c, c) for c in bloom_columns],
-                    bloom_bits, bloom_hashes,
-                )
-                if bloom_columns
-                else _rebuild_blooms(spark, snap, added)
+    with _Txn(snap, spark) as txn:
+        work = {}
+        if pre_commit is not None:
+            work["pre"] = pre_commit
+        if df is not None:
+            # cluster_by routes the admit half through the clustered
+            # one-task-many-files writer (per-key file granularity at
+            # cluster_tasks writer tasks — the streaming state-table
+            # grain); None keeps the plain parallel parquet write
+            work["data"] = lambda: txn.stage(
+                df, verify=True,
+                cluster_by=cluster_by, cluster_tasks=cluster_tasks,
             )
-    if not added and not per_file:
-        return head, 0, 0
-    doc_schema = (
-        df.schema.jsonValue()
-        if df is not None
-        else (None if snap.schema is None else snap.schema.jsonValue())
-    )
-    _commit_or_cleanup(
-        path,
-        {
-            "version": version,
-            "parent": head,
-            "operation": "merge",
-            "schema": doc_schema,
-            "added": added,
-            "removed": [],
-            "stats": stats,
-            "row_counts": row_counts,
-            "blooms": blooms,
-            "dv_added": added_dv,
-            "dv_removed": [],
-            "dv_targets": per_file,
+        if hits is not None:
+            work["dv"] = lambda: txn.stage(
+                hits.select(
+                    F.col("__dv_file").alias("file"),
+                    F.col("__dv_pos").alias("pos"),
+                ).coalesce(max(1, dv_target_files)),
+                prefix="dv",
+            )
+        staged = _stage_overlapped(spark, work)
+        data_dir, added = staged.get("data", (None, []))
+        dv_dir, added_dv = staged.get("dv", (None, []))
+        per_file = _dv_file_counts(path, added_dv)
+        if not per_file and dv_dir is not None:
+            txn.drop(dv_dir)
+            added_dv = []
+        stats, row_counts = _stage_stats(path, added)
+        if not sum(row_counts.values()) and data_dir is not None:
+            txn.drop(data_dir)
+            added, stats, row_counts = [], {}, {}
+        if not added and not per_file:
+            return snap.version, 0, 0
+        txn.commit(
+            "merge",
+            added=added,
+            schema=snap.schema if df is None else df.schema,
+            stats=stats,
+            row_counts=row_counts,
+            blooms=txn.blooms(added, bloom_columns, bloom_bits, bloom_hashes),
+            dv_added=added_dv,
+            dv_removed=[],
+            dv_targets=per_file,
             **(extra or {}),
-        },
-        stage_dirs,
-    )
-    return version, sum(per_file.values()), sum(row_counts.values())
+        )
+    return txn.version, sum(per_file.values()), sum(row_counts.values())
 
 
 def manifest_materialize_deletes(
@@ -3358,46 +3319,31 @@ def manifest_materialize_deletes(
     if not dv_files or not dv_targets:
         return head, 0
     affected = sorted(dv_targets)
-    version = head + 1
     rc = snap.row_counts
-    stage_dirs: list[str] = []
-    added: list[str] = []
-    segments: dict[str, list] = {}
-    if all(f in rc for f in affected):
-        # metadata-exact survivor counts per file; skip files with none
-        stage_dirs, added, segments = _rewrite_survivors(
-            spark,
-            snap,
-            {f: rc[f] - dv_targets.get(f, 0) for f in affected},
-            target_file_bytes,
+    with _Txn(snap, spark) as txn:
+        added: list[str] = []
+        segments: dict[str, list] = {}
+        if all(f in rc for f in affected):
+            # metadata-exact survivor counts per file; skip files with none
+            added, segments = _rewrite_survivors(
+                txn,
+                {f: rc[f] - dv_targets.get(f, 0) for f in affected},
+                target_file_bytes,
+            )
+        else:
+            survivors = snap.scan(spark, affected)
+            if survivors.limit(1).count():
+                _, added = txn.stage(survivors)
+        txn.commit(
+            "materialize",
+            added=added,
+            removed=affected,
+            dv_added=[],
+            dv_removed=dv_files,
+            dv_targets={},
+            segments=segments or None,
         )
-    else:
-        survivors = snap.scan(spark, affected)
-        if survivors.limit(1).count():
-            d, added = _stage_batch(survivors, path, version, snap=snap)
-            stage_dirs.append(d)
-    stats, row_counts = _stage_stats(path, added)
-    _validate_segments(path, segments, row_counts, stage_dirs, "materialize")
-    _commit_or_cleanup(
-        path,
-        {
-            "version": version,
-            "parent": head,
-            "operation": "materialize",
-            "schema": None if snap.schema is None else snap.schema.jsonValue(),
-            "added": added,
-            "removed": affected,
-            "stats": stats,
-            "row_counts": row_counts,
-            "blooms": _rebuild_blooms(spark, snap, added),
-            "dv_added": [],
-            "dv_removed": dv_files,
-            "dv_targets": {},
-            **({"segments": segments} if segments else {}),
-        },
-        stage_dirs,
-    )
-    return version, len(affected)
+    return txn.version, len(affected)
 
 
 def metadata_only_stats(
@@ -3556,27 +3502,18 @@ def manifest_compact(
             raise ValueError("cluster_by supports 1 or 2 columns")
     else:
         clustered = rows.coalesce(target_files)
-    version = head + 1
-    stage_dir, added = _stage_batch(clustered, path, version, snap=snap)
-    stats, row_counts = _stage_stats(path, added)
-    return _commit_or_cleanup(
-        path,
-        {
-            "version": version,
-            "parent": head,
-            "operation": "compact",
-            "schema": rows.schema.jsonValue(),
-            "added": added,
-            "removed": files,
-            "stats": stats,
-            "row_counts": row_counts,
-            "blooms": _rebuild_blooms(spark, snap, added),
-            "dv_added": [],
-            "dv_removed": dv_files,
-            "dv_targets": {},
-        },
-        [stage_dir],
-    )
+    with _Txn(snap, spark) as txn:
+        _, added = txn.stage(clustered)
+        txn.commit(
+            "compact",
+            added=added,
+            removed=files,
+            schema=rows.schema,
+            dv_added=[],
+            dv_removed=dv_files,
+            dv_targets={},
+        )
+    return txn.version
 
 
 def manifest_compact_small(
@@ -3710,53 +3647,39 @@ def manifest_compact_small(
     if len(bins) >= len(small):
         return head, 0
     rc = snap.row_counts
-    version = head + 1
-    stage_dirs: list[str] = []
-    added: list[str] = []
-    segments: dict[str, list] = {}
-    for bin_files in bins:
-        packed = (
-            snap.scan(spark, bin_files, keep_pos=True, dvs=[])
-            .coalesce(1)
-            .sortWithinPartitions("__dv_file", "__dv_pos")
-            .drop("__dv_file", "__dv_pos")
+    with _Txn(snap, spark) as txn:
+        added: list[str] = []
+        segments: dict[str, list] = {}
+        for bin_files in bins:
+            packed = (
+                snap.scan(spark, bin_files, keep_pos=True, dvs=[])
+                .coalesce(1)
+                .sortWithinPartitions("__dv_file", "__dv_pos")
+                .drop("__dv_file", "__dv_pos")
+            )
+            _, a = txn.stage(packed)
+            added += a
+            if a:
+                segs = []
+                # rows in the output sort by (source name, position),
+                # which may differ from the bin's cluster_stat pack order
+                for f in sorted(bin_files):
+                    n = rc.get(f)
+                    if n is None:
+                        n = _file_row_count(os.path.join(path, f))
+                    if n > 0:
+                        segs.append([f, 0, n])
+                segments[a[0]] = segs
+        txn.commit(
+            "compact",
+            added=added,
+            removed=small,
+            dv_added=[],
+            dv_removed=[],
+            dv_targets={},
+            segments=segments,
         )
-        d, a = _stage_batch(packed, path, version, snap=snap)
-        stage_dirs.append(d)
-        added += a
-        if a:
-            segs = []
-            # rows in the output sort by (source name, position), which
-            # may differ from the bin's cluster_stat pack order
-            for f in sorted(bin_files):
-                n = rc.get(f)
-                if n is None:
-                    n = _file_row_count(os.path.join(path, f))
-                if n > 0:
-                    segs.append([f, 0, n])
-            segments[a[0]] = segs
-    stats, row_counts = _stage_stats(path, added)
-    _validate_segments(path, segments, row_counts, stage_dirs, "compaction")
-    _commit_or_cleanup(
-        path,
-        {
-            "version": version,
-            "parent": head,
-            "operation": "compact",
-            "schema": None if snap.schema is None else snap.schema.jsonValue(),
-            "added": added,
-            "removed": small,
-            "stats": stats,
-            "row_counts": row_counts,
-            "blooms": _rebuild_blooms(spark, snap, added),
-            "dv_added": [],
-            "dv_removed": [],
-            "dv_targets": {},
-            "segments": segments,
-        },
-        stage_dirs,
-    )
-    return version, len(small)
+    return txn.version, len(small)
 
 
 def manifest_auto_optimize(

@@ -56,6 +56,24 @@ def read_jsonl(
     return df.drop(CORRUPT_COL) if CORRUPT_COL in df.columns else df
 
 
+def _register_in(spark: SparkSession, source) -> None:
+    """Register the Python data source ``source`` with ``spark``. Spark
+    checks the name against the ACTIVE session's registry, so a session
+    made by ``newSession()`` would be refused once its parent had
+    registered the name. Register with ``spark`` made active, then put
+    back the session that was active before (or none)."""
+    jsession = spark.sparkContext._jvm.org.apache.spark.sql.SparkSession
+    previous = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(source)
+    finally:
+        if previous.isDefined():
+            jsession.setActiveSession(previous.get())
+        else:
+            jsession.clearActiveSession()
+
+
 def read_jsonl_zst(
     spark: SparkSession,
     paths: str | Iterable[str],
@@ -92,7 +110,7 @@ def read_jsonl_zst(
             list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
         )
     if spark not in _ZST_SESSIONS:
-        spark.dataSource.register(ZstJsonlDataSource)
+        _register_in(spark, ZstJsonlDataSource)
         _ZST_SESSIONS.add(spark)
     lines = spark.read.format("zstjsonl").load(list(paths))
     parsed = lines.select(

@@ -416,6 +416,86 @@ def test_commit_retry_after_post_publish_error_is_idempotent(
     assert M.read_snapshot(spark, fact).count() == 10  # ONCE
 
 
+def test_catalog_append_fault_leaves_tables_unchanged(
+    spark, tmp_path, monkeypatch
+):
+    """A transaction append that fails in footer stats or the bloom
+    build raises the original error and leaves no stage behind. A
+    publish failure while rolling forward comes after the catalog doc,
+    the atomic point: the tables are untouched until a retried commit
+    materializes the rows once, and a lost table-doc race is retried on
+    the new head."""
+    cat, fact, roll = _mk_tables(spark, tmp_path)
+    # fact carries a bloom config, so its appends build blooms
+    M.manifest_append(
+        spark.range(0, 4).withColumn("v", F.col("id") * 2), fact,
+        bloom_columns=["v"],
+    )
+
+    def state():
+        return [
+            (
+                sorted(os.listdir(os.path.join(p, "data")))
+                if os.path.isdir(os.path.join(p, "data")) else [],
+                M.latest_version(p),
+                M.read_snapshot(spark, p).count() if M.live_files(p) else 0,
+            )
+            for p in (fact, roll)
+        ] + [C.catalog_latest(cat)]
+
+    before = state()
+    for name in ("_stage_stats", "_build_blooms"):
+        exc = RuntimeError(f"injected: {name}")
+
+        def boom(*args, _exc=exc, **kwargs):
+            raise _exc
+
+        monkeypatch.setattr(M, name, boom)
+        with pytest.raises(RuntimeError) as got:
+            _txn(spark, cat, 10, 15)
+        monkeypatch.undo()
+        assert got.value is exc, name
+        assert state() == before, name
+
+    t = _txn(spark, cat, 10, 15)
+    assert sorted(t._payloads["fact"]) == [
+        "added", "blooms", "constraints", "op", "row_counts", "schema",
+        "stats",
+    ]
+    assert t._payloads["fact"]["blooms"]
+    exc = RuntimeError("injected: publish")
+
+    def boom(*args, **kwargs):
+        raise exc
+
+    monkeypatch.setattr(M, "_commit_version", boom)
+    with pytest.raises(RuntimeError) as got:
+        t.commit()
+    monkeypatch.undo()
+    assert got.value is exc
+    assert C.catalog_latest(cat) == before[-1] + 1  # the txn is durable
+    assert [s[1:] for s in state()[:2]] == [s[1:] for s in before[:2]]
+    assert t.commit() == before[-1] + 1
+    assert M.read_snapshot(spark, fact).count() == 4 + 5
+    assert M.read_snapshot(spark, roll).count() == 1
+
+    real = M._commit_version
+    lost: list = []
+
+    def lose_once(path, doc):
+        if not lost:
+            lost.append(doc["version"])
+            raise M.ConcurrentCommitError("injected: lost race")
+        return real(path, doc)
+
+    monkeypatch.setattr(M, "_commit_version", lose_once)
+    _txn(spark, cat, 20, 23).commit()
+    monkeypatch.undo()
+    assert lost
+    assert M.read_snapshot(spark, fact).count() == 4 + 5 + 3
+    assert M.read_snapshot(spark, roll).count() == 2
+
+
 def test_catalog_snapshot_asof_version_and_timestamp(spark, tmp_path):
     """Multi-table AS-OF snapshots: pins serialize an independent
     direct-to-table append AFTER the pinned transaction; a wall-clock

@@ -125,6 +125,26 @@ def test_read_jsonl_zst_registers_the_source_once_per_session(
     assert calls == ["zstjsonl"]
 
 
+def test_read_jsonl_zst_reads_in_a_child_session(spark, tmp_path):
+    """A session made by ``newSession()`` reads ``.zst`` after its parent
+    did (Spark checks a new source's name against the active session's
+    registry), and the parent stays the active session and still reads."""
+    import pyarrow as pa
+
+    from ihop_reddit_spark.schemas import COMMENTS_SCHEMA
+    from ihop_reddit_spark.sources.reddit import read_jsonl_zst
+
+    p = tmp_path / "a.zst"
+    with pa.output_stream(str(p), compression="zstd") as out:
+        out.write((COMMENT + "\n" + COMMENT + "\n").encode())
+    assert read_jsonl_zst(spark, str(p), COMMENTS_SCHEMA).count() == 2
+    child = spark.newSession()
+    assert read_jsonl_zst(child, str(p), COMMENTS_SCHEMA).count() == 2
+    active = spark.sparkContext._jvm.org.apache.spark.sql.SparkSession
+    assert active.getActiveSession().get().equals(spark._jsparkSession)
+    assert read_jsonl_zst(spark, str(p), COMMENTS_SCHEMA).count() == 2
+
+
 def test_parquet_sink_partitioned_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "2021-04", "a"), (2, "2021-04", "b"), (3, "2021-05", "c")],
@@ -1328,21 +1348,20 @@ def test_manifest_stage_race_two_writers(spark, tmp_path):
     M.manifest_init(root)
     M.manifest_append(spark.range(0, 10), root)  # v1
 
-    # deterministic variant: stage both writers at version 2, commit both
+    # deterministic variant: two transactions on the same snapshot
+    # stage at version 2, then both commit
     d_a = spark.range(100, 110)
     d_b = spark.range(200, 210)
-    dir_a, files_a = M._stage_batch(d_a, root, 2)
-    dir_b, files_b = M._stage_batch(d_b, root, 2)
+    snap = M._snapshot(root)
+    txn_a, txn_b = M._Txn(snap, spark), M._Txn(snap, spark)
+    dir_a, files_a = txn_a.stage(d_a)
+    dir_b, files_b = txn_b.stage(d_b)
     assert dir_a != dir_b  # unique per-writer stage dirs
     assert all(os.path.exists(os.path.join(root, f)) for f in files_a + files_b)
-    doc = {
-        "version": 2, "parent": 1, "operation": "append",
-        "schema": d_a.schema.jsonValue(), "removed": [],
-        "stats": {}, "row_counts": {},
-    }
-    M._commit_or_cleanup(root, {**doc, "added": files_a}, [dir_a])
-    with pytest.raises(M.ConcurrentCommitError):
-        M._commit_or_cleanup(root, {**doc, "added": files_b}, [dir_b])
+    with txn_a:
+        txn_a.commit("append", added=files_a, schema=d_a.schema)
+    with pytest.raises(M.ConcurrentCommitError), txn_b:
+        txn_b.commit("append", added=files_b, schema=d_b.schema)
     # loser cleaned up its own stage; winner's files are intact
     assert not os.path.exists(os.path.join(root, dir_b))
     assert all(os.path.exists(os.path.join(root, f)) for f in files_a)
@@ -2579,6 +2598,173 @@ def test_manifest_ops_replay_the_log_once(spark, tmp_path, monkeypatch):
         assert calls["list"] == 1, (name, calls)
         assert calls["read"] <= n_versions, (name, calls)
     assert M.read_snapshot(spark, root).count() == 44
+
+
+def test_manifest_commit_doc_keys_per_operation(spark, tmp_path):
+    """Every table write commits one version doc of a fixed shape: the
+    sorted key set (``committed_at`` aside) per operation is pinned, so
+    a change to the write path cannot add, drop or rename a field."""
+    from ihop_reddit_spark.sources import manifest as M
+
+    root = str(tmp_path / "tbl")
+    M.manifest_init(root)
+
+    def rows(lo, hi, k=F.col("id") % 5):
+        return spark.range(lo, hi).select("id", k.cast("long").alias("k"))
+
+    base = ["added", "operation", "parent", "removed", "schema", "version"]
+    data = base + ["blooms", "row_counts", "stats"]
+    dv = ["dv_added", "dv_removed", "dv_targets"]
+    ops = [
+        ("append", data, lambda: M.manifest_append(
+            rows(0, 20).repartition(2), root, bloom_columns=["k"])),
+        ("append", data + ["stream_batch_id"], lambda: M.manifest_append(
+            rows(20, 24), root, extra={"stream_batch_id": 3})),
+        ("merge", data + dv, lambda: M.manifest_merge_upsert(
+            spark, root, rows(0, 3, F.lit(9)), "id")),
+        ("rowdelete", base + dv, lambda: M.manifest_delete_rows(
+            spark, root, F.col("id") == 5)),
+        ("merge", data + dv, lambda: M.manifest_update_where(
+            spark, root, F.col("id") == 6, {"k": F.lit(7).cast("long")})),
+        ("merge", data + dv, lambda: M.manifest_evict_admit(
+            spark, root, hits=None, df=rows(30, 32))),
+        ("materialize", data + dv + ["segments"], lambda:
+            M.manifest_materialize_deletes(spark, root)),
+        ("delete", data + ["dv_matched", "segments"], lambda:
+            M.manifest_delete_where(spark, root, F.col("id") == 7)),
+        ("compact", data + dv + ["segments"], lambda:
+            M.manifest_compact_small(spark, root)),
+        ("compact", data + dv, lambda: M.manifest_compact(
+            spark, root, cluster_by=["id"])),
+        ("alter_schema", base + ["mapping", "retired_physical"], lambda:
+            M.manifest_alter_schema(root, rename={"k": "kk"})),
+        ("alter_constraint", base + ["constraints"], lambda:
+            M.manifest_add_constraint(spark, root, "id_nn", "id >= 0")),
+        ("alter_constraint", base + ["constraints"], lambda:
+            M.manifest_drop_constraint(root, "id_nn")),
+    ]
+    for operation, keys, op in ops:
+        head = M.latest_version(root)
+        op()
+        doc = M.read_version_doc(root, head + 1)
+        doc.pop("committed_at")
+        assert (doc["operation"], sorted(doc)) == (operation, sorted(keys))
+        assert (doc["version"], doc["parent"]) == (head + 1, head)
+    assert M.latest_version(root) == len(ops)
+
+
+def _fault_kv(spark, lo, hi, k=None):
+    k = F.col("id") % 5 if k is None else k
+    return spark.range(lo, hi).select("id", k.cast("long").alias("k"))
+
+
+def _fault_evict_admit(spark, root):
+    from ihop_reddit_spark.sources import manifest as M
+
+    hits = M.read_snapshot(spark, root, with_pos=True).where(F.col("id") < 3)
+    return M.manifest_evict_admit(
+        spark, root, hits=hits.select("__dv_file", "__dv_pos"),
+        df=_fault_kv(spark, 30, 32),
+    )
+
+
+def _fault_cases():
+    """{write path: (set-up, reaches stats and blooms, write, live ids
+    after the write)} over a two-file table of ids 0..19 with a bloom
+    on ``k``. A row delete stages only a vector, so it reaches the
+    publish and no stats or blooms."""
+    from ihop_reddit_spark.sources import manifest as M
+
+    def vector(spark, root):
+        M.manifest_delete_rows(spark, root, F.col("id") == 5)
+
+    def without(n):
+        return [i for i in range(20) if i != n]
+
+    return {
+        "append_bloom": (None, True, lambda spark, root: M.manifest_append(
+            _fault_kv(spark, 20, 24), root, bloom_columns=["k"]
+        ), list(range(24))),
+        "merge_upsert": (None, True, lambda spark, root:
+            M.manifest_merge_upsert(
+                spark, root, _fault_kv(spark, 0, 3, F.lit(9)), "id"
+            ), list(range(20))),
+        "delete_where": (None, True, lambda spark, root:
+            M.manifest_delete_where(spark, root, F.col("id") == 7),
+            without(7)),
+        "delete_rows": (None, False, lambda spark, root:
+            M.manifest_delete_rows(spark, root, F.col("id") == 5),
+            without(5)),
+        "evict_admit": (None, True, _fault_evict_admit,
+                        list(range(3, 20)) + [30, 31]),
+        "materialize": (vector, True, lambda spark, root:
+            M.manifest_materialize_deletes(spark, root), without(5)),
+        "compact_small": (None, True, lambda spark, root:
+            M.manifest_compact_small(spark, root), list(range(20))),
+    }
+
+
+def _write_faults(reaches_stats: bool):
+    """The fault points of a table write: footer stats, the bloom build,
+    and the publish, failing both as a crash and as a lost race."""
+    from ihop_reddit_spark.sources import manifest as M
+
+    publish = [
+        ("_commit_version", RuntimeError("injected: publish")),
+        ("_commit_version", M.ConcurrentCommitError("injected: lost race")),
+    ]
+    if not reaches_stats:
+        return publish
+    return [
+        ("_stage_stats", RuntimeError("injected: stats")),
+        ("_build_blooms", RuntimeError("injected: blooms")),
+    ] + publish
+
+
+@pytest.mark.parametrize("case", sorted(_fault_cases()))
+def test_manifest_write_fault_leaves_table_unchanged(
+    spark, tmp_path, monkeypatch, case
+):
+    """A write that fails anywhere between staging and publishing
+    raises the original error and leaves the table as it was: the same
+    ``data/`` listing (no stage directory leaks — vacuum only deletes
+    files some version doc names), the same head and the same rows. A
+    retry with the faults gone commits the expected rows."""
+    from ihop_reddit_spark.sources import manifest as M
+
+    setup, reaches_stats, op, want = _fault_cases()[case]
+    root = str(tmp_path / "tbl")
+    M.manifest_init(root)
+    M.manifest_append(
+        _fault_kv(spark, 0, 20).repartition(2), root, bloom_columns=["k"]
+    )
+    if setup is not None:
+        setup(spark, root)
+
+    def state():
+        return (
+            sorted(os.listdir(os.path.join(root, "data"))),
+            M.latest_version(root),
+            sorted(tuple(r) for r in M.read_snapshot(spark, root).collect()),
+        )
+
+    before = state()
+    for name, exc in _write_faults(reaches_stats):
+
+        def boom(*args, _exc=exc, **kwargs):
+            raise _exc
+
+        monkeypatch.setattr(M, name, boom)
+        with pytest.raises(type(exc)) as got:
+            op(spark, root)
+        monkeypatch.undo()
+        assert got.value is exc, (name, got.value)
+        assert state() == before, name
+    op(spark, root)
+    assert M.latest_version(root) == before[1] + 1
+    assert sorted(
+        r["id"] for r in M.read_snapshot(spark, root).collect()
+    ) == want
 
 
 def test_manifest_snapshot_survives_vacuum_and_clone_whole(spark, tmp_path):
