@@ -432,7 +432,9 @@ def encode_frames(
     image sequence in an ISOBMFF container with a real ``av01`` sample
     table — ``datapipe/mp4.py`` demuxes it like any MP4). Every frame
     is forced to a keyframe so each demuxed sample decodes
-    independently (the property the per-sample video gate relies on)."""
+    independently (the property the per-sample video gate relies on).
+    The output is byte-deterministic: the wall-clock box times libavif
+    writes are zeroed (:func:`_zero_box_times`)."""
     lib = _encoder_lib()
     if lib is None:
         raise NotImplementedError(
@@ -457,12 +459,33 @@ def encode_frames(
                 "AddImage",
             )
         _check(lib, lib.avifEncoderFinish(enc, C.byref(out)), "Finish")
-        return C.string_at(out.data, out.size)
+        return _zero_box_times(C.string_at(out.data, out.size))
     finally:
         lib.avifRWDataFree(C.byref(out))
         lib.avifEncoderDestroy(enc)
         for img in imgs:
             lib.avifImageDestroy(img)
+
+
+def _zero_box_times(payload: bytes) -> bytes:
+    """``payload`` with the creation and modification times of every
+    ``mvhd``, ``tkhd`` and ``mdhd`` box set to zero. libavif stamps them
+    from the wall clock. In all three full boxes the two times follow the
+    version/flags word: 32-bit each in version 0, 64-bit in version 1."""
+    from .mp4 import _iter_boxes
+
+    buf = bytearray(payload)
+
+    def walk(start: int, end: int) -> None:
+        for fourcc, s, e in _iter_boxes(buf, start, end):
+            if fourcc in (b"moov", b"trak", b"mdia"):
+                walk(s, e)
+            elif fourcc in (b"mvhd", b"tkhd", b"mdhd"):
+                width = 8 if buf[s] == 1 else 4
+                buf[s + 4 : s + 4 + 2 * width] = bytes(2 * width)
+
+    walk(0, len(buf))
+    return bytes(buf)
 
 
 def _box(fourcc: bytes, payload: bytes) -> bytes:

@@ -431,51 +431,22 @@ def embedding_near_dup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cosine_threshold: float = 0.95,
-    deterministic: bool = True,
-    strategy: str = "gemm",
 ) -> DataFrame:
     """Tier 5: embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥ t).
 
-    Exact all-pairs scoring with the integer-quantized cosine kernel
-    (``functions/vectors.py`` — bit-stable across engines, oracle-comparable).
-    ``strategy="gemm"`` (default, deterministic only) runs the scoring as a
-    distributed blocked numpy int64 GEMM (``similarity.blocked_pair_scores``)
-    — identical integers, ~20× faster than the per-pair Catalyst fold
-    (``strategy="fold"``), which is kept as the pure-JVM reference kernel.
+    Exact all-pairs scoring with the integer-quantized cosine (bit-stable
+    across engines, oracle-comparable), run as a distributed blocked numpy
+    int64 GEMM (``similarity.blocked_pair_scores``).
 
     SCALE NOTE: all-pairs is O(n²) — correct as the verifier tier, wrong as
     the discovery tier at 100 TB. There, generate candidates first with
     :func:`embedding_near_dup_lsh` (random-hyperplane buckets, shuffle on
     bucket key) and feed only candidates through this exact check.
     """
-    from ..functions.vectors import cosine, quantize, raw_dot, raw_norm
+    from .similarity import blocked_pair_scores
 
-    if deterministic and strategy == "gemm":
-        from .similarity import blocked_pair_scores
-
-        return blocked_pair_scores(
-            df, cosine_threshold, id_col=id_col, vec_col=vec_col
-        )
-    if deterministic:
-        side = df.select(
-            F.col(id_col).alias("__id"), quantize(F.col(vec_col)).alias("__v")
-        ).withColumn("__n", raw_norm(F.col("__v")))
-        a, b = side.alias("a"), side.alias("b")
-        sim = raw_dot(F.col("a.__v"), F.col("b.__v")).cast("double") / (
-            F.col("a.__n") * F.col("b.__n")
-        )
-    else:
-        side = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
-        a, b = side.alias("a"), side.alias("b")
-        sim = cosine(F.col("a.__v"), F.col("b.__v"))
-    return (
-        a.join(b, F.col("a.__id") < F.col("b.__id"))
-        .select(
-            F.col("a.__id").alias("left_id"),
-            F.col("b.__id").alias("right_id"),
-            sim.alias("cosine"),
-        )
-        .where(F.col("cosine") >= cosine_threshold)
+    return blocked_pair_scores(
+        df, cosine_threshold, id_col=id_col, vec_col=vec_col
     )
 
 
@@ -524,100 +495,6 @@ def embedding_near_dup_lsh(
             cosine(F.col("datasetA.__u"), F.col("datasetB.__u")).alias("cosine"),
         )
         .where(F.col("cosine") >= cosine_threshold)
-    )
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact Jaccard join with PREFIX FILTERING (Vernica et al., SIGMOD'10).
-
-    Same answers as :func:`ngram_jaccard_pairs`, different plan: under a
-    global shingle order (rarest first), two sets can reach Jaccard ≥ t only
-    if their first ``|S| − ceil(t·|S|) + 1`` shingles intersect — so the
-    candidate self-join runs on the short, rare-first PREFIX stream instead
-    of every (doc, shingle) row, which removes exactly the high-frequency
-    shingles that dominate the equi-join's fan-out. Candidates are then
-    verified exactly: join each pair back to its full shingle array and
-    take ``size(array_intersect)`` (O(|A|+|B|) per candidate).
-
-    Shuffle budget: shingle-frequency agg + per-doc rank window + prefix
-    self-join (small) + two array-fetch joins on doc id. The win grows with
-    threshold (prefix shrinks as t grows) and with shingle skew. MEASURED
-    trade-off (sf0.1 documents, t=0.2, near-uniform shingle frequencies):
-    prefix length ≈ 0.8·|S| prunes almost nothing and the extra stages cost
-    ~4× vs :func:`ngram_jaccard_pairs` — use this variant for HIGH
-    thresholds (t ≥ 0.7, prefix ≤ 0.3·|S|) or heavy-tailed shingle
-    distributions (natural text), and the plain join otherwise.
-    """
-    # r14: sizes and the verify arrays derive narrow from the per-doc
-    # shingle-array base — only the shingle-frequency agg still shuffles
-    # the exploded stream. The base feeds FOUR consumers (explode, sizes,
-    # both array fetches): persist it so the shingle expression runs once,
-    # and so the explode below reads a cached column (the inferred
-    # size>0 filter is then a cheap array-length probe, not a clone of
-    # the whole shingle expression — see doc_shingles docstring).
-    base = doc_shingles(df, text_col, id_col, n).persist()
-    ex = base.select("__id", F.explode("__grams").alias("__g"))
-    from pyspark.sql import Window
-
-    gfreq = ex.groupBy("__g").agg(F.count(F.lit(1)).alias("__df"))
-    sizes = base.select("__id", F.size("__grams").alias("__n"))
-    w = Window.partitionBy("__id").orderBy("__df", "__g")
-    # sizes is per-document (corpus-proportional) — no broadcast hint; the
-    # ranked stream is already partitioned by __id for the window, so the
-    # size attach is co-partitioned and AQE picks the strategy.
-    ranked = (
-        ex.join(gfreq, "__g")
-        .withColumn("__rn", F.row_number().over(w))
-        .join(sizes, "__id")
-    )
-    prefix_len = F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
-    prefix = ranked.where(F.col("__rn") <= prefix_len).select("__id", "__g")
-    cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "__g")
-        .where(F.col("a.__id") < F.col("b.__id"))
-        .select(
-            F.col("a.__id").alias("left_id"), F.col("b.__id").alias("right_id")
-        )
-        .distinct()
-    )
-    arrays = base.select("__id", F.col("__grams").alias("__sh"))
-    out = (
-        cand.join(
-            arrays.select(
-                F.col("__id").alias("left_id"), F.col("__sh").alias("__sha")
-            ),
-            "left_id",
-        )
-        .join(
-            arrays.select(
-                F.col("__id").alias("right_id"), F.col("__sh").alias("__shb")
-            ),
-            "right_id",
-        )
-        .select(
-            "left_id",
-            "right_id",
-            F.size(F.array_intersect("__sha", "__shb")).alias("inter"),
-            F.size("__sha").alias("n_left"),
-            F.size("__shb").alias("n_right"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("n_left") + F.col("n_right") - F.col("inter")),
-        )
-    )
-    return register_scoped_persists(
-        out.where(F.col("jaccard") >= threshold).select(
-            "left_id", "right_id", "inter", "n_left", "n_right", "jaccard"
-        ),
-        base,
     )
 
 

@@ -1,13 +1,21 @@
 """Similarity search over embedding columns (M6 at scale; north-star ANN).
 
-Tiering:
+Tiering (one implementation per operator):
 
-* :func:`brute_force_knn` — exact top-k. The query side is broadcast; the
-  corpus is scanned once; per-query top-k via windowed row_number. Cost is
-  |Q|×|C| — the correct baseline, and the verifier for the approximate tiers.
+* :func:`brute_force_knn` — exact top-k with the integer-quantized cosine
+  (oracle-comparable). The query matrix is collected in one guarded job
+  and broadcast; each Arrow batch of the corpus is scored with one numpy
+  int64 GEMM. Cost is |Q|×|C| — the baseline, and the verifier for the
+  approximate tiers.
 * :func:`ivf_knn` — IVF: KMeans-partition the corpus, probe the ``nprobe``
-  nearest centroids per query. Scan cost drops to ~nprobe/k_centroids of the
-  corpus; recall is tunable. All joins are broadcast (centroids are tiny).
+  nearest centroids per query. Probe cells are computed executor-side per
+  query partition (centroids ship in the closure), so no query row visits
+  the driver; the probe–corpus join carries no broadcast hint (AQE
+  decides). Scan cost drops to ~nprobe/k_centroids of the corpus.
+* :func:`ivf_pq_knn` — IVF-PQ (IVFADC + exact rerank) on the same probe
+  frame; the scan reads PQ codes, not vectors.
+* :func:`blocked_pair_scores` — exact all-pairs cosine ≥ t by blocked
+  GEMM (the corpus-vs-corpus shape; ``dedup.embedding_near_dup``).
 * :func:`lsh_knn` — MLlib ``BucketedRandomProjectionLSH`` approxNearestNeighbors
   wrapper (per single query; use ivf for batch).
 """
@@ -17,23 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, quantize, raw_dot, raw_norm
+from ..functions.vectors import cosine, quantize
 from ..operators.windows import top_k_per_group
 
-#: "queries are the small side" is a CONTRACT — enforce it like every other
-#: driver materialization in this engine (EmbeddingMatrix.from_vectors_df,
-#: tsne_project) instead of trusting the caller.
+#: "queries are the small side" is a CONTRACT for :func:`brute_force_knn` —
+#: enforce it like every other driver materialization in this engine
+#: (EmbeddingMatrix.from_vectors_df, tsne_project) instead of trusting the
+#: caller. Read at call time.
 MAX_DRIVER_QUERIES = 200_000
-
-
-def _guard_query_side(queries: DataFrame, max_driver_queries: int) -> None:
-    n = queries.count()
-    if n > max_driver_queries:
-        raise ValueError(
-            f"query side has {n} rows, over the driver guard "
-            f"({max_driver_queries}); for corpus-vs-corpus scoring use "
-            "blocked_pair_scores / embedding_near_dup instead"
-        )
 
 
 def brute_force_knn(
@@ -43,73 +42,22 @@ def brute_force_knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    deterministic: bool = True,
-    strategy: str = "gemm",
-    max_driver_queries: int = MAX_DRIVER_QUERIES,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, cosine, rank).
 
-    ``deterministic=True`` uses the integer-quantized cosine (bit-stable
-    across engines/partitionings — oracle-comparable); False uses the fast
-    double path. Self-matches (same id) are excluded. Ties break by neighbor
-    id.
+    The cosine is the integer-quantized one (bit-stable across engines and
+    partitionings — oracle-comparable). Self-matches (same id) and
+    zero-norm vectors are excluded. Ties break by neighbor id.
 
-    ``strategy="gemm"`` (deterministic only, default): the query matrix is
-    collected (queries are the small side BY CONTRACT — same assumption as
-    broadcasting them) and each corpus partition is scored with one numpy int64
-    matmul in ``mapInPandas``; each Arrow batch pre-reduces to its local
-    top-k per query (same (cosine desc, id asc) order), so the final window
-    sees k·n_batches rows per query instead of |C|. Identical integers to
-    the fold kernel — oracle hashes unchanged.
-
-    ``strategy="fold"`` plan shape: quantization + norms are one narrow
-    projection per row before the join, so the |Q|×|C| pairwise stage does
-    exactly one array fold per pair; queries are broadcast (no corpus
-    shuffle). The per-query top-k is a window over query_id — |Q| groups of
-    |C| rows.
+    The query matrix is collected (queries are the small side BY CONTRACT,
+    at most :data:`MAX_DRIVER_QUERIES` rows) and each corpus partition is
+    scored with one numpy int64 matmul in ``mapInPandas``; each Arrow batch
+    pre-reduces to its local top-k per query (same (cosine desc, id asc)
+    order), so the final window sees k·n_batches rows per query instead
+    of |C|.
     """
-    if deterministic and strategy == "gemm":
-        scored = _gemm_query_scores(
-            corpus, queries, k, id_col, vec_col, query_id_col,
-            max_driver_queries=max_driver_queries,
-        )
-        return top_k_per_group(
-            scored,
-            query_id_col,
-            [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-            k,
-        )
-    if deterministic:
-        q = queries.select(
-            F.col(id_col).alias(query_id_col),
-            quantize(F.col(vec_col)).alias("__qv"),
-        ).withColumn("__qnorm", raw_norm(F.col("__qv")))
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            quantize(F.col(vec_col)).alias("__cv"),
-        ).withColumn("__cnorm", raw_norm(F.col("__cv")))
-        sim = raw_dot(F.col("__qv"), F.col("__cv")).cast("double") / (
-            F.col("__qnorm") * F.col("__cnorm")
-        )
-    else:
-        q = queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qv")
-        )
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-        )
-        sim = cosine(F.col("__qv"), F.col("__cv"))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col(query_id_col) != F.col("neighbor_id"))
-        .select(query_id_col, "neighbor_id", sim.alias("cosine"))
-        # zero-norm vectors have no defined cosine: drop them here exactly
-        # like the gemm path's isfinite filter, so both strategies agree
-        .where(F.col("cosine").isNotNull() & ~F.isnan(F.col("cosine")))
-    )
     return top_k_per_group(
-        scored,
+        _gemm_query_scores(corpus, queries, k, id_col, vec_col, query_id_col),
         query_id_col,
         [F.col("cosine").desc(), F.col("neighbor_id").asc()],
         k,
@@ -123,25 +71,39 @@ def _gemm_query_scores(
     id_col: str,
     vec_col: str,
     query_id_col: str,
-    max_driver_queries: int = MAX_DRIVER_QUERIES,
 ) -> DataFrame:
     """(query_id, neighbor_id, cosine) candidates: one int64 GEMM per Arrow
     batch of the corpus against the collected query matrix, pre-reduced to
-    the per-batch top-k per query under (cosine desc, neighbor asc)."""
+    the per-batch top-k per query under (cosine desc, neighbor asc).
+
+    The query side is read with one ``limit(MAX_DRIVER_QUERIES + 1)``
+    Arrow collect (one Spark job); a query side past the guard raises."""
     import numpy as np
     import pandas as pd
 
-    from ..functions.vectors import quantize
+    from ..ml.clustering import vectors_matrix
 
-    _guard_query_side(queries, max_driver_queries)
-    qrows = queries.select(
-        F.col(id_col).alias("__id"), quantize(F.col(vec_col)).alias("__qv")
-    ).collect()
+    limit = MAX_DRIVER_QUERIES
+    table = (
+        queries.select(
+            F.col(id_col).alias("__id"), quantize(F.col(vec_col)).alias("__qv")
+        )
+        .limit(limit + 1)
+        .toArrow()
+    )
+    if table.num_rows > limit:
+        raise ValueError(
+            f"query side has more than {limit} rows, over the driver guard; "
+            "for corpus-vs-corpus scoring use blocked_pair_scores / "
+            "embedding_near_dup instead"
+        )
     out_schema = f"{query_id_col} long, neighbor_id long, cosine double"
-    if not qrows:
+    if table.num_rows == 0:
         return corpus.sparkSession.createDataFrame([], out_schema)
-    q_ids = np.array([r["__id"] for r in qrows], dtype=np.int64)
-    Q = np.array([r["__qv"] for r in qrows], dtype=np.int64)
+    q_ids = table.column("__id").to_numpy().astype(np.int64)
+    # quantized entries are far below 2^53 (the int64 GEMM needs
+    # dim·v² < 2^63), so the float64 round trip is exact
+    Q = vectors_matrix(table.column("__qv")).astype(np.int64)
     q_norm = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
     sc = corpus.sparkSession.sparkContext
     bq = sc.broadcast((q_ids, Q, q_norm))
@@ -208,6 +170,8 @@ def build_ivf_index(
 
 
 def _resolve_centers(model):
+    """(k, dim) centroid array from a fitted KMeansModel or from a plain
+    centroid array (e.g. :func:`read_ivf_centroids`)."""
     import numpy as np
 
     return (
@@ -217,9 +181,9 @@ def _resolve_centers(model):
     )
 
 
-def _probe_frame_distributed(
+def _probe_frame(
     queries: DataFrame,
-    centers,
+    model,
     nprobe: int,
     id_col: str,
     vec_col: str,
@@ -228,12 +192,11 @@ def _probe_frame_distributed(
     """(query_id, __qvec, centroid_id) probe rows computed EXECUTOR-side:
     the centroid matrix rides the closure (k_centroids×dim floats — KBs),
     each query partition streams through one Arrow batch matmul, and no
-    row ever visits the driver — the query path for query sets past the
-    driver guard (VERDICT r4 item 7). Cell tie-break matches the driver
-    path exactly: stable argsort of −cosine keeps lower centroid ids."""
+    row ever visits the driver. Cell tie-break: a stable argsort of
+    −cosine keeps the lower centroid id."""
     import numpy as np
 
-    C = np.asarray(centers, dtype=np.float64)
+    C = np.asarray(_resolve_centers(model), dtype=np.float64)
     cn = np.linalg.norm(C, axis=1, keepdims=True)
     Cn = C / np.where(cn == 0.0, 1.0, cn)
 
@@ -264,18 +227,29 @@ def _probe_frame_distributed(
     )
 
 
-def _ivf_score(
+def ivf_knn(
     assigned_corpus: DataFrame,
-    probes: DataFrame,
+    model,
+    queries: DataFrame,
     k: int,
-    id_col: str,
-    query_id_col: str,
-    vec_col: str,
-    broadcast_probes: bool,
+    nprobe: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
 ) -> DataFrame:
-    p = F.broadcast(probes) if broadcast_probes else probes
+    """Approximate top-k: score queries only against the ``nprobe`` nearest
+    centroid cells (double cosine), ties broken by neighbor id.
+
+    ``model`` is either a fitted KMeansModel or a plain (k, dim)
+    centroid array (e.g. :func:`read_ivf_centroids` — probing a
+    persisted index in a session that never trained it). Probe cells come
+    from :func:`_probe_frame`, so the query side has no size guard; the
+    probe–corpus join shuffles on ``centroid_id`` with no forced
+    broadcast (AQE decides).
+    """
+    probes = _probe_frame(queries, model, nprobe, id_col, vec_col, query_id_col)
     scored = (
-        p.join(assigned_corpus, "centroid_id")
+        probes.join(assigned_corpus, "centroid_id")
         .where(F.col(query_id_col) != F.col(id_col))
         .select(
             query_id_col,
@@ -288,81 +262,6 @@ def _ivf_score(
         query_id_col,
         [F.col("cosine").desc(), F.col("neighbor_id").asc()],
         k,
-    )
-
-
-def ivf_knn(
-    assigned_corpus: DataFrame,
-    model,
-    queries: DataFrame,
-    k: int,
-    nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    max_driver_queries: int = MAX_DRIVER_QUERIES,
-) -> DataFrame:
-    """Approximate top-k: score queries only against the ``nprobe`` nearest
-    centroid cells. Centroid table is driver-built (tiny) and broadcast.
-
-    ``model`` is either a fitted KMeansModel or a plain (k, dim)
-    centroid array (e.g. :func:`read_ivf_centroids` — probing a
-    persisted index in a session that never trained it). The query set
-    must fit the driver guard; past it, use
-    :func:`ivf_knn_distributed` (same answers, no driver hop).
-    """
-    import numpy as np
-
-    _guard_query_side(queries, max_driver_queries)
-    centers = _resolve_centers(model)
-    norms = [c / (np.linalg.norm(c) or 1.0) for c in centers]
-
-    def nearest_cells(vec):
-        v = np.asarray(vec, dtype=float)
-        v = v / (np.linalg.norm(v) or 1.0)
-        sims = [float(v @ c) for c in norms]
-        order = sorted(range(len(sims)), key=lambda i: (-sims[i], i))
-        return order[:nprobe]
-
-    spark = assigned_corpus.sparkSession
-    qrows = queries.select(id_col, vec_col).collect()  # queries are the small side
-    probe_rows = [
-        (row[id_col], row[vec_col], cell)
-        for row in qrows
-        for cell in nearest_cells(row[vec_col])
-    ]
-    probes = spark.createDataFrame(
-        probe_rows, f"{query_id_col} long, __qvec array<float>, centroid_id int"
-    )
-    return _ivf_score(
-        assigned_corpus, probes, k, id_col, query_id_col, vec_col,
-        broadcast_probes=True,
-    )
-
-
-def ivf_knn_distributed(
-    assigned_corpus: DataFrame,
-    model,
-    queries: DataFrame,
-    k: int,
-    nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """IVF top-k with a fully DISTRIBUTED query side: probe cells are
-    computed per query partition via Arrow (centroids ship in the
-    closure), the probe-corpus join shuffles on ``centroid_id`` with no
-    forced broadcast (AQE decides), and no query row ever visits the
-    driver — use this past :data:`MAX_DRIVER_QUERIES`. Same answers as
-    :func:`ivf_knn` (pytest-pinned equivalence)."""
-    probes = _probe_frame_distributed(
-        queries, _resolve_centers(model), nprobe, id_col, vec_col,
-        query_id_col,
-    )
-    return _ivf_score(
-        assigned_corpus, probes, k, id_col, query_id_col, vec_col,
-        broadcast_probes=False,
     )
 
 
@@ -412,9 +311,10 @@ def blocked_pair_scores(
     self-join blocks on ``a.blk <= b.blk`` (upper triangle), and score each
     block pair with ONE numpy int64 matmul inside ``mapInPandas``. The
     quantized integers make the numpy path bit-identical to the per-pair
-    array-fold kernel (dot ≤ dim·2⁴⁸ < 2⁶³ — no overflow), so results stay
-    oracle-comparable, but the inner loop is vectorized C instead of an
-    interpreted Catalyst fold per pair: ~20× faster at 5k×5k.
+    ``functions.vectors.raw_dot`` fold (dot ≤ dim·2⁴⁸ < 2⁶³ — no
+    overflow), so results stay oracle-comparable, but the inner loop is
+    vectorized C instead of an interpreted Catalyst fold per pair: ~20×
+    faster at 5k×5k.
 
     Block size bounds executor memory (block_size² doubles per task); block
     count bounds parallelism — with B=1024, 100k vectors is ~4.9k balanced
@@ -519,9 +419,9 @@ def write_ivf_index(
     """Materialize an IVF index as centroid-partitioned parquet.
 
     The layout IS the index: one directory per ``centroid_id``, so a probe's
-    ``centroid_id IN (...)`` (or the broadcast probe join via dynamic
-    partition pruning) prunes at the FILE level — a 256-cell index with
-    nprobe=8 reads ~3% of the corpus bytes. This is what makes IVF an
+    ``centroid_id IN (...)`` (or the probe join via dynamic partition
+    pruning, when AQE broadcasts the probe side) prunes at the FILE
+    level — a 256-cell index with nprobe=8 reads ~3% of the corpus bytes. This is what makes IVF an
     actual scale win instead of a full-scan with extra steps.
     """
     assigned_corpus.write.mode(mode).partitionBy("centroid_id").parquet(path)
@@ -636,7 +536,6 @@ def ivf_pq_knn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    max_driver_queries: int = MAX_DRIVER_QUERIES,
 ) -> DataFrame:
     """IVFADC + refine: probe ``nprobe`` cells, score candidates by PQ
     lookup-table cosine (per-query m×n_codes dot tables, numpy gather —
@@ -645,104 +544,27 @@ def ivf_pq_knn(
     the true vectors, return the top k.
 
     ``assigned_encoded`` = IVF assignment (``centroid_id``) + true vector
-    + ``pq_codes`` (from :func:`pq_encode`). At scale the rerank join is
-    shortlist-sized; everything corpus-sized reads integers. The query
-    set must fit the driver guard; past it, use
-    :func:`ivf_pq_knn_distributed` (same answers, no driver hop).
+    + ``pq_codes`` (from :func:`pq_encode`). ``model`` is a fitted
+    KMeansModel or a (k, dim) centroid array, as for :func:`ivf_knn`
+    (:func:`read_pq_index` + :func:`read_ivf_centroids` probe a persisted
+    index). Centroids and codebooks ship in closures (KB-sized model
+    constants), the probe frame is built per query partition via Arrow,
+    and neither the probe-candidate join nor the rerank join forces a
+    broadcast. At scale the rerank join is shortlist-sized; everything
+    corpus-sized reads integers.
     """
     import numpy as np
-
-    _guard_query_side(queries, max_driver_queries)
-
-    centers = model.clusterCenters()
-    norms = [c / (np.linalg.norm(c) or 1.0) for c in centers]
-
-    def nearest_cells(vec):
-        v = np.asarray(vec, dtype=float)
-        v = v / (np.linalg.norm(v) or 1.0)
-        sims = [float(v @ c) for c in norms]
-        return sorted(range(len(sims)), key=lambda i: (-sims[i], i))[:nprobe]
-
-    spark = assigned_encoded.sparkSession
-    qrows = queries.select(id_col, vec_col).collect()
-    probe_rows = [
-        (row[id_col], row[vec_col], cell)
-        for row in qrows
-        for cell in nearest_cells(row[vec_col])
-    ]
-    probes = spark.createDataFrame(
-        probe_rows, f"{query_id_col} long, __qvec array<float>, centroid_id int"
-    )
-    return _ivf_pq_score(
-        assigned_encoded, probes, codebooks, k, rerank, id_col, vec_col,
-        query_id_col, broadcast_probes=True,
-    )
-
-
-def ivf_pq_knn_distributed(
-    assigned_encoded: DataFrame,
-    model,
-    codebooks,
-    queries: DataFrame,
-    k: int,
-    nprobe: int = 8,
-    rerank: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """IVFADC + refine with a fully DISTRIBUTED query side: centroids
-    AND codebooks ship in closures (both KB-sized model constants), the
-    probe frame is built per query partition via Arrow, and neither the
-    probe-candidate join nor the rerank join forces a broadcast — the
-    100 TB query path (e.g. corpus-vs-index retrieval augmentation).
-    Same answers as :func:`ivf_pq_knn` (pytest-pinned equivalence)."""
-    probes = _probe_frame_distributed(
-        queries, _resolve_centers(model), nprobe, id_col, vec_col,
-        query_id_col,
-    )
-    # rerank query vectors come straight from the query frame (same
-    # float32 rounding as the probe schema) — avoids re-running the
-    # probe mapInPandas and its dropDuplicates shuffle
-    qvecs = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).cast("array<float>").alias("__qvec"),
-    )
-    return _ivf_pq_score(
-        assigned_encoded, probes, codebooks, k, rerank, id_col, vec_col,
-        query_id_col, broadcast_probes=False, qvecs=qvecs,
-    )
-
-
-def _ivf_pq_score(
-    assigned_encoded: DataFrame,
-    probes: DataFrame,
-    codebooks,
-    k: int,
-    rerank: int | None,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    broadcast_probes: bool,
-    qvecs: DataFrame | None = None,
-) -> DataFrame:
-    import numpy as np
-
-    from ..functions.vectors import cosine
 
     rerank = rerank or 4 * k
     books = np.asarray(codebooks)
     m, n_codes, dsub = books.shape
     cnorm2 = (books**2).sum(axis=2)  # (m, n_codes)
 
-    p = F.broadcast(probes) if broadcast_probes else probes
-    cand = (
-        p.join(
-            assigned_encoded.select("centroid_id", id_col, "pq_codes"),
-            "centroid_id",
-        )
-        .where(F.col(query_id_col) != F.col(id_col))
-    )
+    probes = _probe_frame(queries, model, nprobe, id_col, vec_col, query_id_col)
+    cand = probes.join(
+        assigned_encoded.select("centroid_id", id_col, "pq_codes"),
+        "centroid_id",
+    ).where(F.col(query_id_col) != F.col(id_col))
 
     def adc_score(it):
         import pandas as pd
@@ -785,15 +607,14 @@ def _ivf_pq_score(
         [F.col("adc_cosine").desc(), F.col("neighbor_id").asc()],
         rerank,
     )
-    if qvecs is None:
-        qvecs = probes.select(query_id_col, "__qvec").dropDuplicates(
-            [query_id_col]
-        )
+    # rerank query vectors come straight from the query frame (the same
+    # float32 rounding as the probe schema's __qvec)
+    qvecs = queries.select(
+        F.col(id_col).alias(query_id_col),
+        F.col(vec_col).cast("array<float>").alias("__qvec"),
+    )
     refined = (
-        shortlist.join(
-            F.broadcast(qvecs) if broadcast_probes else qvecs,
-            query_id_col,
-        )
+        shortlist.join(qvecs, query_id_col)
         .join(
             assigned_encoded.select(
                 F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nvec")

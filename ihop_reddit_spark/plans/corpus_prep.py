@@ -8,14 +8,13 @@ plan over the ``documents`` table:
 2. **Language gate** — marker-argmax language ID.
 3. **Exact dedup** — md5 fingerprint, keep the smallest doc_id per text.
 4. **Near-dup collapse** — exact n-gram Jaccard pairs above a threshold
-   among the survivors, with the self-join's worst key bounded: the
-   default drops shingles with document frequency > ``max_shingle_df``
-   from the join stream (a boilerplate shingle shared by 10⁸ documents
-   is a 10¹⁶-row join key uncapped), and a Vernica prefix-filter
-   strategy is config-selectable for heavy-tailed corpora → connected
-   components (``dedup.duplicate_components``: star contraction rounds
-   while the edge set is above a size guard, one driver union-find below
-   it) → keep each component's smallest id.
+   among the survivors, with the self-join's worst key bounded: shingles
+   with document frequency > ``max_shingle_df`` are dropped from the
+   join stream (a boilerplate shingle shared by 10⁸ documents is a
+   10¹⁶-row join key uncapped) → connected components
+   (``dedup.duplicate_components``: star contraction rounds while the
+   edge set is above a size guard, one driver union-find below it) →
+   keep each component's smallest id.
 5. **Token budget** — whitespace + BPE-ish token counts on the final corpus.
 
 Stage order is the cost order: each tier only sees the previous tier's
@@ -24,8 +23,8 @@ contract from ``datapipe/dedup.py``). Every stage is deterministic, so the
 WHOLE pipeline is DuckDB-oracle-gated end to end (`corpus_prep_survivors`
 in the query catalog). The oracle's uncapped-SQL twin stays valid under
 the df cap because no shingle's document frequency approaches the cap at
-gate scales (measured: identical survivor hashes capped/uncapped/prefix
-at sf0.1) — where the cap CAN bind is exactly the boilerplate regime the
+gate scales (measured: identical survivor hashes capped/uncapped at
+sf0.1) — where the cap CAN bind is exactly the boilerplate regime the
 oracle never reaches and near-dup signal never lives.
 """
 
@@ -36,17 +35,19 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..datapipe.dedup import (
-    duplicate_components,
-    ngram_jaccard_pairs,
-    ngram_jaccard_pairs_prefix,
-)
+from ..datapipe.dedup import duplicate_components, ngram_jaccard_pairs
 from ..functions import text as TX
 from ..operators.joins import anti_join_filter
 
 
 @dataclass
 class CorpusPrepConfig:
+    """Gate thresholds for :func:`prepare_corpus`: quality ratios and
+    minimum length, kept languages, and the near-dup tier's Jaccard
+    threshold, shingle width and per-shingle document-frequency cap. The
+    near-dup pairs always come from the exact shingle self-join
+    (``dedup.ngram_jaccard_pairs``)."""
+
     min_alpha_ratio: float = 0.55
     max_digit_ratio: float = 0.2
     min_tokens: int = 10
@@ -58,15 +59,6 @@ class CorpusPrepConfig:
     #: max_shingle_df² pairs without changing results on natural corpora
     #: (a shingle in >10k docs is boilerplate carrying no near-dup signal).
     max_shingle_df: int | None = 10_000
-    #: near-dup pair strategy: "exact" (shingle self-join, worst key
-    #: bounded by max_shingle_df — measured 10.7s vs prefix's 30.2s on
-    #: sf0.1's near-uniform shingle frequencies, identical output) or
-    #: "prefix" (Vernica prefix filter — structurally excludes
-    #: high-frequency shingles from the join with NO recall caveat;
-    #: prefer it for high thresholds / heavy-tailed natural text where
-    #: a df cap would have to bind). Identical pairs whenever no shingle
-    #: exceeds the cap.
-    pair_strategy: str = "exact"
 
 
 def prepare_corpus(
@@ -127,29 +119,15 @@ def prepare_corpus(
         .persist()
     )
     # near-dup collapse: pairs → components → drop every non-representative.
-    # Strategy is config-routed; both paths bound the self-join's worst key
-    # (prefix filtering excludes high-frequency shingles from every doc's
-    # prefix structurally; the exact path caps them at max_shingle_df) —
-    # the uncapped quadratic shingle self-join never runs here.
-    if cfg.pair_strategy == "prefix":
-        pairs = ngram_jaccard_pairs_prefix(
-            exact,
-            text_col,
-            id_col,
-            n=cfg.shingle_n,
-            threshold=cfg.jaccard_threshold,
-        )
-    elif cfg.pair_strategy == "exact":
-        pairs = ngram_jaccard_pairs(
-            exact,
-            text_col,
-            id_col,
-            n=cfg.shingle_n,
-            threshold=cfg.jaccard_threshold,
-            max_shingle_df=cfg.max_shingle_df,
-        )
-    else:
-        raise ValueError(f"pair_strategy must be prefix|exact, got {cfg.pair_strategy!r}")
+    # The shingle self-join's worst key is bounded by max_shingle_df.
+    pairs = ngram_jaccard_pairs(
+        exact,
+        text_col,
+        id_col,
+        n=cfg.shingle_n,
+        threshold=cfg.jaccard_threshold,
+        max_shingle_df=cfg.max_shingle_df,
+    )
     # components: a local relation when the pair graph is under the
     # driver guard, star-contracted executor-side frames above it
     components = duplicate_components(pairs)

@@ -1682,7 +1682,7 @@ def embedding_near_dup_pairs(spark, sf_dir):
     from ..datapipe.dedup import embedding_near_dup
 
     emb = _t(spark, sf_dir, "embeddings")
-    return embedding_near_dup(emb, cosine_threshold=0.4, deterministic=True)
+    return embedding_near_dup(emb, cosine_threshold=0.4)
 
 
 # ---------------------------------------------------------------------------
@@ -1713,7 +1713,7 @@ def embedding_sum_by_label(spark, sf_dir):
 def knn_bruteforce_cosine(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    out = brute_force_knn(emb, queries, k=5, deterministic=True)
+    out = brute_force_knn(emb, queries, k=5)
     return out.withColumn("rank", F.col("rank").cast("long"))
 
 

@@ -128,7 +128,7 @@ def embeddings(spark, sf_dir):
 
 def test_brute_force_knn_matches_numpy(embeddings):
     queries = embeddings.where(F.col("vec_id") < 3)
-    out = brute_force_knn(embeddings, queries, k=5, deterministic=True)
+    out = brute_force_knn(embeddings, queries, k=5)
     got = {
         (r.query_id, r.rank): r.neighbor_id for r in out.collect()
     }
@@ -151,7 +151,7 @@ def test_brute_force_knn_matches_numpy(embeddings):
 @pytest.mark.slow
 def test_ivf_knn_recall(embeddings):
     queries = embeddings.where(F.col("vec_id") < 5)
-    exact = brute_force_knn(embeddings, queries, k=5, deterministic=False)
+    exact = brute_force_knn(embeddings, queries, k=5)
     exact_sets = {}
     for r in exact.collect():
         exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -166,29 +166,45 @@ def test_ivf_knn_recall(embeddings):
     assert sum(recalls) / len(recalls) >= 0.6  # nprobe=4/8 cells
 
 
-@pytest.mark.slow
-def test_ivf_knn_distributed_matches_driver_path(embeddings):
-    """VERDICT r4 item 7: the mapInPandas query path must return the
-    SAME answers as the driver-collected path, with no forced broadcast
-    and no driver hop (works past the guard)."""
-    from ihop_reddit_spark.datapipe.similarity import ivf_knn_distributed
+def _ivf_model_topk(assigned, centers, queries, k, nprobe):
+    """numpy model of ``ivf_knn``: probe cells by a stable argsort of
+    −cosine to the centroids, then the exact double-cosine top-k inside
+    those cells (self excluded), ties broken by id. Dots are summed in
+    order, as Spark's fold does, so the cosines match bit for bit."""
+    rows = assigned.select("vec_id", "centroid_id", "embedding").collect()
+    ids = np.array([r.vec_id for r in rows])
+    cells = np.array([r.centroid_id for r in rows])
+    mat = np.array([r.embedding for r in rows], dtype=np.float64)
+    norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+    C = np.asarray(centers, dtype=np.float64)
+    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    out = []
+    for q in queries.select("vec_id", "embedding").collect():
+        v = np.asarray(q.embedding, dtype=np.float64)
+        probe = np.argsort(-(v / np.linalg.norm(v)) @ Cn.T, kind="stable")[:nprobe]
+        sel = np.isin(cells, probe) & (ids != q.vec_id)
+        dots = np.cumsum(mat[sel] * v, axis=1)[:, -1]
+        cos = dots / (np.sqrt(np.cumsum(v * v)[-1]) * norms[sel])
+        order = np.lexsort((ids[sel], -cos))[:k]
+        out += [
+            (q.vec_id, int(ids[sel][j]), float(cos[j]), rank)
+            for rank, j in enumerate(order, start=1)
+        ]
+    return sorted(out)
 
+
+@pytest.mark.slow
+def test_ivf_knn_matches_numpy_model(embeddings):
+    """``ivf_knn`` returns the numpy model's rows, computes its probes in
+    ``mapInPandas`` (no query row visits the driver) and forces no
+    broadcast: with auto-broadcast off, no BroadcastExchange remains."""
     queries = embeddings.where(F.col("vec_id") < 50)
     assigned, model = build_ivf_index(embeddings, n_centroids=8, seed=1)
-    driver = ivf_knn(assigned, model, queries, k=5, nprobe=4)
-    dist = ivf_knn_distributed(assigned, model, queries, k=5, nprobe=4)
-    assert sorted(map(tuple, dist.collect())) == sorted(
-        map(tuple, driver.collect())
+    got = ivf_knn(assigned, model, queries, k=5, nprobe=4)
+    assert sorted(map(tuple, got.collect())) == _ivf_model_topk(
+        assigned, model.clusterCenters(), queries, k=5, nprobe=4
     )
-    # guard does not apply: the distributed path never collects queries
-    tiny_guard_ok = ivf_knn_distributed(
-        assigned, model, queries, k=2, nprobe=2
-    )
-    assert tiny_guard_ok.count() > 0
 
-    # plan shape: query side crosses via Arrow (MapInPandas), and with
-    # auto-broadcast disabled no BroadcastExchange remains (nothing is
-    # forced — AQE alone decides)
     spark = embeddings.sparkSession
     spark.catalog.clearCache()  # cached IMRs embed old broadcast plans
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -199,9 +215,7 @@ def test_ivf_knn_distributed_matches_driver_path(embeddings):
 
         buf = io.StringIO()
         with redirect_stdout(buf):
-            ivf_knn_distributed(
-                assigned, model, queries, k=5, nprobe=4
-            ).explain("formatted")
+            ivf_knn(assigned, model, queries, k=5, nprobe=4).explain("formatted")
         plan = buf.getvalue()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -210,27 +224,35 @@ def test_ivf_knn_distributed_matches_driver_path(embeddings):
 
 
 @pytest.mark.slow
-def test_ivf_pq_knn_distributed_matches_driver_path(embeddings):
+def test_persisted_ivf_pq_index_probes_like_the_model(embeddings, tmp_path):
+    """An IVF-PQ index written with its centroids and read back in place
+    of the fitted model returns the in-memory probe's rows."""
     from ihop_reddit_spark.datapipe.similarity import (
         ivf_pq_knn,
-        ivf_pq_knn_distributed,
         pq_encode,
+        read_ivf_centroids,
+        read_pq_index,
         train_pq_codebooks,
+        write_ivf_centroids,
+        write_pq_index,
     )
 
+    spark = embeddings.sparkSession
     queries = embeddings.where(F.col("vec_id") < 20)
     assigned, model = build_ivf_index(embeddings, n_centroids=8, seed=1)
     books = train_pq_codebooks(embeddings, m=8, n_codes=16)
     encoded = assigned.join(pq_encode(embeddings, books), "vec_id")
-    driver = ivf_pq_knn(
-        encoded, model, books, queries, k=5, nprobe=4, rerank=20
-    )
-    dist = ivf_pq_knn_distributed(
-        encoded, model, books, queries, k=5, nprobe=4, rerank=20
-    )
-    assert sorted(map(tuple, dist.collect())) == sorted(
-        map(tuple, driver.collect())
-    )
+    write_pq_index(spark, encoded, books, str(tmp_path / "pq"))
+    write_ivf_centroids(spark, model, str(tmp_path / "centroids"))
+
+    index, read_books = read_pq_index(spark, str(tmp_path / "pq"))
+    cents = read_ivf_centroids(spark, str(tmp_path / "centroids"))
+    kw = dict(k=5, nprobe=4, rerank=20)
+    persisted = ivf_pq_knn(index, cents, read_books, queries, **kw)
+    in_memory = ivf_pq_knn(encoded, model, books, queries, **kw)
+    want = sorted(map(tuple, in_memory.collect()))
+    assert len(want) == 20 * 5
+    assert sorted(map(tuple, persisted.collect())) == want
 
 
 def test_scoped_persist_handle_releases_caches(near_dup_docs):
@@ -247,15 +269,18 @@ def test_scoped_persist_handle_releases_caches(near_dup_docs):
     assert release_scoped_persists(out.limit(1)) == 0
 
 
-def test_query_side_driver_guard(embeddings):
-    from ihop_reddit_spark.datapipe.similarity import ivf_knn as _ivf
+def test_query_side_driver_guard(embeddings, monkeypatch, count_jobs):
+    from ihop_reddit_spark.datapipe import similarity
 
     queries = embeddings.where(F.col("vec_id") < 5)
+    # building the plan reads the query side with one guarded collect
+    _, n = count_jobs(lambda: brute_force_knn(embeddings, queries, k=2))
+    assert n == 1
+    monkeypatch.setattr(similarity, "MAX_DRIVER_QUERIES", 3)
     with pytest.raises(ValueError, match="driver guard"):
-        brute_force_knn(embeddings, queries, k=2, max_driver_queries=3)
-    assigned, model = build_ivf_index(embeddings, n_centroids=4, seed=1)
-    with pytest.raises(ValueError, match="driver guard"):
-        _ivf(assigned, model, queries, k=2, max_driver_queries=3)
+        brute_force_knn(embeddings, queries, k=2)
+    monkeypatch.setattr(similarity, "MAX_DRIVER_QUERIES", 5)
+    assert brute_force_knn(embeddings, queries, k=2).count() == 10
 
 
 def test_lsh_knn_runs(embeddings):

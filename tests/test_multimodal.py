@@ -2085,6 +2085,24 @@ def test_av1_video_demux_and_per_sample_decode():
         assert (d == g).all()
 
 
+def test_av1_video_encode_is_byte_deterministic():
+    """Two encodes of the same frames in different wall-clock seconds are
+    the same bytes: the mvhd/tkhd/mdhd times libavif stamps are zeroed."""
+    import time
+
+    import numpy as np
+    import pytest
+
+    from ihop_reddit_spark.datapipe import avif_native as A
+
+    if not _avif_ready():
+        pytest.skip("system libavif not installed")
+    frames = [np.full((16, 16, 3), v, np.uint8) for v in (20, 200)]
+    first = A.encode_frames(frames, fps=5, lossless=True)
+    time.sleep(1.0 - time.time() % 1.0 + 0.05)  # into the next second
+    assert A.encode_frames(frames, fps=5, lossless=True) == first
+
+
 def test_avif_decode_image_dispatch():
     import numpy as np
     import pytest

@@ -161,40 +161,6 @@ def test_grouped_concat_matches_python_model(spark, rows):
 
 @SETTINGS
 @given(
-    docs=st.lists(
-        st.lists(st.sampled_from("abcde"), min_size=1, max_size=14).map(
-            lambda toks: " ".join(toks)
-        ),
-        min_size=2,
-        max_size=8,
-    ),
-    threshold=st.sampled_from([0.2, 0.5, 0.8]),
-)
-@pytest.mark.slow
-def test_prefix_filter_jaccard_equals_plain(spark, docs, threshold):
-    from ihop_reddit_spark.datapipe.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
-
-    df = spark.createDataFrame(
-        [(i, d) for i, d in enumerate(docs)], "doc_id long, text string"
-    )
-    plain = {
-        (r["left_id"], r["right_id"]): (r["inter"], r["jaccard"])
-        for r in ngram_jaccard_pairs(df, "text", "doc_id", threshold=threshold).collect()
-    }
-    pref = {
-        (r["left_id"], r["right_id"]): (r["inter"], r["jaccard"])
-        for r in ngram_jaccard_pairs_prefix(
-            df, "text", "doc_id", threshold=threshold
-        ).collect()
-    }
-    assert plain == pref
-
-
-@SETTINGS
-@given(
     rows=st.lists(
         st.tuples(st.integers(0, 2), st.integers(0, 9), st.sampled_from("xyzw")),
         min_size=1,
