@@ -17,7 +17,11 @@ deterministic, no centroid-distance tie-break needed):
   ENTIRE pipeline hash-exact against a DuckDB oracle
   (``semantic_dedup_survivors``) — unlike MLlib's seeded-but-JVM-random
   ``BucketedRandomProjectionLSH`` (kept in ``dedup.embedding_near_dup_lsh``
-  as the production variant).
+  as the production variant). Up to :data:`MAX_LOCAL_ROWS` vectors it
+  finishes on the driver from one Arrow collect: numpy buckets every
+  vector with one int64 matmul and scores each (table, bucket) cell with
+  one int64 GEMM, in the same IEEE operations as the Catalyst plan, which
+  runs above the guard.
 * :func:`kmeans_semantic_dedup` — the paper's k-means partitioner, reusing
   the distributed KMeans from ``ml/clustering.py`` and the blocked-GEMM
   pair scorer from ``similarity.py`` (``group_col`` = cluster), so large
@@ -28,8 +32,12 @@ contains both sides. Partitioned dedup trades a bounded recall loss for
 linear-ish scale — measured on the synthetic embeddings at sf0.01, the
 sign-LSH tables catch 46 of the 53 globally-droppable docs (0.87).
 Verification is always the EXACT integer-quantized cosine kernel
-(``functions/vectors.py``) on candidate pairs — candidates are never
-trusted unverified, the same tiering contract as every dedup tier.
+(``functions/vectors.py``, or its numpy twin on the driver) on candidate
+pairs — candidates are never trusted unverified, the same tiering contract
+as every dedup tier. The Spark plans here are Catalyst only, with no
+Python UDF: the bucket and verify dot products are interpreted
+``zip_with``/``aggregate`` folds, which is why small corpora finish on the
+driver instead.
 """
 
 from __future__ import annotations
@@ -45,6 +53,17 @@ from ..functions.vectors import quantize, raw_dot, raw_norm
 #: Namespace for the derandomized hyperplane bits — part of the public
 #: output contract (changing it changes every bucket).
 _SEED_TAG = "semdedup"
+
+#: Largest corpus :func:`sign_lsh_semantic_dedup` finishes on the driver;
+#: above it the Catalyst plan runs. Set at the largest size measured
+#: (``tools/semantic_scale_probe.py``: dim 64, n_bits 4, ``local[4]``,
+#: wall time; peak RSS of Python driver + JVM) where the driver path is no
+#: slower and its peak RSS stays below the Spark path's:
+#: 5k 1.4 s / 0.7 GB vs 15.3 s / 5.1 GB; 10k 3.5 s / 0.7 GB vs 46.6 s /
+#: 8.2 GB; 20k 14.0 s / 0.9 GB vs 199 s / 9.0 GB; 50k 90.8 s / 1.4 GB vs
+#: not done in 240 s. Both sides grow with Σ(cell size)²·dim; the driver's
+#: int64 GEMM gets no BLAS, so its time, not the collect, sets its cost.
+MAX_LOCAL_ROWS = 50_000
 
 
 def hyperplane_sign_rows(
@@ -153,6 +172,87 @@ def sign_lsh_buckets(
     ).select("__id", F.col("__e.t").alias("t"), F.col("__e.bucket").alias("bucket"))
 
 
+def sign_lsh_codes(Q, n_tables: int = 8, n_bits: int = 4):
+    """(n, n_tables) int64 bucket codes of the int64 quantized vectors ``Q``
+    (rows of ``floor(v·2^24)``): the numpy twin of :func:`sign_lsh_buckets`,
+    one int64 matmul against every hyperplane at once."""
+    import numpy as np
+
+    S = np.array(
+        [s for _t, _j, s in hyperplane_sign_rows(n_tables, n_bits, Q.shape[1])],
+        dtype=np.int64,
+    )
+    bits = (Q @ S.T >= 0).reshape(len(Q), n_tables, n_bits).astype(np.int64)
+    return (bits << np.arange(n_bits)).sum(axis=2)
+
+
+def _quantized_rows(table, dim: int):
+    """(ids, Q) from a collected ``(id, vector)`` Arrow table, or None when
+    numpy cannot repeat the Catalyst plan's arithmetic exactly: ids that
+    are not integers, are null or repeat; vectors that are null, hold a null
+    or non-finite element or are not ``dim`` long; or quantized values
+    whose int64 dot products could overflow."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..functions.vectors import QUANT_SCALE
+    from ..ml.clustering import vectors_matrix
+
+    id_col, vecs = table.column(0), table.column(1)
+    if (
+        not pa.types.is_integer(id_col.type)
+        or id_col.null_count
+        or vecs.null_count
+        or pc.list_flatten(vecs).null_count
+        or (pc.list_value_length(vecs).to_numpy() != dim).any()
+    ):
+        return None
+    ids = id_col.to_numpy()
+    if len(np.unique(ids)) < len(ids):
+        return None
+    if not len(ids):
+        return ids, np.zeros((0, dim), dtype=np.int64)
+    # scaling by a power of two is exact, so floor() sees the same double
+    # as Spark's floor(CAST(v AS DOUBLE) * 2^24)
+    X = np.floor(vectors_matrix(vecs) * float(QUANT_SCALE))
+    if not np.isfinite(X).all() or dim * np.abs(X).max() ** 2 >= 2.0**62:
+        return None
+    return ids, X.astype(np.int64)
+
+
+def _driver_dropped(ids, Q, cosine_threshold: float, n_tables: int, n_bits: int):
+    """(dropped, zero_pair): ``dropped`` masks the rows the Catalyst plan
+    drops, every row with a smaller id in one of its (table, bucket) cells
+    at integer-exact cosine ≥ ``cosine_threshold``. One int64 GEMM per
+    cell, and the cosine is ``double(dot) / (n_a·n_b)`` as in the Spark
+    predicate. A candidate pair with a zero norm has no cosine: without
+    ANSI Spark's quotient is NULL, so it is never a duplicate, and under
+    ANSI Spark raises ``DIVIDE_BY_ZERO``; ``zero_pair`` says whether there
+    was one."""
+    import numpy as np
+
+    norms = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
+    codes = sign_lsh_codes(Q, n_tables, n_bits)
+    dropped = np.zeros(len(ids), dtype=bool)
+    zero_pair = False
+    for t in range(n_tables):
+        order = np.argsort(codes[:, t], kind="stable")
+        cuts = np.flatnonzero(np.diff(codes[order, t])) + 1
+        for cell in np.split(order, cuts):
+            if len(cell) < 2:
+                continue
+            q, n, i = Q[cell], norms[cell], ids[cell]
+            den = np.outer(n, n)
+            pair = i[:, None] < i[None, :]
+            zero_pair |= bool((pair & (den == 0)).any())
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = (q @ q.T).astype(np.float64) / den
+            hit = pair & (den != 0) & (cos >= cosine_threshold)
+            dropped[cell[hit.any(axis=0)]] = True
+    return dropped, zero_pair
+
+
 def sign_lsh_semantic_dedup(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -164,6 +264,13 @@ def sign_lsh_semantic_dedup(
 ) -> DataFrame:
     """Corpus minus semantic near-duplicates; returns the SURVIVOR rows
     (all original columns), smallest id per caught near-dup pair kept.
+
+    The first action collects ``(id, vector)`` with one
+    ``limit(MAX_LOCAL_ROWS + 1).toArrow()``. When that is the whole corpus
+    and numpy can repeat the plan's integer arithmetic
+    (:func:`_quantized_rows`), the driver finds the drop set
+    (:func:`_driver_dropped`) and the input is anti-joined against it as a
+    local relation. Otherwise the Catalyst plan below runs.
 
     Plan (candidates-narrow, the 100 TB shape):
 
@@ -181,6 +288,26 @@ def sign_lsh_semantic_dedup(
        broadcast hint: the anti-join shuffles on id and AQE demotes to
        broadcast only when the set really is small.
     """
+    table = df.select(id_col, vec_col).limit(MAX_LOCAL_ROWS + 1).toArrow()
+    rows = _quantized_rows(table, dim) if table.num_rows <= MAX_LOCAL_ROWS else None
+    if rows is not None:
+        import pyarrow as pa
+
+        spark = df.sparkSession
+        ids, Q = rows
+        mask, zero_pair = _driver_dropped(ids, Q, cosine_threshold, n_tables, n_bits)
+        if zero_pair and spark.conf.get("spark.sql.ansi.enabled").lower() == "true":
+            from pyspark.errors import ArithmeticException
+
+            raise ArithmeticException(
+                message="[DIVIDE_BY_ZERO] Division by zero: a zero-norm "
+                "vector shares a sign-LSH bucket with another vector"
+            )
+        dropped = spark.createDataFrame(
+            pa.table({id_col: pa.array(ids[mask])}), df.select(id_col).schema
+        )
+        return df.join(dropped, id_col, "left_anti")
+
     buckets = sign_lsh_buckets(
         df, vec_col, id_col, n_tables, n_bits, dim
     ).persist()

@@ -55,12 +55,15 @@ def approx_bpe_token_count(text: Column) -> Column:
     return ((letters_len + 3) / F.lit(4)).cast("long") + digit_runs + punct
 
 
+def _hits(tokens: Column, words: tuple[str, ...]) -> Column:
+    """Count of ``tokens`` that are in ``words`` (tokens already lowercased)."""
+    arr = F.array(*[F.lit(w) for w in words])
+    return F.size(F.filter(tokens, lambda t: F.array_contains(arr, t)))
+
+
 def stopword_hits(text: Column, words: tuple[str, ...], sep: str = " ") -> Column:
     """Count of tokens that are in ``words`` (case-insensitive)."""
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(
-        F.filter(_tokens(F.lower(text), sep), lambda t: F.array_contains(arr, t))
-    )
+    return _hits(_tokens(F.lower(text), sep), words)
 
 
 def quality_features(text: Column, sep: str = " ") -> dict[str, Column]:
@@ -103,28 +106,34 @@ def quality_score(text: Column, sep: str = " ") -> Column:
     return F.round(score, 6)
 
 
-def lang_scores(text: Column, sep: str = " ") -> dict[str, Column]:
-    """Per-language stopword-hit counts (the n-gram-heuristic scorer)."""
-    lowered = F.lower(text)
-    return {
-        lang: stopword_hits(lowered, words, sep)
-        for lang, words in LANG_MARKERS.items()
-    }
+def lang_scores(tokens: Column) -> dict[str, Column]:
+    """Per-language stopword-hit counts of lowercased ``tokens`` (the
+    n-gram-heuristic scorer)."""
+    return {lang: _hits(tokens, words) for lang, words in LANG_MARKERS.items()}
 
 
 def predict_lang(text: Column, sep: str = " ", default: str = "und") -> Column:
     """argmax over :func:`lang_scores` with deterministic tie-break
-    (lexicographically smallest language code wins ties; 'und' if no hits)."""
-    scores = lang_scores(text, sep)
-    # array of structs (score DESC via negation, lang ASC) → sort → first
-    entries = F.array(
-        *[
-            F.struct((-scores[lang]).alias("neg"), F.lit(lang).alias("lang"))
-            for lang in sorted(scores)
-        ]
-    )
-    best = F.array_sort(entries)[0]
-    return F.when(best["neg"] < 0, best["lang"]).otherwise(F.lit(default))
+    (lexicographically smallest language code wins ties; 'und' if no hits).
+
+    The higher-order filters are interpreted, so each language's filter
+    would evaluate its own ``lower(text)``; transforming a one-element
+    array binds the lowercased tokens to one lambda variable instead, and
+    each document is lowercased and split once."""
+
+    def pick(tokens: Column) -> Column:
+        scores = lang_scores(tokens)
+        # array of structs (score DESC via negation, lang ASC) → sort → first
+        entries = F.array(
+            *[
+                F.struct((-scores[lang]).alias("neg"), F.lit(lang).alias("lang"))
+                for lang in sorted(scores)
+            ]
+        )
+        best = F.array_sort(entries)[0]
+        return F.when(best["neg"] < 0, best["lang"]).otherwise(F.lit(default))
+
+    return F.transform(F.array(_tokens(F.lower(text), sep)), pick)[0]
 
 
 def fingerprint(text: Column) -> Column:

@@ -380,15 +380,19 @@ def test_winnow_pairs_two_corpus_exchanges_before_pair_agg(spark, sf_dir):
     assert "Python" not in plan  # pure Catalyst end-to-end
 
 
-def test_semantic_dedup_corpus_never_shuffles(spark, sf_dir):
+def test_semantic_dedup_corpus_never_shuffles(spark, sf_dir, monkeypatch):
     """Sign-LSH semantic dedup promises: the candidate self-join carries
     ids + bucket keys only (vectors never ride that shuffle), no Python
     crossing anywhere, and — since semantic dedup drops a corpus-scale
     fraction — NO forced broadcast on the drop set: with auto-broadcast
     disabled, the plan must contain zero BroadcastExchange (the anti-join
-    shuffles on id, which survives 100 TB; a forced broadcast would not)."""
+    shuffles on id, which survives 100 TB; a forced broadcast would not).
+    The guard is at 0, so the Catalyst plan runs, as it does for corpora
+    above ``MAX_LOCAL_ROWS``."""
+    from ihop_reddit_spark.datapipe import semantic
     from ihop_reddit_spark.datapipe.semantic import sign_lsh_semantic_dedup
 
+    monkeypatch.setattr(semantic, "MAX_LOCAL_ROWS", 0)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     spark.catalog.clearCache()  # see no-forced-broadcast test
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

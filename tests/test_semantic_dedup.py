@@ -8,7 +8,10 @@ Closed-form gates for the two round-4 dedup additions:
   but must never drop a non-duplicate);
 * the paper's k-means variant: planted EXACT duplicates can never escape
   (identical vectors always co-cluster);
-* grouped blocked-GEMM == ungrouped when there is a single group.
+* grouped blocked-GEMM == ungrouped when there is a single group;
+* sign-LSH semantic dedup gives the same survivors on both sides of its
+  driver guard (``semantic.MAX_LOCAL_ROWS``), down to a pair at exactly
+  the threshold and a zero-norm vector in a shared bucket.
 """
 
 from __future__ import annotations
@@ -20,9 +23,11 @@ from ihop_reddit_spark.datapipe.dedup import (
     winnow_candidate_pairs,
     winnow_fingerprints,
 )
+from ihop_reddit_spark.datapipe import semantic
 from ihop_reddit_spark.datapipe.semantic import (
     hyperplane_sign_rows,
     kmeans_semantic_dedup,
+    sign_lsh_codes,
     sign_lsh_semantic_dedup,
 )
 from ihop_reddit_spark.datapipe.similarity import blocked_pair_scores
@@ -140,7 +145,9 @@ def planted_embeddings(spark):
 
 
 @pytest.mark.slow
-def test_sign_lsh_semantic_dedup_soundness(spark, planted_embeddings):
+def test_sign_lsh_semantic_dedup_soundness(spark, planted_embeddings, monkeypatch):
+    # the Catalyst plan; the driver path is held to it by the tests below
+    monkeypatch.setattr(semantic, "MAX_LOCAL_ROWS", 0)
     emb = planted_embeddings
     # noise-only same-direction pairs sit at cos ~0.993; the planted
     # duplicate trio is at ~1.0 — threshold between them isolates the plant
@@ -161,6 +168,126 @@ def test_sign_lsh_semantic_dedup_soundness(spark, planted_embeddings):
     # duplicates can never escape the sign-LSH partitioner
     assert 101 in dropped
     assert 100 in survivors
+
+
+def _survivors_both_sides(df, monkeypatch, **kw):
+    """Survivor ids of :func:`sign_lsh_semantic_dedup` with the guard at 0
+    (Catalyst plan) and at its default (driver path)."""
+    out = []
+    for guard in (0, semantic.MAX_LOCAL_ROWS):
+        with monkeypatch.context() as mp:
+            mp.setattr(semantic, "MAX_LOCAL_ROWS", guard)
+            out.append(
+                sorted(r["vec_id"] for r in sign_lsh_semantic_dedup(df, **kw).collect())
+            )
+    return out
+
+
+def _quantized(df, dim):
+    import numpy as np
+
+    rows = sorted(df.select("vec_id", "embedding").collect())
+    ids = np.array([r[0] for r in rows])
+    q = np.floor(np.array([r[1] for r in rows], dtype=np.float64) * 2.0**24)
+    assert q.shape[1] == dim
+    return ids, q.astype(np.int64)
+
+
+def test_sign_lsh_guard_sides_agree_on_testdata(spark, monkeypatch):
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    spark_side, driver_side = _survivors_both_sides(
+        emb, monkeypatch, cosine_threshold=0.4
+    )
+    assert spark_side == driver_side
+    assert 0 < len(driver_side) < emb.count()
+
+
+def test_sign_lsh_guard_sides_agree_at_the_threshold(
+    spark, planted_embeddings, monkeypatch
+):
+    import numpy as np
+
+    ids, q = _quantized(planted_embeddings, 8)
+    a, b = q[ids == 100][0], q[ids == 102][0]
+    # the exact cosine the plan computes for the planted pair (100, 102)
+    cos = float(a @ b) / (np.sqrt(float(a @ a)) * np.sqrt(float(b @ b)))
+    for t, dropped in ((cos, True), (float(np.nextafter(cos, 2.0)), False)):
+        spark_side, driver_side = _survivors_both_sides(
+            planted_embeddings, monkeypatch, cosine_threshold=t, dim=8
+        )
+        assert spark_side == driver_side
+        assert 101 not in driver_side and 100 in driver_side
+        assert (102 not in driver_side) == dropped
+
+
+def test_sign_lsh_codes_match_spark_buckets(spark):
+    import numpy as np
+
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    ids, q = _quantized(emb, 64)
+    codes = sign_lsh_codes(q)
+    want = np.zeros_like(codes)
+    pos = {int(i): k for k, i in enumerate(ids)}
+    for r in semantic.sign_lsh_buckets(emb).collect():
+        want[pos[r["__id"]], r["t"]] = r["bucket"]
+    assert np.array_equal(codes, want)
+
+
+def test_zero_norm_vector_in_a_bucket_raises_on_both_paths(
+    spark, planted_embeddings, monkeypatch
+):
+    # both quantize to the zero vector, so they share every bucket
+    zeros = spark.createDataFrame(
+        [(200, [0.0] * 8), (201, [1e-9] * 8)], "vec_id long, embedding array<float>"
+    )
+    emb = planted_embeddings.unionByName(zeros)
+    for guard in (0, semantic.MAX_LOCAL_ROWS):
+        with monkeypatch.context() as mp:
+            mp.setattr(semantic, "MAX_LOCAL_ROWS", guard)
+            # Spark may wrap the error when two stages fail at once
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                sign_lsh_semantic_dedup(emb, cosine_threshold=0.9999, dim=8).collect()
+    # without ANSI Spark's quotient is NULL: the pair is not a duplicate
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        spark_side, driver_side = _survivors_both_sides(
+            emb, monkeypatch, cosine_threshold=0.9999, dim=8
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert spark_side == driver_side
+    assert {200, 201} <= set(driver_side)
+
+
+def test_sign_lsh_odd_inputs_take_the_catalyst_plan(
+    spark, planted_embeddings, monkeypatch
+):
+    # a null vector and a repeated id: numpy cannot repeat the plan's
+    # null and per-id join semantics, so the driver path hands over
+    odd = spark.createDataFrame(
+        [(300, None), (101, [0.9, 0.05, 0.03, 0.01, 0.0, 0.0, 0.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    for extra in (odd.limit(1), odd.where("vec_id = 101")):
+        emb = planted_embeddings.unionByName(extra)
+        table = emb.select("vec_id", "embedding").toArrow()
+        assert semantic._quantized_rows(table, 8) is None
+        spark_side, driver_side = _survivors_both_sides(
+            emb, monkeypatch, cosine_threshold=0.9999, dim=8
+        )
+        assert spark_side == driver_side
+
+
+def test_semantic_dedup_query_takes_few_jobs(spark, count_jobs):
+    from ihop_reddit_spark.plans.query_catalog import QUERIES
+
+    rows, n = count_jobs(
+        lambda: QUERIES["semantic_dedup_survivors"](
+            spark, "/root/testdata/sf0.01"
+        ).collect()
+    )
+    assert rows and n <= 4
 
 
 @pytest.mark.slow

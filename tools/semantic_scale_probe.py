@@ -1,29 +1,38 @@
-"""Scaling probe for sign-LSH semantic dedup (datapipe/semantic.py).
+"""Guard probe for sign-LSH semantic dedup (datapipe/semantic.py): where
+should ``sign_lsh_semantic_dedup`` stop finishing on the driver?
 
-The catalog query pins ``n_bits=4`` for its fixed-text oracle, but the
-honest way to scale sign-LSH is to grow the number of bucket cells with
-the corpus so the EXPECTED BUCKET SIZE stays constant — then candidate
-volume (the quadratic-within-bucket term) grows linearly with the data and
-per-task memory is flat. This probe measures exactly that contract:
+For each corpus size N it builds N vectors from the sf0.1 embeddings
+(2,000 × dim 64), replicated with a per-replica cyclic dimension rotation
+(within-replica pairwise cosines are EXACTLY preserved — rotation is a
+permutation applied to both sides — while cross-replica pairs
+decorrelate), and times both sides of ``semantic.MAX_LOCAL_ROWS`` at
+``n_bits=4``:
 
-* base: the sf0.1 embeddings (5k vectors) at ``n_bits`` chosen for a
-  target bucket size;
-* scaled: the same vectors replicated ×N with a per-replica cyclic
-  dimension rotation (within-replica pairwise cosines are EXACTLY
-  preserved — rotation is a permutation applied to both sides — while
-  cross-replica pairs decorrelate), at ``n_bits + log2(N)``.
+* ``spark``: the guard patched to 0, so the Catalyst plan runs;
+* ``driver``: the guard patched to N, so one Arrow collect and numpy
+  finish the job.
 
-Prints one JSON line {"factor": N, "base_s": ..., "scaled_s": ...,
-"ratio": ..., "base_bits": b, "scaled_bits": b'}.
+With ``n_bits`` fixed the (table, bucket) cells grow with N, so both
+sides' work grows with Σ(cell size)²·dim. Each side runs in its own
+``local[4]`` process (a warm-up call on 200 vectors first), times the call
+plus one aggregate over its survivors (count and id sum), and reads the peak RSS of the
+Python driver (``ru_maxrss``) and of the JVM (``VmHWM``); both are
+process-lifetime peaks, which is why each side gets a fresh process.
 
-Usage: python tools/semantic_scale_probe.py [N]
+Prints one JSON line per size:
+{"n": N, "spark": {...}, "driver": {...}, "same_survivors": bool}.
+
+Usage: python tools/semantic_scale_probe.py [N ...] [--timeout S]
+(default sizes 5000 10000 20000 50000; a side that runs past S seconds,
+default 1800, is reported as {"timeout_s": S}).
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
+import resource
+import subprocess
 import sys
 import time
 
@@ -31,80 +40,108 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 BASE_SF = "/root/testdata/sf0.1"
-TARGET_BUCKET = 320  # expected vectors per (table, bucket) cell
+WORKDIR = "/tmp/spark_graft_semantic_scale"
+N_BITS = 4
 
 
-def main() -> None:
-    factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
+def _vm_hwm_mb(pid: int) -> float:
+    with open(f"/proc/{pid}/status") as fh:
+        for line in fh:
+            if line.startswith("VmHWM:"):
+                return int(line.split()[1]) / 1024
+    return float("nan")
 
+
+def _rotated(spark, n: int):
+    """``n`` rotated replicas' worth of the base embeddings."""
     from pyspark.sql import functions as F
 
-    from ihop_reddit_spark.datapipe.semantic import sign_lsh_semantic_dedup
-    from ihop_reddit_spark.session import get_spark_session
-
-    spark = get_spark_session(
-        "semantic_scale_probe", config={"spark.ui.enabled": "false"}
-    )
     emb = spark.read.parquet(f"{BASE_SF}/embeddings.parquet")
-    n = emb.count()
+    base = emb.count()
     dim = len(emb.select("embedding").head()["embedding"])
-
-    def bits_for(rows: int) -> int:
-        return max(1, round(math.log2(max(rows / TARGET_BUCKET, 2))))
-
-    def run(df, n_bits: int) -> float:
-        t0 = time.time()
-        sign_lsh_semantic_dedup(
-            df, cosine_threshold=0.4, n_bits=n_bits, dim=dim
-        ).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        return round(time.time() - t0, 2)
-
-    base_bits = bits_for(n)
-    base_s = run(emb, base_bits)
-
+    factor = -(-n // base)
     reps = spark.range(factor).withColumnRenamed("id", "__r")
-    rotated = emb.crossJoin(reps).select(
+    shift = F.col("__r") % dim
+    return emb.crossJoin(reps).select(
         (F.col("vec_id") * factor + F.col("__r")).alias("vec_id"),
         F.col("label"),
         # cyclic shift by replica index: slice(r+1..dim) ++ slice(1..r)
-        F.when(F.col("__r") % dim == 0, F.col("embedding"))
+        F.when(shift == 0, F.col("embedding"))
         .otherwise(
             F.concat(
-                F.slice(
-                    F.col("embedding"),
-                    (F.col("__r") % dim + 1).cast("int"),
-                    (F.lit(dim) - F.col("__r") % dim).cast("int"),
-                ),
-                F.slice(
-                    F.col("embedding"),
-                    1,
-                    (F.col("__r") % dim).cast("int"),
-                ),
+                F.slice("embedding", (shift + 1).cast("int"), (F.lit(dim) - shift).cast("int")),
+                F.slice("embedding", 1, shift.cast("int")),
             )
         )
         .alias("embedding"),
-    )
-    workdir = "/tmp/spark_graft_semantic_scale"
-    rotated.write.mode("overwrite").parquet(f"{workdir}/embeddings.parquet")
-    scaled = spark.read.parquet(f"{workdir}/embeddings.parquet")
-    scaled_bits = bits_for(n * factor)
-    scaled_s = run(scaled, scaled_bits)
+    ).orderBy("vec_id").limit(n)
 
-    print(
-        json.dumps(
-            {
-                "factor": factor,
-                "base_s": base_s,
-                "scaled_s": scaled_s,
-                "ratio": round(scaled_s / base_s, 2) if base_s else None,
-                "base_bits": base_bits,
-                "scaled_bits": scaled_bits,
-            }
-        )
+
+def _one(n: int, side: str) -> dict:
+    """Time one side at size ``n`` in this process."""
+    from pyspark.sql import functions as F
+
+    from ihop_reddit_spark.datapipe import semantic
+    from ihop_reddit_spark.session import get_spark_session
+
+    spark = get_spark_session(
+        "semantic_scale_probe",
+        {"spark.ui.enabled": "false", "spark.ui.showConsoleProgress": "false"},
+        master="local[4]",
     )
+    jvm_pid = spark.sparkContext._jvm.ProcessHandle.current().pid()
+    path = f"{WORKDIR}/n{n}.parquet"
+    if not os.path.exists(path):
+        _rotated(spark, n).write.mode("overwrite").parquet(path)
+    df = spark.read.parquet(path)
+    semantic.MAX_LOCAL_ROWS = n if side == "driver" else 0
+
+    def run(frame) -> list[int]:
+        """(count, id sum) of the survivors."""
+        out = semantic.sign_lsh_semantic_dedup(frame, n_bits=N_BITS)
+        row = out.agg(F.count("*"), F.sum("vec_id")).collect()[0]
+        spark.catalog.clearCache()
+        return list(row)
+
+    run(df.where(F.col("vec_id") < 200))  # warm-up
+    t = time.perf_counter()
+    survivors = run(df)
+    res = {
+        "wall_s": round(time.perf_counter() - t, 2),
+        "survivors": survivors,
+        "py_peak_rss_mb": round(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024),
+        "jvm_peak_rss_mb": round(_vm_hwm_mb(jvm_pid)),
+    }
+    res["peak_rss_mb"] = res["py_peak_rss_mb"] + res["jvm_peak_rss_mb"]
     spark.stop()
+    return res
+
+
+def main(sizes: list[int], timeout: float) -> None:
+    for n in sizes:
+        row: dict = {"n": n, "n_bits": N_BITS}
+        for side in ("spark", "driver"):
+            try:
+                proc = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), "--one", str(n), side],
+                    capture_output=True, text=True, timeout=timeout, check=True,
+                )
+                row[side] = json.loads(proc.stdout.strip().splitlines()[-1])
+            except subprocess.TimeoutExpired:
+                row[side] = {"timeout_s": timeout}
+        if "survivors" in row["spark"] and "survivors" in row["driver"]:
+            row["same_survivors"] = row["spark"]["survivors"] == row["driver"]["survivors"]
+        print(json.dumps(row), flush=True)
 
 
 if __name__ == "__main__":
-    main()
+    args = sys.argv[1:]
+    if args[:1] == ["--one"]:
+        print(json.dumps(_one(int(args[1]), args[2])))
+    else:
+        timeout = 1800.0
+        if "--timeout" in args:
+            i = args.index("--timeout")
+            timeout = float(args[i + 1])
+            del args[i : i + 2]
+        main([int(a) for a in args] or [5000, 10000, 20000, 50000], timeout)
