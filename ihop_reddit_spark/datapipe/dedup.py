@@ -9,8 +9,9 @@ tier only sees the previous tier's survivors:
 3. MinHash + LSH (MLlib ``MinHashLSH`` over shingle vectors) — band/bucket
    join, probabilistic Jaccard.
 4. exact n-gram Jaccard verification — explode + equi-join on shingle, only
-   ever run on candidate pairs (or small corpora); quadratic if unleashed on
-   everything, so keep it LAST.
+   ever run on candidate pairs (or small corpora, which finish on the driver
+   from one Arrow collect); quadratic if unleashed on everything, so keep
+   it LAST.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ def word_shingles(text: Column, n: int = 3, sep: str = " ") -> Column:
 
     ``sequence`` + ``transform`` + ``slice`` — JVM higher-order functions, no
     UDF. Short docs (< n tokens) yield their whole token string as the single
-    shingle so they still participate.
+    shingle so they still participate; null text yields none.
 
     PERF NOTE: the tokenization sits inside the transform lambda, so Catalyst
     re-evaluates ``split`` per shingle position (O(tokens²) per doc), and the
@@ -42,7 +43,16 @@ def word_shingles(text: Column, n: int = 3, sep: str = " ") -> Column:
     grams = F.transform(
         starts, lambda i: F.concat_ws(" ", F.slice(tokens, i, n))
     )
-    return F.array_distinct(grams)
+    return _no_grams_if_null(tokens, F.array_distinct(grams))
+
+
+def _no_grams_if_null(tokens: Column, grams: Column) -> Column:
+    """``grams``, or an empty array when ``tokens`` is null: null text has
+    no shingles. (``concat_ws`` drops a null slice, so without this a
+    null-text document would get the one shingle ``""`` and match every
+    other null or empty text at Jaccard 1.0; the oracle SQL gives it
+    none.)"""
+    return F.when(tokens.isNull(), F.array().cast("array<string>")).otherwise(grams)
 
 
 def _shingle_parts(
@@ -62,7 +72,8 @@ def _shingle_parts(
     per row, not once per shingle position). ``slice`` is O(n) per
     position, so the expression is O(tokens·n) per doc and needs no
     per-doc window shuffle. Docs with < n tokens yield their whole lowered
-    text as the single shingle (same semantics as :func:`word_shingles`).
+    text as the single shingle, and null text yields none (same semantics
+    as :func:`word_shingles`).
 
     Narrow chains inherit SCAN parallelism — a small single-file input
     would serialize the whole shingle build on one core (the old window
@@ -92,7 +103,7 @@ def _shingle_parts(
             starts, lambda i: F.concat_ws(" ", F.slice(F.col("__toks"), i, n))
         )
     )
-    return base, grams
+    return base, _no_grams_if_null(F.col("__toks"), grams)
 
 
 def doc_shingles(
@@ -280,6 +291,122 @@ def simhash_candidates(
     return register_scoped_persists(out, sig)
 
 
+#: Largest corpus :func:`ngram_jaccard_pairs` finishes on the driver;
+#: above it the Catalyst plan runs. ``tools/guard_probe.py jaccard``
+#: (perturbed sf0.1 documents, n 3, threshold 0.4, df cap 10,000,
+#: ``local[4]``, 4 GB driver heap; wall time, then peak RSS of Python
+#: driver + JVM; same rows on both sides at every size): driver vs
+#: Catalyst 1.2 s / 1.2 GB vs 5.1 s / 1.6 GB at 5k documents (1.3M
+#: posting pairs); 2.2 s / 1.7 GB vs 11.1 s / 2.4 GB at 20k (6.1M);
+#: 4.6 s / 1.9 GB vs 26.8 s / 4.5 GB at 50k (18.4M); 9.4 s / 2.3 GB vs
+#: 61.8 s / 4.8 GB at 100k (40.4M), the largest size probed for it.
+MAX_LOCAL_DOCS = 100_000
+
+#: Largest Σ C(df, 2) over the kept shingles' document frequencies (the
+#: self-join's row count) the driver path counts; above it the Catalyst
+#: plan runs. The same probe at 120k documents counts 50.7M posting
+#: pairs: 11.0 s / 2.5 GB on the driver vs 66.3 s / 4.9 GB in Spark.
+#: The driver's time follows this count, not the document count.
+MAX_LOCAL_POSTING_PAIRS = 50_000_000
+
+#: Posting pairs the driver path counts in one pass (about 50 bytes of
+#: numpy temporaries each).
+_PAIRS_PER_RUN = 1 << 22
+
+
+def _driver_jaccard_pairs(table, n: int, threshold: float, max_shingle_df):
+    """The rows of :func:`ngram_jaccard_pairs`'s Catalyst plan, as an Arrow
+    table, from a collected ``(id, tokens)`` table; None when numpy cannot
+    repeat them: ids that are not integers, are null or repeat, or more
+    than :data:`MAX_LOCAL_POSTING_PAIRS` posting pairs to count.
+
+    A shingle is the tuple of its tokens' dictionary codes. The separator
+    is the literal space, so no token holds one, and two shingle strings
+    are equal exactly when their token tuples are; that holds for the
+    whole-text shingle of a document shorter than ``n`` tokens too (its
+    tuple is padded with the code 0, which no token has). Null text has no
+    tokens and so no shingles. Documents are ranked by id, so each posting
+    list is sorted and every pair it yields has ``left_id < right_id``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    id_col = table.column(0)
+    if not pa.types.is_integer(id_col.type) or id_col.null_count:
+        return None
+    raw = id_col.to_numpy()
+    order = np.argsort(raw, kind="stable")
+    ids = raw[order]
+    if (ids[1:] == ids[:-1]).any():
+        return None
+    n_docs = len(ids)
+    rank = np.empty(n_docs, dtype=np.int64)
+    rank[order] = np.arange(n_docs)
+
+    toks = table.column(1).combine_chunks()
+    k = pc.list_value_length(toks).fill_null(0).to_numpy().astype(np.int64)
+    vocab = pc.list_flatten(toks).dictionary_encode()
+    codes = np.append(vocab.indices.to_numpy().astype(np.int64) + 1, 0)
+    base = len(vocab.dictionary) + 1
+    # shingle positions: k - n + 1 per document, one for 0 < k < n
+    m = np.where(k >= n, k - n + 1, np.minimum(k, 1))
+    first = np.repeat(np.cumsum(k) - k - np.cumsum(m) + m, m) + np.arange(m.sum())
+    width = np.repeat(np.minimum(k, n), m)
+    key, bound = np.zeros(len(first), dtype=np.int64), 1
+    for j in range(n):
+        if bound * base >= 2**62:  # renumber densely before key·base overflows
+            key = np.unique(key, return_inverse=True)[1].reshape(-1)
+            bound = len(key) + 1
+        key = key * base + codes[np.where(j < width, first + j, len(codes) - 1)]
+        bound *= base
+    gram = np.unique(key, return_inverse=True)[1].reshape(-1)
+    n_grams = int(gram.max()) + 1 if len(gram) else 0
+    # distinct (document, shingle) rows, ordered by document then shingle
+    doc, gram = np.divmod(np.unique(np.repeat(rank, m) * n_grams + gram), n_grams)
+    sizes = np.bincount(doc, minlength=n_docs)
+    freq = np.bincount(gram, minlength=n_grams)
+    keep = freq[gram] >= 2
+    if max_shingle_df is not None:
+        keep &= freq[gram] <= max_shingle_df
+    # posting lists: the kept (shingle, document) entries ordered by
+    # shingle, then document; each entry pairs with the entries after it
+    gram, doc = gram[keep], doc[keep]
+    by_gram = np.argsort(gram, kind="stable")
+    gram, doc = gram[by_gram], doc[by_gram]
+    after = np.searchsorted(gram, gram, side="right") - np.arange(len(gram)) - 1
+    if int(after.sum()) > MAX_LOCAL_POSTING_PAIRS:
+        return None
+    # count the pairs of one run of left documents at a time: a pair's
+    # whole count falls in one run, and a run holds about _PAIRS_PER_RUN
+    run = np.cumsum(np.bincount(doc, weights=after, minlength=n_docs)) // _PAIRS_PER_RUN
+    run = run.astype(np.int64)[doc]
+    found = [[np.zeros(0, dtype=np.int64)] * 5 + [np.zeros(0)]]
+    for r in np.unique(run[after > 0]):
+        e = np.flatnonzero((run == r) & (after > 0))
+        cnt = after[e]
+        right_at = np.repeat(e + 1 - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())
+        pair, inter = np.unique(
+            np.repeat(doc[e], cnt) * n_docs + doc[right_at], return_counts=True
+        )
+        left, right = np.divmod(pair, n_docs)
+        n_left, n_right = sizes[left], sizes[right]
+        # the Catalyst plan's double(inter) / double(n_left + n_right - inter)
+        jaccard = inter / (n_left + n_right - inter)
+        hit = jaccard >= threshold
+        found.append([c[hit] for c in (left, right, inter, n_left, n_right, jaccard)])
+    left, right, inter, n_left, n_right, jaccard = map(np.concatenate, zip(*found))
+    return pa.table(
+        {
+            "left_id": pa.array(ids[left], id_col.type),
+            "right_id": pa.array(ids[right], id_col.type),
+            "inter": pa.array(inter, pa.int64()),
+            "n_left": pa.array(n_left, pa.int32()),
+            "n_right": pa.array(n_right, pa.int32()),
+            "jaccard": pa.array(jaccard, pa.float64()),
+        }
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -288,12 +415,28 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity join (verification tier).
+    """Exact n-gram Jaccard similarity join (verification tier):
+    ``(left_id, right_id, inter bigint, n_left int, n_right int, jaccard
+    double)`` for every pair ``left_id < right_id`` with Jaccard ≥
+    ``threshold``.
 
     explode(shingles) → self-equi-join on shingle → |A∩B| per pair →
     Jaccard = inter / (|A| + |B| − inter). All counts are ints; the final
     division is deterministic, so this op is duckdb-oracle comparable.
     Quadratic in the worst case — run on candidates / bounded corpora only.
+
+    EAGER for batch frames: the first action reads ``(id, split(lower(
+    text), ' '))`` with one ``limit(MAX_LOCAL_DOCS + 1).toArrow()``, so
+    Spark still lowers and splits. When that is the whole corpus,
+    :func:`_driver_jaccard_pairs` counts the posting-list intersections
+    in numpy and the result is a local relation with the same rows,
+    schema and IEEE division; no shingle frame is persisted. Streaming
+    frames, ids numpy cannot order as Spark does (null, repeated or not
+    integers) and posting-pair counts above
+    :data:`MAX_LOCAL_POSTING_PAIRS` take the lazy Catalyst plan below,
+    as does every corpus above :data:`MAX_LOCAL_DOCS`; only that plan
+    persists its shingle-array frame, registered as a scoped persist on
+    the result.
 
     ``max_shingle_df`` (the honest default for anything bigger than a
     candidate set — same control as the winnowing index's ``max_df``):
@@ -313,6 +456,32 @@ def ngram_jaccard_pairs(
     hashed by id, the join shuffles co-partitioned, and AQE demotes to
     broadcast on its own when the input really is candidate-sized.
     """
+    if not df.isStreaming:
+        table = (
+            df.select(id_col, F.split(F.lower(F.col(text_col)), " "))
+            .limit(MAX_LOCAL_DOCS + 1)
+            .toArrow()
+        )
+        found = None
+        if table.num_rows <= MAX_LOCAL_DOCS:
+            found = _driver_jaccard_pairs(table, n, threshold, max_shingle_df)
+        del table
+        if found is not None:
+            id_field = df.schema[id_col]
+            return df.sparkSession.createDataFrame(
+                found,
+                T.StructType(
+                    [
+                        T.StructField("left_id", id_field.dataType, id_field.nullable),
+                        T.StructField("right_id", id_field.dataType, id_field.nullable),
+                        T.StructField("inter", T.LongType(), False),
+                        T.StructField("n_left", T.IntegerType(), False),
+                        T.StructField("n_right", T.IntegerType(), False),
+                        T.StructField("jaccard", T.DoubleType()),
+                    ]
+                ),
+            )
+    # Catalyst plan (above the guard, streaming input and the fallbacks):
     # the shingle-array base feeds BOTH self-join sides and the size table,
     # and Catalyst does not reuse the exchange across the aliased self-join
     # (measured: 16 scans, 0 ReusedExchange without persist) — persist the
@@ -401,9 +570,11 @@ def minhash_near_dup(
     # r14: the per-doc shingle array comes straight from doc_shingles —
     # narrow, no explode + groupBy(collect_list) round trip (HashingTF with
     # binary=True is set-semantic, so array order is irrelevant)
-    shingled = doc_shingles(df, text_col, id_col, n).select(
-        "__id", F.col("__grams").alias("__sh")
-    )
+    # null text has no shingles (MinHashLSH rejects an empty vector), so
+    # it is nobody's near-duplicate
+    shingled = doc_shingles(
+        df.where(F.col(text_col).isNotNull()), text_col, id_col, n
+    ).select("__id", F.col("__grams").alias("__sh"))
     tf = HashingTF(
         inputCol="__sh", outputCol="__vec", numFeatures=num_features, binary=True
     )
@@ -590,10 +761,10 @@ def _star_round(edges: DataFrame) -> DataFrame:
 
 #: Live edge count at or under which :func:`duplicate_components` stops
 #: contracting and finishes on the driver: one collect, then union-find.
-#: ``tools/components_guard_probe.py 5000000`` (random graph, local[4],
-#: 4 GB driver heap): the driver finish takes 15 s with a 0.8 GB Python
-#: and 3.0 GB JVM peak RSS; star rounds to the fixpoint take 218 s
-#: (9 rounds of 24 s) with a 4.9 GB JVM peak.
+#: On the ``tools/guard_probe.py components`` input at 5,000,000 edges
+#: (random graph, local[4], 4 GB driver heap) the driver finish takes
+#: 15 s with a 0.8 GB Python and 3.0 GB JVM peak RSS; star rounds to the
+#: fixpoint take 218 s (9 rounds of 24 s) with a 4.9 GB JVM peak.
 MAX_DRIVER_EDGES = 5_000_000
 
 

@@ -56,7 +56,7 @@ _SEED_TAG = "semdedup"
 
 #: Largest corpus :func:`sign_lsh_semantic_dedup` finishes on the driver;
 #: above it the Catalyst plan runs. Set at the largest size measured
-#: (``tools/semantic_scale_probe.py``: dim 64, n_bits 4, ``local[4]``,
+#: (``tools/guard_probe.py semantic``: dim 64, n_bits 4, ``local[4]``,
 #: wall time; peak RSS of Python driver + JVM) where the driver path is no
 #: slower and its peak RSS stays below the Spark path's:
 #: 5k 1.4 s / 0.7 GB vs 15.3 s / 5.1 GB; 10k 3.5 s / 0.7 GB vs 46.6 s /

@@ -1,17 +1,19 @@
 """End-to-end training-data corpus preparation (the north-star composition).
 
-What a 100 TB pretraining-data pipeline runs per shard, as ONE lazy Spark
-plan over the ``documents`` table:
+What a 100 TB pretraining-data pipeline runs per shard over the
+``documents`` table (the near-dup tier is eager; see :func:`prepare_corpus`):
 
 1. **Quality gate** — character-class ratios (JVM expressions, pushed to the
    scan's survivors; no Python).
 2. **Language gate** — marker-argmax language ID.
 3. **Exact dedup** — md5 fingerprint, keep the smallest doc_id per text.
 4. **Near-dup collapse** — exact n-gram Jaccard pairs above a threshold
-   among the survivors, with the self-join's worst key bounded: shingles
-   with document frequency > ``max_shingle_df`` are dropped from the
-   join stream (a boilerplate shingle shared by 10⁸ documents is a
-   10¹⁶-row join key uncapped) → connected components
+   among the survivors (``dedup.ngram_jaccard_pairs``: up to its driver
+   guard, one Arrow collect of Spark's tokens and numpy posting-list
+   counts; above it the shingle self-join), with the worst shingle
+   bounded: shingles with document frequency > ``max_shingle_df`` are
+   dropped from the join stream (a boilerplate shingle shared by 10⁸
+   documents is a 10¹⁶-row join key uncapped) → connected components
    (``dedup.duplicate_components``: star contraction rounds while the
    edge set is above a size guard, one driver union-find below it) →
    keep each component's smallest id.
@@ -70,22 +72,26 @@ def prepare_corpus(
     """Surviving documents with token budgets:
     ``(doc_id, n_tokens, bpe_tokens)``.
 
-    EAGER: the near-dup tier runs during CONSTRUCTION —
-    ``duplicate_components`` materializes the pair join with its first
-    action, a guarded collect of the edge set, then finishes on the
-    driver (or checkpoints and contracts, above its size guard) — so
-    calling this function executes the quality gates, exact dedup, and
-    the similarity self-join before returning; only the final survivor
-    anti-join and token counting stay lazy in the returned plan.
+    EAGER: the near-dup tier runs during CONSTRUCTION, so calling this
+    function executes the quality gates, exact dedup and the pair search
+    before returning; only the final survivor anti-join and token
+    counting stay lazy in the returned plan. ``ngram_jaccard_pairs``
+    acts first: one guarded collect of the exact-dedup survivors' tokens
+    (which fills the ``exact`` cache). Under its guard the pairs come
+    back as a local relation; above it the pair plan stays lazy until
+    ``duplicate_components`` materializes it with its own guarded
+    collect of the edge set, then finishes on the driver (or checkpoints
+    and contracts, above its size guard).
 
     Caching ownership: the exact-dedup survivor frame is persisted here
-    (it feeds both the pair join and the survivor scan) and registered
+    (it feeds both the pair search and the survivor scan) and registered
     on the returned DataFrame — call
     :func:`ihop_reddit_spark.caching.release_scoped_persists` on the
-    RESULT once consumed. The shingle stream persisted inside the pairs
-    tier is released by ``duplicate_components`` itself once the edge set
-    is collected (or, above the guard, checkpointed); it is never re-read
-    afterward.
+    RESULT once consumed. Under the Jaccard guard no shingle frame is
+    persisted at all. Above it, the shingle-array frame persisted inside
+    the pairs tier is released by ``duplicate_components`` itself once
+    the edge set is collected (or, above its guard, checkpointed); it is
+    never re-read afterward.
     """
     cfg = cfg or CorpusPrepConfig()
     text = F.col(text_col)
@@ -108,8 +114,8 @@ def prepare_corpus(
     min_id = F.min(id_col).over(
         Window.partitionBy(TX.fingerprint(text))
     )
-    # `exact` feeds both the similarity join (actioned inside
-    # duplicate_components) and the final survivor scan — persist it so the
+    # `exact` feeds both the similarity search (actioned inside
+    # ngram_jaccard_pairs) and the final survivor scan — persist it so the
     # scan + gates run once. MEMORY_AND_DISK: survivors of the gates are a
     # fraction of the corpus, and disk spill beats recompute here.
     exact = (
@@ -119,7 +125,7 @@ def prepare_corpus(
         .persist()
     )
     # near-dup collapse: pairs → components → drop every non-representative.
-    # The shingle self-join's worst key is bounded by max_shingle_df.
+    # The worst shingle's fan-out is bounded by max_shingle_df.
     pairs = ngram_jaccard_pairs(
         exact,
         text_col,

@@ -58,6 +58,95 @@ def test_ngram_jaccard_finds_near_dups(near_dup_docs):
     assert (1, 4) not in got           # unrelated below threshold
 
 
+def _jaccard_rows(df, **kw):
+    """Sorted rows of ``ngram_jaccard_pairs`` and whether its plan joins
+    (the Catalyst path) rather than reading a local relation (the driver
+    path)."""
+    out = ngram_jaccard_pairs(df, "text", "doc_id", **kw)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    return sorted(map(tuple, out.collect())), "Join" in plan
+
+
+def test_ngram_jaccard_null_text_has_no_shingles(spark, monkeypatch):
+    """Null text has no shingles on either side of the driver guard, as
+    in the DuckDB oracle's CTEs: ids 1 and 2 (null) and 3 (empty) pair
+    with nobody, and the other rows equal the oracle's. MinHash skips
+    null text too (its LSH rejects a document with no shingles)."""
+    import duckdb
+
+    from ihop_reddit_spark.datapipe import dedup
+    from ihop_reddit_spark.plans.query_catalog import _jaccard_ctes
+
+    rows = [
+        (1, None),
+        (2, None),
+        (3, ""),
+        (4, "the cat sat on the mat"),
+        (5, "The cat sat on the  mat"),
+        (6, "short"),
+        (7, "SHORT"),
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    oracle = sorted(
+        con.sql(f"WITH {_jaccard_ctes('documents', 0.0)} SELECT * FROM jpairs").fetchall()
+    )
+    assert oracle and all(r[0] > 3 for r in oracle)
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for guard in (0, dedup.MAX_LOCAL_DOCS):
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "MAX_LOCAL_DOCS", guard)
+            got, joins = _jaccard_rows(df, threshold=0.0)
+        assert joins == (guard == 0)
+        assert got == oracle
+    mh = minhash_near_dup(df, "text", "doc_id", jaccard_threshold=0.3).collect()
+    assert all(r.left_id > 2 for r in mh)
+
+
+@pytest.mark.parametrize("case", ["duplicate_ids", "null_ids", "pair_budget"])
+def test_ngram_jaccard_falls_back_to_the_catalyst_plan(spark, monkeypatch, case):
+    """Inputs numpy cannot repeat exactly take the Catalyst plan, with the
+    rows it gives at a guard of 0: repeated or null ids, and more posting
+    pairs than the driver budget."""
+    from ihop_reddit_spark.datapipe import dedup
+
+    rows = [(1, "a b c d"), (2, "a b c e"), (3, "x a b c")]
+    if case == "duplicate_ids":
+        rows.append((2, "a b c d"))
+    elif case == "null_ids":
+        rows.append((None, "a b c d"))
+    else:
+        monkeypatch.setattr(dedup, "MAX_LOCAL_POSTING_PAIRS", 2)
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got, joins = _jaccard_rows(df, threshold=0.0)
+    assert joins
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "MAX_LOCAL_DOCS", 0)
+        assert _jaccard_rows(df, threshold=0.0) == (got, True)
+    assert got
+
+
+def test_prepare_corpus_job_count(spark, sf_dir, count_jobs):
+    """Corpus prep with its near-dup tier on the driver: the gated Jaccard
+    collect, the components collect and the survivor scan take 7 Spark
+    jobs (16 when the shingle self-join ran in Spark)."""
+    from ihop_reddit_spark.caching import release_scoped_persists
+    from ihop_reddit_spark.plans.corpus_prep import prepare_corpus
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+    def run():
+        out = prepare_corpus(docs)
+        rows = out.collect()
+        release_scoped_persists(out)
+        return rows
+
+    rows, n = count_jobs(run)
+    assert rows
+    assert n <= 7, n
+
+
 @pytest.mark.slow
 def test_ngram_jaccard_df_cap(spark, near_dup_docs):
     """max_shingle_df bounds the self-join's worst key. Non-binding cap →

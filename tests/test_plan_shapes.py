@@ -673,8 +673,10 @@ def test_manifest_merge_and_cdf_plans(spark, tmp_path):
 @pytest.mark.slow
 def test_corpus_prep_composed_plan_follows_the_components_guard(spark, sf_dir, monkeypatch):
     """The flagship's near-dup tier at scale and at fixture size:
-    (a) it must not run an UNCAPPED shingle self-join (the df-cap
-    semi-join must appear in the pair plan); (b) above the components
+    (a) above the Jaccard driver guard (patched to 0 here; at its default
+    the fixture's pairs are a local relation) it must not run an UNCAPPED
+    shingle self-join (the df-cap aggregate must appear in the pair
+    plan); (b) above the components
     guard, connected components stay executor-side — the composed plan
     carries no LocalTableScan and reads the star rounds' checkpointed
     frames (Scan ExistingRDD); (c) at the default guard the fixture's
@@ -690,14 +692,16 @@ def test_corpus_prep_composed_plan_follows_the_components_guard(spark, sf_dir, m
     cfg = CorpusPrepConfig()
     # (a) the flagship's pair tier caps shingle document frequency: the
     # plan filters the shingle stream through a df-bounded aggregate
-    pair_plan = plan_of(
-        ngram_jaccard_pairs(
-            docs, "text", "doc_id",
-            n=cfg.shingle_n,
-            threshold=cfg.jaccard_threshold,
-            max_shingle_df=cfg.max_shingle_df,
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "MAX_LOCAL_DOCS", 0)
+        pair_plan = plan_of(
+            ngram_jaccard_pairs(
+                docs, "text", "doc_id",
+                n=cfg.shingle_n,
+                threshold=cfg.jaccard_threshold,
+                max_shingle_df=cfg.max_shingle_df,
+            )
         )
-    )
     assert "__df" in pair_plan, pair_plan  # cap aggregate present
     assert cfg.max_shingle_df is not None  # flagship default is capped
     # (c) default guard: union-find's createDataFrame output

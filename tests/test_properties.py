@@ -17,8 +17,9 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 import pytest
 
-# bound at import, before any test patches the module's guard
+# bound at import, before any test patches the module's guards
 from ihop_reddit_spark.datapipe.dedup import MAX_DRIVER_EDGES as _DEFAULT_GUARD
+from ihop_reddit_spark.datapipe.dedup import MAX_LOCAL_DOCS as _DEFAULT_DOCS_GUARD
 
 SETTINGS = settings(
     max_examples=12,
@@ -95,43 +96,70 @@ def test_asof_join_matches_python_model(spark, left, right):
 @SETTINGS
 @given(
     docs=st.lists(
-        st.lists(st.sampled_from("abcdef"), min_size=1, max_size=12).map(
-            lambda toks: " ".join(toks)
+        st.one_of(
+            st.none(),
+            st.lists(
+                st.sampled_from(["a", "B", "ab", "é", "Ü", ""]), min_size=1, max_size=12
+            ).map(lambda toks: " ".join(toks)),
         ),
         min_size=2,
         max_size=8,
     ),
     n=st.sampled_from([2, 3]),
+    cap=st.sampled_from([None, 2]),
 )
+@example(docs=[None, None, "", "a"], n=3, cap=None)
 @pytest.mark.slow
-def test_ngram_jaccard_matches_set_model(spark, docs, n):
-    from ihop_reddit_spark.datapipe.dedup import ngram_jaccard_pairs
+def test_ngram_jaccard_matches_set_model(spark, monkeypatch, docs, n, cap):
+    """Both sides of the driver guard against a set model. Tokens are the
+    lowered text split on single spaces, so a double space is an empty
+    token; a document shorter than n tokens is one whole-text shingle,
+    null text has none, and shingles in more than ``cap`` documents do
+    not count toward an intersection (the sizes stay uncapped)."""
+    from ihop_reddit_spark.datapipe import dedup
 
     df = spark.createDataFrame(
         [(i, d) for i, d in enumerate(docs)], "doc_id long, text string"
     )
-    got = {
-        (r["left_id"], r["right_id"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(df, "text", "doc_id", n=n, threshold=0.0).collect()
-    }
 
-    def shingles(text: str) -> set:
-        toks = text.split(" ")
+    def shingles(text) -> set:
+        if text is None:
+            return set()
+        toks = text.lower().split(" ")
         if len(toks) < n:
-            return {text}
+            return {" ".join(toks)}
         return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
 
     sets = {i: shingles(d) for i, d in enumerate(docs)}
+    freq: dict = {}
+    for grams in sets.values():
+        for g in grams:
+            freq[g] = freq.get(g, 0) + 1
+    expect = {}
     for a in sets:
         for b in sets:
-            if a >= b:
-                continue
-            inter = len(sets[a] & sets[b])
-            if inter == 0:
-                assert (a, b) not in got
-            else:
-                expect = inter / len(sets[a] | sets[b])
-                assert abs(got[(a, b)] - expect) < 1e-12
+            inter = sum(
+                1 for g in sets[a] & sets[b] if cap is None or freq[g] <= cap
+            )
+            if a < b and inter:
+                expect[(a, b)] = inter / (len(sets[a]) + len(sets[b]) - inter)
+
+    rows = []
+    for guard in (0, _DEFAULT_DOCS_GUARD):
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "MAX_LOCAL_DOCS", guard)
+            out = dedup.ngram_jaccard_pairs(
+                df, "text", "doc_id", n=n, threshold=0.0, max_shingle_df=cap
+            )
+            # the driver path is one local relation, the Catalyst plan a join
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            assert ("Join" in plan) == (guard == 0)
+            rows.append(sorted(map(tuple, out.collect())))
+    assert rows[0] == rows[1]  # identical rows on both sides of the guard
+    got = {(r[0], r[1]): r[5] for r in rows[0]}
+    assert got.keys() == expect.keys()
+    for k, j in expect.items():
+        assert abs(got[k] - j) < 1e-12
 
 
 @SETTINGS

@@ -124,7 +124,7 @@ DOC_PROBES = [
     # per-fingerprint frequencies: work scales ×N, candidates ×N.
     # (semantic_dedup_survivors is NOT probed here: its oracle pins
     # n_bits=4, and honest LSH scaling grows cells ∝ corpus to hold bucket
-    # size constant — measured separately in tools/semantic_scale_probe.py.)
+    # size constant — measured separately in tools/guard_probe.py.)
     "winnow_fingerprint_pairs",
     # DSIR (round 4): feature stream ×N, model aggregates bucket-bounded
     # (≤1024 rows regardless of corpus), one doc-grain sum — linear shape.
